@@ -5267,7 +5267,8 @@ object SparkEntry {
         nFiles = 8)
       Snapshots.indexStats(s, store, Seq("n_chars", "doc_id"))
       orderSmall(Snapshots.readWhereAll(s, store,
-        Seq(("n_chars", 100L, 300L), ("doc_id", 100L, 400L)))
+        Seq(Snapshots.LongRange("n_chars", 100L, 300L),
+          Snapshots.LongRange("doc_id", 100L, 400L)))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("n_chars")).cast("long").as("sum_chars")),
@@ -6844,11 +6845,11 @@ object SparkEntry {
       val v = Snapshots.latest(s, store)
       val total = Snapshots.snap(s, store, v).files.size
       val lo = "Customer#000000070"; val hi = "Customer#000000090"
-      val pruned = Snapshots.prunedFilesStr(s, store, v, "c_name",
+      val pruned = Snapshots.prunedFiles(s, store, v, "c_name",
         lo, hi)
       require(pruned.nonEmpty && pruned.size < total,
         s"string bands failed to prune: kept ${pruned.size}/$total")
-      orderSmall(Snapshots.readWhereStr(s, store, "c_name", lo, hi)
+      orderSmall(Snapshots.readWhere(s, store, "c_name", lo, hi)
         .select(col("c_name"), col("c_custkey"), col("bal_cents")),
         col("c_name"))
     }),
@@ -7106,7 +7107,7 @@ object SparkEntry {
     // ONE clustered layout answers `lang ∈ [de,es] AND n_chars ∈
     // [100,300]` with file skipping on BOTH dimensions — string
     // prefix bands on one, long bands on the other, one sidecar
-    // read (readWhereMixed). Strict-subset prune asserted in-body.
+    // read (readWhereAll). Strict-subset prune asserted in-body.
     "q351_zorder_string_dim" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
         cachedBase(dir, "q351"))
@@ -7129,12 +7130,12 @@ object SparkEntry {
       Snapshots.indexStats(s, store, Seq("lang", "n_chars"))
       val v = Snapshots.latest(s, store)
       val total = Snapshots.snap(s, store, v).files.size
-      val files = Snapshots.prunedFilesMixed(s, store, v,
-        Seq(("n_chars", 100L, 300L)), Seq(("lang", "de", "es")))
+      val ranges = Seq(Snapshots.LongRange("n_chars", 100L, 300L),
+        Snapshots.StrRange("lang", "de", "es"))
+      val files = Snapshots.prunedFilesAll(s, store, v, ranges)
       require(files.nonEmpty && files.size < total,
         s"z-order mixed pruning failed: kept ${files.size}/$total")
-      orderSmall(Snapshots.readWhereMixed(s, store,
-          Seq(("n_chars", 100L, 300L)), Seq(("lang", "de", "es")))
+      orderSmall(Snapshots.readWhereAll(s, store, ranges)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"),
           sum(col("n_chars")).as("sum_chars")),
@@ -7143,7 +7144,7 @@ object SparkEntry {
 
     // ---- Reader-chain string range (S3 × the r16 prefix bands) ----
     // The make_reader-parity chain answers a name-range read with
-    // file skipping: .rangeStr composes with .fields, the scan's
+    // file skipping: .range composes with .fields, the scan's
     // file listing is ASSERTED a strict subset of the store, and
     // the residual filter keeps the rows exact.
     "q352_reader_string_range" -> ((s, dir) => {
@@ -7167,7 +7168,7 @@ object SparkEntry {
       val total = Snapshots
         .snap(s, store, Snapshots.latest(s, store)).files.size
       val df = GraftRead.reader(s, store)
-        .rangeStr("c_name", "Customer#000000200", "Customer#000000260")
+        .range("c_name", "Customer#000000200", "Customer#000000260")
         .fields("c_name", "c_custkey", "bal_cents").load()
       val scanned = df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -7208,7 +7209,7 @@ object SparkEntry {
       val after = Snapshots.snap(s, store, v1).files.toSet
       require((before intersect after).nonEmpty,
         "range delete rewrote every file — not copy-on-write")
-      val v2 = Snapshots.deleteWhereStr(s, store, "lang", "zh", "zz")
+      val v2 = Snapshots.deleteWhere(s, store, "lang", "zh", "zz")
       // a no-match delete is a true no-op: same version back
       require(Snapshots.deleteWhere(s, store, "n_chars",
         900000L, 999999L) == v2, "no-match delete committed")
@@ -7523,10 +7524,10 @@ object SparkEntry {
       require(scanned < total,
         s"countWhere scanned $scanned/$total — interior files " +
           "should be metadata-counted")
-      val (nStr, scannedS) = Snapshots.countWhereStr(s, store,
+      val (nStr, scannedS) = Snapshots.countWhere(s, store,
         "c_name", "Customer#000000100", "Customer#000000899")
       require(scannedS < total,
-        s"countWhereStr scanned $scannedS/$total")
+        s"string countWhere scanned $scannedS/$total")
       import s.implicits._
       orderSmall(Seq(("long_range", nLong), ("str_range", nStr))
         .toDF("op", "cnt"), col("op"))
@@ -9292,10 +9293,10 @@ object SparkEntry {
     // ---- Banded SQL DML on a STRING field ----
     // The q390 machinery over prefix bands: a lang-clustered store
     // with string stats routes `DELETE ... WHERE lang >= x AND
-    // lang <= y` to deleteWhereStr and `UPDATE ... WHERE lang = z`
-    // to updateWhereStr (code-point band pruning) — attribution
-    // stays one sidecar read, survivors asserted from the
-    // manifests. Oracle = the relational chain.
+    // lang <= y` to deleteWhere and `UPDATE ... WHERE lang = z`
+    // to updateWhere, both on string ranges (code-point band
+    // pruning) — attribution stays one sidecar read, survivors
+    // asserted from the manifests. Oracle = the relational chain.
     "q395_sql_dml_banded_str" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
         cachedBase(dir, "q395"))

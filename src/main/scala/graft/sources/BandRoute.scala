@@ -5,12 +5,14 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** WHERE-shape classifier for the SQL DML paths ([[GraftDml]],
-  * [[GraftCatalog]]'s `DELETE FROM`): recognizes a conjunction of
-  * bounds on ONE integral or string column and rewrites it as the
-  * inclusive range the banded [[Snapshots.deleteWhere]] /
-  * [[Snapshots.updateWhere]] flavors take, so a retention-shaped
-  * SQL sweep prices its attribution from the `_stats` sidecar (one
+/** WHERE-shape classifier for the SQL paths ([[GraftDml]]'s
+  * `UPDATE`, [[GraftCatalog]]'s `DELETE FROM` and filtered
+  * `count(*)`): recognizes a conjunction of bounds on ONE integral
+  * or string column and rewrites it as the inclusive
+  * [[Snapshots.BandRange]] the banded [[Snapshots.deleteWhere]] /
+  * [[Snapshots.updateWhere]] / [[Snapshots.countWhere]] flavors
+  * take, so a retention-shaped SQL sweep prices its attribution
+  * from the `_stats` sidecar (one
   * O(files) metadata read) instead of the general-predicate
   * flavors' corpus scan — the 100 TB difference between pruning
   * megabytes and scanning the store. Anything the classifier cannot
@@ -31,11 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * band's epoch encoding — the general path handles them exactly).
   */
 private[sources] object BandRoute {
-  sealed trait Range { def field: String }
-  final case class LongRange(field: String, lo: Long, hi: Long)
-    extends Range
-  final case class StrRange(field: String, lo: String, hi: String)
-    extends Range
+  import Snapshots.{BandRange, LongRange, StrRange}
 
   /** (field, op, value) conjunct; op ∈ =,>,>=,<,<=,nn. */
   private type Conj = (String, String, Any)
@@ -43,7 +41,7 @@ private[sources] object BandRoute {
   /** Classify a V2 `SupportsDelete` filter array (implicitly
     * AND-ed). */
   def ofFilters(schema: StructType,
-      filters: Seq[sources.Filter]): Option[Range] = {
+      filters: Seq[sources.Filter]): Option[BandRange] = {
     val conjs = Seq.newBuilder[Conj]
     def walk(f: sources.Filter): Boolean = f match {
       case sources.And(l, r) => walk(l) && walk(r)
@@ -63,12 +61,14 @@ private[sources] object BandRoute {
   }
 
   /** Classify a resolved catalyst predicate (the `UPDATE ... WHERE`
-    * expression [[GraftUpdateCommand]] carries). Attribute types
+    * expression [[GraftUpdateCommand]] carries, or a filtered
+    * `count(*)`'s condition with its attributes renamed to the
+    * relation columns they read). Attribute types
     * come from the expression itself (resolved against the pinned
     * logical schema); the value side accepts any FOLDABLE
     * expression (an analyzer-inserted Cast around a literal has not
     * been constant-folded yet at resolution time). */
-  def ofExpr(e: Expression): Option[Range] = {
+  def ofExpr(e: Expression): Option[BandRange] = {
     val conjs = Seq.newBuilder[Conj]
     var fieldType: Map[String, DataType] = Map.empty
     def attr(x: Expression): Option[String] = x match {
@@ -121,7 +121,7 @@ private[sources] object BandRoute {
   }
 
   private def build(schema: StructType,
-      conjs: Seq[Conj]): Option[Range] = {
+      conjs: Seq[Conj]): Option[BandRange] = {
     val fields = conjs.map(_._1).distinct
     if (fields.size != 1) return None
     val field = fields.head
@@ -160,22 +160,20 @@ private[sources] object BandRoute {
           case u: UTF8String => Some(u.toString)
           case _ => None
         }
-        def maxCp(a: String, b: String): String =
-          if (Snapshots.cpCompare(a, b) >= 0) a else b
+        val ord = Snapshots.BandKey.StrKey.ord
         def minCp(a: String, b: String): String =
-          if (a == null) b
-          else if (Snapshots.cpCompare(a, b) <= 0) a else b
+          if (a == null) b else ord.min(a, b)
         conjs.foreach { case (_, op, v0) =>
           op match {
             case "nn" => ()
             case _ =>
               val v = str(v0).getOrElse(return None)
               op match {
-                case "=" => lo = maxCp(lo, v); hi = minCp(hi, v)
-                case ">=" => lo = maxCp(lo, v)
+                case "=" => lo = ord.max(lo, v); hi = minCp(hi, v)
+                case ">=" => lo = ord.max(lo, v)
                 case "<=" => hi = minCp(hi, v)
                 // binary-order successor: t > v  ⟺  t >= v+""
-                case ">" => lo = maxCp(lo, v + '\u0000')
+                case ">" => lo = ord.max(lo, v + '\u0000')
                 // no string predecessor exists — keep the exact path
                 case "<" => return None
               }

@@ -435,12 +435,8 @@ private[sources] trait GraftSqlWrites
         filters.toIndexedSeq) match {
       case Some(r)
           if Snapshots.statsCovers(spark, storeUrl, r.field) =>
-        r match {
-          case BandRoute.LongRange(f, lo, hi) =>
-            Snapshots.deleteWhere(spark, storeUrl, f, lo, hi): Unit
-          case BandRoute.StrRange(f, lo, hi) =>
-            Snapshots.deleteWhereStr(spark, storeUrl, f, lo, hi): Unit
-        }
+        Snapshots.deleteWhere(spark, storeUrl, r.field, r.lo, r.hi)(
+          r.key): Unit
       case _ =>
         val cond = filters.map(f =>
           GraftCatalog.translate(f).getOrElse(
@@ -887,96 +883,17 @@ final case class GraftMetaAggRule(session: SparkSession)
     case _ => None
   }
 
-  /** A conjunction of range/not-null predicates over ONE store
-    * column, as the closed band `[lo, hi]` [[Snapshots.countWhere]]
-    * prices — `Right` for integral fields, `Left` for string fields
-    * (non-strict bounds only: string successor math stays in the
-    * sidecar layer). Any conjunct outside the shape → None. */
-  private def bandOf(cond:
-      org.apache.spark.sql.catalyst.expressions.Expression,
-      child: LogicalPlan): Option[
-      (String, Either[(String, String), (Long, Long)])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def colName(e: Expression): Option[(String, DataType)] = e match {
-      case a: AttributeReference =>
-        columnOf(child, a).map(_ -> a.dataType)
-      case _ => None
-    }
-    def litLong(e: Expression): Option[Long] = e match {
-      case Literal(v, dt) => dt match {
-        case ByteType => Some(v.asInstanceOf[Byte].toLong)
-        case ShortType => Some(v.asInstanceOf[Short].toLong)
-        case IntegerType => Some(v.asInstanceOf[Int].toLong)
-        case LongType => Some(v.asInstanceOf[Long])
-        case _ => None
-      }
-      case _ => None
-    }
-    def litStr(e: Expression): Option[String] = e match {
-      case Literal(v, StringType) if v != null => Some(v.toString)
-      case _ => None
-    }
-    def isIntegral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    // per-conjunct (field, loL, hiL, loS, hiS) bounds; None = refuse
-    type B = (String, Option[Long], Option[Long], Option[String],
-      Option[String])
-    def conjunct(e: Expression): Option[Seq[B]] = e match {
-      case And(l, r) =>
-        for (a <- conjunct(l); b <- conjunct(r)) yield a ++ b
-      case IsNotNull(a: AttributeReference) =>
-        colName(a).map(c => Seq((c._1, None, None, None, None)))
-      case GreaterThanOrEqual(a, v) => colName(a).flatMap { c =>
-        litLong(v).filter(_ => isIntegral(c._2))
-          .map(n => Seq((c._1, Some(n), None, None, None)))
-          .orElse(litStr(v).filter(_ => c._2 == StringType).map(s =>
-            Seq((c._1, None, None, Some(s), None))))
-      }
-      case LessThanOrEqual(a, v) => colName(a).flatMap { c =>
-        litLong(v).filter(_ => isIntegral(c._2))
-          .map(n => Seq((c._1, None, Some(n), None, None)))
-          .orElse(litStr(v).filter(_ => c._2 == StringType).map(s =>
-            Seq((c._1, None, None, None, Some(s)))))
-      }
-      case GreaterThan(a, v) => colName(a).flatMap { c =>
-        litLong(v).filter(n => isIntegral(c._2) && n < Long.MaxValue)
-          .map(n => Seq((c._1, Some(n + 1), None, None, None)))
-      }
-      case LessThan(a, v) => colName(a).flatMap { c =>
-        litLong(v).filter(n => isIntegral(c._2) && n > Long.MinValue)
-          .map(n => Seq((c._1, None, Some(n - 1), None, None)))
-      }
-      case EqualTo(a, v) => colName(a).flatMap { c =>
-        litLong(v).filter(_ => isIntegral(c._2)).map(n =>
-          Seq((c._1, Some(n), Some(n), None, None)))
-          .orElse(litStr(v).filter(_ => c._2 == StringType).map(s =>
-            Seq((c._1, None, None, Some(s), Some(s)))))
-      }
-      case _ => None
-    }
-    conjunct(cond).flatMap { bs =>
-      val fields = bs.map(_._1).distinct
-      if (fields.size != 1) None
-      else {
-        val f = fields.head
-        val loL = bs.flatMap(_._2).maxOption
-        val hiL = bs.flatMap(_._3).minOption
-        val loS = bs.flatMap(_._4)
-          .sortWith(Snapshots.cpCompare(_, _) > 0).headOption
-        val hiS = bs.flatMap(_._5)
-          .sortWith(Snapshots.cpCompare(_, _) < 0).headOption
-        (loL.isDefined || hiL.isDefined,
-            loS.isDefined || hiS.isDefined) match {
-          case (true, false) => Some(f -> scala.util.Right((
-            loL.getOrElse(Long.MinValue), hiL.getOrElse(Long.MaxValue))))
-          case (false, true) if loS.isDefined && hiS.isDefined =>
-            Some(f -> scala.util.Left((loS.get, hiS.get)))
-          case _ => None // mixed kinds, bare IS NOT NULL, one-sided str
-        }
-      }
-    }
+  /** `cond` with every attribute renamed to the relation column it
+    * reads ([[columnOf]]), the shape [[BandRoute.ofExpr]]
+    * classifies; None when any attribute is not a relation column. */
+  private def onColumns(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression,
+      child: LogicalPlan)
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    val attrs = cond.collect { case a: AttributeReference => a }
+    if (!attrs.forall(columnOf(child, _).isDefined)) None
+    else Some(cond.transform { case a: AttributeReference =>
+      a.withName(columnOf(child, a).get) })
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -1007,28 +924,23 @@ final case class GraftMetaAggRule(session: SparkSession)
 
       // Filtered count: `SELECT count(*) WHERE k BETWEEN lo AND hi`
       // priced by the stats-sidecar band walk (Snapshots.countWhere
-      // / countWhereStr — EXACT by construction: fully-contained
-      // files contribute n_rows − n_null from metadata, straddling
-      // or uncovered files are scan-counted with the residual, MoR
-      // positions subtracted). Gated on sidecar coverage of the
-      // field so the optimization-time work is a metadata walk plus
-      // at most the band-straddling files, the same class of eager
-      // pricing as the bare-count arm above.
+      // on the range BandRoute.ofExpr classifies — EXACT by
+      // construction: fully-contained files contribute n_rows −
+      // n_null from metadata, straddling or uncovered files are
+      // scan-counted with the residual, MoR positions subtracted).
+      // Gated on sidecar coverage of the field so the
+      // optimization-time work is a metadata walk plus at most the
+      // band-straddling files, the same class of eager pricing as
+      // the bare-count arm above.
       case agg @ Aggregate(Nil, exprs, child, _)
           if exprs.nonEmpty && filteredStoreOf(child).isDefined &&
             exprs.forall(e =>
               classify(child)(e).contains(CountStar)) =>
         val (cond, fchild, url, v) = filteredStoreOf(child).get
-        bandOf(cond, fchild) match {
-          case Some((field, band))
-              if Snapshots.statsCovers(session, url, field) =>
-            val n = band match {
-              case scala.util.Right((lo, hi)) =>
-                Snapshots.countWhere(session, url, field, lo, hi, v)._1
-              case scala.util.Left((lo, hi)) =>
-                Snapshots.countWhereStr(session, url, field, lo, hi,
-                  v)._1
-            }
+        onColumns(cond, fchild).flatMap(BandRoute.ofExpr) match {
+          case Some(r) if Snapshots.statsCovers(session, url, r.field) =>
+            val n = Snapshots.countWhere(session, url, r.field, r.lo,
+              r.hi, v)(r.key)._1
             LocalRelation(agg.output.map(_.toAttribute),
               Seq(InternalRow.fromSeq(exprs.map(_ => n))))
           case _ => agg

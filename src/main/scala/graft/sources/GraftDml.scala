@@ -239,12 +239,8 @@ case class GraftUpdateCommand(url: String,
       case Some(r) if Snapshots.statsCovers(session, url, r.field) =>
         val casted = Snapshots.upcastSets(session,
           Snapshots.headSchema(session, url), setCols)
-        r match {
-          case BandRoute.LongRange(f, lo, hi) =>
-            Snapshots.updateWhere(session, url, f, lo, hi, casted)
-          case BandRoute.StrRange(f, lo, hi) =>
-            Snapshots.updateWhereStr(session, url, f, lo, hi, casted)
-        }
+        Snapshots.updateWhere(session, url, r.field, r.lo, r.hi,
+          casted)(r.key)
       case _ =>
         val condCol = cond.map(rebind).getOrElse(lit(true))
         Snapshots.updateWhereCond(session, url, condCol, setCols)

@@ -55,8 +55,7 @@ final case class GraftRead private (
     indexSel: Option[(String, RowGroupIndex.Selector)] = None,
     bloomSel: Option[(String, String, Seq[Any])] = None,
     asOfVersion: Option[Int] = None,
-    rangeSel: Seq[(String, Long, Long)] = Nil,
-    rangeStrSel: Seq[(String, String, String)] = Nil) {
+    ranges: Seq[Snapshots.BandRange] = Nil) {
 
   def fields(selectors: String*): GraftRead = copy(fieldSel = selectors)
   def predicate(p: RowPredicate): GraftRead = copy(preds = preds :+ p.toColumn)
@@ -98,19 +97,17 @@ final case class GraftRead private (
 
   /** Range-predicate file skipping over a [[Snapshots]] store with a
     * [[Snapshots.indexStats]] sidecar: the file list is pruned to
-    * the [lo, hi]-overlapping band before the scan, and the residual
-    * predicate is applied after decode — exact even with stale or
-    * absent stats. Composes with fields/predicate/shard/shuffle/asOf
-    * in one chain; single-store only (the sidecar is per-store). */
-  def range(field: String, lo: Long, hi: Long): GraftRead =
-    copy(rangeSel = rangeSel :+ ((field, lo, hi)))
-
-  /** [[range]] for STRING fields: file skipping by the sidecar's
-    * truncated-prefix bands ([[Snapshots.prunedFilesStr]] — code-
-    * point order, conservative under truncation), residual filter
-    * after decode. Same composition and single-store contract. */
-  def rangeStr(field: String, lo: String, hi: String): GraftRead =
-    copy(rangeStrSel = rangeStrSel :+ ((field, lo, hi)))
+    * the [lo, hi]-overlapping band before the scan (every range of
+    * the chain in ONE sidecar read, [[Snapshots.prunedFilesAll]]),
+    * and the range's own residual is applied after decode — exact
+    * even with stale or absent stats. `Long` ranges probe
+    * integral/date/timestamp fields, `String` ranges string fields
+    * by their truncated-prefix bands ([[Snapshots.BandKey]]).
+    * Composes with fields/predicate/shard/shuffle/asOf in one chain;
+    * single-store only (the sidecar is per-store). */
+  def range[K: Snapshots.BandKey](field: String, lo: K,
+      hi: K): GraftRead =
+    copy(ranges = ranges :+ Snapshots.BandKey[K].range(field, lo, hi))
 
   /** Iteration control (E1). `k ≥ 1` unions k epoch copies, epoch j
     * reshuffled with seed+j (ventilator re-shuffle parity,
@@ -214,35 +211,28 @@ final case class GraftRead private (
     def normPath(s: String): String =
       new org.apache.hadoop.fs.Path(s).toUri.getPath
     val admitted: Option[Set[String]] =
-      if (indexSel.isEmpty && bloomSel.isEmpty && rangeSel.isEmpty &&
-        rangeStrSel.isEmpty) None
+      if (indexSel.isEmpty && bloomSel.isEmpty && ranges.isEmpty) None
       else {
         require(urls.length == 1,
           "index()/bloomIndex()/range() are single-store: the index " +
             "sidecar is built per store")
-        // ONE version resolution for every range predicate: resolving
-        // per-predicate would let a concurrent commit land between
-        // two resolutions, pruning each against a different manifest
-        // — their intersection then silently drops rows
-        lazy val snapVersion: Int = {
-          require(Snapshots.versions(spark, urls.head).nonEmpty,
-            ".range() needs a Snapshots store (the stats sidecar " +
-              "lives in its root; see Snapshots.indexStats)")
-          asOfVersion.getOrElse(Snapshots.latest(spark, urls.head))
-        }
         val viaSel = indexSel.map { case (iu, sel) =>
           RowGroupIndex.selectedFiles(spark, urls.head, iu, sel) }
         val viaBloom = bloomSel.map { case (iu, f, vs) =>
           RowGroupIndex.bloomSelectedFiles(spark, urls.head, iu, f, vs) }
-        val viaRange = rangeSel.map { case (f, lo, hi) =>
-          Snapshots.prunedFiles(spark, urls.head, snapVersion, f,
-            lo, hi)
+        // every range prunes against ONE version resolution and one
+        // sidecar read: per-range resolutions would let a concurrent
+        // commit land between two, pruning each against a different
+        // manifest — their intersection then silently drops rows
+        val viaRange = if (ranges.isEmpty) None else {
+          require(Snapshots.versions(spark, urls.head).nonEmpty,
+            ".range() needs a Snapshots store (the stats sidecar " +
+              "lives in its root; see Snapshots.indexStats)")
+          Some(Snapshots.prunedFilesAll(spark, urls.head,
+            asOfVersion.getOrElse(Snapshots.latest(spark, urls.head)),
+            ranges))
         }
-        val viaRangeStr = rangeStrSel.map { case (f, lo, hi) =>
-          Snapshots.prunedFilesStr(spark, urls.head, snapVersion,
-            f, lo, hi)
-        }
-        Some((viaSel.toSeq ++ viaBloom.toSeq ++ viaRange ++ viaRangeStr)
+        Some((viaSel.toSeq ++ viaBloom.toSeq ++ viaRange.toSeq)
           .map(_.map(normPath).toSet).reduce(_ intersect _))
       }
     val files = admitted match {
@@ -317,10 +307,10 @@ final case class GraftRead private (
     // 5. residual predicate (decoded values, like the worker-side
     //    predicate; Catalyst pushes what it can into the scan).
     //    range()'s residual rides here too: skipping is a superset
-    //    admission, the filter makes it exact
-    val rangePred = (rangeSel ++ rangeStrSel).map { case (f, lo, hi) =>
-      col(f) >= lit(lo) && col(f) <= lit(hi) }
-    val filtered = (preds ++ rangePred).foldLeft(decoded)(_.filter(_))
+    //    admission, the filter makes it exact (typed by the STORED
+    //    schema — the field may sit outside the fields() view)
+    val filtered = (preds ++ ranges.map(_.residual(storage.schema)))
+      .foldLeft(decoded)(_.filter(_))
 
     // 6. post-decode transform (T1)
     val transformed = transformSpec.map(_(filtered)).getOrElse(filtered)

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * fact store by the hottest `joinKey` ([[Snapshots.cluster]]) and
   * file-stats skipping prunes that scan to the touched key bands
   * (long AND string join keys both prune —
-  * [[Snapshots.prunedFilesForKeys]] / [[Snapshots.prunedFilesForKeysStr]]).
+  * [[Snapshots.prunedFilesForKeys]]).
   * The view upsert rewrites only files that can hold an affected
   * key (copy-on-write — supply a `factKey` bloom sidecar to
   * [[refreshStar]]; without one [[Snapshots.upsert]] conservatively
@@ -267,30 +267,24 @@ object JoinView {
             dimNows(k).schema(jk))))
         // dim-driven invalidation: probe the fact store with the
         // changed dim keys. With a stats sidecar the probe opens
-        // ONLY files whose band holds a changed key — long keys via
-        // [[Snapshots.prunedFilesForKeys]], STRING keys via
-        // [[Snapshots.prunedFilesForKeysStr]] (cluster the fact
-        // store by the join key to make the bands narrow); the
-        // broadcast semi-join stays as the exact residual. Falls
-        // back to the full fact scan only for other key types or
-        // absent stats.
-        val longKeys = dDKeyVals.collect {
-          case l: Long => l
-          case i: Int => i.toLong
-        }
-        val strKeys = dDKeyVals.collect { case s: String => s }
-        val factProbe =
-          if (longKeys.length == dDKeyVals.length) {
+        // ONLY files whose band holds a changed key — long and
+        // STRING keys alike via [[Snapshots.prunedFilesForKeys]]
+        // (cluster the fact store by the join key to make the bands
+        // narrow); the broadcast semi-join stays as the exact
+        // residual. Falls back to the full fact scan only for other
+        // key types or absent stats.
+        def probe[K](key: Snapshots.BandKey[K]): Option[DataFrame] = {
+          val keys = dDKeyVals.flatMap(key.keyOf)
+          if (keys.length < dDKeyVals.length) None
+          else {
             val files = Snapshots.prunedFilesForKeys(spark, factUrl,
-              fv, jk, longKeys)
-            if (files.isEmpty) factNow.limit(0)
-            else Snapshots.readEntryPaths(spark, factUrl, fv, files)
-          } else if (strKeys.length == dDKeyVals.length) {
-            val files = Snapshots.prunedFilesForKeysStr(spark,
-              factUrl, fv, jk, strKeys)
-            if (files.isEmpty) factNow.limit(0)
-            else Snapshots.readEntryPaths(spark, factUrl, fv, files)
-          } else factNow
+              fv, jk, keys)(key)
+            Some(if (files.isEmpty) factNow.limit(0)
+              else Snapshots.readEntryPaths(spark, factUrl, fv, files))
+          }
+        }
+        val factProbe = probe(Snapshots.BandKey.LongKey)
+          .orElse(probe(Snapshots.BandKey.StrKey)).getOrElse(factNow)
         factProbe.join(broadcast(dDKeys), Seq(jk), "left_semi")
           .select(col(m.factKey))
       }

@@ -175,16 +175,17 @@ object RowGroupIndex {
     if (fresh.nonEmpty)
       bloomRowsFor(spark, fresh, fields, expectedPerFile, fpp)
         .coalesce(1).write.mode("append").parquet(indexUrl)
+    // the fold keeps live files' rows only, joined on the normalized
+    // path: rows already store `Path.toUri.getPath`
+    // ([[bloomRowsFor]]); the regexp strips a URI scheme/authority
+    // the same way, as the probe side's normalization does
+    import spark.implicits._
+    val live = broadcast(currentNorm.toSeq.toDF("__live"))
+    val fileNorm = regexp_replace(col("file"),
+      "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
     SidecarDelta.compactIfNeeded(spark, fs, idxPath, df =>
-      df.filter(udfFileKept(currentNorm)(col("file")))
+      df.join(live, fileNorm === col("__live"), "left_semi")
         .dropDuplicates("field", "file"))
-  }
-
-  private def udfFileKept(currentNorm: Set[String]) = {
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
-    org.apache.spark.sql.functions.udf(
-      (f: String) => currentNorm.contains(norm(f)))
   }
 
   /** The shared per-file bloom build over an explicit file list

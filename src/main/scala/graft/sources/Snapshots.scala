@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-versioned parquet store: MVCC time travel over a plain
@@ -901,15 +901,44 @@ object Snapshots {
     * shape at 100 TB); untouched files are re-listed as-is, old
     * versions stay readable, the CDC feed sees the deletions. Rows
     * with a NULL field survive (a range predicate cannot match
-    * NULL). Returns the committed version — the CURRENT one when no
-    * file can hold a match (true no-op, nothing committed). */
-  def deleteWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long): Int = {
-    val parentV = latest(spark, url)
-    deleteFromFiles(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi))
+    * NULL). Like every range entry point it takes a `Long` range on
+    * an integral/date/timestamp field or a `String` range on a
+    * string field ([[BandKey]]); any other pairing refuses. Returns
+    * the committed version — the CURRENT one when no file can hold
+    * a match (true no-op, nothing committed). */
+  def deleteWhere[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K): Int = {
+    val r = BandKey[K].range(field, lo, hi)
+    val (_, root) = fsOf(spark, url)
+    val parent = snap(spark, url, latest(spark, url))
+    val files = pruneRanges(spark, url, parent, "deleteWhere", Seq(r))
+    if (files.isEmpty) return parent.version
+    val storeSchema = schemaOf(spark, root, parent)
+    val hit = coalesce(r.residual(storeSchema), lit(false))
+    val scanned = readEntriesEff(spark, root, files, storeSchema,
+        parent.colmap)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // stats admission is conservative (files without a stats row
+      // must-read) — a band-sized match count keeps a no-match
+      // delete a TRUE no-op instead of an empty rewrite commit.
+      // ONE action over the persisted scan (the r19 shape paid a
+      // kept.count + scanned.count pair).
+      val matches = scanned.agg(count(when(hit, lit(1))).as("m"))
+        .collect()(0).getLong(0)
+      if (matches == 0L) return parent.version
+      val v = parent.version + 1
+      // re-cluster the survivors on the delete field: a round-robin
+      // rewrite would give every new file a full-width band and
+      // progressively de-cluster the store under repeated retention
+      // deletes
+      val rewritten = writeFiles(spark, root, scanned.filter(!hit), v,
+        math.max(1, files.length), clusterBy = Some(field),
+        colmap = parent.colmap)
+      commit(spark, root, v, "delete",
+        parent.files.filterNot(files.toSet) ++ rewritten,
+        Some(storeSchema), parent.colmap, parent.dropped)
+    } finally scanned.unpersist()
   }
 
   /** GENERAL-predicate copy-on-write DELETE — `DELETE FROM store
@@ -918,12 +947,12 @@ object Snapshots {
     * CONTAIN a match are rewritten without those rows, untouched
     * files re-list, and the CDC feed sees exactly the deletions.
     * SQL DELETE semantics: a row deletes only when the condition is
-    * TRUE (NULL survives). Unlike the banded [[deleteWhere]]/
-    * [[deleteWhereStr]] flavors this cannot prune the attribution
-    * scan from statistics (an arbitrary predicate has no band), so
-    * it reads the corpus once — prefer the range flavors for
-    * retention sweeps; this is the exactness fallback and the SQL
-    * `DELETE FROM` path ([[GraftCatalog]]). Returns the CURRENT
+    * TRUE (NULL survives). Unlike the banded [[deleteWhere]] this
+    * cannot prune the attribution scan from statistics (an
+    * arbitrary predicate has no band), so it reads the corpus once
+    * — prefer the range flavors for retention sweeps; this is the
+    * exactness fallback and the SQL `DELETE FROM` path
+    * ([[GraftCatalog]]). Returns the CURRENT
     * version when nothing matches (true no-op). */
   def deleteWhereCond(spark: SparkSession, url: String,
       cond: Column): Int = {
@@ -956,10 +985,10 @@ object Snapshots {
     * and the CDC feed sees exactly the updates. SQL assignment
     * semantics: a SET expression whose type safely upcasts to the
     * pinned column type is cast implicitly; anything lossy refuses.
-    * Prefer the banded [[updateWhere]]/[[updateWhereStr]] flavors
-    * for range-shaped sweeps (stats-priced attribution); this is
-    * the exactness fallback and the SQL `UPDATE` path. Returns the
-    * CURRENT version when nothing matches. */
+    * Prefer the banded [[updateWhere]] for range-shaped sweeps
+    * (stats-priced attribution); this is the exactness fallback and
+    * the SQL `UPDATE` path. Returns the CURRENT version when nothing
+    * matches. */
   def updateWhereCond(spark: SparkSession, url: String, cond: Column,
       sets: Map[String, Column]): Int = {
     val (_, root) = fsOf(spark, url)
@@ -1009,54 +1038,6 @@ object Snapshots {
       Some(storeSchema), parent.colmap, parent.dropped)
   }
 
-  /** [[deleteWhere]] for a STRING field (prefix-band pruning). */
-  def deleteWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String): Int = {
-    val parentV = latest(spark, url)
-    deleteFromFiles(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-  }
-
-  private def deleteFromFiles(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      files: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
-    val storeSchema = schemaOf(spark, root, parent)
-    rangeTypeGate("deleteWhere", storeSchema, field, wantString)
-    if (files.isEmpty) return parent.version
-    val names = files.toSet
-    val scanned = readEntriesEff(spark, root, files, storeSchema,
-        parent.colmap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val kept = scanned.filter(!coalesce(pred(storeSchema),
-        lit(false)))
-      // stats admission is conservative (files without a stats row
-      // must-read) — a band-sized match count keeps a no-match
-      // delete a TRUE no-op instead of an empty rewrite commit.
-      // ONE action over the persisted scan (the r19 shape paid a
-      // kept.count + scanned.count pair).
-      val matches = scanned.agg(count(when(
-        coalesce(pred(storeSchema), lit(false)), lit(1))).as("m"))
-        .collect()(0).getLong(0)
-      if (matches == 0L) return parent.version
-      val v = parent.version + 1
-      // re-cluster the survivors on the delete field: a round-robin
-      // rewrite would give every new file a full-width band and
-      // progressively de-cluster the store under repeated retention
-      // deletes
-      val rewritten = writeFiles(spark, root, kept, v,
-        math.max(1, files.length), clusterBy = Some(field),
-        colmap = parent.colmap)
-      commit(spark, root, v, "delete",
-        parent.files.filterNot(names) ++ rewritten, Some(storeSchema),
-        parent.colmap, parent.dropped)
-    } finally scanned.unpersist()
-  }
-
   /** MERGE-ON-READ range DELETE — `DELETE FROM store WHERE field
     * BETWEEN lo AND hi` WITHOUT rewriting any data file: matching
     * row positions land in a deletion-vector sidecar and each
@@ -1075,45 +1056,35 @@ object Snapshots {
     * exactly when no surviving manifest names them. Returns the
     * committed version — the CURRENT one when no row matches (true
     * no-op, nothing committed). */
-  def deleteWhereMor(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long): Int = {
-    val parentV = latest(spark, url)
-    morDelete(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi))
-  }
-
-  /** [[deleteWhereMor]] for a STRING field (prefix-band pruning). */
-  def deleteWhereMorStr(spark: SparkSession, url: String,
-      field: String, lo: String, hi: String): Int = {
-    val parentV = latest(spark, url)
-    morDelete(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-  }
-
-  /** Shared flavor/type gate for every range mutation: a wrong-typed
-    * range would coerce to never-matching and "succeed" touching
-    * nothing — the silent-empty class. */
-  private def rangeTypeGate(op: String,
-      storeSchema: org.apache.spark.sql.types.StructType,
-      field: String, wantString: Boolean): Unit = {
-    import org.apache.spark.sql.types._
-    require(storeSchema.fieldNames.contains(field),
-      s"$op: no column $field in the store schema")
-    val isString = storeSchema(field).dataType == StringType
-    require(isString == wantString,
-      s"$op: column $field is ${storeSchema(field).dataType} — use " +
-        s"the ${if (isString) "string" else "numeric"}-range API " +
-        "flavor")
-    if (!wantString) storeSchema(field).dataType match {
-      case ByteType | ShortType | IntegerType | LongType |
-           DateType | TimestampType => ()
-      case dt => throw new IllegalArgumentException(
-        s"$op: column $field is $dt — not a range-mutation type " +
-          "(integral/date/timestamp/string)")
-    }
+  def deleteWhereMor[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K): Int = {
+    val r = BandKey[K].range(field, lo, hi)
+    val (fs, root) = fsOf(spark, url)
+    val parent = snap(spark, url, latest(spark, url))
+    val entries = pruneRanges(spark, url, parent, "deleteWhereMor",
+      Seq(r))
+    if (entries.isEmpty) return parent.version
+    val storeSchema = schemaOf(spark, root, parent)
+    // positions of newly matching rows among the candidates'
+    // EFFECTIVE rows (already-deleted positions never re-match)
+    val hits = readEntriesWithPos(spark, root, entries, storeSchema,
+        parent.colmap)
+      .filter(coalesce(r.residual(storeSchema), lit(false)))
+      .select(col(DvFileCol).as("__dv_file"),
+        col(DvPosCol).as("__dv_pos"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // O(candidate files) driver frame — the order every pruning
+      // probe already pays
+      val affectedData = hits.select("__dv_file").distinct()
+        .collect().map(_.getString(0)).toSet
+      if (affectedData.isEmpty) return parent.version // true no-op
+      // disjoint by construction: hits come from effective rows
+      val allDel = (hits +: carriedPositions(spark, root, entries,
+        affectedData)).reduce(_ unionByName _)
+      commitMor(spark, fs, root, parent, "mordelete", affectedData,
+        allDel, Nil, storeSchema)
+    } finally hits.unpersist()
   }
 
   /** Chained-MoR carry: the AFFECTED files' prior deletion vectors,
@@ -1149,37 +1120,6 @@ object Snapshots {
       Some(storeSchema), parent.colmap, parent.dropped)
   }
 
-  private def morDelete(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      entries: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column): Int = {
-    val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
-    val storeSchema = schemaOf(spark, root, parent)
-    rangeTypeGate("deleteWhereMor", storeSchema, field, wantString)
-    if (entries.isEmpty) return parent.version
-    // positions of newly matching rows among the candidates'
-    // EFFECTIVE rows (already-deleted positions never re-match)
-    val hits = readEntriesWithPos(spark, root, entries, storeSchema,
-        parent.colmap)
-      .filter(coalesce(pred(storeSchema), lit(false)))
-      .select(col(DvFileCol).as("__dv_file"),
-        col(DvPosCol).as("__dv_pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // O(candidate files) driver frame — the order every pruning
-      // probe already pays
-      val affectedData = hits.select("__dv_file").distinct()
-        .collect().map(_.getString(0)).toSet
-      if (affectedData.isEmpty) return parent.version // true no-op
-      // disjoint by construction: hits come from effective rows
-      val allDel = (hits +: carriedPositions(spark, root, entries,
-        affectedData)).reduce(_ unionByName _)
-      commitMor(spark, fs, root, parent, "mordelete", affectedData,
-        allDel, Nil, storeSchema)
-    } finally hits.unpersist()
-  }
-
   /** MERGE-ON-READ range UPDATE — `UPDATE store SET c = expr WHERE
     * field BETWEEN lo AND hi` WITHOUT rewriting the matched files:
     * the matched rows' positions land in a deletion vector (their
@@ -1193,40 +1133,20 @@ object Snapshots {
     * never match, no-match is a true no-op, old versions read their
     * own vectors, and the CDC feed emits exact update (+pre-image)
     * rows — the manifest diff prices the commit as drop+add. */
-  def updateWhereMor(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    morUpdate(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi), set)
-  }
-
-  /** [[updateWhereMor]] for a STRING field (prefix-band pruning). */
-  def updateWhereMorStr(spark: SparkSession, url: String,
-      field: String, lo: String, hi: String,
-      set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    morUpdate(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi), set)
-  }
-
-  private def morUpdate(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      entries: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column,
-      set: Map[String, Column]): Int = {
+  def updateWhereMor[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K, set: Map[String, Column]): Int = {
+    val r = BandKey[K].range(field, lo, hi)
     val (fs, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
+    val parent = snap(spark, url, latest(spark, url))
     val storeSchema = schemaOf(spark, root, parent)
     require(set.nonEmpty, "updateWhereMor: empty SET clause")
     set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhereMor: SET names unknown column $c — updates never " +
         "add columns (that is schema evolution, use append/upsert)"))
-    rangeTypeGate("updateWhereMor", storeSchema, field, wantString)
+    val entries = pruneRanges(spark, url, parent, "updateWhereMor",
+      Seq(r))
     if (entries.isEmpty) return parent.version
-    val hit = coalesce(pred(storeSchema), lit(false))
+    val hit = coalesce(r.residual(storeSchema), lit(false))
     val matched = readEntriesWithPos(spark, root, entries, storeSchema,
         parent.colmap)
       .filter(hit)
@@ -1244,7 +1164,7 @@ object Snapshots {
       }
       validateBatch(spark, root, url, updated)
       // delete side: matched positions + prior deletions of the
-      // affected files (the [[morDelete]] chain contract)
+      // affected files (the [[deleteWhereMor]] chain contract)
       val hits = matched.select(col(DvFileCol).as("__dv_file"),
         col(DvPosCol).as("__dv_pos"))
       val allDel = (hits +: carriedPositions(spark, root, entries,
@@ -1298,44 +1218,24 @@ object Snapshots {
     * silent cast (the silent-empty doctrine). Returns the committed
     * version — the CURRENT one when no row matches (true no-op,
     * nothing committed). */
-  def updateWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    updateInFiles(spark, url, parentV, field, wantString = false,
-      pruneEntries(spark, url, parentV, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi), set)
-  }
-
-  /** [[updateWhere]] for a STRING field (prefix-band pruning). */
-  def updateWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String, set: Map[String, Column]): Int = {
-    val parentV = latest(spark, url)
-    updateInFiles(spark, url, parentV, field, wantString = true,
-      pruneEntries(spark, url, parentV, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi), set)
-  }
-
-  private def updateInFiles(spark: SparkSession, url: String,
-      parentV: Int, field: String, wantString: Boolean,
-      files: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column,
-      set: Map[String, Column]): Int = {
+  def updateWhere[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K, set: Map[String, Column]): Int = {
+    val r = BandKey[K].range(field, lo, hi)
     val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, parentV)
+    val parent = snap(spark, url, latest(spark, url))
     val storeSchema = schemaOf(spark, root, parent)
     require(set.nonEmpty, "updateWhere: empty SET clause")
     set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
       s"updateWhere: SET names unknown column $c — updates never " +
         "add columns (that is schema evolution, use append/upsert)"))
-    rangeTypeGate("updateWhere", storeSchema, field, wantString)
+    val files = pruneRanges(spark, url, parent, "updateWhere", Seq(r))
     if (files.isEmpty) return parent.version
     val names = files.toSet
     val scanned = readEntriesEff(spark, root, files, storeSchema,
         parent.colmap)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hit = coalesce(pred(storeSchema), lit(false))
+      val hit = coalesce(r.residual(storeSchema), lit(false))
       // stats admission is conservative — a row-level probe keeps a
       // no-match update a TRUE no-op instead of an identity rewrite
       if (scanned.filter(hit).limit(1).isEmpty) return parent.version
@@ -1356,7 +1256,7 @@ object Snapshots {
       val v = parent.version + 1
       // re-cluster on the range field: rewrites merge several input
       // files, and a round-robin layout would hand each output file
-      // a full-width band (the deleteFromFiles rationale)
+      // a full-width band (the [[deleteWhere]] rationale)
       val rewritten = writeFiles(spark, root, updated, v,
         math.max(1, files.length), clusterBy = Some(field),
         colmap = parent.colmap)
@@ -1916,7 +1816,7 @@ object Snapshots {
     * [[cpBump]] — a deliberate overestimate, so pruning stays
     * conservative). Any other column type is REFUSED loudly here:
     * before this gate a non-band-able field silently cast to
-    * all-null marker bands, which [[pruneByBands]] reads as "never
+    * all-null marker bands, which [[pruneEntries]] reads as "never
     * hits" — `readWhere` then returned EMPTY with no error, the one
     * wrong-answer-shaped path in the skipping layer.
     *
@@ -2084,181 +1984,253 @@ object Snapshots {
     * all-null-or-empty-file marker. A populated string band may
     * still have `maxS` = None — the [[cpBump]]-failed "unbounded
     * above" case, which pruning must-reads on the upper side. */
-  private final case class Band(minV: Option[Long], maxV: Option[Long],
-      minS: Option[String], maxS: Option[String]) {
+  private[sources] final case class Band(minV: Option[Long],
+      maxV: Option[Long], minS: Option[String], maxS: Option[String]) {
     def allNull: Boolean = minV.isEmpty && minS.isEmpty
   }
 
-  /** Load the sidecar's bands for `fields`, keyed field → file →
-    * band. None = no sidecar (read everything). Legacy sidecars
-    * without the string-band columns read as null string sides. */
-  private def loadBands(spark: SparkSession, fs:
-      org.apache.hadoop.fs.FileSystem, root: Path,
-      fields: Seq[String]): Option[Map[String, Map[String, Band]]] = {
-    val sp = statsPath(root)
-    if (!fs.exists(sp)) return None
-    val df0 = spark.read.parquet(sp.toString)
-      .filter(col("field").isin(fields: _*))
-    val df = if (df0.columns.contains("min_s")) df0
-      else df0.withColumn("min_s", lit(null).cast("string"))
-        .withColumn("max_s", lit(null).cast("string"))
-    Some(df.select("field", "file", "min_v", "max_v", "min_s", "max_s")
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (f, rs) => f -> rs.map(r => r.getString(1) -> Band(
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)),
-        Option(r.getString(4)), Option(r.getString(5)))).toMap })
-  }
+  /** The key domain of a [[BandRange]]. `Long` bands integral, date
+    * and timestamp columns (the latter two in their `cast("long")`
+    * form, the domain their bands were computed in); `String` bands
+    * string columns by truncated code-point prefixes. Every range
+    * entry point is generic in the key through this typeclass, so
+    * one definition serves both domains. */
+  sealed abstract class BandKey[K](kind: String, columns: String) {
+    def range(field: String, lo: K, hi: K): BandRange
+    /** The order the sidecar computed the bands under. */
+    private[sources] val ord: Ordering[K]
+    /** A band's bounds in this domain (upper None = unbounded). */
+    private[sources] def bounds(b: Band): (K, Option[K])
+    private[sources] def admits(
+        dt: org.apache.spark.sql.types.DataType): Boolean
+    /** A row value as a key of this domain, if it is one. */
+    private[sources] def keyOf(v: Any): Option[K]
 
-  /** A long-range band test with the TYPE GUARD: probing a
-    * string-banded field with a numeric range is a caller bug and
-    * fails loudly — silently treating the null long side as "never
-    * hits" is exactly the empty-read hazard [[indexStats]] closes. */
-  private def longHits(field: String, hits: (Long, Long) => Boolean)
-      (b: Band): Boolean = {
-    require(b.minS.isEmpty,
-      s"field $field carries STRING bands — use the string-range " +
-        "API (prunedFilesStr/readWhereStr/prunedFilesForKeysStr)")
-    hits(b.minV.get, b.maxV.get)
-  }
+    /** Refuse a column this domain cannot band: a wrong-typed range
+      * would coerce to never-matching and "succeed" touching
+      * nothing — the silent-empty class. */
+    private[sources] def gate(op: String,
+        schema: org.apache.spark.sql.types.StructType,
+        field: String): Unit = {
+      require(schema.fieldNames.contains(field),
+        s"$op: no column $field in the store schema")
+      val dt = schema(field).dataType
+      require(admits(dt),
+        s"$op: column $field is $dt — a $kind range bands $columns " +
+          "columns only")
+    }
 
-  /** String-band test: inclusive range overlap under code-point
-    * order ([[cpCompare]], = the UTF-8 binary order the engine used
-    * to compute the bands). An absent upper bound must-reads. */
-  private def strHits(field: String, lo: String, hi: String)
-      (b: Band): Boolean = {
-    require(b.minV.isEmpty,
-      s"field $field carries LONG bands — use the numeric-range " +
-        "API (prunedFiles/readWhere/prunedFilesForKeys)")
-    cpCompare(hi, b.minS.get) >= 0 &&
-      b.maxS.forall(mx => cpCompare(lo, mx) <= 0)
-  }
-
-  /** Shared skipping skeleton for [[prunedFiles]] /
-    * [[prunedFilesStr]] / [[prunedFilesForKeys]]: resolve the
-    * version's manifest, load the sidecar's bands for `field`, keep
-    * every file whose band satisfies `bandHits`. The conservatism
-    * contract lives here once: no sidecar → read everything; file
-    * without a stats row → must read; all-null band → a value
-    * predicate never hits. */
-  private def pruneEntries(spark: SparkSession, url: String,
-      version: Int, field: String)
-      (bandHits: Band => Boolean): Seq[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val s = snap(spark, url, version)
-    // the sidecar keys fields physically (rename-proof)
-    loadBands(spark, fs, root, Seq(s.phys(field))) match {
-      case None => s.files
-      case Some(byField) =>
-        val stats = byField.getOrElse(s.phys(field),
-          Map.empty[String, Band])
-        s.files.filter { f =>
-          stats.get(f) match {
-            case None => true
-            case Some(b) if b.allNull => false
-            case Some(b) => bandHits(b)
-          }
+    /** Key-set band test: does some key of `keys` sit inside the
+      * band? Binary search for the first key ≥ the band's lower
+      * bound, O(log k) per file. */
+    private[sources] def anyIn(keys: Seq[K]): Band => Boolean = {
+      val sorted = keys.distinct.sorted(ord).toIndexedSeq
+      b => {
+        val (mn, mx) = bounds(b)
+        var lo = 0; var hi = sorted.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (ord.lt(sorted(mid), mn)) lo = mid + 1 else hi = mid
         }
+        lo < sorted.length && mx.forall(ord.lteq(sorted(lo), _))
+      }
     }
   }
 
-  /** [[pruneEntries]] in the public path form (one string per
+  object BandKey {
+    def apply[K](implicit k: BandKey[K]): BandKey[K] = k
+
+    implicit object LongKey
+        extends BandKey[Long]("Long", "integral/date/timestamp") {
+      def range(field: String, lo: Long, hi: Long): BandRange =
+        LongRange(field, lo, hi)
+      private[sources] val ord: Ordering[Long] = Ordering.Long
+      private[sources] def bounds(b: Band) = (b.minV.get, b.maxV)
+      private[sources] def admits(
+          dt: org.apache.spark.sql.types.DataType): Boolean = {
+        import org.apache.spark.sql.types._
+        dt match {
+          case ByteType | ShortType | IntegerType | LongType |
+               DateType | TimestampType => true
+          case _ => false
+        }
+      }
+      private[sources] def keyOf(v: Any): Option[Long] = v match {
+        case l: Long => Some(l)
+        case i: Int => Some(i.toLong)
+        case _ => None
+      }
+    }
+
+    implicit object StrKey extends BandKey[String]("String", "string") {
+      def range(field: String, lo: String, hi: String): BandRange =
+        StrRange(field, lo, hi)
+      private[sources] val ord: Ordering[String] =
+        Ordering.fromLessThan(cpCompare(_, _) < 0)
+      private[sources] def bounds(b: Band) = (b.minS.get, b.maxS)
+      private[sources] def admits(
+          dt: org.apache.spark.sql.types.DataType): Boolean =
+        dt == org.apache.spark.sql.types.StringType
+      private[sources] def keyOf(v: Any): Option[String] = v match {
+        case s: String => Some(s)
+        case _ => None
+      }
+    }
+  }
+
+  /** A closed key range `[lo, hi]` on one store field — the one
+    * currency of the stats-sidecar skipping layer. [[prunedFiles]],
+    * [[readWhere]], [[countWhere]] and the banded DML flavors build
+    * one from their arguments; [[prunedFilesAll]] / [[readWhereAll]]
+    * take a conjunction of them; the SQL routes ([[BandRoute]]) and
+    * the reader chain (`GraftRead.range`) pass theirs through. A
+    * range owns its band tests and its exact residual filter; its
+    * [[BandKey]] owns the key order and the column-type gate. */
+  sealed trait BandRange {
+    type K
+    def field: String
+    def lo: K
+    def hi: K
+    def key: BandKey[K]
+
+    /** Can a file with band `b` hold a key in the range? An absent
+      * upper bound must-reads. */
+    private[sources] def overlaps(b: Band): Boolean = {
+      val (mn, mx) = key.bounds(b)
+      key.ord.lteq(mn, hi) && mx.forall(key.ord.lteq(lo, _))
+    }
+
+    /** Is every non-null key of band `b` inside the range? Sound
+      * under prefix truncation: a string band's lower bound is ≤
+      * the file's true minimum and its successor upper bound ≥ the
+      * true maximum; an unbounded band is never contained. */
+    private[sources] def contains(b: Band): Boolean = {
+      val (mn, mx) = key.bounds(b)
+      key.ord.lteq(lo, mn) && mx.exists(key.ord.lteq(_, hi))
+    }
+
+    /** The exact row filter pruning is a superset admission for.
+      * Date/timestamp columns compare through the SAME
+      * `cast("long")` their bands were computed under (a bare long
+      * literal would fail analysis on them); every other column
+      * compares directly, so the predicate still pushes into the
+      * parquet scan. Spark's string order is the UTF-8 binary order
+      * the string bands use, so band survival and residual agree. */
+    def residual(schema: org.apache.spark.sql.types.StructType): Column = {
+      import org.apache.spark.sql.types.{DateType, TimestampType}
+      val c = schema(field).dataType match {
+        case DateType | TimestampType => col(field).cast("long")
+        case _ => col(field)
+      }
+      c >= lit(lo) && c <= lit(hi)
+    }
+  }
+
+  final case class LongRange(field: String, lo: Long, hi: Long)
+      extends BandRange {
+    type K = Long
+    def key: BandKey[Long] = BandKey.LongKey
+  }
+
+  final case class StrRange(field: String, lo: String, hi: String)
+      extends BandRange {
+    type K = String
+    def key: BandKey[String] = BandKey.StrKey
+  }
+
+  /** ONE read of the stats sidecar: the rows of the physical
+    * `fields` as (physical field, file, band, row), the row carrying
+    * the `extra` columns from index 6 on. A column a legacy sidecar
+    * predates (string bands, row counts, sums) reads as null. None =
+    * no sidecar. */
+  private def statsRows(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      fields: Seq[String], extra: Seq[String] = Nil)
+      : Option[Seq[(String, String, Band, Row)]] = {
+    val sp = statsPath(root)
+    if (!fs.exists(sp)) return None
+    val df = spark.read.parquet(sp.toString)
+    val cols = Seq("field", "file", "min_v", "max_v", "min_s",
+      "max_s") ++ extra
+    Some(df.filter(col("field").isin(fields: _*))
+      .select(cols.map(c =>
+        if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), Band(
+        if (r.isNullAt(2)) None else Some(r.getLong(2)),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)),
+        Option(r.getString(4)), Option(r.getString(5))), r)))
+  }
+
+  /** The ONE skipping skeleton under every pruning entry point: gate
+    * each probed field's type against the version's schema, load the
+    * bands of every probed field in one sidecar read, and keep each
+    * manifest entry whose band passes every probe. The conservatism
+    * contract lives here once: no sidecar → read everything; file
+    * without a stats row → must read; all-null band → a value
+    * predicate never hits. Returns root-relative entries. */
+  private def pruneEntries(spark: SparkSession, url: String, s: Snap,
+      op: String, probes: Seq[(String, BandKey[_], Band => Boolean)])
+      : Seq[String] = {
+    val (fs, root) = fsOf(spark, url)
+    val schema = schemaOf(spark, root, s)
+    probes.foreach { case (f, k, _) => k.gate(op, schema, f) }
+    // the sidecar keys fields physically (rename-proof)
+    statsRows(spark, fs, root, probes.map(p => s.phys(p._1)).distinct)
+      match {
+        case None => s.files
+        case Some(rows) =>
+          val bands = rows.map { case (f, file, b, _) =>
+            (f, file) -> b }.toMap
+          s.files.filter(e => probes.forall { case (f, _, hit) =>
+            bands.get((s.phys(f), e)) match {
+              case None => true
+              case Some(b) if b.allNull => false
+              case Some(b) => hit(b)
+            }
+          })
+      }
+  }
+
+  private def pruneRanges(spark: SparkSession, url: String, s: Snap,
+      op: String, ranges: Seq[BandRange]): Seq[String] =
+    pruneEntries(spark, url, s, op,
+      ranges.map(r => (r.field, r.key, r.overlaps _)))
+
+  /** Root-relative entries in the public path form (one string per
     * surviving manifest ENTRY — on a merge-on-read store a composite
     * entry's path form exists nowhere on disk; read survivors
     * through [[readEntryPaths]], never raw `spark.read`). */
-  private def pruneByBands(spark: SparkSession, url: String,
-      version: Int, field: String)
-      (bandHits: Band => Boolean): Seq[String] = {
-    val (_, root) = fsOf(spark, url)
-    pruneEntries(spark, url, version, field)(bandHits)
-      .map(f => new Path(root, f).toString)
-  }
+  private def entryPaths(url: String, entries: Seq[String]): Seq[String] =
+    entries.map(f => new Path(new Path(url), f).toString)
 
   /** The subset of `version`'s files that can contain a row with
     * `field` in [lo, hi] — resolved from the stats sidecar WITHOUT
-    * opening any data file. A file is kept when its stats row says
-    * the range overlaps [min_v, max_v], or when no stats row covers
-    * it (stats lag is a performance bug, never a correctness bug).
-    * All-null and zero-row files are skipped: a range predicate
-    * cannot match NULL. Returns absolute paths. */
-  def prunedFiles(spark: SparkSession, url: String, version: Int,
-      field: String, lo: Long, hi: Long): Seq[String] =
-    pruneByBands(spark, url, version, field)(
-      longHits(field, (mn, mx) => mx >= lo && mn <= hi))
-
-  /** [[prunedFiles]] for a STRING field: a file survives when its
-    * prefix band can overlap [lo, hi] under code-point order. The
-    * bands are truncated prefixes, so survival is conservative
-    * (never skips a file that could hold a match); the caller's
-    * residual filter keeps the read exact. */
-  def prunedFilesStr(spark: SparkSession, url: String, version: Int,
-      field: String, lo: String, hi: String): Seq[String] =
-    pruneByBands(spark, url, version, field)(strHits(field, lo, hi))
-
-  /** The residual for a long-band range: date/timestamp columns
-    * compare through the SAME cast the bands were computed under
-    * (`col.cast("long")` — a bare long literal comparison would
-    * fail analysis on them); integral columns compare directly so
-    * the predicate still pushes into the parquet scan. */
-  private def longRangePred(
-      schema: org.apache.spark.sql.types.StructType, field: String,
-      lo: Long, hi: Long): Column = {
-    import org.apache.spark.sql.types._
-    schema(field).dataType match {
-      case DateType | TimestampType =>
-        col(field).cast("long") >= lit(lo) &&
-          col(field).cast("long") <= lit(hi)
-      case _ => col(field) >= lit(lo) && col(field) <= lit(hi)
-    }
-  }
-
-  /** Shared read tail for the pruned-read family: survivors under
-    * the version's PINNED schema (pruning to pre-evolution files
-    * must not make evolved columns vanish — the [[readAsOf]]
-    * contract), residual applied, schema-shaped empty frame when
-    * nothing survives. */
-  private def readPruned(spark: SparkSession, url: String, v: Int,
-      entries: Seq[String],
-      pred: org.apache.spark.sql.types.StructType => Column)
-      : DataFrame = {
-    val root = fsOf(spark, url)._2
-    val s = snap(spark, url, v)
-    val schema = schemaOf(spark, root, s)
-    if (entries.isEmpty) readAsOf(spark, url, v).filter(lit(false))
-    else readEntriesEff(spark, root, entries, schema, s.colmap)
-      .filter(pred(schema))
-  }
+    * opening any data file. A file is kept when its stats band can
+    * overlap the range, or when no stats row covers it (stats lag is
+    * a performance bug, never a correctness bug). All-null and
+    * zero-row files are skipped: a range predicate cannot match
+    * NULL. `Long` ranges probe integral/date/timestamp fields,
+    * `String` ranges string fields by their truncated prefix bands
+    * (conservative: never skips a file that could hold a match; the
+    * caller's residual filter keeps the read exact). Returns
+    * absolute paths. */
+  def prunedFiles[K: BandKey](spark: SparkSession, url: String,
+      version: Int, field: String, lo: K, hi: K): Seq[String] =
+    entryPaths(url, pruneRanges(spark, url, snap(spark, url, version),
+      "prunedFiles", Seq(BandKey[K].range(field, lo, hi))))
 
   /** Range-predicate read with file skipping: resolve the version's
     * manifest, prune files through [[prunedFiles]], and apply the
-    * residual filter to the survivors (so the result is exact even
-    * when stats are stale or absent). The metadata cost is O(files);
-    * the data cost is only the overlapping band — on a store
-    * [[cluster]]ed by `field`, a narrow range touches a handful of
-    * files out of 100k. */
-  def readWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    readPruned(spark, url, v,
-      pruneEntries(spark, url, v, field)(
-        longHits(field, (mn, mx) => mx >= lo && mn <= hi)),
-      longRangePred(_, field, lo, hi))
-  }
-
-  /** [[readWhere]] for a STRING field: prune through
-    * [[prunedFilesStr]], then apply the exact residual range filter
-    * (Spark's string comparison is the same UTF-8 binary order the
-    * bands were computed under, so band survival and the residual
-    * agree). Cluster the store by the field to make prefix bands
-    * narrow — a name-range probe then opens a handful of files. */
-  def readWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    readPruned(spark, url, v,
-      pruneEntries(spark, url, v, field)(strHits(field, lo, hi)),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-  }
+    * range's residual filter to the survivors (so the result is
+    * exact even when stats are stale or absent). The metadata cost
+    * is O(files); the data cost is only the overlapping band — on a
+    * store [[cluster]]ed by `field`, a narrow range touches a handful
+    * of files out of 100k. */
+  def readWhere[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K, version: Int = -1): DataFrame =
+    readWhereAll(spark, url, Seq(BandKey[K].range(field, lo, hi)),
+      version)
 
   /** Maintenance rewrite: re-lay the live rows range-clustered on
     * `field` as a NEW version (op "cluster") — old versions stay
@@ -2300,128 +2272,91 @@ object Snapshots {
       Some(df.schema), parent.colmap, parent.dropped)
   }
 
-  /** Conjunctive multi-field pruning: a file survives only if EVERY
-    * range can overlap it ([[prunedFiles]] per field, intersected).
-    * On a [[zcluster]]ed store each predicate prunes independently. */
+  /** Conjunctive multi-field pruning with ONE sidecar read: a file
+    * survives only if EVERY range can overlap it ([[prunedFiles]]
+    * per range, intersected). Long and string ranges mix freely —
+    * on a [[zcluster]]ed store each range prunes independently.
+    * Returns sorted absolute paths. */
   def prunedFilesAll(spark: SparkSession, url: String, version: Int,
-      preds: Seq[(String, Long, Long)]): Seq[String] = {
-    require(preds.nonEmpty, "prunedFilesAll needs at least one range")
-    prunedFilesMixed(spark, url, version, preds, Nil)
-  }
-
-  /** [[prunedFilesAll]] over a conjunction of LONG ranges and STRING
-    * ranges together — the mixed-type probe a store clustered on a
-    * name and stats-indexed on several fields answers with ONE
-    * sidecar read (a 4-range z-order probe used to pay 4 Spark jobs
-    * + 4 manifest resolves). */
-  def prunedFilesMixed(spark: SparkSession, url: String, version: Int,
-      preds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)]): Seq[String] = {
-    val (_, root) = fsOf(spark, url)
-    pruneEntriesMixed(spark, url, version, preds, strPreds)
-      .map(f => new Path(root, f).toString).sorted
-  }
-
-  private def pruneEntriesMixed(spark: SparkSession, url: String,
-      version: Int, preds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)]): Seq[String] = {
-    require(preds.nonEmpty || strPreds.nonEmpty,
-      "prunedFilesMixed needs at least one range")
-    val (fs, root) = fsOf(spark, url)
-    val s = snap(spark, url, version)
-    val fields = (preds.map(_._1) ++ strPreds.map(_._1))
-      .distinct.map(s.phys)
-    loadBands(spark, fs, root, fields) match {
-      case None => s.files.sorted
-      case Some(byField) =>
-        def test(fname: String, f: String)(hit: Band => Boolean) =
-          byField.getOrElse(s.phys(f), Map.empty[String, Band])
-            .get(fname) match {
-              case None => true
-              case Some(b) if b.allNull => false
-              case Some(b) => hit(b)
-            }
-        s.files.filter { fname =>
-          preds.forall { case (f, lo, hi) =>
-            test(fname, f)(
-              longHits(f, (mn, mx) => mx >= lo && mn <= hi))
-          } && strPreds.forall { case (f, lo, hi) =>
-            test(fname, f)(strHits(f, lo, hi))
-          }
-        }.sorted
-    }
+      ranges: Seq[BandRange]): Seq[String] = {
+    require(ranges.nonEmpty, "prunedFilesAll needs at least one range")
+    entryPaths(url, pruneRanges(spark, url, snap(spark, url, version),
+      "prunedFilesAll", ranges)).sorted
   }
 
   /** File pruning for a KEY SET — the CDC-invalidation shape
     * ([[JoinView.refresh]]'s dim-driven side probes the fact store
     * with the changed dim keys): a file survives iff its stats band
-    * [min,max] contains at least one probed key. One stats-sidecar
-    * read, O(files · log k) driver work (binary search per band).
+    * can hold at least one probed key. One stats-sidecar read,
+    * O(files · log k) driver work (binary search per band).
     * Exactness is the caller's residual filter: files without a
     * stats row are conservatively kept, all-null bands are skipped —
     * the [[prunedFiles]] contract. */
-  def prunedFilesForKeys(spark: SparkSession, url: String,
-      version: Int, field: String, keys: Seq[Long]): Seq[String] = {
+  def prunedFilesForKeys[K: BandKey](spark: SparkSession, url: String,
+      version: Int, field: String, keys: Seq[K]): Seq[String] = {
     if (keys.isEmpty) return Seq.empty
-    val sorted = keys.distinct.sorted.toArray
-    pruneByBands(spark, url, version, field)(longHits(field,
-      (mn, mx) => {
-        // any probed key inside [mn,mx]? binary search for the first
-        // key >= mn, then check it is <= mx
-        var lo = 0; var hi = sorted.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (sorted(mid) < mn) lo = mid + 1 else hi = mid
-        }
-        lo < sorted.length && sorted(lo) <= mx
-      }))
-  }
-
-  /** [[prunedFilesForKeys]] for a STRING key column: a file
-    * survives iff some probed key can sit inside its prefix band
-    * under code-point order (binary search over the sorted key
-    * set, same O(files · log k) driver cost). The string-dim-key
-    * shape [[JoinView.refresh]] probes with. */
-  def prunedFilesForKeysStr(spark: SparkSession, url: String,
-      version: Int, field: String, keys: Seq[String]): Seq[String] = {
-    if (keys.isEmpty) return Seq.empty
-    val sorted = keys.distinct.sortWith(cpCompare(_, _) < 0).toArray
-    pruneByBands(spark, url, version, field) { b =>
-      require(b.minV.isEmpty,
-        s"field $field carries LONG bands — use prunedFilesForKeys")
-      val mn = b.minS.get
-      // first key >= mn, then check it is <= the upper bound
-      var lo = 0; var hi = sorted.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (cpCompare(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
-      }
-      lo < sorted.length &&
-        b.maxS.forall(mx => cpCompare(sorted(lo), mx) <= 0)
-    }
+    val k = BandKey[K]
+    entryPaths(url, pruneEntries(spark, url, snap(spark, url, version),
+      "prunedFilesForKeys", Seq((field, k, k.anyIn(keys)))))
   }
 
   /** [[readWhere]] over a conjunction of ranges: files pruned by
-    * [[prunedFilesAll]], every residual predicate applied. */
+    * [[prunedFilesAll]] (one sidecar read), every residual applied —
+    * one call answers `price IN [lo,hi] AND name IN [a,b]` exactly.
+    * Survivors read under the version's PINNED schema (pruning to
+    * pre-evolution files must not make evolved columns vanish — the
+    * [[readAsOf]] contract); a schema-shaped empty frame when
+    * nothing survives. */
   def readWhereAll(spark: SparkSession, url: String,
-      preds: Seq[(String, Long, Long)], version: Int = -1): DataFrame =
-    readWhereMixed(spark, url, preds, Nil, version)
+      ranges: Seq[BandRange], version: Int = -1): DataFrame = {
+    require(ranges.nonEmpty, "readWhereAll needs at least one range")
+    val root = fsOf(spark, url)._2
+    val s = snap(spark, url,
+      if (version > 0) version else latest(spark, url))
+    val entries = pruneRanges(spark, url, s, "readWhere", ranges)
+    val schema = schemaOf(spark, root, s)
+    if (entries.isEmpty) readAsOf(spark, url, s.version).filter(lit(false))
+    else readEntriesEff(spark, root, entries, schema, s.colmap)
+      .filter(ranges.map(_.residual(schema)).reduce(_ && _))
+  }
 
-  /** [[readWhereAll]] with STRING ranges in the conjunction: files
-    * pruned by [[prunedFilesMixed]], every residual applied — one
-    * call answers `price IN [lo,hi] AND name IN [a,b]` with one
-    * sidecar read and an exact result. */
-  def readWhereMixed(spark: SparkSession, url: String,
-      preds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)],
-      version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else latest(spark, url)
-    readPruned(spark, url, v,
-      pruneEntriesMixed(spark, url, v, preds, strPreds),
-      schema => (preds.map { case (f, lo, hi) =>
-        longRangePred(schema, f, lo, hi) } ++
-        strPreds.map { case (f, lo, hi) =>
-          col(f) >= lit(lo) && col(f) <= lit(hi) }).reduce(_ && _))
+  /** The band walk [[countWhere]] and [[aggWhere]] share: gate `r`,
+    * then answer each of the version's files from its sidecar row
+    * when the range contains its band and `fromMeta` accepts the row
+    * (its `extra` columns start at index 6, null where a legacy
+    * sidecar predates them), skip it when its band is all-null or
+    * disjoint, and scan it otherwise — no stats row, a straddling
+    * band, or a row `fromMeta` refuses. No sidecar scans everything.
+    * Returns (metadata-answered rows, files scanned, the scanned
+    * files' residual-filtered rows — None when nothing is
+    * scanned). */
+  private def walkBands(spark: SparkSession, url: String,
+      version: Int, op: String, r: BandRange, extra: Seq[String])
+      (fromMeta: Row => Boolean): (Seq[Row], Int, Option[DataFrame]) = {
+    val (fs, root) = fsOf(spark, url)
+    val s = snap(spark, url,
+      if (version > 0) version else latest(spark, url))
+    val schema = schemaOf(spark, root, s)
+    r.key.gate(op, schema, r.field)
+    val rows = statsRows(spark, fs, root, Seq(s.phys(r.field)), extra)
+      .getOrElse(Nil).map { case (_, f, b, row) => f -> ((b, row)) }
+      .toMap
+    val meta = Seq.newBuilder[Row]
+    val toScan = Seq.newBuilder[String]
+    s.files.foreach { f =>
+      rows.get(f) match {
+        case None => toScan += f
+        case Some((b, _)) if b.allNull => () // no value can match
+        case Some((b, row)) =>
+          if (r.contains(b) && fromMeta(row)) meta += row
+          else if (r.overlaps(b)) toScan += f
+      }
+    }
+    val files = toScan.result()
+    (meta.result(), files.size,
+      if (files.isEmpty) None
+      else Some(readEntriesEff(spark, root, files, schema, s.colmap)
+        .filter(r.residual(schema))))
   }
 
   /** Exact `SELECT count(*) WHERE field BETWEEN lo AND hi` that
@@ -2432,86 +2367,19 @@ object Snapshots {
     * files partially overlapping the range — or not yet covered by
     * stats — are scanned with the residual predicate. On a store
     * [[cluster]]ed by the field, a wide range over 100k files scans
-    * the two BOUNDARY files; metadata answers the rest. Exactness
-    * never depends on stats freshness: no sidecar (or a legacy one
-    * without row counts) degrades to scan-counting the band-admitted
-    * files. Returns (count, filesScanned) so callers can assert the
-    * scan subset. */
-  def countWhere(spark: SparkSession, url: String, field: String,
-      lo: Long, hi: Long, version: Int = -1): (Long, Int) =
-    countByBands(spark, url, version, field, wantString = false,
-      b => { longHits(field, (mn, mx) => lo <= mx && hi >= mn)(b) },
-      b => lo <= b.minV.get && b.maxV.get <= hi,
-      longRangePred(_, field, lo, hi))
-
-  /** [[countWhere]] for a STRING field (prefix bands): containment
-    * stays sound under truncation — the stored lower band is ≤ the
-    * file's true minimum and the successor upper band is ≥ its true
-    * maximum, so `lo ≤ min_s && max_s ≤ hi` proves every value is
-    * inside; an "unbounded above" band (failed successor) is never
-    * metadata-counted. */
-  def countWhereStr(spark: SparkSession, url: String, field: String,
-      lo: String, hi: String, version: Int = -1): (Long, Int) =
-    countByBands(spark, url, version, field, wantString = true,
-      strHits(field, lo, hi),
-      b => cpCompare(lo, b.minS.get) <= 0 &&
-        b.maxS.exists(mx => cpCompare(mx, hi) <= 0),
-      _ => col(field) >= lit(lo) && col(field) <= lit(hi))
-
-  private def countByBands(spark: SparkSession, url: String,
-      version: Int, field: String, wantString: Boolean,
-      overlapping: Band => Boolean, contained: Band => Boolean,
-      residual: org.apache.spark.sql.types.StructType => Column)
-      : (Long, Int) = {
-    val (fs, root) = fsOf(spark, url)
-    val v = if (version > 0) version else latest(spark, url)
-    val s = snap(spark, url, v)
-    val schema = schemaOf(spark, root, s)
-    require(schema.fieldNames.contains(field),
-      s"countWhere: no column $field in the store schema")
-    import org.apache.spark.sql.types._
-    val isString = schema(field).dataType == StringType
-    require(isString == wantString,
-      s"countWhere: column $field is ${schema(field).dataType} — " +
-        s"use the ${if (isString) "string" else "numeric"}-range " +
-        "API flavor")
-    def scanCount(entries: Seq[String]): Long =
-      if (entries.isEmpty) 0L
-      else readEntriesEff(spark, root, entries, schema, s.colmap)
-        .filter(residual(schema)).count()
-    val sp = statsPath(root)
-    val hasCounts = fs.exists(sp) &&
-      spark.read.parquet(sp.toString).columns.contains("n_rows")
-    if (!hasCounts) {
-      // conservative fallback: band-prune if possible, scan-count
-      val admitted = pruneEntries(spark, url, v, field)(overlapping)
-      return (scanCount(admitted), admitted.size)
-    }
-    // one sidecar read: band + row/null counts per covered file
-    // (fields keyed physically — rename-proof)
-    val rows = spark.read.parquet(sp.toString)
-      .filter(col("field") === s.phys(field))
-      .select("file", "min_v", "max_v", "min_s", "max_s",
-        "n_null", "n_rows")
-      .collect()
-      .map(r => r.getString(0) -> ((Band(
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        Option(r.getString(3)), Option(r.getString(4))),
-        r.getLong(5), r.getLong(6)))).toMap
-    var metaCount = 0L
-    val toScan = Seq.newBuilder[String]
-    s.files.foreach { f =>
-      rows.get(f) match {
-        case None => toScan += f
-        case Some((b, _, _)) if b.allNull => () // no value can match
-        case Some((b, nNull, nRows)) =>
-          if (contained(b)) metaCount += nRows - nNull
-          else if (overlapping(b)) toScan += f
-      }
-    }
-    val files = toScan.result()
-    (metaCount + scanCount(files), files.size)
+    * the two BOUNDARY files; metadata answers the rest. String
+    * ranges count by prefix bands ([[BandRange]]'s containment stays
+    * sound under truncation). Exactness never depends on stats
+    * freshness: no sidecar (or a legacy one without row counts)
+    * degrades to scan-counting the band-admitted files. Returns
+    * (count, filesScanned) so callers can assert the scan subset. */
+  def countWhere[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K, version: Int = -1): (Long, Int) = {
+    val (meta, scanned, scan) = walkBands(spark, url, version,
+      "countWhere", BandKey[K].range(field, lo, hi),
+      Seq("n_null", "n_rows"))(!_.isNullAt(7))
+    (meta.map(r => r.getLong(7) - r.getLong(6)).sum +
+      scan.fold(0L)(_.count()), scanned)
   }
 
   /** [[aggWhere]]'s result: exact aggregates over the rows whose
@@ -2531,89 +2399,27 @@ object Snapshots {
     * with the residual predicate. The dashboard/retention-audit
     * query — `sum(bytes) in the last 30 days` on a 100k-file store —
     * becomes one sidecar read plus two boundary files. Long-band
-    * fields only (a string sum is meaningless — [[countWhereStr]]
+    * fields only (a string sum is meaningless — [[countWhere]]
     * covers string ranges); exactness never depends on stats
     * freshness. */
   def aggWhere(spark: SparkSession, url: String, field: String,
       lo: Long, hi: Long, version: Int = -1): RangeAgg = {
-    val (fs, root) = fsOf(spark, url)
-    val v = if (version > 0) version else latest(spark, url)
-    val s = snap(spark, url, v)
-    val schema = schemaOf(spark, root, s)
-    require(schema.fieldNames.contains(field),
-      s"aggWhere: no column $field in the store schema")
-    import org.apache.spark.sql.types._
-    schema(field).dataType match {
-      case ByteType | ShortType | IntegerType | LongType |
-           DateType | TimestampType => ()
-      case dt => throw new IllegalArgumentException(
-        s"aggWhere: column $field is $dt — long-band fields only " +
-          "(integral/date/timestamp; string ranges: countWhereStr)")
-    }
-    def scanAgg(entries: Seq[String])
-        : (Long, BigDecimal, Option[Long], Option[Long]) =
-      if (entries.isEmpty) (0L, BigDecimal(0), None, None)
-      else {
-        val vc = col(field).cast("long")
-        val r = readEntriesEff(spark, root, entries, schema, s.colmap)
-          .filter(longRangePred(schema, field, lo, hi))
-          .agg(count(lit(1)).as("n"),
-            sum(vc.cast("decimal(38,0)")).as("s"),
-            min(vc).as("mn"), max(vc).as("mx"))
-          .collect()(0)
-        (r.getLong(0),
-          if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)))
-      }
-    def merge(meta: (Long, BigDecimal, Option[Long], Option[Long]),
-        scan: (Long, BigDecimal, Option[Long], Option[Long]),
-        scanned: Int): RangeAgg =
-      RangeAgg(meta._1 + scan._1, meta._2 + scan._2,
-        (meta._3.toSeq ++ scan._3.toSeq).reduceOption(_ min _),
-        (meta._4.toSeq ++ scan._4.toSeq).reduceOption(_ max _),
-        scanned)
-    val overlapping = longHits(field, (mn, mx) => lo <= mx && hi >= mn) _
-    val sp = statsPath(root)
-    val hasSums = fs.exists(sp) &&
-      spark.read.parquet(sp.toString).columns.contains("sum_v")
-    if (!hasSums) {
-      val admitted = pruneEntries(spark, url, v, field)(overlapping)
-      return merge((0L, BigDecimal(0), None, None),
-        scanAgg(admitted), admitted.size)
-    }
-    val rows = spark.read.parquet(sp.toString)
-      .filter(col("field") === s.phys(field))
-      .select("file", "min_v", "max_v", "min_s", "max_s",
-        "n_null", "n_rows", "sum_v")
-      .collect()
-      .map(r => r.getString(0) -> ((Band(
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        Option(r.getString(3)), Option(r.getString(4))),
-        r.getLong(5), r.getLong(6),
-        if (r.isNullAt(7)) None else Some(BigDecimal(r.getDecimal(7)))
-      ))).toMap
-    var mCount = 0L; var mSum = BigDecimal(0)
-    var mMin = Option.empty[Long]; var mMax = Option.empty[Long]
-    val toScan = Seq.newBuilder[String]
-    s.files.foreach { f =>
-      rows.get(f) match {
-        case None => toScan += f
-        case Some((b, _, _, _)) if b.allNull => ()
-        case Some((b, nNull, nRows, sumV)) =>
-          val contained = lo <= b.minV.get && b.maxV.get <= hi
-          if (contained && sumV.isDefined) {
-            mCount += nRows - nNull
-            mSum += sumV.get
-            mMin = (mMin.toSeq :+ b.minV.get).reduceOption(_ min _)
-            mMax = (mMax.toSeq :+ b.maxV.get).reduceOption(_ max _)
-          } else if (overlapping(b))
-            toScan += f
-      }
-    }
-    val files = toScan.result()
-    merge((mCount, mSum, mMin, mMax), scanAgg(files), files.size)
+    val (meta, scanned, scan) = walkBands(spark, url, version,
+      "aggWhere", LongRange(field, lo, hi),
+      Seq("n_null", "n_rows", "sum_v"))(!_.isNullAt(8))
+    val vc = col(field).cast("long")
+    val agg = scan.map(_.agg(count(lit(1)),
+      sum(vc.cast("decimal(38,0)")), min(vc), max(vc)).collect()(0))
+    // min_v/max_v sit at 2/3 of a sidecar row, as min/max do in agg
+    def longs(i: Int): Seq[Long] = meta.map(_.getLong(i)) ++
+      agg.filterNot(_.isNullAt(i)).map(_.getLong(i))
+    RangeAgg(
+      meta.map(r => r.getLong(7) - r.getLong(6)).sum +
+        agg.fold(0L)(_.getLong(0)),
+      (meta.map(_.getDecimal(8)) ++
+        agg.filterNot(_.isNullAt(1)).map(_.getDecimal(1)))
+        .map(BigDecimal(_)).sum,
+      longs(2).minOption, longs(3).maxOption, scanned)
   }
 
   /** Bin-pack maintenance: rewrite ONLY the live files smaller than

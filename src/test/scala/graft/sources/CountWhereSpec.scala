@@ -38,7 +38,7 @@ class CountWhereSpec extends SparkSpec {
       ((0L, 0)))
     // flavor gate
     intercept[IllegalArgumentException] {
-      Snapshots.countWhereStr(spark, url, "x", "a", "b")
+      Snapshots.countWhere(spark, url, "x", "a", "b")
     }
   }
 
@@ -58,7 +58,7 @@ class CountWhereSpec extends SparkSpec {
     Snapshots.indexStats(spark, surl, Seq("k"))
     val totalS = Snapshots
       .snap(spark, surl, Snapshots.latest(spark, surl)).files.size
-    val (ns, ss) = Snapshots.countWhereStr(spark, surl, "k", "c", "e~")
+    val (ns, ss) = Snapshots.countWhere(spark, surl, "k", "c", "e~")
     assert(ns == 90L) // all of c, d, e
     assert(ss < totalS, s"string count scanned $ss/$totalS")
     intercept[IllegalArgumentException] {
@@ -67,7 +67,7 @@ class CountWhereSpec extends SparkSpec {
     // stats lag: new files without stats rows are scanned, count exact
     Snapshots.append(spark, surl,
       Seq(("c99", 99L)).toDF("k", "v"), nFiles = 1)
-    val (n2, s2) = Snapshots.countWhereStr(spark, surl, "k", "c", "e~")
+    val (n2, s2) = Snapshots.countWhere(spark, surl, "k", "c", "e~")
     assert(n2 == 91L && s2 >= 1)
   }
 

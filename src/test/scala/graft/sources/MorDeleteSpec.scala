@@ -56,7 +56,7 @@ class MorDeleteSpec extends SparkSpec {
       == v2)
     // flavor gate: string range on a long column refuses
     intercept[IllegalArgumentException] {
-      Snapshots.deleteWhereMorStr(spark, url, "id", "a", "b")
+      Snapshots.deleteWhereMor(spark, url, "id", "a", "b")
     }
   }
 
@@ -213,7 +213,7 @@ class MorDeleteSpec extends SparkSpec {
     assert(Snapshots.updateWhereMor(spark, url, "id", 900L, 999L,
       Map("body" -> lit("x"))) == v2)
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhereMorStr(spark, url, "id", "a", "b",
+      Snapshots.updateWhereMor(spark, url, "id", "a", "b",
         Map("body" -> lit("x")))
     }
     // chained on the same file AFTER a MoR delete: both fold

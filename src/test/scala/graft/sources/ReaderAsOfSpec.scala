@@ -99,7 +99,7 @@ class ReaderAsOfSpec extends SparkSpec {
     val v = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, v).files.size
     val df = GraftRead.reader(spark, url)
-      .rangeStr("name", "c", "d").load()
+      .range("name", "c", "d").load()
     val scanned = df.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.inputFiles.length
@@ -109,8 +109,28 @@ class ReaderAsOfSpec extends SparkSpec {
       df.agg(sum("v")).as[Long].head() == (1L to 20L).sum)
     // conjunction across the typed range flavors stays exact
     val both = GraftRead.reader(spark, url)
-      .rangeStr("name", "c", "d").range("v", 5L, 7L).load()
+      .range("name", "c", "d").range("v", 5L, 7L).load()
     assert(both.agg(sum("v")).as[Long].head() == (5L to 7L).sum)
+  }
+
+  test("reader.range() on a timestamp field applies the range's own " +
+      "cast(long) residual: the same rows as Snapshots.readWhere") {
+    val url = scratch(
+      s"rd_tsrange/${java.util.UUID.randomUUID().toString.take(8)}")
+    val rows = (1L to 300L).map(i =>
+      (i, new java.sql.Timestamp(1600000000000L + i * 1000L)))
+    Snapshots.create(spark, url, rows.toDF("id", "event_ts"),
+      nFiles = 5, clusterBy = Some("event_ts"))
+    Snapshots.indexStats(spark, url, Seq("event_ts"))
+    // the band domain of a timestamp is cast(long) SECONDS
+    val lo = 1600000000L + 100L; val hi = 1600000000L + 150L
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").as[Long].collect().toSeq.sorted
+    val viaStore = ids(Snapshots.readWhere(spark, url, "event_ts",
+      lo, hi))
+    assert(viaStore == (100L to 150L))
+    assert(ids(GraftRead.reader(spark, url)
+      .range("event_ts", lo, hi).load()) == viaStore)
   }
 
   test("versionAt/readAsOfTime resolve timestamp time travel from " +

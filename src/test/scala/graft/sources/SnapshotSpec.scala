@@ -336,8 +336,9 @@ class SnapshotSpec extends SparkSpec {
     val zV = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, zV).files.size
     // a narrow rectangle prunes on both dims under z-order
-    val keptZ = Snapshots.prunedFilesAll(spark, url, zV,
-      Seq(("x", 0L, 15L), ("y", 0L, 15L))).size
+    val rect = Seq(Snapshots.LongRange("x", 0L, 15L),
+      Snapshots.LongRange("y", 0L, 15L))
+    val keptZ = Snapshots.prunedFilesAll(spark, url, zV, rect).size
     assert(keptZ < total, s"z-order kept $keptZ/$total")
     // the 1-D x-clustered version prunes on x but NOT on y
     val kept1dY = Snapshots.prunedFiles(spark, url, zV - 1, "y",
@@ -345,8 +346,7 @@ class SnapshotSpec extends SparkSpec {
     assert(kept1dY == Snapshots.snap(spark, url, zV - 1).files.size,
       "x-clustered files should all span the full y range")
     // and the read is exact
-    val got = Snapshots.readWhereAll(spark, url,
-      Seq(("x", 0L, 15L), ("y", 0L, 15L)))
+    val got = Snapshots.readWhereAll(spark, url, rect)
       .agg(count(lit(1))).as[Long].head()
     assert(got == 16L * 16L)
   }

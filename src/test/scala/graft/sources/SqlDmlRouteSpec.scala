@@ -29,15 +29,15 @@ class SqlDmlRouteSpec extends SparkSpec {
   test("BandRoute.ofFilters: long shapes, combination, fallbacks") {
     def go(fs: f.Filter*) = BandRoute.ofFilters(longSchema, fs)
     assert(go(f.EqualTo("k", 7)) ==
-      Some(BandRoute.LongRange("k", 7, 7)))
+      Some(Snapshots.LongRange("k", 7, 7)))
     assert(go(f.GreaterThanOrEqual("k", 5), f.LessThan("k", 9)) ==
-      Some(BandRoute.LongRange("k", 5, 8)))
+      Some(Snapshots.LongRange("k", 5, 8)))
     // strict bounds tighten by ±1; IsNotNull absorbed
     assert(go(f.GreaterThan("k", 5), f.IsNotNull("k")) ==
-      Some(BandRoute.LongRange("k", 6, Long.MaxValue)))
+      Some(Snapshots.LongRange("k", 6, Long.MaxValue)))
     // one-sided upper
     assert(go(f.LessThanOrEqual("k", 3)) ==
-      Some(BandRoute.LongRange("k", Long.MinValue, 3)))
+      Some(Snapshots.LongRange("k", Long.MinValue, 3)))
     // overflow-adjacent strict bound refuses
     assert(go(f.GreaterThan("k", Long.MaxValue)).isEmpty)
     // two different fields refuse
@@ -53,13 +53,13 @@ class SqlDmlRouteSpec extends SparkSpec {
   test("BandRoute.ofFilters: string shapes") {
     def go(fs: f.Filter*) = BandRoute.ofFilters(longSchema, fs)
     assert(go(f.EqualTo("s", "m")) ==
-      Some(BandRoute.StrRange("s", "m", "m")))
+      Some(Snapshots.StrRange("s", "m", "m")))
     assert(go(f.GreaterThanOrEqual("s", "b"),
         f.LessThanOrEqual("s", "d")) ==
-      Some(BandRoute.StrRange("s", "b", "d")))
+      Some(Snapshots.StrRange("s", "b", "d")))
     // strict lower bound = binary-order successor
     assert(go(f.GreaterThan("s", "b"), f.LessThanOrEqual("s", "d")) ==
-      Some(BandRoute.StrRange("s", "b\u0000", "d")))
+      Some(Snapshots.StrRange("s", "b\u0000", "d")))
     // no upper bound → not expressible as an inclusive band
     assert(go(f.GreaterThanOrEqual("s", "b")).isEmpty)
     // strict upper bound has no predecessor
@@ -665,6 +665,33 @@ class SqlDmlRouteSpec extends SparkSpec {
     assert(!spark.sql(disj).queryExecution.optimizedPlan.toString
       .contains("LocalRelation"), "disjunction must scan")
     assert(run(disj) == 16L)
+  }
+
+  test("FILTERED count pushdown classifies through BandRoute: a " +
+      "projected alias, reversed operands and a strict string lower " +
+      "bound price from the sidecar and equal the DataFrame count") {
+    val url = s"$root/fcls"
+    Snapshots.create(spark, url,
+      (1L to 80L).map(i => (i, f"${('a' + i % 26).toChar}$i%02d"))
+        .toDF("k", "s"), nFiles = 4, clusterBy = Some("k"))
+    Snapshots.indexStats(spark, url, Seq("k", "s"))
+    val df = Snapshots.read(spark, url)
+    def priced(sql: String): Long = {
+      val q = spark.sql(sql)
+      assert(q.queryExecution.executedPlan.toString
+        .contains("LocalTableScan"),
+        s"not sidecar-priced:\n${q.queryExecution.executedPlan}")
+      q.as[Long].head()
+    }
+    assert(priced("SELECT count(*) FROM (SELECT k AS x FROM " +
+      "gdml.fcls) WHERE x BETWEEN 10 AND 30") ==
+      df.filter(col("k").between(10L, 30L)).count())
+    assert(priced("SELECT count(*) FROM gdml.fcls " +
+      "WHERE 5 <= k AND 20 > k") ==
+      df.filter(col("k") >= 5L && col("k") < 20L).count())
+    assert(priced("SELECT count(*) FROM gdml.fcls " +
+      "WHERE s > 'm' AND s <= 't'") ==
+      df.filter(col("s") > "m" && col("s") <= "t").count())
   }
 
   test("min/max pushdown: stats-sidecar-priced when every entry is " +

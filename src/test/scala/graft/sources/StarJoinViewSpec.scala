@@ -90,7 +90,7 @@ class StarJoinViewSpec extends SparkSpec {
     // before string bands this fell back to the full fact scan
     val fv = Snapshots.latest(spark, factUrl)
     val total = Snapshots.snap(spark, factUrl, fv).files.length
-    val pruned = Snapshots.prunedFilesForKeysStr(spark, factUrl, fv,
+    val pruned = Snapshots.prunedFilesForKeys(spark, factUrl, fv,
       "uid", Seq("user_07"))
     assert(pruned.nonEmpty && pruned.length < total,
       s"expected a strict subset, got ${pruned.length}/$total")

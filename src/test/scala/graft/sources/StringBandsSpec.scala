@@ -37,17 +37,17 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, url, Seq("name"))
     val v = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, v).files.size
-    val pruned = Snapshots.prunedFilesStr(spark, url, v, "name",
+    val pruned = Snapshots.prunedFiles(spark, url, v, "name",
       "c", "d")
     assert(pruned.size < total,
       s"expected string-band pruning (kept ${pruned.size}/$total)")
-    val got = Snapshots.readWhereStr(spark, url, "name", "c", "d")
+    val got = Snapshots.readWhere(spark, url, "name", "c", "d")
       .agg(count(lit(1)), sum("v")).as[(Long, Long)].head()
     assert(got == ((20L, (1L to 20L).sum)))
     // no-hit range skips every file but the read is still exact
-    assert(Snapshots.prunedFilesStr(spark, url, v, "name",
+    assert(Snapshots.prunedFiles(spark, url, v, "name",
       "zzz", "zzzz").isEmpty)
-    assert(Snapshots.readWhereStr(spark, url, "name",
+    assert(Snapshots.readWhere(spark, url, "name",
       "zzz", "zzzz").count() == 0L)
     // a numeric-range probe on a STRING-banded field is a type
     // confusion, not an empty read
@@ -60,7 +60,7 @@ class StringBandsSpec extends SparkSpec {
       (1L to 50L).map(i => (i, i)).toDF("id", "x"), nFiles = 2)
     Snapshots.indexStats(spark, url2, Seq("x"))
     intercept[IllegalArgumentException] {
-      Snapshots.prunedFilesStr(spark, url2,
+      Snapshots.prunedFiles(spark, url2,
         Snapshots.latest(spark, url2), "x", "a", "b")
     }
   }
@@ -79,10 +79,10 @@ class StringBandsSpec extends SparkSpec {
     // so every clustered file must survive (no false skip)...
     val lo = f"${pad}050"; val hi = f"${pad}060"
     val clustered = Snapshots.snap(spark, url, v).files.size
-    assert(Snapshots.prunedFilesStr(spark, url, v, "k", lo, hi)
+    assert(Snapshots.prunedFiles(spark, url, v, "k", lo, hi)
       .nonEmpty)
     // ...and the residual filter keeps the answer exact
-    val got = Snapshots.readWhereStr(spark, url, "k", lo, hi)
+    val got = Snapshots.readWhere(spark, url, "k", lo, hi)
       .agg(count(lit(1)), sum("v")).as[(Long, Long)].head()
     assert(got == ((11L, (50L to 60L).sum)))
     assert(clustered >= 4)
@@ -98,12 +98,12 @@ class StringBandsSpec extends SparkSpec {
     val v = Snapshots.latest(spark, url)
     // upper bound is unbounded → the file survives any probe above
     // its minimum; the residual keeps the read exact (empty here)
-    assert(Snapshots.prunedFilesStr(spark, url, v, "k",
+    assert(Snapshots.prunedFiles(spark, url, v, "k",
       "zzz", "zzzz").nonEmpty)
-    assert(Snapshots.readWhereStr(spark, url, "k", "zzz", "zzzz")
+    assert(Snapshots.readWhere(spark, url, "k", "zzz", "zzzz")
       .count() == 0L)
     // a probe that does hit still reads its row
-    assert(Snapshots.readWhereStr(spark, url, "k", weird, weird)
+    assert(Snapshots.readWhere(spark, url, "k", weird, weird)
       .count() == 1L)
   }
 
@@ -117,14 +117,14 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, url, Seq("k"))
     val v = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, v).files.size
-    val hit = Snapshots.prunedFilesForKeysStr(spark, url, v, "k",
+    val hit = Snapshots.prunedFilesForKeys(spark, url, v, "k",
       Seq("b3", "b7"))
     assert(hit.nonEmpty && hit.size < total,
       s"expected key-set pruning (kept ${hit.size}/$total)")
-    assert(Snapshots.prunedFilesForKeysStr(spark, url, v, "k",
+    assert(Snapshots.prunedFilesForKeys(spark, url, v, "k",
       Seq("zzz")).isEmpty)
-    assert(Snapshots.prunedFilesForKeysStr(spark, url, v, "k",
-      Nil).isEmpty)
+    assert(Snapshots.prunedFilesForKeys(spark, url, v, "k",
+      Seq.empty[String]).isEmpty)
   }
 
   test("readWhereMixed: long + string ranges conjoin with one " +
@@ -137,16 +137,16 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, url, Seq("name", "v"))
     val v = Snapshots.latest(spark, url)
     val total = Snapshots.snap(spark, url, v).files.size
-    val files = Snapshots.prunedFilesMixed(spark, url, v,
-      Seq(("v", 5L, 7L)), Seq(("name", "c", "d")))
+    val ranges = Seq(Snapshots.LongRange("v", 5L, 7L),
+      Snapshots.StrRange("name", "c", "d"))
+    val files = Snapshots.prunedFilesAll(spark, url, v, ranges)
     assert(files.nonEmpty && files.size < total)
-    val got = Snapshots.readWhereMixed(spark, url,
-      Seq(("v", 5L, 7L)), Seq(("name", "c", "d")))
+    val got = Snapshots.readWhereAll(spark, url, ranges)
       .agg(count(lit(1)), sum("v")).as[(Long, Long)].head()
     assert(got == ((3L, 5L + 6L + 7L)))
-    // a string range alone through the mixed API
-    assert(Snapshots.readWhereMixed(spark, url, Nil,
-      Seq(("name", "a", "b"))).count() == 30L)
+    // a string range alone through the conjunctive API
+    assert(Snapshots.readWhereAll(spark, url,
+      Seq(Snapshots.StrRange("name", "a", "b"))).count() == 30L)
   }
 
   test("deleteWhere: copy-on-write range delete rewrites only the " +
@@ -188,7 +188,7 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, surl, Seq("k"))
     val sv0 = Snapshots.latest(spark, surl)
     val sBefore = Snapshots.snap(spark, surl, sv0).files.toSet
-    Snapshots.deleteWhereStr(spark, surl, "k", "c", "d")
+    Snapshots.deleteWhere(spark, surl, "k", "c", "d")
     val sAfter = Snapshots.snap(spark, surl,
       Snapshots.latest(spark, surl)).files.toSet
     assert((sBefore intersect sAfter).nonEmpty)
@@ -246,7 +246,7 @@ class StringBandsSpec extends SparkSpec {
         Map("nope" -> lit(1L)))
     }
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhereStr(spark, url, "x", "a", "b",
+      Snapshots.updateWhere(spark, url, "x", "a", "b",
         Map("tag" -> lit("s")))
     }
     // a CHECK-violating update is refused with nothing committed
@@ -264,7 +264,7 @@ class StringBandsSpec extends SparkSpec {
     Snapshots.indexStats(spark, surl, Seq("k"))
     val sBefore = Snapshots.snap(spark, surl,
       Snapshots.latest(spark, surl)).files.toSet
-    Snapshots.updateWhereStr(spark, surl, "k", "c", "d",
+    Snapshots.updateWhere(spark, surl, "k", "c", "d",
       Map("v" -> (col("v") * -1L)))
     val sAfter = Snapshots.snap(spark, surl,
       Snapshots.latest(spark, surl)).files.toSet
@@ -301,7 +301,7 @@ class StringBandsSpec extends SparkSpec {
     assert(Snapshots.read(spark, url).count() == 249L)
     // and the string flavor refuses the time column loudly
     intercept[IllegalArgumentException] {
-      Snapshots.deleteWhereStr(spark, url, "event_ts", "a", "b")
+      Snapshots.deleteWhere(spark, url, "event_ts", "a", "b")
     }
   }
 
@@ -353,12 +353,12 @@ class StringBandsSpec extends SparkSpec {
     val total = Snapshots.snap(spark, url, v).files.size
     assert(total == 2)
     // the all-null file cannot hold any string value → skipped
-    assert(Snapshots.prunedFilesStr(spark, url, v, "k", "a", "c")
+    assert(Snapshots.prunedFiles(spark, url, v, "k", "a", "c")
       .size == 1)
     // while the long side prunes independently on the same sidecar
     assert(Snapshots.prunedFiles(spark, url, v, "id", 3L, 4L)
       .size == 1)
-    val got = Snapshots.readWhereStr(spark, url, "k", "a", "c")
+    val got = Snapshots.readWhere(spark, url, "k", "a", "c")
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == Seq(1L, 2L))
   }
