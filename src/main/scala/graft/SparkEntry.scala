@@ -41,6 +41,25 @@ object SparkEntry {
       dir.replaceAll("[^A-Za-z0-9]", "_")
   }
 
+  /** Fresh per-run scratch path `<cachedBase>/<uuid8>` for a query
+    * that builds its own stores. Runs of one query never share a
+    * path (a shared wiped path raced live stores and checkpoints),
+    * and sibling runs older than an hour are swept first, bounding
+    * tmpdir growth. Callers that need the stable per-query dir (a
+    * session-cached catalog root) take the parent. */
+  private def scratchDir(s: SparkSession, dir: String,
+      tag: String): String = {
+    val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, tag))
+    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(rootPath)) {
+      val cutoff = System.currentTimeMillis() - 3600L * 1000
+      fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
+        .foreach(st => fs.delete(st.getPath, true))
+    }
+    new org.apache.hadoop.fs.Path(rootPath,
+      java.util.UUID.randomUUID().toString.take(8)).toString
+  }
+
   /** [[GraftSession.scoped]] (conf-cloned isolated session) — used
     * for streaming runs, where every stateful operator opens one
     * state store (checkpoint dir + provider) per shuffle partition.
@@ -1766,15 +1785,7 @@ object SparkEntry {
       // other's live store+checkpoint (a shared wiped path raced),
       // while sweeping subdirs older than an hour bounds the tmpdir
       // accumulation a bare UUID-per-run scheme leaked
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q113"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q113")
       val q = graft.streaming.GraftStream.lmGateIngest(src, "doc_id",
           "text", uni, bi, minMeanPpm = 40000L, s"$base/out",
           streamId = "q113")
@@ -3971,15 +3982,7 @@ object SparkEntry {
       import org.apache.spark.sql.types.{LongType, StringType,
         StructField, StructType}
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q245"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q245")
       t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("__j",
@@ -4109,27 +4112,18 @@ object SparkEntry {
         .orderBy(col("event_type"), col("bucket"))
     }),
 
-    // ---- Keyed MERGE into a store (bloom-bounded rewrite) ----
+    // ---- Keyed MERGE into a snapshot store (bloom-bounded rewrite) ----
     // Replace every 11th doc, tombstone every 13th, insert shadow
-    // rows for every 17th — only bloom-admitted files rewrite; the
-    // read-back rollup must equal the relational merge.
+    // rows for every 17th as one Snapshots.upsert commit — only
+    // bloom-admitted files rewrite; the head version's rollup must
+    // equal the relational merge.
     "q251_merge_upsert" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q251"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q251")
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
-      docs.repartition(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$base/store")
-      RowGroupIndex.buildBloom(s, s"$base/store", Seq("doc_id"),
-        s"$base/idx", expectedPerFile = 100000L)
+      Snapshots.create(s, store, docs, clusterBy = Some("doc_id"))
+      Snapshots.indexBloom(s, store, Seq("doc_id"))
       val changed = docs
         .filter(pmod(col("doc_id"), lit(11)) === 0 ||
           pmod(col("doc_id"), lit(13)) === 0)
@@ -4140,10 +4134,10 @@ object SparkEntry {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           lit("xx").as("lang"), lit(77L).as("n_chars"),
           lit(false).as("del"))
-      Materialize.mergeUpsert(s, s"$base/store",
-        changed.unionByName(inserts), "doc_id",
-        bloomIndexUrl = Some(s"$base/idx"), deleteCol = Some("del"))
-      s.read.parquet(s"$base/store")
+      Snapshots.upsert(s, store, changed.unionByName(inserts), "doc_id",
+        deleteCol = Some("del"),
+        bloomIndexUrl = Some(Snapshots.bloomSidecarUrl(s, store)))
+      Snapshots.read(s, store)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"))
@@ -4335,26 +4329,18 @@ object SparkEntry {
     }),
 
     // ---- Store maintenance pipeline end-to-end ----
-    // The full operational loop on one store: keyed MERGE (q251's
-    // batch), COMPACT the fragments, REBUILD the bloom sidecar,
-    // then an index-pruned read — every step composing on the same
-    // files, the read hash-checked against the relational merge.
+    // The full operational loop on one snapshot store: keyed MERGE
+    // (q251's batch), COMPACT the small files, index the bloom
+    // sidecar, then an index-pruned read of the head version (the
+    // reader intersects the bloom admission with the head manifest,
+    // so dead versions' files are never read) — the read
+    // hash-checked against the relational merge.
     "q260_store_maintenance" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q260"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
-      val store = s"$base/store"
+      val store = scratchDir(s, dir, "q260")
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
-      docs.repartition(8, col("doc_id"))
-        .write.mode("overwrite").parquet(store)
+      Snapshots.create(s, store, docs, clusterBy = Some("doc_id"))
       val changed = docs
         .filter(pmod(col("doc_id"), lit(11)) === 0 ||
           pmod(col("doc_id"), lit(13)) === 0)
@@ -4365,15 +4351,15 @@ object SparkEntry {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           lit("xx").as("lang"), lit(77L).as("n_chars"),
           lit(false).as("del"))
-      Materialize.mergeUpsert(s, store,
-        changed.unionByName(inserts), "doc_id",
+      Snapshots.upsert(s, store, changed.unionByName(inserts), "doc_id",
         deleteCol = Some("del"))
-      Materialize.compact(s, store, targetFileMb = 256)
-      RowGroupIndex.buildBloom(s, store, Seq("doc_id"), s"$base/idx",
-        expectedPerFile = 100000L)
+      Snapshots.compactSmall(s, store, smallBytes = 256L << 20,
+        targetBytes = 256L << 20)
+      Snapshots.indexBloom(s, store, Seq("doc_id"))
       val probe = Seq(22L, 26L, 33L, 1000000L, 1000017L, 3L, 44L)
-      RowGroupIndex.readBloomSelected(s, store, s"$base/idx",
-          "doc_id", probe)
+      GraftRead.reader(s, store)
+        .bloomIndex(Snapshots.bloomSidecarUrl(s, store), "doc_id", probe)
+        .load()
         .filter(col("doc_id").isin(probe: _*))
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
@@ -4410,15 +4396,7 @@ object SparkEntry {
     // updateBloom scans ONLY the new files — then keys from both
     // generations probe through the refreshed sidecar.
     "q262_incremental_index" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q262"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q262")
       val store = s"$base/store"
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -4840,15 +4818,7 @@ object SparkEntry {
     // floor, proving retention never touches live versions.
     "q279_snapshot_store" -> ((s, dir) => {
       import s.implicits._
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q279"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q279")
       val store = s"$base/store"
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -4893,15 +4863,7 @@ object SparkEntry {
     // the oracle computes. Each applyDelta touches only its batch's
     // partitions: O(batch) per increment, never O(history).
     "q280_incremental_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q280"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val mv = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString + "/mv"
+      val mv = scratchDir(s, dir, "q280") + "/mv"
       val ev = t(s, dir, "events").select(col("user_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"),
@@ -4941,15 +4903,7 @@ object SparkEntry {
     // must equal the one-shot GROUP BY.
     "q283_stream_view" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q283"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q283")
       val ev = t(s, dir, "events").select(col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
       ev.repartition(3).write.mode("overwrite")
@@ -4977,15 +4931,7 @@ object SparkEntry {
     // surfaces pure inserts — all computed from only the files the
     // manifests disagree on (O(changed files), never O(store)).
     "q284_snapshot_changes" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q284"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q284")
       val store = s"$base/store"
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -5046,15 +4992,7 @@ object SparkEntry {
     // the one-shot GROUP BY.
     "q286_stream_snapshot" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q286"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q286")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -5085,15 +5023,7 @@ object SparkEntry {
     // stream left nothing uncovered), and the range read is oracled.
     "q294_stream_stats" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q294"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q294")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -5126,15 +5056,7 @@ object SparkEntry {
     // increment, never a history rescan. The feed application is
     // replayed once to prove span-keyed idempotency in-lifecycle.
     "q287_cdc_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q287"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q287")
       val store = s"$base/store"
       val view = s"$base/view"
       val v1 = t(s, dir, "documents")
@@ -5176,15 +5098,7 @@ object SparkEntry {
     // stale or absent stats, so correctness never depends on the
     // sidecar being fresh.
     "q288_snapshot_prune" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q288"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q288")
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
@@ -5212,15 +5126,7 @@ object SparkEntry {
     // restore — a zero-data-movement manifest commit — and the read
     // lands on the evolved version's exact content.
     "q289_schema_evolve" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q289"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q289")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
       Snapshots.create(s, store,
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -5251,15 +5157,7 @@ object SparkEntry {
     // 100 TB. Residual predicates keep the result exact regardless
     // of layout.
     "q290_zorder_prune" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q290"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q290")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snapshots.create(s, store, docs, nFiles = 8)
@@ -5282,15 +5180,7 @@ object SparkEntry {
     // older versions are untouched, and the post-compaction read is
     // row-identical to the accumulated appends.
     "q291_snapshot_compact" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q291"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q291")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("source"), col("n_chars"))
       Snapshots.create(s, store,
@@ -5324,15 +5214,7 @@ object SparkEntry {
     // candidatePairs' bucket-width cap; at the verified scales every
     // bucket is enumerable.
     "q292_cdc_signatures" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q292"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val baseDir = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val baseDir = scratchDir(s, dir, "q292")
       val base = s"$baseDir/corpus"
       val sigs = s"$baseDir/sigs"
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
@@ -5401,15 +5283,7 @@ object SparkEntry {
     // residual predicate — the one-call read path a training job
     // uses against a mutating corpus.
     "q293_reader_range" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q293"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q293")
       Snapshots.create(s, store,
         t(s, dir, "documents").filter(col("doc_id").isNotNull)
           .select(col("doc_id"), col("lang"), col("n_chars")),
@@ -5485,15 +5359,7 @@ object SparkEntry {
     // rewrites the affected set, cluster rewrites all, restore
     // re-lists with zero data movement) hold exactly.
     "q298_history" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q298"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q298")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snapshots.create(s, store,
@@ -5518,15 +5384,7 @@ object SparkEntry {
     // poisoned batch below must bounce without minting a version,
     // and the surviving content is oracled.
     "q299_constraints" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q299"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q299")
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Snapshots.create(s, store,
@@ -5594,15 +5452,7 @@ object SparkEntry {
     // over the store's LATEST version through updates and deletes —
     // exact long arithmetic, no float in the maintained state.
     "q301_moments_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q301"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q301")
       val store = s"$base/store"
       val view = s"$base/view"
       val v1 = t(s, dir, "documents")
@@ -5660,15 +5510,7 @@ object SparkEntry {
     // update: a 10-file upsert on a 100k-file corpus never rescans
     // history to refresh its profile.
     "q303_profile_delta" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q303"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q303")
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .filter(col("doc_id").isNotNull)
@@ -5700,15 +5542,7 @@ object SparkEntry {
     // no-op. The integer sufficient statistics are oracled exactly;
     // the float estimate is the caller's last step.
     "q304_distinct_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q304"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val view = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val view = scratchDir(s, dir, "q304")
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("user_id"))
         .filter(col("event_id").isNotNull)
@@ -6286,15 +6120,7 @@ object SparkEntry {
     // oracle replays the whole lifecycle arithmetically.
     "q329_stream_bloom_upsert" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(cachedBase(dir, "q329"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q329")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -6543,16 +6369,7 @@ object SparkEntry {
     // source's pre-divergence rows, the clone's upsert never leaks
     // into the source, the source's append never reaches the clone.
     "q339_snapshot_clone" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q339"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q339")
       val srcStore = s"$base/src"; val cloneStore = s"$base/clone"
       val v1 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -6642,16 +6459,7 @@ object SparkEntry {
     // to what a full re-join would produce; the oracle IS that full
     // re-join ([[JoinView.refresh]]).
     "q342_join_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q342"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q342")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"; val idx = s"$base/idx"
       val fact = t(s, dir, "orders")
@@ -6718,16 +6526,7 @@ object SparkEntry {
     // partners. Oracle = the full re-join of everything.
     "q343_stream_join_view" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q343"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q343")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -6825,16 +6624,7 @@ object SparkEntry {
     // prune is a strict file subset (the q33 proof style) and the
     // result is the exact residual-filtered range read.
     "q346_string_band_read" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q346"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q346")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull)
         .select(col("c_name"), col("c_custkey"),
@@ -6860,16 +6650,7 @@ object SparkEntry {
     // valid and dangling inserts), one refreshStar folds all three
     // feeds. Oracle = the full re-join of the mutated state.
     "q347_star_join_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q347"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q347")
       val factStore = s"$base/fact"; val custStore = s"$base/cust"
       val prioStore = s"$base/prio"; val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -6953,16 +6734,9 @@ object SparkEntry {
     // the body; the oracle checks the rebuilt view's parity with the
     // full re-join of the recreated state.
     "q348_join_view_recovery" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q348"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q348")
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"; val view2 = s"$base/view2"
       val fact = t(s, dir, "orders")
@@ -7035,16 +6809,7 @@ object SparkEntry {
     // (recompute-affected-keys) → aggregate view (signed partials,
     // replayed batch is a no-op) with nothing ever O(history).
     "q350_view_stack" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q350"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q350")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"; val agg = s"$base/agg"
       val fact = t(s, dir, "orders")
@@ -7109,16 +6874,7 @@ object SparkEntry {
     // prefix bands on one, long bands on the other, one sidecar
     // read (readWhereAll). Strict-subset prune asserted in-body.
     "q351_zorder_string_dim" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q351"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q351")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7148,16 +6904,7 @@ object SparkEntry {
     // file listing is ASSERTED a strict subset of the store, and
     // the residual filter keeps the rows exact.
     "q352_reader_string_range" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q352"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q352")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull)
         .select(col("c_name"), col("c_custkey"),
@@ -7186,16 +6933,7 @@ object SparkEntry {
     // a no-match delete is a TRUE no-op (same version back), and
     // old versions stay readable. Oracle = the surviving rows.
     "q353_delete_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q353"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q353")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7230,16 +6968,7 @@ object SparkEntry {
     // view — no rebuild, no full re-join. Oracle = the re-join of
     // the surviving fact rows.
     "q354_delete_through_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q354"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q354")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -7325,16 +7054,7 @@ object SparkEntry {
     // constraints guard rows; this guards batches. Oracle = the
     // union of the base and the one admitted batch.
     "q357_write_audit_publish" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q357"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q357")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7403,16 +7123,7 @@ object SparkEntry {
     // (same version back), and the pre-update version still reads the
     // original values. Oracle = CASE WHEN over the source rows.
     "q359_update_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q359"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q359")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7453,16 +7164,7 @@ object SparkEntry {
     // vacuum). Oracle = the pinned version's content, which is
     // exactly the original even-id slice.
     "q360_tagged_snapshot" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q360"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q360")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7499,16 +7201,7 @@ object SparkEntry {
     // read. Long and string flavors on one store; exactness is
     // band-independent (the residual recount on straddlers).
     "q361_count_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q361"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q361")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull &&
           col("c_acctbal").isNotNull)
@@ -7541,16 +7234,7 @@ object SparkEntry {
     // dashboard/audit shape — `sum(order value) in a price band` on
     // a 100k-file store = one sidecar read + two boundary files.
     "q362_agg_where" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q362"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q362")
       val ord = t(s, dir, "orders")
         .filter(col("o_orderkey").isNotNull &&
           col("o_totalprice").isNotNull)
@@ -7580,16 +7264,7 @@ object SparkEntry {
     // complete: every odd-custkey order finds its odd customer.
     // Oracle = the full orders ⋈ customer aggregate.
     "q363_commit_together" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q363"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q363")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val fact = t(s, dir, "orders")
         .filter(col("o_orderkey").isNotNull &&
@@ -7631,16 +7306,7 @@ object SparkEntry {
     // reads in full, and the CDC feed across the MoR commits emits
     // exactly the deleted keys. Oracle = the surviving rows.
     "q364_mor_delete" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q364"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q364")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7689,16 +7355,9 @@ object SparkEntry {
     // collects the dead vector sidecars from disk (asserted). Oracle
     // = the surviving rows' aggregate, read AFTER purge + vacuum.
     "q365_dv_purge_vacuum" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q365"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q365")
+      val fs = new org.apache.hadoop.fs.Path(store)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull &&
           col("c_mktsegment").isNotNull && col("c_acctbal").isNotNull)
@@ -7752,16 +7411,7 @@ object SparkEntry {
     // deletions travel through the merge as tombstones. Oracle =
     // the merged final state.
     "q366_branch_merge" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q366"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q366")
       val main = s"$base/main"
       val br = s"$base/feature"; val br2 = s"$base/conflicted"
       val cust = t(s, dir, "customer")
@@ -7875,16 +7525,7 @@ object SparkEntry {
     // originals, and the CDC feed emits exactly the updated keys
     // with their pre-images. Oracle = CASE WHEN over the source.
     "q368_mor_update" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q368"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q368")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
           col("n_chars").isNotNull)
@@ -7940,16 +7581,7 @@ object SparkEntry {
     // MoR store exactly). ONE refresh folds both CDC feeds. Oracle =
     // the full re-join of the mutated state.
     "q369_mor_through_view" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q369"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q369")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -8003,16 +7635,7 @@ object SparkEntry {
     // contract, so the exhaustive probe (nprobe = k) IS brute force
     // — which is what the oracle recomputes in SQL.
     "q370_vector_skipping" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q370"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q370")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8057,16 +7680,7 @@ object SparkEntry {
     // rename and a merge-on-read delete on the renamed column
     // compose. Oracle = the final state under the new names.
     "q371_rename_drop" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q371"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q371")
       val cust = t(s, dir, "customer")
         .filter(col("c_custkey").isNotNull && col("c_name").isNotNull &&
           col("c_mktsegment").isNotNull && col("c_acctbal").isNotNull)
@@ -8115,13 +7729,7 @@ object SparkEntry {
     // source rows.
     "q372_sql_catalog" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q372"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q372")).getParent
       // the catalog root is the STABLE per-query dir; each run gets
       // a fresh uuid-named TABLE under it (the catalog instance is
       // cached per session, table names resolve per statement)
@@ -8160,16 +7768,7 @@ object SparkEntry {
     // band-straddling files scanned (asserted: scanned < total) and
     // matches the oracle exactly.
     "q373_agg_where_stack" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q373"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q373")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("n_chars").isNotNull)
         .select(col("doc_id"), col("n_chars"))
@@ -8199,16 +7798,7 @@ object SparkEntry {
     // asserted by the oracle itself: brute force over the SURVIVORS
     // only), and the exhaustive probe still equals brute force.
     "q374_vector_after_delete" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q374"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q374")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8257,16 +7847,7 @@ object SparkEntry {
     // the conflict scan pinned to the examined head. Oracle = the
     // merged final state under the renamed column.
     "q376_branch_renamed" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q376"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q376")
       val main = s"$base/main"; val br = s"$base/feature"
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
@@ -8306,13 +7887,7 @@ object SparkEntry {
     // parity require: the SQL head equals Snapshots.read.
     "q377_sql_catalog_eff" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q377"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q377")).getParent
       s.conf.set("spark.sql.catalog.g377",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g377.root", rootPath.toString)
@@ -8355,16 +7930,7 @@ object SparkEntry {
     // force over the store — the oracle recomputes all three from
     // the source rows.
     "q378_batched_search" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q378"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q378")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8389,16 +7955,7 @@ object SparkEntry {
     // folds BOTH CDC feeds in a single refreshStar. Oracle = the
     // mutated join recomputed from source rows.
     "q379_upsert_together" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q379"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q379")
       val factStore = s"$base/fact"; val dimStore = s"$base/dim"
       val view = s"$base/view"
       val fact = t(s, dir, "orders")
@@ -8456,16 +8013,7 @@ object SparkEntry {
     // keys keep MAIN's value — nothing last-writer-wins. Oracle =
     // the expected merged state from source rows.
     "q380_branch_rebase" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q380"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q380")
       val main = s"$base/main"; val br = s"$base/feature"
       val br2 = s"$base/feature2"
       val docs = t(s, dir, "documents")
@@ -8534,16 +8082,7 @@ object SparkEntry {
     // oracle.
     "q381_stream_vector_index" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q381"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q381")
       val src0 = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -8587,16 +8126,7 @@ object SparkEntry {
     // of both stores recomputed from the source table.
     "q382_stream_multi_store" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q382"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q382")
       val ev = t(s, dir, "events").select(col("event_id"),
         col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -8655,13 +8185,7 @@ object SparkEntry {
     // the union — with the CDC insert count asserted in-body.
     "q383_sql_insert" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q383"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q383")).getParent
       s.conf.set("spark.sql.catalog.g383",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g383.root", rootPath.toString)
@@ -8703,13 +8227,7 @@ object SparkEntry {
     // prices the deletions. Oracle = the surviving rows recomputed.
     "q384_sql_delete" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q384"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q384")).getParent
       s.conf.set("spark.sql.catalog.g384",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g384.root", rootPath.toString)
@@ -8748,13 +8266,7 @@ object SparkEntry {
     // rows recomputed from the source.
     "q385_sql_lifecycle" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q385"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q385")).getParent
       s.conf.set("spark.sql.catalog.g385",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g385.root", rootPath.toString)
@@ -8792,16 +8304,7 @@ object SparkEntry {
     // emits the pre-delete v1 count and the post-MoR head count from
     // the metadata path; the oracle recomputes both from rows.
     "q386_row_count_meta" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q386"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val url = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val url = scratchDir(s, dir, "q386")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("n_chars").isNotNull)
         .select(col("doc_id"), col("n_chars"))
@@ -8823,13 +8326,7 @@ object SparkEntry {
     // in-body; the oracle recomputes the updated rows.
     "q387_sql_update" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q387"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q387")).getParent
       s.conf.set("spark.sql.catalog.g387",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g387.root", rootPath.toString)
@@ -8864,13 +8361,7 @@ object SparkEntry {
     // recomputes the merged state.
     "q388_sql_merge" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q388"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q388")).getParent
       s.conf.set("spark.sql.catalog.g388",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g388.root", rootPath.toString)
@@ -8920,13 +8411,7 @@ object SparkEntry {
     // table relationally.
     "q389_sql_merge_pruned" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q389"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q389")).getParent
       s.conf.set("spark.sql.catalog.g389",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g389.root", rootPath.toString)
@@ -8984,13 +8469,7 @@ object SparkEntry {
     // COW pruning asserted from the manifests).
     "q390_sql_dml_banded" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q390"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q390")).getParent
       s.conf.set("spark.sql.catalog.g390",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g390.root", rootPath.toString)
@@ -9037,13 +8516,7 @@ object SparkEntry {
     // Oracle = the equivalent relational CASE/anti-filter pipeline.
     "q391_sql_merge_cond" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q391"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q391")).getParent
       s.conf.set("spark.sql.catalog.g391",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g391.root", rootPath.toString)
@@ -9132,13 +8605,7 @@ object SparkEntry {
     // recomputes both counts from rows.
     "q392_sql_count_pushdown" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q392"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q392")).getParent
       s.conf.set("spark.sql.catalog.g392",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g392.root", rootPath.toString)
@@ -9176,16 +8643,7 @@ object SparkEntry {
     // files again (selectivity restored). Oracle = whole-corpus
     // integer brute force (exhaustive probe must equal it exactly).
     "q393_vector_retrain" -> ((s, dir) => {
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q393"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val store = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val store = scratchDir(s, dir, "q393")
       val src = t(s, dir, "embeddings")
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -9240,16 +8698,7 @@ object SparkEntry {
     // aggregate, hash-equal to the batch twin = the oracle.
     "q394_stream_table" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
-      val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q394"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
-      val base = new org.apache.hadoop.fs.Path(rootPath,
-        java.util.UUID.randomUUID().toString.take(8)).toString
+      val base = scratchDir(s, dir, "q394")
       s.conf.set("spark.sql.catalog.g394",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g394.root", base)
@@ -9299,13 +8748,7 @@ object SparkEntry {
     // asserted from the manifests. Oracle = the relational chain.
     "q395_sql_dml_banded_str" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q395"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q395")).getParent
       s.conf.set("spark.sql.catalog.g395",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g395.root", rootPath.toString)
@@ -9355,13 +8798,7 @@ object SparkEntry {
     // the equivalent relational CASE pipeline.
     "q396_sql_merge_matrix" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q396"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q396")).getParent
       s.conf.set("spark.sql.catalog.g396",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g396.root", rootPath.toString)
@@ -9418,13 +8855,7 @@ object SparkEntry {
     // Oracle = the feed recomputed relationally.
     "q397_stream_changes" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q397"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q397")).getParent
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/t$tag"
       val docs = t(s, dir, "documents")
@@ -9467,13 +8898,7 @@ object SparkEntry {
     // recomputes the extrema from rows.
     "q398_sql_minmax_meta" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q398"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q398")).getParent
       s.conf.set("spark.sql.catalog.g398",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g398.root", rootPath.toString)
@@ -9512,13 +8937,7 @@ object SparkEntry {
     // rows.
     "q399_stream_pipe" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q399"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q399")).getParent
       s.conf.set("spark.sql.catalog.g399",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g399.root", rootPath.toString)
@@ -9563,13 +8982,7 @@ object SparkEntry {
     // relationally.
     "q400_sql_cdc_story" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q400"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q400")).getParent
       s.conf.set("spark.sql.catalog.g400",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g400.root", rootPath.toString)
@@ -9612,13 +9025,7 @@ object SparkEntry {
     // admission shape). Oracle = the feed is every row inserted.
     "q401_cdc_admission" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q401"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q401")).getParent
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val url = s"$rootPath/store$tag"
       val out = s"$rootPath/out$tag"
@@ -9671,13 +9078,7 @@ object SparkEntry {
     // in-range upserts' update rows, recomputed relationally.
     "q402_changes_range" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q402"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q402")).getParent
       s.conf.set("spark.sql.catalog.g402",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g402.root", rootPath.toString)
@@ -9736,13 +9137,7 @@ object SparkEntry {
     // DuckDB counting the same predicate.
     "q403_filtered_count_meta" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q403"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q403")).getParent
       s.conf.set("spark.sql.catalog.g403",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g403.root", rootPath.toString)
@@ -9781,13 +9176,7 @@ object SparkEntry {
     // Oracle = the widened table recomputed relationally.
     "q404_merge_evolution" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
-        cachedBase(dir, "q404"))
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) {
-        val cutoff = System.currentTimeMillis() - 3600L * 1000
-        fs.listStatus(rootPath).filter(_.getModificationTime < cutoff)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+        scratchDir(s, dir, "q404")).getParent
       s.conf.set("spark.sql.catalog.g404",
         "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.g404.root", rootPath.toString)

@@ -208,8 +208,13 @@ final case class GraftRead private (
     //     membership came from the FULL listing above, so selection
     //     only ever narrows a shard (reference order: selector then
     //     original-index modulo, reader.py:556-566)
+    //     Paths compare qualified: a relative store url resolves its
+    //     manifest to relative paths, while index()/bloomIndex()
+    //     admit from the absolute listing.
+    lazy val qualFs = new org.apache.hadoop.fs.Path(urls.head)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     def normPath(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
+      qualFs.makeQualified(new org.apache.hadoop.fs.Path(s)).toUri.getPath
     val admitted: Option[Set[String]] =
       if (indexSel.isEmpty && bloomSel.isEmpty && ranges.isEmpty) None
       else {

@@ -231,132 +231,6 @@ object Materialize {
     (files.length, staged.length)
   }
 
-  /** Keyed MERGE (upsert + tombstone delete) into a plain-parquet
-    * store — the Delta-style `MERGE INTO` for stores this library
-    * materializes, rewriting ONLY the files that can contain an
-    * affected key: with a [[RowGroupIndex.buildBloom]] sidecar the
-    * touched set is the bloom-admitted files (fpp only costs extra
-    * rewrites, never a missed row — the superset contract), without
-    * one every file is rewritten. At 100 TB this is the difference
-    * between a CDC batch costing O(changed files) and O(store).
-    *
-    * Semantics: every store row whose `keyCol` appears in `updates`
-    * is REPLACED (or deleted, when the update row's `deleteCol` is
-    * true); update rows for keys not in the store INSERT. Duplicate
-    * keys within `updates` are refused (ambiguous intent). The
-    * update batch's distinct keys drive the file probe and are
-    * bounded by `maxKeys` (CDC batches are bounded by contract; a
-    * larger-than-cap batch should compact its changelog first —
-    * [[graft.ops.Dedup.compactLatest]]).
-    *
-    * Crash-safety is the [[compact]] contract: new files stage in an
-    * underscore-invisible tmp dir, promote by pure renames, and only
-    * THEN are the replaced originals deleted — a crash anywhere in
-    * the swap leaves transient duplicates (repaired by re-running),
-    * never lost rows; concurrent READERS of a live store
-    * should read through a listing snapshot. The sidecar, when
-    * present, is refreshed incrementally. A bloom index sidecar goes
-    * STALE for the rewritten files (the file set changed) — rebuild
-    * it after merging, or accept full-file probes for merged keys.
-    *
-    * Returns (filesRewritten, filesTotal). */
-  def mergeUpsert(spark: SparkSession, url: String, updates0: DataFrame,
-      keyCol: String, bloomIndexUrl: Option[String] = None,
-      deleteCol: Option[String] = None,
-      maxKeys: Int = 1000000, rowGroupSizeMb: Int = 32): (Int, Int) = {
-    val root = new Path(url)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = listParquetFiles(spark, url)
-    require(files.nonEmpty, s"nothing to merge into at $url")
-    val rel = relativizer(spark, url)
-    require(!files.exists(f => rel(f).contains("/")),
-      s"mergeUpsert does not handle hive-partitioned stores: $url")
-    val store = spark.read.parquet(url)
-    val dataCols = store.columns.toSeq
-    // PIN the batch: it feeds four evaluations (distinct-collect,
-    // count, the anti-join broadcast, the written projection) and a
-    // nondeterministic update plan re-evaluating differently per use
-    // could pass the duplicate check yet write different rows
-    val updates = updates0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val upCols = updates.columns.toSeq.filterNot(deleteCol.contains)
-    require(upCols.sorted == dataCols.sorted,
-      s"update schema ${upCols.sorted} != store schema ${dataCols.sorted}")
-    // ONE action answers both contract questions: group by key and
-    // collect (key, multiplicity) — distinct-key cardinality vs
-    // maxKeys AND duplicate detection from the same result set
-    val keyRows = updates.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("__n"))
-      .limit(maxKeys + 1).collect()
-    require(keyRows.length <= maxKeys,
-      s"update batch exceeds maxKeys=$maxKeys distinct keys — " +
-        "compact the changelog first")
-    require(keyRows.forall(_.getLong(1) == 1L),
-      s"duplicate $keyCol values in the update batch")
-    val keys = keyRows.map(_.get(0)).toSeq
-    require(!keys.contains(null), s"null $keyCol in the update batch")
-    val affected = bloomIndexUrl match {
-      case Some(idx) =>
-        val (admitted, covered) =
-          RowGroupIndex.bloomProbe(spark, url, idx, keyCol, keys)
-        // same staleness guard as [[Snapshots.upsert]]: files the
-        // sidecar never indexed (landed after the last updateBloom)
-        // cannot be pruned — treat them as affected so correctness
-        // never depends on sidecar freshness. One sidecar scan.
-        val uncovered =
-          files.filterNot(f => covered.contains(new Path(f).getName))
-        (admitted ++ uncovered).distinct
-      case None => files
-    }
-    val upserts = deleteCol
-      .map(d => updates.filter(!coalesce(col(d), lit(false)))
-        .drop(d))
-      .getOrElse(updates)
-      .select(dataCols.map(col): _*)
-    // anti-join build side from the ALREADY-COLLECTED keys (driver-
-    // held, bounded by maxKeys) — broadcasting updates.select(keyCol)
-    // would execute the batch plan again for rows we hold in hand
-    val keysDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        keyRows.map(r => org.apache.spark.sql.Row(r.get(0))).toSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        updates.schema(keyCol).copy(name = "__mk"))))
-    val merged =
-      if (affected.isEmpty) upserts
-      else spark.read.parquet(affected: _*)
-        .join(broadcast(keysDf),
-          col(keyCol) === col("__mk"), "left_anti")
-        .unionByName(upserts)
-    val tmp = new Path(root, "_merge_tmp")
-    fs.delete(tmp, true)
-    merged.repartition(math.max(1, affected.length))
-      .write
-      // keep the store's row-group geometry — default 128 MB blocks
-      // on merged files would degrade file-granularity pruning
-      .option("parquet.block.size", rowGroupSizeMb.toLong * 1024 * 1024)
-      .mode("overwrite").parquet(tmp.toString)
-    val staged = listParquetFiles(spark, tmp.toString)
-    // two-phase swap, promote-first (same contract as [[compact]]):
-    // a crash after some renames leaves the merged rows ALONGSIDE
-    // the not-yet-deleted originals — transient duplicates a re-run
-    // repairs — instead of the old order's window where deleted
-    // originals + still-staged merges lost the affected rows
-    // outright. Delete results are checked: a silently failed
-    // delete was the one path to persistent unnoticed duplicates.
-    staged.foreach { f =>
-      val name = new Path(f).getName
-      require(fs.rename(new Path(f), new Path(root, name)),
-        s"rename failed promoting $name")
-    }
-    affected.foreach(f => require(fs.delete(new Path(f), false),
-      s"delete failed removing merged source $f"))
-    fs.delete(tmp, true)
-    loadSchema(spark, url).foreach(updateMetadata(spark, url, _))
-    (affected.length, files.length)
-    } finally updates.unpersist()
-  }
-
   /** Petastorm-COMPATIBLE materialization: the same store layout the
     * reference's own `materialize_dataset` produces, so unmodified
     * petastorm (`make_reader`) opens it with no shim — the write-side

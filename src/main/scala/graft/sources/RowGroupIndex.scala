@@ -128,8 +128,8 @@ object RowGroupIndex {
     * sidecar: only files ABSENT from the existing index are scanned
     * and bloomed, and their rows APPEND as a new generation part
     * ([[SidecarDelta]]) — O(new files) scanned AND written per call;
-    * rows for files that vanished (compaction,
-    * [[Materialize.mergeUpsert]] rewrites) are harmless to every
+    * rows for files that vanished (compaction, vacuumed
+    * [[Snapshots.upsert]] rewrites) are harmless to every
     * probe (pruning intersects the live listing) and are dropped
     * when the generation fold runs. Batch k of a landing stream
     * costs O(new files), not O(store) — the full [[buildBloom]]
@@ -270,11 +270,11 @@ object RowGroupIndex {
   /** One sidecar scan answering BOTH upsert questions: (dataset
     * files a bloom might-contain ANY probe value, flat names of
     * every file the sidecar covers). The coverage half feeds the
-    * staleness guard ([[Snapshots.upsert]] /
-    * [[Materialize.mergeUpsert]]) without re-reading the sidecar —
-    * on a 100k-file store the index scan + driver collect happens
-    * once per merge, not twice. Probing runs where the sidecar rows
-    * live; only (name, admitted) pairs reach the driver. */
+    * staleness guard ([[Snapshots.upsert]]) without re-reading the
+    * sidecar — on a 100k-file store the index scan + driver collect
+    * happens once per merge, not twice. Probing runs where the
+    * sidecar rows live; only (name, admitted) pairs reach the
+    * driver. */
   def bloomProbe(spark: SparkSession, datasetUrl: String,
       indexUrl: String, field: String, values: Seq[Any])
       : (Seq[String], Set[String]) = {
@@ -313,9 +313,13 @@ object RowGroupIndex {
       .toSet
 
   /** Read scanning only bloom-admitted files (superset at fpp —
-    * callers still apply the row filter; see [[buildBloom]]). */
+    * callers still apply the row filter; see [[buildBloom]]). Plain
+    * stores only: a [[Snapshots]] store refuses (read it through
+    * [[GraftRead]]). */
   def readBloomSelected(spark: SparkSession, datasetUrl: String,
       indexUrl: String, field: String, values: Seq[Any]): DataFrame = {
+    refuseSnapshotStore(spark, datasetUrl, "readBloomSelected",
+      "bloomIndex")
     val selected =
       bloomSelectedFiles(spark, datasetUrl, indexUrl, field, values)
     if (selected.isEmpty) {
@@ -328,13 +332,28 @@ object RowGroupIndex {
     * Returns an empty DataFrame (with the right schema) when the
     * selector admits nothing. The selected files are a superset
     * guarantee: rows matching the selector's semantics are all in
-    * them — callers still apply their row-level filter. */
+    * them — callers still apply their row-level filter. Plain
+    * stores only: a [[Snapshots]] store refuses (read it through
+    * [[GraftRead]]). */
   def readSelected(spark: SparkSession, datasetUrl: String,
       indexUrl: String, selector: Selector): DataFrame = {
+    refuseSnapshotStore(spark, datasetUrl, "readSelected", "index")
     val selected = selectedFiles(spark, datasetUrl, indexUrl, selector)
     if (selected.isEmpty) {
       val all = Materialize.listParquetFiles(spark, datasetUrl)
       spark.read.option("basePath", datasetUrl).parquet(all: _*).limit(0)
     } else spark.read.option("basePath", datasetUrl).parquet(selected: _*)
   }
+
+  /** The index reads list the store's root, and a [[Snapshots]] root
+    * holds every version's files until [[Snapshots.vacuum]] — an
+    * upserted key would come back with both its old and new value.
+    * [[GraftRead]] intersects the admitted files with the head
+    * manifest, so it is the index read for such a store. */
+  private def refuseSnapshotStore(spark: SparkSession, url: String,
+      method: String, readerMethod: String): Unit =
+    require(Snapshots.versions(spark, url).isEmpty,
+      s"RowGroupIndex.$method reads every file under $url, which is " +
+        "a Snapshots store holding dead versions' files — use " +
+        s"GraftRead.reader(spark, url).$readerMethod(...).load()")
 }

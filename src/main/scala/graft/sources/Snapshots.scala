@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference has no mutation layer at all — its
   * `materialize_dataset` (etl/dataset_metadata.py:66-103) is
-  * write-once, and [[Materialize.compact]]/[[Materialize.mergeUpsert]]
-  * mutate in place with a transient-duplicate crash window that
-  * in-flight readers can observe. This store removes both limits the
-  * lakehouse way (Delta/Iceberg-style, re-derived from first
-  * principles):
+  * write-once, and [[Materialize.compact]] mutates in place with a
+  * transient-duplicate crash window that in-flight readers can
+  * observe. This store removes both limits the lakehouse way
+  * (Delta/Iceberg-style, re-derived from first principles):
   *
   *  - Data files are IMMUTABLE once committed. Every mutation writes
   *    new files and a new manifest; nothing is renamed over or
@@ -33,12 +32,17 @@ import org.apache.spark.sql.functions._
   *    then the expired manifests. A crash mid-vacuum leaves orphan
   *    files (re-vacuum collects them), never a broken live version.
   *
+  * [[upsert]] is the library's only keyed MERGE. [[Materialize.compact]]
+  * stays for the plain codec stores `GraftStream.sink` appends to:
+  * converting such a store to this format would hide the sink's later
+  * plain appends from [[GraftRead]], which resolves through `_snap`
+  * once it exists.
+  *
   * Scale: a manifest holds file NAMES only — O(files), not O(rows) —
   * and version resolution is a single `_snap` listing. [[upsert]] is
-  * copy-on-write over the bloom-admitted affected files (the
-  * [[Materialize.mergeUpsert]] probe contract), so a CDC batch costs
-  * O(changed files) in writes and ZERO disturbance to readers of any
-  * existing version.
+  * copy-on-write over the bloom-admitted affected files, so a CDC
+  * batch costs O(changed files) in writes and ZERO disturbance to
+  * readers of any existing version.
   */
 object Snapshots {
 
@@ -762,17 +766,21 @@ object Snapshots {
       Some(df.schema))
   }
 
-  /** Copy-on-write keyed MERGE: [[Materialize.mergeUpsert]] semantics
-    * (rows whose `keyCol` matches an update are replaced, or deleted
-    * when `deleteCol` is true; unmatched updates insert; duplicate
-    * update keys refused) — but instead of the in-place two-phase
-    * swap, affected files are REWRITTEN as new immutable files and
-    * the commit lists `unaffected ++ rewritten`. Readers of older
-    * versions see nothing; the crash window is gone (an uncommitted
-    * manifest means the store is still at the parent version, and the
-    * orphaned new files are vacuum fodder). With a bloom sidecar the
-    * affected set is the bloom-admitted files — O(changed files), the
-    * property that makes CDC viable at 100 TB. */
+  /** Copy-on-write keyed MERGE, the library's only one: rows whose
+    * `keyCol` matches an update are replaced, or deleted when
+    * `deleteCol` is true; unmatched updates insert. Duplicate update
+    * keys, a null key, a batch of more than `maxKeys` distinct keys
+    * and a batch whose columns differ from the store's are refused
+    * (`IllegalArgumentException`, nothing committed); a larger batch
+    * should compact its changelog first
+    * ([[graft.ops.Dedup.compactLatest]]). Affected files are
+    * REWRITTEN as new immutable files and the commit lists
+    * `unaffected ++ rewritten`. Readers of older versions see
+    * nothing; there is no crash window (an uncommitted manifest means
+    * the store is still at the parent version, and the orphaned new
+    * files are vacuum fodder). With a bloom sidecar the affected set
+    * is the bloom-admitted files — O(changed files), the property
+    * that makes CDC viable at 100 TB. */
   def upsert(spark: SparkSession, url: String, updates: DataFrame,
       keyCol: String, deleteCol: Option[String] = None,
       bloomIndexUrl: Option[String] = None,

@@ -164,6 +164,33 @@ class BloomIndexSpec extends SparkSpec {
     }
   }
 
+  test("index reads refuse a Snapshots store: its root still holds " +
+      "the upserted key's dead version") {
+    val url = scratch(
+      s"bloom_snap_data/${java.util.UUID.randomUUID().toString.take(8)}")
+    Snapshots.create(spark, url,
+      (1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "payload"),
+      nFiles = 4, clusterBy = Some("id"))
+    Snapshots.indexBloom(spark, url, Seq("id"), expectedPerFile = 1000L)
+    Snapshots.upsert(spark, url,
+      Seq((42L, "NEW")).toDF("id", "payload"), "id")
+    Snapshots.refreshSidecars(spark, url)
+    val idx = Snapshots.bloomSidecarUrl(spark, url)
+    intercept[IllegalArgumentException] {
+      RowGroupIndex.readBloomSelected(spark, url, idx, "id", Seq(42L))
+    }
+    intercept[IllegalArgumentException] {
+      RowGroupIndex.readSelected(spark, url, idx,
+        RowGroupIndex.ValueIn("id", Seq(42L)))
+    }
+    // the manifest-resolved index read serves the head value only
+    val got = GraftRead.reader(spark, url)
+      .bloomIndex(idx, "id", Seq(42L)).load()
+      .filter(col("id") === 42L)
+      .select("payload").as[String].collect().toSeq
+    assert(got == Seq("NEW"))
+  }
+
   test("sidecar is file-count-sized per field") {
     val (data, idx) = store("size")
     val n = spark.read.parquet(idx)
