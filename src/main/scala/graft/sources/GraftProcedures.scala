@@ -142,9 +142,9 @@ private[sources] object GraftProcedures {
           new Path(p, Snapshots.splitEntry(f)._1)).getLen).sum
         Seq(Seq(vs.max.toLong, head.op, head.files.size.toLong,
           bytes, Snapshots.rowCountMeta(s, url), vs.size.toLong,
-          fs.exists(new Path(new Path(p, "_stats"), "filestats")),
-          fs.exists(new Path(new Path(p, "_bloom"), "keybloom")),
-          fs.exists(new Path(p, "_vecindex")),
+          fs.exists(SidecarDelta.statsPath(p)),
+          fs.exists(SidecarDelta.bloomPath(p)),
+          fs.exists(SidecarDelta.vecDir(p)),
           head.colmap.toSeq.sorted
             .map { case (l, ph) => s"$l->$ph" }.mkString(",")))
       }),

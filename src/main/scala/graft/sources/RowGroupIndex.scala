@@ -51,8 +51,10 @@ object RowGroupIndex {
         .groupBy("field", "value")
         .agg(collect_set(col("__file")).as("files"))
     }
-    parts.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(indexUrl)
+    val dir = new org.apache.hadoop.fs.Path(indexUrl)
+    SidecarDelta.replace(
+      dir.getFileSystem(spark.sessionState.newHadoopConf()), dir,
+      parts.reduce(_.unionByName(_)))
   }
 
   /** Selector algebra over the index (selectors.py:32-100): resolves
@@ -119,73 +121,78 @@ object RowGroupIndex {
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
     require(fields.nonEmpty, "buildBloom needs fields")
     val files = Materialize.listParquetFiles(spark, datasetUrl)
-    bloomRowsFor(spark, files, fields, expectedPerFile, fpp)
-      .write.mode("overwrite").parquet(indexUrl)
+    val dir = new org.apache.hadoop.fs.Path(indexUrl)
+    SidecarDelta.replace(
+      dir.getFileSystem(spark.sessionState.newHadoopConf()), dir,
+      bloomRowsFor(spark, files, fields, expectedPerFile, fpp))
   }
 
   /** Incremental bloom refresh for append-only/merged stores — the
     * [[Materialize.updateMetadata]] move applied to the bloom
     * sidecar: only files ABSENT from the existing index are scanned
     * and bloomed, and their rows APPEND as a new generation part
-    * ([[SidecarDelta]]) — O(new files) scanned AND written per call;
-    * rows for files that vanished (compaction, vacuumed
-    * [[Snapshots.upsert]] rewrites) are harmless to every
-    * probe (pruning intersects the live listing) and are dropped
-    * when the generation fold runs. Batch k of a landing stream
-    * costs O(new files), not O(store) — the full [[buildBloom]]
-    * rescan made an append-only store's cumulative index cost
-    * quadratic. Geometry
-    * (`expectedPerFile`, fpp) must match the original build (Spark
-    * bloom merge and probe semantics are geometry-bound); `fields`
-    * must equal the built fields — both enforced against the
-    * sidecar's existing field set where detectable.
+    * ([[SidecarDelta]]) — O(new files) scanned AND written per call,
+    * so batch k of a landing stream costs O(new files), not O(store).
+    * Rows for files that vanished (compaction, vacuumed
+    * [[Snapshots.upsert]] rewrites) are harmless to every probe
+    * (pruning intersects the live listing) and are dropped when the
+    * generation fold runs. Geometry (`expectedPerFile`, fpp) must
+    * match the original build (Spark bloom merge and probe semantics
+    * are geometry-bound); `fields` must equal the built fields —
+    * enforced against the sidecar's existing field set.
     *
     * A missing index falls back to a full [[buildBloom]]. */
   def updateBloom(spark: SparkSession, datasetUrl: String,
       fields: Seq[String], indexUrl: String,
-      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
+      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit =
+    refreshBloom(spark, datasetUrl, indexUrl, _ => Some(fields),
+      expectedPerFile, fpp): Unit
+
+  /** [[updateBloom]] with its field set chosen off the refresher's
+    * own covered-set read: `fieldsFor` gets the indexed field set
+    * (empty without an index) and returns the fields to index, or
+    * None to skip (nothing scanned or written). Returns whether it
+    * refreshed. */
+  private[sources] def refreshBloom(spark: SparkSession,
+      datasetUrl: String, indexUrl: String,
+      fieldsFor: Set[String] => Option[Seq[String]],
+      expectedPerFile: Long = 100000L, fpp: Double = 0.01): Boolean = {
     val idxPath = new org.apache.hadoop.fs.Path(indexUrl)
     val fs = idxPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(idxPath)) {
-      buildBloom(spark, datasetUrl, fields, indexUrl, expectedPerFile,
-        fpp)
-      return
-    }
     def norm(s: String): String =
       new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val existing = spark.read.parquet(indexUrl)
-    val known = existing.select("field", "file").collect()
-      .map(r => (r.getString(0), norm(r.getString(1)))).toSet
+    if (!fs.exists(idxPath)) fieldsFor(Set.empty) match {
+      case Some(f) =>
+        buildBloom(spark, datasetUrl, f, indexUrl, expectedPerFile, fpp)
+        return true
+      case None => return false
+    }
+    val known = spark.read.parquet(indexUrl).select("field", "file")
+      .collect().map(r => (r.getString(0), norm(r.getString(1)))).toSet
     val knownFields = known.map(_._1)
+    val fields = fieldsFor(knownFields) match {
+      case Some(f) => f
+      case None => return false
+    }
     require(fields.toSet == knownFields || knownFields.isEmpty,
       s"field set ${fields.sorted} != indexed ${knownFields.toSeq.sorted}" +
         " — rebuild with buildBloom")
     val current = Materialize.listParquetFiles(spark, datasetUrl)
-    val currentNorm = current.map(norm).toSet
     val fresh = current.filter(f =>
       fields.exists(fl => !known.contains((fl, norm(f)))))
-    // DELTA-GENERATION write ([[SidecarDelta]]): append only the
-    // fresh files' rows as a new part — O(new files) per refresh,
-    // never a whole-sidecar rewrite. Bloom rows are write-once per
-    // (field, file) (covered files are never rescanned), readers
-    // union all generations, and duplicate/vanished rows are
-    // harmless to every probe (admitted sets union; pruning always
-    // intersects the live listing) — the fold below bounds what
-    // they can accumulate and drops both.
-    if (fresh.nonEmpty)
-      bloomRowsFor(spark, fresh, fields, expectedPerFile, fpp)
-        .coalesce(1).write.mode("append").parquet(indexUrl)
-    // the fold keeps live files' rows only, joined on the normalized
-    // path: rows already store `Path.toUri.getPath`
-    // ([[bloomRowsFor]]); the regexp strips a URI scheme/authority
-    // the same way, as the probe side's normalization does
-    import spark.implicits._
-    val live = broadcast(currentNorm.toSeq.toDF("__live"))
-    val fileNorm = regexp_replace(col("file"),
-      "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
-    SidecarDelta.compactIfNeeded(spark, fs, idxPath, df =>
-      df.join(live, fileNorm === col("__live"), "left_semi")
-        .dropDuplicates("field", "file"))
+    if (fresh.nonEmpty) {
+      // the fold keeps live files' rows only, joined on the
+      // normalized path: rows already store `Path.toUri.getPath`
+      // ([[bloomRowsFor]]); the regexp strips a URI scheme/authority
+      // the same way, as the probe side's normalization does
+      val fileNorm = regexp_replace(col("file"),
+        "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
+      SidecarDelta.append(spark, fs, idxPath,
+        bloomRowsFor(spark, fresh, fields, expectedPerFile, fpp),
+        df => SidecarDelta.keepLive(df, fileNorm, current.map(norm).toSet)
+          .dropDuplicates("field", "file"))
+    }
+    true
   }
 
   /** The shared per-file bloom build over an explicit file list

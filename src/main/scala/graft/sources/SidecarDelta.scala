@@ -1,35 +1,58 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
-/** Delta-generation layout for the parquet SIDECARS (file-stats
-  * bands, key blooms, IVF postings): a refresh APPENDS its fresh
-  * rows as a new generation part instead of rewriting the whole
-  * sidecar, so the per-refresh write cost is O(new files) — the r19
-  * shape re-read and re-wrote the entire sidecar per call, which is
-  * quadratic over a long streaming run's epochs (invisible at bench
-  * scale, real at 100 TB with 100k-file stores refreshing per
-  * epoch). Sound because sidecar rows are WRITE-ONCE per key (a
-  * covered file/entry is never rescanned — the marker-row contract
-  * of every refresher) and every reader merges by plain union
-  * (`spark.read.parquet(dir)` sees all parts); rows for VANISHED
-  * files are already harmless to every reader (pruning always
-  * intersects the live manifest / listing), they only cost sidecar
-  * bytes — which the fold bounds.
+/** The one protocol every parquet SIDECAR of a store follows — file-
+  * stats bands, key blooms and IVF postings — and the only module
+  * that knows where they live and how they are written.
   *
-  * [[compactIfNeeded]] folds the generations back into one part via
-  * the same stage-and-swap the old full rewrite used, once the part
-  * count passes [[MaxParts]] — amortized O(sidecar / MaxParts) per
-  * refresh, and the caller's `transform` hook prunes vanished-file
-  * rows during the fold so the sidecar never grows beyond
-  * O(live + recent churn). */
+  * Layout: `<store>/_stats/filestats` (stats rows keyed by manifest
+  * entry `file`), `<store>/_bloom/keybloom` (one bloom per (field,
+  * file), the file path-normalized), `<store>/_vecindex/postings`
+  * (posting rows keyed by manifest `entry`) beside the pinned
+  * `_vecindex/centroids`. Underscore directories: [[Snapshots.vacuum]]'s
+  * root-level `.parquet` sweep never touches them.
+  *
+  * Append: a refresh scans only keys the sidecar does not cover yet
+  * (every refresher emits a marker row per scanned key, so an all-null
+  * or empty file is covered too) and APPENDS their rows as a new
+  * generation part — O(new files) per refresh. Sound because rows are
+  * write-once per key and every reader merges by plain union
+  * (`spark.read.parquet(dir)` sees all parts).
+  *
+  * Fold: once a directory holds more than [[MaxParts]] data parts,
+  * [[append]] rewrites the generations as one part — amortized
+  * O(sidecar / MaxParts) per refresh. The caller's `transform` may
+  * drop rows during the fold (vanished-file pruning).
+  *
+  * Replace: every whole-content rewrite — the fold, a rebuild, a
+  * retired field, a prune — goes through [[replace]]'s stage-and-swap:
+  * write `<dir>__tmp` fully, delete the live directory, rename. A crash
+  * before the swap leaves the live sidecar intact and a stale tmp that
+  * the next replace deletes first.
+  *
+  * Prune: rows whose key no committed manifest (or listing) holds any
+  * more are harmless to every reader — pruning always intersects the
+  * live set — but cost sidecar bytes. [[keepLive]] is the one
+  * broadcast semi-join that drops them, during a fold or in
+  * [[prune]]. */
 private[sources] object SidecarDelta {
 
   /** Generations folded once a sidecar directory exceeds this many
     * data parts — bounds reader fan-in (and stale-row carry) while
     * keeping the steady-state refresh O(new files). */
   val MaxParts = 16
+
+  def statsPath(root: Path): Path =
+    new Path(new Path(root, "_stats"), "filestats")
+  def bloomPath(root: Path): Path =
+    new Path(new Path(root, "_bloom"), "keybloom")
+  def vecDir(root: Path): Path = new Path(root, "_vecindex")
+  def postingsPath(root: Path): Path = new Path(vecDir(root), "postings")
+  def centroidsPath(root: Path): Path =
+    new Path(vecDir(root), "centroids")
 
   /** Visible data parts in `dir` (committed parquet parts only —
     * `_temporary`/`_SUCCESS`/checksum files excluded). */
@@ -40,21 +63,51 @@ private[sources] object SidecarDelta {
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
 
-  /** Fold all generations into ONE part via stage-and-swap when the
-    * directory has grown past [[MaxParts]]. `transform` lets the
-    * caller drop rows during the fold (vanished-file pruning).
-    * Returns whether a fold ran. The tmp is fully written BEFORE the
-    * live directory is swapped, so a crash leaves either the old
-    * generations or the folded sidecar — never a torn read. */
-  def compactIfNeeded(spark: SparkSession, fs: FileSystem, dir: Path,
-      transform: DataFrame => DataFrame = identity): Boolean = {
-    if (dataParts(fs, dir) <= MaxParts) return false
-    val folded = transform(spark.read.parquet(dir.toString))
+  /** Add `rows` as one generation part (creating the sidecar when it
+    * does not exist); once the directory holds more than
+    * [[MaxParts]] parts, fold them into one, with `transform`
+    * dropping rows during the fold. */
+  def append(spark: SparkSession, fs: FileSystem, dir: Path,
+      rows: DataFrame,
+      transform: DataFrame => DataFrame = identity): Unit = {
+    rows.coalesce(1).write.mode("append").parquet(dir.toString)
+    if (dataParts(fs, dir) > MaxParts)
+      replace(fs, dir,
+        transform(spark.read.parquet(dir.toString)).coalesce(1))
+  }
+
+  /** Replace the sidecar's whole content with `rows` by stage-and-
+    * swap. `rows` may read the live directory: the tmp is fully
+    * written before the live directory is deleted. */
+  def replace(fs: FileSystem, dir: Path, rows: DataFrame): Unit = {
     val tmp = new Path(dir.getParent, dir.getName + "__tmp")
     fs.delete(tmp, true)
-    folded.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    rows.write.mode("overwrite").parquet(tmp.toString)
     fs.delete(dir, true)
-    require(fs.rename(tmp, dir), s"rename failed compacting $dir")
-    true
+    require(fs.rename(tmp, dir), s"rename failed replacing $dir")
+  }
+
+  /** Rows of `df` whose `key` is in `live` — a broadcast semi-join
+    * (the live set is O(files), driver-held either way). */
+  def keepLive(df: DataFrame, key: Column, live: Set[String]): DataFrame = {
+    import df.sparkSession.implicits._
+    df.join(broadcast(live.toSeq.toDF("__live")), key === col("__live"),
+      "left_semi")
+  }
+
+  /** Drop the rows whose `key` column is not in `live` (evaluated
+    * only when the sidecar exists), as one part. ONE count action
+    * decides the no-op. Returns rows dropped. */
+  def prune(spark: SparkSession, fs: FileSystem, dir: Path, key: String,
+      live: => Set[String]): Long = {
+    if (!fs.exists(dir)) return 0L
+    import spark.implicits._
+    val keys = live
+    val existing = spark.read.parquet(dir.toString)
+    val dropped = existing.join(broadcast(keys.toSeq.toDF("__live")),
+      col(key) === col("__live"), "left_anti").count()
+    if (dropped > 0L)
+      replace(fs, dir, keepLive(existing, col(key), keys).coalesce(1))
+    dropped
   }
 }

@@ -390,14 +390,6 @@ object Snapshots {
   private val DvFileCol = "__graft_dv_file"
   private val DvPosCol = "__graft_dv_pos"
 
-  /** Effective rows of `entries` PLUS their physical position
-    * ([[DvFileCol]] = data file name, [[DvPosCol]] = row index in
-    * it, from the parquet scan's `_metadata` — stable because data
-    * files are immutable). Plain entries scan directly; composite
-    * entries anti-join their deletion vector's (file, pos) pairs,
-    * grouped per DV file so one MoR commit's entries share one scan.
-    * Never broadcast-forced: position joins are equi-joins and AQE
-    * sizes the small DV side. */
   /** The PHYSICAL schema files store under `colmap` (logical field
     * names replaced; types/nullability unchanged). */
   private[sources] def physSchema(
@@ -408,6 +400,14 @@ object Snapshots {
     else org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       f.copy(name = colmap.getOrElse(f.name, f.name))))
 
+  /** Effective rows of `entries` PLUS their physical position
+    * ([[DvFileCol]] = data file name, [[DvPosCol]] = row index in
+    * it, from the parquet scan's `_metadata` — stable because data
+    * files are immutable). Plain entries scan directly; composite
+    * entries anti-join their deletion vector's (file, pos) pairs,
+    * grouped per DV file so one MoR commit's entries share one scan.
+    * Never broadcast-forced: position joins are equi-joins and AQE
+    * sizes the small DV side. */
   private def readEntriesWithPos(spark: SparkSession, root: Path,
       entries: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
@@ -416,38 +416,58 @@ object Snapshots {
     // alias wrong, and a PHYSICAL collision (a renamed column whose
     // birth name is a position column) would be overwritten by the
     // metadata projection and read back as file names
-    val taken = schema.fieldNames.toSet ++
-      physSchema(schema, colmap).fieldNames
-    require(!taken.contains(DvFileCol) && !taken.contains(DvPosCol),
-      s"store schema uses reserved column $DvFileCol/$DvPosCol " +
-        "(logical or physical)")
+    requireUnreserved(schema, colmap, DvFileCol, DvPosCol)
     // scan under the PHYSICAL schema, present LOGICAL names
     val outCols = schema.fieldNames.toSeq.map(l =>
       col(colmap.getOrElse(l, l)).as(l)) ++
       Seq(col(DvFileCol), col(DvPosCol))
-    def withPos(paths: Seq[String]): DataFrame =
-      spark.read.schema(physSchema(schema, colmap)).parquet(paths: _*)
-        .withColumn(DvFileCol, col("_metadata.file_name"))
-        .withColumn(DvPosCol, col("_metadata.row_index"))
-    val split = entries.map(splitEntry)
-    val plain = split.collect { case (d, None) => d }
-    val byDv = split.collect { case (d, Some(dv)) => dv -> d }
-      .groupBy(_._1).toSeq.sortBy(_._1)
+    val plain = entries.map(splitEntry).collect { case (d, None) => d }
     val parts = Seq.newBuilder[DataFrame]
     if (plain.nonEmpty)
-      parts += withPos(plain.map(p => new Path(root, p).toString))
+      parts += scanWithPos(spark, root, plain, schema, colmap)
         .select(outCols: _*)
-    byDv.foreach { case (dv, group) =>
-      val raw = withPos(group.map { case (_, d) =>
-        new Path(root, d).toString })
-      val dvDf = spark.read.parquet(new Path(root, dv).toString)
-      parts += raw.join(dvDf,
-          raw(DvFileCol) === dvDf("__dv_file") &&
-            raw(DvPosCol) === dvDf("__dv_pos"), "left_anti")
-        .select(outCols: _*)
+    dvGroups(spark, root, entries, schema, colmap).foreach {
+      case (_, eff) => parts += eff.select(outCols: _*)
     }
     parts.result().reduce(_ unionByName _)
   }
+
+  private def requireUnreserved(
+      schema: org.apache.spark.sql.types.StructType,
+      colmap: Map[String, String], names: String*): Unit = {
+    val taken = schema.fieldNames.toSet ++
+      physSchema(schema, colmap).fieldNames
+    require(!names.exists(taken),
+      s"store schema uses reserved column ${names.mkString("/")} " +
+        "(logical or physical)")
+  }
+
+  /** Data files scanned under the PHYSICAL schema, with their
+    * [[DvFileCol]]/[[DvPosCol]] position columns. */
+  private def scanWithPos(spark: SparkSession, root: Path,
+      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      colmap: Map[String, String]): DataFrame =
+    spark.read.schema(physSchema(schema, colmap))
+      .parquet(files.map(f => new Path(root, f).toString): _*)
+      .withColumn(DvFileCol, col("_metadata.file_name"))
+      .withColumn(DvPosCol, col("_metadata.row_index"))
+
+  /** The composite entries among `entries`, one frame per deletion
+    * vector (sorted by its name): the data files it applies to,
+    * scanned with positions, minus the vector's (file, pos) pairs —
+    * so one MoR commit's entries share one scan. */
+  private def dvGroups(spark: SparkSession, root: Path,
+      entries: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      colmap: Map[String, String]): Seq[(String, DataFrame)] =
+    entries.map(splitEntry).collect { case (d, Some(dv)) => dv -> d }
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (dv, group) =>
+        val raw = scanWithPos(spark, root, group.map(_._2), schema,
+          colmap)
+        val dvDf = spark.read.parquet(new Path(root, dv).toString)
+        dv -> raw.join(dvDf,
+          raw(DvFileCol) === dvDf("__dv_file") &&
+            raw(DvPosCol) === dvDf("__dv_pos"), "left_anti")
+      }
 
   /** Read the EFFECTIVE rows of manifest entries under `schema`:
     * what a version's rows ARE once deletion vectors apply. Plain
@@ -485,34 +505,19 @@ object Snapshots {
       schema: org.apache.spark.sql.types.StructType,
       tagCol: String,
       colmap: Map[String, String] = Map.empty): DataFrame = {
-    val takenT = schema.fieldNames.toSet ++
-      physSchema(schema, colmap).fieldNames
-    require(!takenT.contains(tagCol) && !takenT.contains(DvFileCol) &&
-      !takenT.contains(DvPosCol),
-      s"store schema uses reserved column $tagCol/$DvFileCol/" +
-        s"$DvPosCol (logical or physical)")
+    requireUnreserved(schema, colmap, tagCol, DvFileCol, DvPosCol)
     val logicalCols = schema.fieldNames.toSeq.map(l =>
       col(colmap.getOrElse(l, l)).as(l))
-    val parsed = entries.map(e => e -> splitEntry(e))
-    val plain = parsed.collect { case (e, (_, None)) => e }
-    val dvd = parsed.collect { case (e, (d, Some(dv))) => (dv, d, e) }
+    val plain = entries.filterNot(_.contains(DvSep))
     val parts = Seq.newBuilder[DataFrame]
     if (plain.nonEmpty)
       parts += spark.read.schema(physSchema(schema, colmap))
         .parquet(plain.map(f => new Path(root, f).toString): _*)
         .select(logicalCols :+ element_at(
           split(input_file_name(), "/"), -1).as(tagCol): _*)
-    dvd.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (dv, group) =>
-      val raw = spark.read.schema(physSchema(schema, colmap))
-        .parquet(group.map(g => new Path(root, g._2).toString): _*)
-        .withColumn(DvFileCol, col("_metadata.file_name"))
-        .withColumn(DvPosCol, col("_metadata.row_index"))
-      val dvDf = spark.read.parquet(new Path(root, dv).toString)
-      parts += raw.join(dvDf,
-          raw(DvFileCol) === dvDf("__dv_file") &&
-            raw(DvPosCol) === dvDf("__dv_pos"), "left_anti")
-        .select(logicalCols :+ concat(col(DvFileCol),
-          lit(DvSep + dv)).as(tagCol): _*)
+    dvGroups(spark, root, entries, schema, colmap).foreach {
+      case (dv, eff) => parts += eff.select(logicalCols :+
+        concat(col(DvFileCol), lit(DvSep + dv)).as(tagCol): _*)
     }
     parts.result().reduce(_ unionByName _)
   }
@@ -1503,20 +1508,15 @@ object Snapshots {
   // File statistics & data skipping (Delta/Iceberg-style, re-derived)
   // ------------------------------------------------------------------
 
-  private def statsDir(root: Path) = new Path(root, "_stats")
-  private def statsPath(root: Path) = new Path(statsDir(root), "filestats")
-
   /** Conventional in-store location of the key-bloom sidecar
-    * (`<store>/_bloom/keybloom`) — an underscore directory
-    * [[vacuum]]'s root-level `.parquet` sweep never touches, like
-    * `_stats`. The programmatic API always took an explicit
-    * `bloomIndexUrl`; the SQL surface has no parameter slot, so the
-    * SQL write commands DISCOVER this location ([[discoverBloom]])
-    * — a store that maintains it gets O(changed files) SQL MERGE
-    * instead of a whole-store rewrite. */
+    * ([[SidecarDelta]]'s layout). The programmatic API always took an
+    * explicit `bloomIndexUrl`; the SQL surface has no parameter slot,
+    * so the SQL write commands DISCOVER this location
+    * ([[discoverBloom]]) — a store that maintains it gets O(changed
+    * files) SQL MERGE instead of a whole-store rewrite. */
   def bloomSidecarUrl(spark: SparkSession, url: String): String = {
     val (_, root) = fsOf(spark, url)
-    new Path(new Path(root, "_bloom"), "keybloom").toString
+    SidecarDelta.bloomPath(root).toString
   }
 
   /** Build or incrementally refresh the conventional key-bloom
@@ -1534,7 +1534,8 @@ object Snapshots {
     * with the field sets they were built with (stats fields recover
     * their logical names through the head column map; bloom fields
     * are stored logical). O(new files) each: both refreshers scan
-    * only files absent from their sidecar. A sidecar whose field no
+    * only files absent from their sidecar, and each learns its field
+    * set from that same covered-set read. A sidecar whose field no
     * longer resolves in the head schema (renamed away without a
     * colmap, dropped) is SKIPPED, not failed — staleness is safe
     * everywhere (coverage guards fall back to the scan / the
@@ -1543,36 +1544,32 @@ object Snapshots {
     * (statsRefreshed, bloomRefreshed). */
   def refreshSidecars(spark: SparkSession,
       url: String): (Boolean, Boolean) = {
-    val (fs, root) = fsOf(spark, url)
-    val head = snap(spark, url, latest(spark, url))
-    val schema = schemaOf(spark, root, head)
-    val physToLogical = schema.fieldNames.toSeq
-      .map(l => head.phys(l) -> l).toMap
-    val stats = {
-      val sp = statsPath(root)
-      if (!fs.exists(sp)) false
-      else {
-        val known = spark.read.parquet(sp.toString)
-          .select("field").distinct().collect()
-          .map(_.getString(0)).toSeq
-        val logical = known.flatMap(physToLogical.get)
-        if (logical.size != known.size || logical.isEmpty) false
-        else { indexStats(spark, url, logical.sorted); true }
-      }
-    }
-    val bloom = {
-      val bp = new Path(new Path(root, "_bloom"), "keybloom")
-      if (!fs.exists(bp)) false
-      else {
-        val fields = spark.read.parquet(bp.toString)
-          .select("field").distinct().collect()
-          .map(_.getString(0)).toSeq
-        if (fields.isEmpty ||
-            !fields.forall(schema.fieldNames.contains)) false
-        else { indexBloom(spark, url, fields.sorted); true }
-      }
-    }
+    val (_, root) = fsOf(spark, url)
+    val vs = versions(spark, url)
+    require(vs.nonEmpty, s"no snapshot store at $url")
+    val stats = refreshStats(spark, url, vs, (known, logicalOf) => {
+      val logical = known.toSeq.flatMap(logicalOf)
+      if (logical.size != known.size || logical.isEmpty) None
+      else Some(logical.sorted)
+    }).isDefined
+    val names = schemaOf(spark, root, snap(spark, url, vs.max))
+      .fieldNames.toSet
+    val bloom = RowGroupIndex.refreshBloom(spark, url,
+      bloomSidecarUrl(spark, url), fields =>
+        if (fields.isEmpty || !fields.forall(names)) None
+        else Some(fields.toSeq.sorted))
     (stats, bloom)
+  }
+
+  /** Field set of the conventional bloom sidecar; None when the
+    * sidecar does not exist. */
+  private def bloomFields(spark: SparkSession,
+      url: String): Option[Set[String]] = {
+    val (fs, root) = fsOf(spark, url)
+    val p = SidecarDelta.bloomPath(root)
+    if (!fs.exists(p)) None
+    else Some(spark.read.parquet(p.toString)
+      .select("field").distinct().collect().map(_.getString(0)).toSet)
   }
 
   /** Discover the conventional bloom sidecar for `field`:
@@ -1583,14 +1580,9 @@ object Snapshots {
     * safe inside [[stageUpsert]]'s coverage guard — uncovered files
     * are conservatively affected. */
   def discoverBloom(spark: SparkSession, url: String,
-      field: String): Option[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val p = new Path(new Path(root, "_bloom"), "keybloom")
-    if (!fs.exists(p)) return None
-    if (spark.read.parquet(p.toString)
-        .filter(col("field") === field).take(1).isEmpty) None
-    else Some(p.toString)
-  }
+      field: String): Option[String] =
+    bloomFields(spark, url).filter(_.contains(field))
+      .map(_ => bloomSidecarUrl(spark, url))
 
   /** The store's de-facto KEY column by the sidecar convention:
     * Some(field) iff the conventional key-bloom sidecar exists and
@@ -1599,28 +1591,32 @@ object Snapshots {
     * API takes explicitly — a multi-field or absent sidecar is
     * ambiguous and resolves None (callers refuse loudly). */
   def bloomKeyField(spark: SparkSession,
-      url: String): Option[String] = {
-    val (fs, root) = fsOf(spark, url)
-    val p = new Path(new Path(root, "_bloom"), "keybloom")
-    if (!fs.exists(p)) return None
-    val fields = spark.read.parquet(p.toString)
-      .select("field").distinct().collect().map(_.getString(0))
-    if (fields.length == 1) Some(fields.head) else None
-  }
+      url: String): Option[String] =
+    bloomFields(spark, url).collect { case f if f.size == 1 => f.head }
 
-  /** Logical→physical slot map of version `v` — what cross-version
-    * consumers (the CDC streaming source, [[changesAll]]) use to
-    * align a step's columns to a schema pinned at a DIFFERENT
-    * version: physical slots are stable from birth, logical names
-    * shift under [[renameColumn]]. Manifest-only, no data read. */
-  private[graft] def physMapOf(spark: SparkSession, url: String,
-      v: Int): Map[String, String] = {
+  /** Version `v`'s change-feed step `df` as columns under `fields`,
+    * aligned by PHYSICAL slot identity: `phys` maps each target field
+    * to its slot (the head's [[Snap.phys]] for [[changesRange]], the
+    * one pinned at stream start for the streaming source). A step
+    * before a `renameColumn` emits a column under its then-current
+    * logical name, and the target name resolves to it through the
+    * stable slot — only columns genuinely absent at the step (added
+    * by later evolution) read as null. */
+  private[graft] def alignStep(spark: SparkSession, url: String,
+      df: DataFrame, v: Int,
+      fields: Seq[org.apache.spark.sql.types.StructField],
+      phys: String => String): Seq[Column] = {
     val (_, root) = fsOf(spark, url)
     val s = snap(spark, url, v)
     val names =
-      if (s.files.isEmpty && s.schema.isEmpty) s.colmap.keys.toSeq
+      if (s.files.isEmpty && s.schema.isEmpty) df.columns.toSeq
       else schemaOf(spark, root, s).fieldNames.toSeq
-    names.map(n => n -> s.phys(n)).toMap
+    fields.map { f =>
+      names.find(n => s.phys(n) == phys(f.name)) match {
+        case Some(n) if df.columns.contains(n) => col(n).as(f.name)
+        case _ => lit(null).cast(f.dataType).as(f.name)
+      }
+    }
   }
 
   /** ONE version's change feed: the diff against its immediate
@@ -1693,19 +1689,9 @@ object Snapshots {
     vs.map { v =>
       val df = changesStepFrom(spark, url, keyCol, priorOf(v), v,
         includeOld)
-      val stepSnap = snap(spark, url, v)
-      val stepNames =
-        if (stepSnap.files.isEmpty && stepSnap.schema.isEmpty)
-          df.columns.toSeq
-        else schemaOf(spark, root, stepSnap).fieldNames.toSeq
-      df.select(base.fieldNames.toSeq.map { f =>
-        val phys = headSnap.phys(f)
-        stepNames.find(n => stepSnap.phys(n) == phys) match {
-          case Some(n) if df.columns.contains(n) => col(n).as(f)
-          case _ => lit(null).cast(base(f).dataType).as(f)
-        }
-      } :+ col("_change")
-        :+ lit(v.toLong).as("_commit_version"): _*)
+      df.select(alignStep(spark, url, df, v, base.fields.toSeq,
+        headSnap.phys)
+        :+ col("_change") :+ lit(v.toLong).as("_commit_version"): _*)
     }.reduce(_ unionByName _)
   }
 
@@ -1758,7 +1744,7 @@ object Snapshots {
   def statsCovers(spark: SparkSession, url: String,
       field: String): Boolean = {
     val (fs, root) = fsOf(spark, url)
-    val sp = statsPath(root)
+    val sp = SidecarDelta.statsPath(root)
     if (!fs.exists(sp)) return false
     val head = snap(spark, url, latest(spark, url))
     if (!schemaOf(spark, root, head).fieldNames.contains(field))
@@ -1847,12 +1833,38 @@ object Snapshots {
   def indexStats(spark: SparkSession, url: String,
       fields: Seq[String]): Int = {
     require(fields.nonEmpty, "indexStats needs at least one field")
+    refreshStats(spark, url, versions(spark, url), (_, _) => Some(fields))
+      .get
+  }
+
+  /** [[indexStats]] with its field set chosen off the refresher's own
+    * sidecar read: `fieldsFor` gets the indexed PHYSICAL field names
+    * (empty without a sidecar) and the head's physical→logical
+    * lookup, and returns the logical fields to index, or None to
+    * skip (then nothing is scanned or written). Returns the number
+    * of files scanned. */
+  private def refreshStats(spark: SparkSession, url: String,
+      vs: Seq[Int],
+      fieldsFor: (Set[String], String => Option[String]) =>
+        Option[Seq[String]]): Option[Int] = {
     val (fs, root) = fsOf(spark, url)
-    val vs = versions(spark, url)
     require(vs.nonEmpty, s"no snapshot store at $url")
     import org.apache.spark.sql.types._
     val head = snap(spark, url, vs.max)
     val schema = schemaOf(spark, root, head)
+    val sp = SidecarDelta.statsPath(root)
+    val existing: Option[DataFrame] =
+      if (fs.exists(sp)) Some(spark.read.parquet(sp.toString)) else None
+    // ONE (field, file) collect answers both the indexed field set
+    // and the covered files
+    val indexed = existing.toSeq.flatMap(_.select("field", "file")
+      .collect().map(r => (r.getString(0), r.getString(1))))
+    val known = indexed.map(_._1).toSet
+    val logicalOf = schema.fieldNames.map(l => head.phys(l) -> l).toMap
+    val fields = fieldsFor(known, logicalOf.get) match {
+      case Some(f) => f
+      case None => return None
+    }
     val strFields: Set[String] = fields.flatMap { f =>
       require(schema.fieldNames.contains(f),
         s"indexStats: no column $f in the store schema")
@@ -1866,13 +1878,7 @@ object Snapshots {
             "columns can be indexed")
       }
     }.toSet
-    val allFiles = vs.flatMap(v => snap(spark, url, v).files).distinct
-    val sp = statsPath(root)
-    val existing: Option[DataFrame] =
-      if (fs.exists(sp)) Some(spark.read.parquet(sp.toString)) else None
     existing.foreach { e =>
-      val known = e.select("field").distinct()
-        .collect().map(_.getString(0)).toSet
       // the sidecar keys fields by their PHYSICAL name, so a
       // renameColumn never invalidates existing stats rows
       require(known == fields.map(head.phys).toSet,
@@ -1882,13 +1888,10 @@ object Snapshots {
         "legacy stats sidecar predates string bands — delete " +
           "_stats and rebuild")
     }
-    val covered = existing match {
-      case None => Set.empty[String]
-      case Some(e) => e.select("file").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
+    val covered = indexed.map(_._2).toSet
+    val allFiles = liveEntries(spark, url, vs)
     val fresh = allFiles.filterNot(covered)
-    if (fresh.isEmpty) return 0
+    if (fresh.isEmpty) return Some(0)
     // one prefix code point MORE than the band length, so assembly
     // can tell "exact maximum" from "truncated" (Spark's substring
     // counts code points; truncation is order-monotone, so
@@ -1955,36 +1958,20 @@ object Snapshots {
         col("sum_v"))
     existing match {
       case Some(e)
-          if e.schema.fields.map(f => (f.name, f.dataType)).toSet ==
+          if e.schema.fields.map(f => (f.name, f.dataType)).toSet !=
             freshRows.schema.fields.map(f => (f.name, f.dataType))
               .toSet =>
-        // DELTA-GENERATION write ([[SidecarDelta]]): append the
-        // fresh files' rows as a new part — O(new files) per
-        // refresh, never a whole-sidecar rewrite (the r19 shape made
-        // a streaming store's cumulative stats cost quadratic over
-        // epochs). Stats rows are write-once per (file, field) —
-        // covered files are never rescanned — so readers union the
-        // generations; the fold bounds part count, and vanished-file
-        // rows retire in [[pruneStats]] on vacuum as before.
-        freshRows.coalesce(1).write.mode("append").parquet(sp.toString)
-        SidecarDelta.compactIfNeeded(spark, fs, sp)
-      case other =>
-        // creation — or a LEGACY sidecar whose parts predate the
-        // current row shape (no string bands / sum_v): mixed-schema
-        // parts under one directory would make the plain parquet
-        // read's footer choice arbitrary, so fold once via the old
-        // union-by-name stage-and-swap (null fill is exactly what
+        // a LEGACY sidecar whose parts predate the current row shape
+        // (no string bands / sum_v): mixed-schema parts under one
+        // directory would make the plain parquet read's footer choice
+        // arbitrary, so fold once by name (null fill is exactly what
         // assembly would have written for the missing bands)
-        val merged = other.map(
-            _.unionByName(freshRows, allowMissingColumns = true))
-          .getOrElse(freshRows)
-        val tmp = new Path(statsDir(root), "filestats__tmp")
-        fs.delete(tmp, true)
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(sp, true)
-        require(fs.rename(tmp, sp), s"rename failed for $sp")
+        SidecarDelta.replace(fs, sp,
+          e.unionByName(freshRows, allowMissingColumns = true)
+            .coalesce(1))
+      case _ => SidecarDelta.append(spark, fs, sp, freshRows)
     }
-    fresh.length
+    Some(fresh.length)
   }
 
   /** One (field, file) statistics band. Exactly one of the long /
@@ -2155,7 +2142,7 @@ object Snapshots {
       fs: org.apache.hadoop.fs.FileSystem, root: Path,
       fields: Seq[String], extra: Seq[String] = Nil)
       : Option[Seq[(String, String, Band, Row)]] = {
-    val sp = statsPath(root)
+    val sp = SidecarDelta.statsPath(root)
     if (!fs.exists(sp)) return None
     val df = spark.read.parquet(sp.toString)
     val cols = Seq("field", "file", "min_v", "max_v", "min_s",
@@ -2616,17 +2603,12 @@ object Snapshots {
     // sidecar hygiene: retire the dropped field's stats rows (tiny,
     // O(files) rewrite) so the field-set equality check keeps
     // working for the remaining fields
-    val sp = statsPath(root)
+    val sp = SidecarDelta.statsPath(root)
     if (fs.exists(sp)) {
       val existing = spark.read.parquet(sp.toString)
-      if (!existing.filter(col("field") === phys).isEmpty) {
-        val kept = existing.filter(col("field") =!= phys)
-        val tmp = new Path(statsDir(root), "filestats__tmp")
-        fs.delete(tmp, true)
-        kept.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(sp, true)
-        require(fs.rename(tmp, sp), s"rename failed for $sp")
-      }
+      if (!existing.filter(col("field") === phys).isEmpty)
+        SidecarDelta.replace(fs, sp,
+          existing.filter(col("field") =!= phys).coalesce(1))
     }
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name == name))
@@ -2768,29 +2750,15 @@ object Snapshots {
     * rows dropped. */
   def pruneStats(spark: SparkSession, url: String): Long = {
     val (fs, root) = fsOf(spark, url)
-    val sp = statsPath(root)
-    if (!fs.exists(sp)) return 0L
-    val live = versions(spark, url)
-      .flatMap(v => snap(spark, url, v).files).toSet
-    val existing = spark.read.parquet(sp.toString)
-    // broadcast anti/semi joins, not an interpreted `contains` UDF
-    // (guide §4: codegen'd join probes; the live set is O(files),
-    // driver-held either way) — and ONE count action decides the
-    // no-op, not a total minus kept pair
-    import spark.implicits._
-    val liveDf = live.toSeq.toDF("file")
-    val dropped = existing
-      .join(broadcast(liveDf), Seq("file"), "left_anti").count()
-    if (dropped == 0L) return 0L
-    val kept = existing
-      .join(broadcast(liveDf), Seq("file"), "left_semi")
-    val tmp = new Path(statsDir(root), "filestats__tmp")
-    fs.delete(tmp, true)
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(sp, true)
-    require(fs.rename(tmp, sp), s"rename failed for $sp")
-    dropped
+    SidecarDelta.prune(spark, fs, SidecarDelta.statsPath(root), "file",
+      liveEntries(spark, url, versions(spark, url)).toSet)
   }
+
+  /** Every entry some committed manifest among `vs` lists — the key
+    * set a sidecar row must belong to to stay live. */
+  private[sources] def liveEntries(spark: SparkSession, url: String,
+      vs: Seq[Int]): Seq[String] =
+    vs.flatMap(v => snap(spark, url, v).files).distinct
 
   /** Roll the store back (or forward) to `toVersion`'s exact content
     * as a NEW commit — zero data movement (the manifest re-lists the
@@ -3323,7 +3291,7 @@ object Snapshots {
       version: Int = -1): Option[(Option[Long], Option[Long])] = {
     import org.apache.spark.sql.types._
     val (fs, root) = fsOf(spark, url)
-    val sp = statsPath(root)
+    val sp = SidecarDelta.statsPath(root)
     if (!fs.exists(sp)) return None
     val v = if (version > 0) version else latest(spark, url)
     val s = snap(spark, url, v)

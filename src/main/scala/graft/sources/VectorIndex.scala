@@ -36,11 +36,7 @@ import graft.ops.AnnSearch
   */
 object VectorIndex {
 
-  private def vecDir(root: Path) = new Path(root, "_vecindex")
-  private def centroidsPath(root: Path) =
-    new Path(vecDir(root), "centroids")
-  private def postingsPath(root: Path) =
-    new Path(vecDir(root), "postings")
+  import SidecarDelta.{centroidsPath, postingsPath, vecDir}
 
   private def fsOf(spark: SparkSession, url: String) = {
     val p = new Path(url)
@@ -62,38 +58,18 @@ object VectorIndex {
     require(eff.columns.contains(idCol) && eff.columns.contains(embCol),
       s"vector index needs columns $idCol and $embCol")
     val cp = centroidsPath(root)
-    val centroids: DataFrame =
-      if (fs.exists(cp)) {
-        val c = spark.read.parquet(cp.toString)
-          .select(col("centroid_id"), col("__cemb"))
-        val have = c.count()
-        require(have == k,
-          s"vector index was trained with $have centroids, not $k — " +
-            "delete _vecindex to re-train (postings would be invalid)")
-        c
-      } else {
-        val trained = AnnSearch.ivfCentroids(
-          eff.select(col(idCol), col(embCol)), idCol, embCol, k)
-          .persist()
-        try {
-          require(trained.count() == k,
-            s"store has fewer than $k non-null embeddings to train on")
-          fs.mkdirs(vecDir(root))
-          trained.coalesce(1).write.mode("overwrite")
-            .parquet(cp.toString)
-          spark.read.parquet(cp.toString)
-            .select(col("centroid_id"), col("__cemb"))
-        } finally trained.unpersist()
-      }
+    if (!fs.exists(cp)) trainCentroids(fs, root, eff, idCol, embCol, k)
+    val centroids = spark.read.parquet(cp.toString)
+      .select(col("centroid_id"), col("__cemb"))
+    val have = centroids.count()
+    require(have == k,
+      s"vector index was trained with $have centroids, not $k — " +
+        "delete _vecindex to re-train (postings would be invalid)")
     val pp = postingsPath(root)
-    val existing: Option[DataFrame] =
-      if (fs.exists(pp)) Some(spark.read.parquet(pp.toString))
-      else None
-    val covered = existing match {
-      case None => Set.empty[String]
-      case Some(e) => e.select("entry").distinct()
+    val covered =
+      if (!fs.exists(pp)) Set.empty[String]
+      else spark.read.parquet(pp.toString).select("entry").distinct()
         .collect().map(_.getString(0)).toSet
-    }
     val freshE = s.files.filterNot(covered)
     if (freshE.isEmpty) return 0
     val schema = eff.schema
@@ -114,22 +90,11 @@ object VectorIndex {
     val withMarkers = frame.join(freshRows, Seq("entry"), "left")
       .select(col("entry"), col("bucket"),
         coalesce(col("n"), lit(0L)).as("n"))
-    // DELTA-GENERATION write ([[SidecarDelta]]): append the fresh
-    // entries' rows as a new part — O(new files) per refresh, never
-    // a whole-sidecar rewrite. Posting rows are write-once per entry
-    // (covered entries are never rescanned), readers union all
-    // generations; the fold prunes rows whose entry no manifest
-    // lists any more (same liveness rule as [[prunePostings]]).
-    if (existing.isEmpty)
-      withMarkers.coalesce(1).write.mode("overwrite")
-        .parquet(pp.toString)
-    else {
-      withMarkers.coalesce(1).write.mode("append").parquet(pp.toString)
-      lazy val live = Snapshots.versions(spark, url)
-        .flatMap(vv => Snapshots.snap(spark, url, vv).files).toSet
-      SidecarDelta.compactIfNeeded(spark, fs, pp,
-        df => df.filter(col("entry").isin(live.toSeq: _*)))
-    }
+    // the fold prunes rows whose entry no manifest lists any more
+    // (same liveness rule as [[prunePostings]])
+    SidecarDelta.append(spark, fs, pp, withMarkers, df =>
+      SidecarDelta.keepLive(df, col("entry"), Snapshots.liveEntries(
+        spark, url, Snapshots.versions(spark, url)).toSet))
     freshE.length
   }
 
@@ -453,19 +418,25 @@ object VectorIndex {
     }
     if (!degraded) return None
     fs.delete(vecDir(root), true)
-    val eff = Snapshots.readAsOf(spark, url,
-      Snapshots.latest(spark, url))
+    trainCentroids(fs, root, Snapshots.readAsOf(spark, url,
+      Snapshots.latest(spark, url)), idCol, embCol, k)
+    Some(cluster(spark, url, idCol, embCol, nFiles))
+  }
+
+  /** Train `k` centroids from the effective rows `eff` and write
+    * them as the pinned set — refusing a store with fewer than `k`
+    * non-null embeddings. */
+  private def trainCentroids(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, eff: DataFrame, idCol: String, embCol: String,
+      k: Int): Unit = {
     val trained = AnnSearch.ivfCentroids(
       eff.select(col(idCol), col(embCol)), idCol, embCol, k)
       .persist()
     try {
       require(trained.count() == k,
         s"store has fewer than $k non-null embeddings to train on")
-      fs.mkdirs(vecDir(root))
-      trained.coalesce(1).write.mode("overwrite")
-        .parquet(centroidsPath(root).toString)
+      SidecarDelta.replace(fs, centroidsPath(root), trained.coalesce(1))
     } finally trained.unpersist()
-    Some(cluster(spark, url, idCol, embCol, nFiles))
   }
 
   /** Sidecar hygiene, the [[Snapshots.pruneStats]] analogue: drop
@@ -476,28 +447,9 @@ object VectorIndex {
     * dropped. */
   def prunePostings(spark: SparkSession, url: String): Long = {
     val (fs, root) = fsOf(spark, url)
-    val pp = postingsPath(root)
-    if (!fs.exists(pp)) return 0L
-    val live = Snapshots.versions(spark, url)
-      .flatMap(v => Snapshots.snap(spark, url, v).files).toSet
-    val existing = spark.read.parquet(pp.toString)
-    // broadcast anti/semi joins, not an interpreted `contains` UDF
-    // (guide §4: codegen'd join probes; the live set is O(files),
-    // driver-held either way) — and ONE count action decides the
-    // no-op, not a total minus kept pair
-    import spark.implicits._
-    val liveDf = live.toSeq.toDF("entry")
-    val dropped = existing
-      .join(broadcast(liveDf), Seq("entry"), "left_anti").count()
-    if (dropped == 0L) return 0L
-    val kept = existing
-      .join(broadcast(liveDf), Seq("entry"), "left_semi")
-    val tmp = new Path(vecDir(root), "postings__tmp")
-    fs.delete(tmp, true)
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(pp, true)
-    require(fs.rename(tmp, pp), s"rename failed for $pp")
-    dropped
+    SidecarDelta.prune(spark, fs, postingsPath(root), "entry",
+      Snapshots.liveEntries(spark, url, Snapshots.versions(spark, url))
+        .toSet)
   }
 
   /** Index-health report off ONE sidecar read — the operator signal

@@ -138,10 +138,9 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
   // physical slot of each declared column, pinned at stream start:
   // logical names shift under renameColumn, physical slots never do,
   // so steps before/after a rename in the covered history align to
-  // the declared schema exactly (the name-only alignment this
-  // replaces silently null-filled a renamed column's feed rows)
-  private val declaredPhys: Map[String, String] =
-    Snapshots.physMapOf(spark, url, Snapshots.latest(spark, url))
+  // the declared schema exactly
+  private val declared = Snapshots.snap(spark, url,
+    Snapshots.latest(spark, url))
 
   override def getOffset: Option[V1Offset] = {
     val l = Snapshots.latest(spark, url)
@@ -171,7 +170,7 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
 
   override def latestOffset(startOffset: V2Offset,
       limit: ReadLimit): V2Offset = {
-    val s = Option(startOffset).map(vOfAny)
+    val s = Option(startOffset).map(vOf)
       .getOrElse(math.max(startV, 0))
     val all = Snapshots.versions(spark, url)
     val head = all.lastOption.getOrElse(0)
@@ -190,16 +189,7 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
   /** Version of ANY offset representation — a live [[GraftCdfOffset]]
     * or the engine's checkpoint-deserialized form (both carry the
     * same json). */
-  private def vOfAny(o: V2Offset): Int = {
-    val Re = """\{"version":(\d+)\}""".r
-    o.json() match {
-      case Re(n) => n.toInt
-      case other => throw new IllegalArgumentException(
-        s"not a graft-changes offset: $other")
-    }
-  }
-
-  private def vOf(o: V1Offset): Int = {
+  private def vOf(o: V2Offset): Int = {
     val Re = """\{"version":(\d+)\}""".r
     o.json() match {
       case Re(n) => n.toInt
@@ -209,28 +199,16 @@ private[streaming] class GraftChangesSource(spark: SparkSession,
   }
 
   /** One version's feed rows under the DECLARED schema, aligned by
-    * PHYSICAL slot identity (like [[Snapshots.changesAll]]): a step
-    * before a `renameColumn` emits the column under its then-current
-    * logical name, and the declared name resolves to it through the
-    * stable physical slot — only columns genuinely absent at the
-    * step (added by later evolution) read as null. Delegates to
+    * PHYSICAL slot identity ([[Snapshots.alignStep]], the same
+    * alignment [[Snapshots.changesAll]] uses). Delegates to
     * [[Snapshots.changesStepFrom]] — one canonical diff for the
     * stream, the `store$changes` SQL table and programmatic
     * consumers. */
   private def step(priorV: Option[Int], v: Int): DataFrame = {
     val df = Snapshots.changesStepFrom(spark, url, keyCol, priorV, v,
       includeOld)
-    val stepPhys = Snapshots.physMapOf(spark, url, v)
-    val out = baseFields.map { f =>
-      val p = declaredPhys.getOrElse(f.name, f.name)
-      stepPhys.collectFirst {
-        case (n, sp) if sp == p && df.columns.contains(n) => n
-      } match {
-        case Some(n) => col(n).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    } :+ col(ChangeCol) :+ lit(v.toLong).as(VersionCol)
-    df.select(out: _*)
+    df.select(Snapshots.alignStep(spark, url, df, v, baseFields,
+      declared.phys) :+ col(ChangeCol) :+ lit(v.toLong).as(VersionCol): _*)
   }
 
   override def getBatch(start: Option[V1Offset],

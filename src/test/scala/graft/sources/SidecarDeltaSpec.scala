@@ -118,4 +118,41 @@ class SidecarDeltaSpec extends SparkSpec {
     assert(h.getAs[Long]("mass_total") == 60L,
       s"mass ${h.getAs[Long]("mass_total")} != 60 live rows")
   }
+
+  test("a crash between the tmp write and the swap leaves the live " +
+      "sidecar readable; the next prune and fold replace the tmp") {
+    val url = fresh("crash")
+    val fs = new Path(url).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    Snapshots.create(spark, url,
+      (0L until 20L).map(i => (i, i)).toDF("id", "v"), nFiles = 2,
+      clusterBy = Some("id"))
+    Snapshots.indexStats(spark, url, Seq("id"))
+    val sp = s"$url/_stats/filestats"
+    val before = spark.read.parquet(sp).collect().map(_.toSeq).toSet
+    // the debris a crash after the tmp write leaves: a full tmp
+    // whose rows do not match the live sidecar's
+    Seq("junk").toDF("x").write.parquet(s"${sp}__tmp")
+    assert(spark.read.parquet(sp).collect().map(_.toSeq).toSet == before)
+    assert(Snapshots.countWhere(spark, url, "id", 0L, 9L)._1 == 10L)
+    // vacuum's prune rewrites the stats sidecar through the tmp slot
+    Snapshots.upsert(spark, url, Seq((3L, 30L)).toDF("id", "v"), "id")
+    Snapshots.indexStats(spark, url, Seq("id"))
+    Snapshots.vacuum(spark, url, Snapshots.latest(spark, url),
+      graceMs = 0L)
+    assert(!fs.exists(new Path(s"${sp}__tmp")))
+    val live = Snapshots.snap(spark, url, Snapshots.latest(spark, url))
+      .files.toSet
+    assert(spark.read.parquet(sp).select("file").as[String].collect()
+      .toSet == live)
+    // and a fold over a leftover tmp
+    val dir = new Path(s"$url/_fold/side")
+    Seq("junk").toDF("x").write.parquet(s"$dir" + "__tmp")
+    (1 to SidecarDelta.MaxParts + 1).foreach(i =>
+      SidecarDelta.append(spark, fs, dir, Seq(i.toLong).toDF("n")))
+    assert(parts(dir.toString) == 1)
+    assert(!fs.exists(new Path(s"$dir" + "__tmp")))
+    assert(spark.read.parquet(dir.toString).as[Long].collect().sorted
+      .toSeq == (1L to SidecarDelta.MaxParts + 1L))
+  }
 }
