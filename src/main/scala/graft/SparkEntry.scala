@@ -8457,16 +8457,15 @@ object SparkEntry {
         col("c_mktsegment"))
     }),
 
-    // ---- SQL DELETE/UPDATE route band-able WHEREs to the ----
-    // ---- stats-priced flavors ----
-    // BandRoute classifies a conjunction of bounds on one column
-    // into the inclusive range deleteWhere/updateWhere take, gated
-    // on the _stats sidecar covering the field: attribution becomes
-    // one O(files) sidecar read instead of the general flavors'
-    // corpus scan (SqlDmlRouteSpec proves WHICH path runs via the
-    // band-vs-containment file signature; this row proves the
-    // routed results stay hash-exact end-to-end on real data, with
-    // COW pruning asserted from the manifests).
+    // ---- SQL DELETE/UPDATE with band-able WHEREs ----
+    // The copy-on-write DELETE/UPDATE classify a conjunction of
+    // bounds on one column (BandRoute.ofExpr) into a range whose
+    // _stats bands prune the candidate files before the exact
+    // attribution scan, which then rewrites only the files holding
+    // a match (SqlDmlRouteSpec pins the rewritten file set and the
+    // pruned scan; this row proves the results stay hash-exact
+    // end-to-end on real data, with COW pruning asserted from the
+    // manifests).
     "q390_sql_dml_banded" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
         scratchDir(s, dir, "q390")).getParent
@@ -8740,12 +8739,12 @@ object SparkEntry {
     }),
 
     // ---- Banded SQL DML on a STRING field ----
-    // The q390 machinery over prefix bands: a lang-clustered store
-    // with string stats routes `DELETE ... WHERE lang >= x AND
-    // lang <= y` to deleteWhere and `UPDATE ... WHERE lang = z`
-    // to updateWhere, both on string ranges (code-point band
-    // pruning) — attribution stays one sidecar read, survivors
-    // asserted from the manifests. Oracle = the relational chain.
+    // The q390 machinery over prefix bands: on a lang-clustered
+    // store with string stats, `DELETE ... WHERE lang >= x AND
+    // lang <= y` and `UPDATE ... WHERE lang = z` classify into
+    // string ranges whose code-point bands prune the attribution
+    // scan; survivors asserted from the manifests. Oracle = the
+    // relational chain.
     "q395_sql_dml_banded_str" -> ((s, dir) => {
       val rootPath = new org.apache.hadoop.fs.Path(
         scratchDir(s, dir, "q395")).getParent

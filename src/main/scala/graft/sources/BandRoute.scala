@@ -1,26 +1,23 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EmptyRow, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** WHERE-shape classifier for the SQL paths ([[GraftDml]]'s
-  * `UPDATE`, [[GraftCatalog]]'s `DELETE FROM` and filtered
-  * `count(*)`): recognizes a conjunction of bounds on ONE integral
-  * or string column and rewrites it as the inclusive
-  * [[Snapshots.BandRange]] the banded [[Snapshots.deleteWhere]] /
-  * [[Snapshots.updateWhere]] / [[Snapshots.countWhere]] flavors
-  * take, so a retention-shaped SQL sweep prices its attribution
-  * from the `_stats` sidecar (one
-  * O(files) metadata read) instead of the general-predicate
-  * flavors' corpus scan — the 100 TB difference between pruning
-  * megabytes and scanning the store. Anything the classifier cannot
-  * PROVE equivalent returns None and the caller keeps the exact
-  * general-predicate path: routing is an optimization, never a
-  * semantics change (both sides delete/update exactly the rows the
-  * predicate matches — NULLs survive under either, because a range
-  * cannot match NULL and the general flavors coalesce to false).
+/** WHERE-shape classifier: recognizes a conjunction of bounds on ONE
+  * integral or string column and rewrites it as the equivalent
+  * inclusive [[Snapshots.BandRange]]. A classified range never
+  * chooses a code path; it only prunes and prices:
+  *  - the copy-on-write DELETE/UPDATE ([[Snapshots.deleteWhereCond]],
+  *    [[Snapshots.updateWhereCond]], so SQL `DELETE FROM` and
+  *    `UPDATE` too) prune their candidate entries by its `_stats`
+  *    bands before the exact attribution scan;
+  *  - [[GraftCatalog]]'s filtered `count(*)` prices the count from
+  *    the sidecar band walk ([[Snapshots.countWhere]]).
+  * Anything the classifier cannot PROVE equivalent returns None and
+  * the caller reads every entry: a range never changes which rows
+  * match (a range cannot match NULL, and the conditions coalesce
+  * NULL to false).
   *
   * Recognized conjuncts (all on the same column): `=`, `>`, `>=`,
   * `<`, `<=`, `BETWEEN` (arrives as two bounds), plus the
@@ -30,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the binary-order successor `v + '\u0000'`; a strict string upper
   * bound has no predecessor and refuses. Date/timestamp and
   * floating columns refuse (their filter values would need the
-  * band's epoch encoding — the general path handles them exactly).
+  * band's epoch encoding).
   */
 private[sources] object BandRoute {
   import Snapshots.{BandRange, LongRange, StrRange}
@@ -38,32 +35,10 @@ private[sources] object BandRoute {
   /** (field, op, value) conjunct; op ∈ =,>,>=,<,<=,nn. */
   private type Conj = (String, String, Any)
 
-  /** Classify a V2 `SupportsDelete` filter array (implicitly
-    * AND-ed). */
-  def ofFilters(schema: StructType,
-      filters: Seq[sources.Filter]): Option[BandRange] = {
-    val conjs = Seq.newBuilder[Conj]
-    def walk(f: sources.Filter): Boolean = f match {
-      case sources.And(l, r) => walk(l) && walk(r)
-      case sources.EqualTo(a, v) => conjs += ((a, "=", v)); true
-      case sources.GreaterThan(a, v) => conjs += ((a, ">", v)); true
-      case sources.GreaterThanOrEqual(a, v) =>
-        conjs += ((a, ">=", v)); true
-      case sources.LessThan(a, v) => conjs += ((a, "<", v)); true
-      case sources.LessThanOrEqual(a, v) =>
-        conjs += ((a, "<=", v)); true
-      case sources.IsNotNull(a) => conjs += ((a, "nn", null)); true
-      case _ => false
-    }
-    if (filters.nonEmpty && filters.forall(walk))
-      build(schema, conjs.result())
-    else None
-  }
-
-  /** Classify a resolved catalyst predicate (the `UPDATE ... WHERE`
-    * expression [[GraftUpdateCommand]] carries, or a filtered
-    * `count(*)`'s condition with its attributes renamed to the
-    * relation columns they read). Attribute types
+  /** Classify a resolved catalyst predicate (a DML condition
+    * resolved by [[Snapshots.bandOf]], or a filtered `count(*)`'s
+    * condition with its attributes renamed to the relation columns
+    * they read). Attribute types
     * come from the expression itself (resolved against the pinned
     * logical schema); the value side accepts any FOLDABLE
     * expression (an analyzer-inserted Cast around a literal has not
@@ -113,26 +88,16 @@ private[sources] object BandRoute {
         conjs += ((attr(a).get, "nn", null)); true
       case _ => false
     }
-    if (!walk(e)) return None
-    val fields = fieldType.keys.toSeq
-    if (fields.size != 1) return None
-    build(StructType(fields.map(f =>
-      StructField(f, fieldType(f)))), conjs.result())
-  }
-
-  private def build(schema: StructType,
-      conjs: Seq[Conj]): Option[BandRange] = {
-    val fields = conjs.map(_._1).distinct
-    if (fields.size != 1) return None
-    val field = fields.head
-    if (!schema.fieldNames.contains(field)) return None
+    if (!walk(e) || fieldType.size != 1) return None
+    val (field, dt) = fieldType.head
+    val cs = conjs.result()
     // at least one real bound: a bare IS NOT NULL is not a range
-    if (!conjs.exists(_._2 != "nn")) return None
-    schema(field).dataType match {
+    if (!cs.exists(_._2 != "nn")) return None
+    dt match {
       case ByteType | ShortType | IntegerType | LongType =>
         var lo = Long.MinValue
         var hi = Long.MaxValue
-        conjs.foreach { case (_, op, v0) =>
+        cs.foreach { case (_, op, v0) =>
           val v = v0 match {
             case n: java.lang.Number => n.longValue
             case null => 0L // nn conjunct — unused
@@ -163,7 +128,7 @@ private[sources] object BandRoute {
         val ord = Snapshots.BandKey.StrKey.ord
         def minCp(a: String, b: String): String =
           if (a == null) b else ord.min(a, b)
-        conjs.foreach { case (_, op, v0) =>
+        cs.foreach { case (_, op, v0) =>
           op match {
             case "nn" => ()
             case _ =>
@@ -174,13 +139,13 @@ private[sources] object BandRoute {
                 case "<=" => hi = minCp(hi, v)
                 // binary-order successor: t > v  ⟺  t >= v+""
                 case ">" => lo = ord.max(lo, v + '\u0000')
-                // no string predecessor exists — keep the exact path
+                // no string predecessor exists — no band
                 case "<" => return None
               }
           }
         }
         if (hi == null) None else Some(StrRange(field, lo, hi))
-      case _ => None // date/timestamp/float/etc — exact path
+      case _ => None // date/timestamp/float/etc — no band
     }
   }
 }

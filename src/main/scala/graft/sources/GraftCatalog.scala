@@ -54,7 +54,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * gate): `INSERT INTO`/`INSERT OVERWRITE` ride the NATIVE V2 batch
   * write ([[GraftWriteBuilderV2]] — executor-side parquet staging
   * into the store root, one driver manifest commit); `DELETE FROM` →
-  * [[Snapshots.deleteWhereCond]]; `CREATE TABLE` (incl. CTAS) →
+  * [[Snapshots.deleteWhereCond]] (stats-pruned when the WHERE is a
+  * band, exact attribution either way); `CREATE TABLE` (incl. CTAS) →
   * [[Snapshots.create]]; `ALTER TABLE RENAME/DROP COLUMN` → the
   * metadata-only [[Snapshots.renameColumn]]/[[Snapshots
   * .dropColumn]]. Destructive lifecycle (DROP of a store with
@@ -412,10 +413,10 @@ private[sources] trait GraftSqlWrites
     new GraftWriteBuilderV2(storeUrl, info)
   }
 
-  /** `DELETE FROM` → [[Snapshots.deleteWhereCond]]: the general
-    * copy-on-write predicate delete (entries containing a match are
-    * rewritten; CDC sees the deletions; NULL predicate rows
-    * survive). Refuses untranslatable predicates at analysis via
+  /** `DELETE FROM` → [[Snapshots.deleteWhereCond]], whose
+    * copy-on-write contract prunes by stats when the WHERE is a band
+    * and rewrites exactly the entries holding a match (NULL predicate
+    * rows survive). Refuses untranslatable predicates at analysis via
     * [[canDeleteWhere]] rather than deleting the wrong rows. */
   override def canDeleteWhere(filters: Array[sources.Filter]): Boolean =
     writable && filters.forall(f => GraftCatalog.translate(f).isDefined)
@@ -423,29 +424,13 @@ private[sources] trait GraftSqlWrites
     require(writable,
       s"$label is a pinned time-travel resolution — DELETE targets " +
         "the latest version")
-    val spark = SparkSession.active
-    // band-able WHERE shapes (a range/equality on one integral or
-    // string column) route to the stats-priced banded flavors when
-    // the `_stats` sidecar covers the field: attribution is one
-    // O(files) sidecar read instead of a corpus scan — the
-    // retention-sweep shape at 100 TB. Everything else (or an
-    // uncovered field, where the banded flavors would must-read
-    // every file) keeps the exact general-predicate path.
-    BandRoute.ofFilters(Snapshots.headSchema(spark, storeUrl),
-        filters.toIndexedSeq) match {
-      case Some(r)
-          if Snapshots.statsCovers(spark, storeUrl, r.field) =>
-        Snapshots.deleteWhere(spark, storeUrl, r.field, r.lo, r.hi)(
-          r.key): Unit
-      case _ =>
-        val cond = filters.map(f =>
-          GraftCatalog.translate(f).getOrElse(
-            throw new UnsupportedOperationException(
-              s"DELETE predicate $f is not translatable — use " +
-                "Snapshots.deleteWhereCond")))
-          .reduceOption(_ && _).getOrElse(lit(true))
-        Snapshots.deleteWhereCond(spark, storeUrl, cond): Unit
-    }
+    val cond = filters.map(f =>
+      GraftCatalog.translate(f).getOrElse(
+        throw new UnsupportedOperationException(
+          s"DELETE predicate $f is not translatable — use " +
+            "Snapshots.deleteWhereCond")))
+      .reduceOption(_ && _).getOrElse(lit(true))
+    Snapshots.deleteWhereCond(SparkSession.active, storeUrl, cond): Unit
   }
 }
 

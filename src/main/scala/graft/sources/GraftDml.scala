@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.LongType
   * injected post-hoc resolution rule claims a resolved
   * [[UpdateTable]] whose relation is a graft table BEFORE Spark's
   * row-level rewrite would refuse it, and replaces it with an eager
-  * command running [[Snapshots.updateWhereCond]] — the general
-  * copy-on-write predicate update, so atomic commit, CDC, CHECK
+  * command running [[Snapshots.updateWhereCond]] — the one
+  * copy-on-write UPDATE (stats-pruned when the WHERE is a band,
+  * exact attribution either way), so atomic commit, CDC, CHECK
   * constraints and safe-upcast assignment semantics all apply.
   * Wired through [[graft.functions.GraftExtensions]]
   * (`spark.sql.extensions`), the same mechanism every lakehouse
@@ -205,8 +206,8 @@ object GraftDml {
   }
 }
 
-/** Eagerly-executed UPDATE: runs the copy-on-write predicate update
-  * and returns the committed version (the current one on a no-match
+/** Eagerly-executed UPDATE: runs the copy-on-write update and
+  * returns the committed version (the current one on a no-match
   * no-op). The carried expressions' attribute ids belong to the
   * analyzed relation; [[run]] rewrites every attribute to a by-name
   * unresolved reference, which the store's fresh effective read
@@ -226,25 +227,9 @@ case class GraftUpdateCommand(url: String,
     })
 
   override def run(session: SparkSession): Seq[Row] = {
-    val setCols = sets.map { case (n, e) => n -> rebind(e) }.toMap
-    // band-able WHERE shapes route to the stats-priced flavors:
-    // attribution reads the `_stats` sidecar (O(files) metadata)
-    // instead of scanning the corpus — gated on the sidecar actually
-    // covering the field, because an uncovered banded sweep
-    // must-reads (and rewrites) EVERYTHING, strictly worse than the
-    // general path's exact containment attribution. Assignment
-    // semantics stay identical: [[Snapshots.upcastSets]] applies
-    // the same safe-upcast probe updateWhereCond runs internally.
-    val v = cond.flatMap(BandRoute.ofExpr) match {
-      case Some(r) if Snapshots.statsCovers(session, url, r.field) =>
-        val casted = Snapshots.upcastSets(session,
-          Snapshots.headSchema(session, url), setCols)
-        Snapshots.updateWhere(session, url, r.field, r.lo, r.hi,
-          casted)(r.key)
-      case _ =>
-        val condCol = cond.map(rebind).getOrElse(lit(true))
-        Snapshots.updateWhereCond(session, url, condCol, setCols)
-    }
+    val v = Snapshots.updateWhereCond(session, url,
+      cond.map(rebind).getOrElse(lit(true)),
+      sets.map { case (n, e) => n -> rebind(e) }.toMap)
     Seq(Row(v.toLong))
   }
 }

@@ -235,8 +235,9 @@ object Snapshots {
             java.nio.file.Paths.get(tmp.toUri.getPath))
           true
         } catch {
-          // EEXIST → lost the race (must precede the generic case:
-          // FileAlreadyExistsException IS a FileSystemException)
+          // EEXIST → another writer holds the slot (must precede the
+          // generic case: FileAlreadyExistsException IS a
+          // FileSystemException)
           case _: java.nio.file.FileAlreadyExistsException => false
           // linkless filesystems (CIFS/FAT/some FUSE): the JDK Unix
           // provider surfaces EOPNOTSUPP/EPERM as FileSystemException,
@@ -251,6 +252,49 @@ object Snapshots {
     if (!claimed)
       sys.error(s"concurrent commit lost the race for v$version at $root")
     version
+  }
+
+  /** [[commit]] `parent.version + 1` under the parent's column
+    * mapping — every derived version except the ones that decide a
+    * mapping ([[create]], [[overwrite]], [[restore]],
+    * [[renameColumn]], [[dropColumn]], [[cloneStore]] and the SQL
+    * `INSERT OVERWRITE`). */
+  private[sources] def commitNext(spark: SparkSession, root: Path,
+      parent: Snap, op: String, files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Int =
+    commit(spark, root, parent.version + 1, op, files, Some(schema),
+      parent.colmap, parent.dropped)
+
+  /** The one lost-race retry loop. Each attempt lists the versions
+    * ONCE and feeds that listing to both `dedup` (a version that
+    * already holds this commit, returned as-is) and the parent
+    * `write` commits on (its max). Listing twice left an
+    * exactly-once hole: a twin could pass the dedup check before its
+    * rival's commit landed, then resolve the parent AFTER it landed
+    * and commit a second copy into a later free slot with no race to
+    * lose. From one listing, seeing the later parent implies seeing
+    * the rival's manifest, so `dedup` catches it; not seeing it means
+    * both target the same slot and [[commit]]'s exclusive claim
+    * decides. Only that lost-race signal retries (at most 16 times):
+    * any other failure surfaces on its own attempt with its own
+    * cause. */
+  private def commitOnHead(spark: SparkSession, url: String)(
+      dedup: Seq[Int] => Option[Int])(write: Snap => Int): Int = {
+    var attempts = 0
+    var out: Option[Int] = None
+    while (out.isEmpty) {
+      val vs = versions(spark, url)
+      require(vs.nonEmpty, s"no snapshot store at $url")
+      try out = Some(dedup(vs).getOrElse(
+        write(snap(spark, url, vs.max))))
+      catch {
+        case e: RuntimeException
+            if e.getMessage != null && e.getMessage
+              .startsWith("concurrent commit lost the race") &&
+              attempts < 16 => attempts += 1
+      }
+    }
+    out.get
   }
 
   /** Write `df`'s rows as immutable data files named
@@ -604,58 +648,29 @@ object Snapshots {
       parent.colmap)
   }
 
-  /** Commit already-staged append files, retrying lost version
-    * races at the (re-resolved) head — shared by [[append]] and
-    * [[appendOnce]]. Only the race signal retries; anything else
-    * surfaces on attempt 1. `dedupOp`: when set, a version whose op
-    * equals it (committed by a racing at-least-once twin) wins and
-    * is returned, leaving this call's staged files as vacuum
-    * orphans — the exactly-once contract under concurrency. */
+  /** Commit already-staged append files through [[commitOnHead]]
+    * (lost version races retry at the re-resolved head) — shared by
+    * [[append]] and [[appendOnce]]. `dedupOp`: when set, a version
+    * whose op equals it (committed by a racing at-least-once twin)
+    * wins and is returned, leaving this call's staged files as
+    * vacuum orphans — the exactly-once contract under concurrency. */
   private[sources] def commitAppendStaged(spark: SparkSession,
       root: Path,
       url: String, op: String, staged: Seq[String],
       batchSchema: org.apache.spark.sql.types.StructType,
       stagedColmap: Map[String, String],
-      dedupOp: Option[String] = None): Int = {
-    var attempts = 0
-    var out = -1
-    while (out < 0) {
-      // ONE directory listing per attempt feeds BOTH the dedup check
-      // and the parent resolution. Listing twice left an exactly-once
-      // hole: a twin could pass the dedup check before its rival's
-      // commit landed, then resolve the parent AFTER it landed —
-      // targeting a later free slot, committing a SECOND `op` version
-      // with no race to lose. From one listing, seeing the later
-      // parent implies seeing the rival's manifest in the same list,
-      // so the dedup check catches it; not seeing it means both
-      // target the same slot and the claim's exclusivity decides.
-      val vs = versions(spark, url)
-      require(vs.nonEmpty, s"no snapshot store at $url")
-      dedupOp.flatMap(o => vs
-          .find(v => snap(spark, url, v).op == o)) match {
-        case Some(v) => out = v
-        case None =>
-          val parent = snap(spark, url, vs.max)
-          // staged files carry stagedColmap's PHYSICAL names; a
-          // rename/drop interleaving the race would make them stale
-          require(parent.colmap == stagedColmap,
-            s"append raced a column-mapping change at $url — " +
-              "staged files carry the previous physical names; " +
-              "re-run the append")
-          try out = commit(spark, root, parent.version + 1, op,
-            parent.files ++ staged,
-            Some(evolveFrom(spark, root, parent, batchSchema)),
-            parent.colmap, parent.dropped)
-          catch {
-            case e: RuntimeException
-                if e.getMessage != null && e.getMessage
-                  .startsWith("concurrent commit lost the race") &&
-                  attempts < 16 => attempts += 1
-          }
-      }
+      dedupOp: Option[String] = None): Int =
+    commitOnHead(spark, url)(vs => dedupOp.flatMap(o =>
+        vs.find(v => snap(spark, url, v).op == o))) { parent =>
+      // staged files carry stagedColmap's PHYSICAL names; a
+      // rename/drop interleaving the race would make them stale
+      require(parent.colmap == stagedColmap,
+        s"append raced a column-mapping change at $url — " +
+          "staged files carry the previous physical names; " +
+          "re-run the append")
+      commitNext(spark, root, parent, op, parent.files ++ staged,
+        evolveFrom(spark, root, parent, batchSchema))
     }
-    out
-  }
 
   /** Write-audit-publish append: stage the batch's files, run the
     * caller's `audit` over EXACTLY the rows readers would see (the
@@ -690,9 +705,8 @@ object Snapshots {
         throw new IllegalArgumentException(
           s"append audit refused the batch: ${e.getMessage}", e)
     }
-    commit(spark, root, v, "append", parent.files ++ staged,
-      Some(evolveFrom(spark, root, parent, df.schema)),
-      parent.colmap, parent.dropped)
+    commitNext(spark, root, parent, "append", parent.files ++ staged,
+      evolveFrom(spark, root, parent, df.schema))
   }
 
   /** The schema an append commits: the parent's evolved with the
@@ -709,22 +723,27 @@ object Snapshots {
       // collide with a renamed column's physical slot or a dropped
       // column's retired bytes (old files would serve the stale
       // column's values as the new column — the silent-wrong class)
-      val newCols = batchSchema.fieldNames
-        .filterNot(base.fieldNames.toSet)
-      // CASE-INSENSITIVE reservation: Spark resolves parquet columns
-      // case-insensitively by default (spark.sql.caseSensitive=false),
-      // so appending `BAL` after dropColumn(`bal`) would serve the
-      // retired bytes as the new column — the check must match the
-      // resolution ([[validateBatch]]'s applicability doctrine)
-      val reserved = (parent.colmap.values ++ parent.dropped)
-        .map(_.toLowerCase).toSet
-      val clash = newCols.filter(c => reserved(c.toLowerCase))
+      val clash = reservedPhysical(parent, batchSchema.fieldNames
+        .filterNot(base.fieldNames.toSet).toSeq)
       require(clash.isEmpty,
         s"evolution adds ${clash.mkString(",")} whose physical " +
           "name is reserved by a renamed or dropped column — " +
           "choose a different name")
       evolve(base, batchSchema)
     }
+
+  /** The `names` a new column may not take under `parent`: those
+    * matching a renamed column's physical slot or a dropped column's
+    * retired bytes, CASE-INSENSITIVELY — Spark resolves parquet
+    * columns case-insensitively by default, so adding `BAL` after
+    * dropColumn(`bal`) would serve the retired bytes as the new
+    * column ([[validateBatch]]'s applicability doctrine). */
+  private def reservedPhysical(parent: Snap,
+      names: Seq[String]): Seq[String] = {
+    val reserved = (parent.colmap.values ++ parent.dropped)
+      .map(_.toLowerCase).toSet
+    names.filter(n => reserved(n.toLowerCase))
+  }
 
   /** Exactly-once append for at-least-once callers (foreachBatch
     * retries, re-run jobs): the commit's `op` field carries
@@ -795,9 +814,8 @@ object Snapshots {
     val (parent, storeSchema, affected, rewritten) = stageUpsert(
       spark, url, updates, keyCol, deleteCol, bloomIndexUrl, maxKeys,
       expectedParentVersion)
-    commit(spark, root, parent.version + 1, "upsert",
-      parent.files.filterNot(affected.toSet) ++ rewritten,
-      Some(storeSchema), parent.colmap, parent.dropped)
+    commitNext(spark, root, parent, "upsert",
+      parent.files.filterNot(affected.toSet) ++ rewritten, storeSchema)
   }
 
   /** The staging half of [[upsert]]: validate, compute the affected
@@ -907,148 +925,121 @@ object Snapshots {
   }
 
   /** Copy-on-write range DELETE — `DELETE FROM store WHERE field
-    * BETWEEN lo AND hi` as a NEW version: only files whose stats
-    * band can hold a matching row are rewritten
-    * ([[prunedFiles]] — cluster the store on the field and the cost
-    * is the overlapping band, never the corpus: the GDPR/retention
-    * shape at 100 TB); untouched files are re-listed as-is, old
-    * versions stay readable, the CDC feed sees the deletions. Rows
-    * with a NULL field survive (a range predicate cannot match
-    * NULL). Like every range entry point it takes a `Long` range on
-    * an integral/date/timestamp field or a `String` range on a
-    * string field ([[BandKey]]); any other pairing refuses. Returns
-    * the committed version — the CURRENT one when no file can hold
-    * a match (true no-op, nothing committed). */
+    * BETWEEN lo AND hi` as a NEW version, under the copy-on-write
+    * contract of [[deleteWhereCond]] with the range as its band. Rows
+    * with a NULL field survive (a range predicate cannot match NULL).
+    * Like every range entry point it takes a `Long` range on an
+    * integral/date/timestamp field or a `String` range on a string
+    * field ([[BandKey]]); any other pairing refuses before anything
+    * is read. Returns the committed version, or the current one when
+    * no row matches. */
   def deleteWhere[K: BandKey](spark: SparkSession, url: String,
-      field: String, lo: K, hi: K): Int = {
-    val r = BandKey[K].range(field, lo, hi)
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    val files = pruneRanges(spark, url, parent, "deleteWhere", Seq(r))
-    if (files.isEmpty) return parent.version
-    val storeSchema = schemaOf(spark, root, parent)
-    val hit = coalesce(r.residual(storeSchema), lit(false))
-    val scanned = readEntriesEff(spark, root, files, storeSchema,
-        parent.colmap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // stats admission is conservative (files without a stats row
-      // must-read) — a band-sized match count keeps a no-match
-      // delete a TRUE no-op instead of an empty rewrite commit.
-      // ONE action over the persisted scan (the r19 shape paid a
-      // kept.count + scanned.count pair).
-      val matches = scanned.agg(count(when(hit, lit(1))).as("m"))
-        .collect()(0).getLong(0)
-      if (matches == 0L) return parent.version
-      val v = parent.version + 1
-      // re-cluster the survivors on the delete field: a round-robin
-      // rewrite would give every new file a full-width band and
-      // progressively de-cluster the store under repeated retention
-      // deletes
-      val rewritten = writeFiles(spark, root, scanned.filter(!hit), v,
-        math.max(1, files.length), clusterBy = Some(field),
-        colmap = parent.colmap)
-      commit(spark, root, v, "delete",
-        parent.files.filterNot(files.toSet) ++ rewritten,
-        Some(storeSchema), parent.colmap, parent.dropped)
-    } finally scanned.unpersist()
-  }
+      field: String, lo: K, hi: K): Int =
+    rewriteRows(spark, url, "deleteWhere",
+      Left(BandKey[K].range(field, lo, hi)), None)
 
-  /** GENERAL-predicate copy-on-write DELETE — `DELETE FROM store
-    * WHERE <any condition>`: one tagged scan attributes matching
-    * rows to their manifest entries, only entries that actually
-    * CONTAIN a match are rewritten without those rows, untouched
-    * files re-list, and the CDC feed sees exactly the deletions.
-    * SQL DELETE semantics: a row deletes only when the condition is
-    * TRUE (NULL survives). Unlike the banded [[deleteWhere]] this
-    * cannot prune the attribution scan from statistics (an
-    * arbitrary predicate has no band), so it reads the corpus once
-    * — prefer the range flavors for retention sweeps; this is the
-    * exactness fallback and the SQL `DELETE FROM` path
-    * ([[GraftCatalog]]). Returns the CURRENT
-    * version when nothing matches (true no-op). */
+  /** Copy-on-write DELETE — `DELETE FROM store WHERE <any condition>`
+    * as a NEW version; the SQL `DELETE FROM` path ([[GraftCatalog]]).
+    * This is the one copy-on-write contract every row rewrite
+    * ([[deleteWhere]], [[updateWhere]], [[updateWhereCond]]) follows:
+    *  - pruning: when the condition is a bound conjunction on one
+    *    integral or string column ([[BandRoute.ofExpr]]; the range
+    *    flavors pass their range), the `_stats` sidecar prunes the
+    *    candidate entries — one O(files) metadata read; otherwise,
+    *    or without a sidecar, every entry is a candidate;
+    *  - exact attribution: one tagged scan of the candidates (only
+    *    the predicate's columns) finds the entries that CONTAIN a
+    *    matching row, and only those are rewritten — band-admitted
+    *    entries without a match and untouched files re-list as-is;
+    *  - clustering: the rewritten rows are range-clustered on the
+    *    band field whenever a range is known, so repeated sweeps
+    *    never de-cluster the store;
+    *  - no-op: when nothing matches, nothing is committed and the
+    *    CURRENT version is returned.
+    * A row matches only when the condition is TRUE (NULL survives,
+    * SQL semantics). Old versions stay readable and the CDC feed
+    * sees exactly the changed rows. */
   def deleteWhereCond(spark: SparkSession, url: String,
-      cond: Column): Int = {
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    if (parent.files.isEmpty) return parent.version
-    val storeSchema = schemaOf(spark, root, parent)
-    val hit = coalesce(cond, lit(false))
-    val affected = readEntriesTagged(spark, root, parent.files,
-      storeSchema, "__graft_del_entry", parent.colmap)
-      .filter(hit).select(col("__graft_del_entry")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // O(files) bounded
-    if (affected.isEmpty) return parent.version
-    val keep = readEntriesEff(spark, root, affected, storeSchema,
-      parent.colmap).filter(!hit)
-    val v = parent.version + 1
-    val rewritten = writeFiles(spark, root, keep, v,
-      math.max(1, affected.length), colmap = parent.colmap)
-    commit(spark, root, v, "delete",
-      parent.files.filterNot(affected.toSet) ++ rewritten,
-      Some(storeSchema), parent.colmap, parent.dropped)
-  }
+      cond: Column): Int =
+    rewriteRows(spark, url, "deleteWhereCond", Right(cond), None)
 
-  /** GENERAL-predicate copy-on-write UPDATE — `UPDATE store SET ...
-    * WHERE <any condition>`: the [[deleteWhereCond]] attribution
-    * (one tagged scan finds the entries that CONTAIN a matching
-    * row), then only those entries rewrite with the SET expressions
-    * applied to matching rows (pred evaluated on PRE-update values),
-    * untouched files re-list, constraints re-check the changed rows,
-    * and the CDC feed sees exactly the updates. SQL assignment
-    * semantics: a SET expression whose type safely upcasts to the
-    * pinned column type is cast implicitly; anything lossy refuses.
-    * Prefer the banded [[updateWhere]] for range-shaped sweeps
-    * (stats-priced attribution); this is the exactness fallback and
-    * the SQL `UPDATE` path. Returns the CURRENT version when nothing
-    * matches. */
+  /** Copy-on-write UPDATE — `UPDATE store SET ... WHERE <any
+    * condition>` as a NEW version; the SQL `UPDATE` path
+    * ([[GraftDml]]). Pruning, attribution, clustering and the no-op
+    * follow [[deleteWhereCond]]. `sets` maps EXISTING columns to
+    * expressions evaluated on the matched row's PRE-update values;
+    * a SET whose type safely upcasts to the pinned column type is
+    * cast implicitly, anything lossy refuses ([[upcastSets]]), and
+    * the changed rows re-check the store's CHECK constraints. */
   def updateWhereCond(spark: SparkSession, url: String, cond: Column,
-      sets: Map[String, Column]): Int = {
+      sets: Map[String, Column]): Int =
+    rewriteRows(spark, url, "updateWhereCond", Right(cond), Some(sets))
+
+  /** Copy-on-write range UPDATE — `UPDATE store SET c = expr WHERE
+    * field BETWEEN lo AND hi` as a NEW version: [[updateWhereCond]]
+    * with the range as its band (`"n" -> col("n") + 1` increments;
+    * rows with a NULL field never match). Range pairings as
+    * [[deleteWhere]]. */
+  def updateWhere[K: BandKey](spark: SparkSession, url: String,
+      field: String, lo: K, hi: K, set: Map[String, Column]): Int =
+    rewriteRows(spark, url, "updateWhere",
+      Left(BandKey[K].range(field, lo, hi)), Some(set))
+
+  /** The one copy-on-write row rewrite (contract: [[deleteWhereCond]]).
+    * `where` is a known band range or a condition to classify;
+    * `sets` None deletes the matching rows, Some updates them. Every
+    * refusal (SET policy, range type gate) happens before any read. */
+  private def rewriteRows(spark: SparkSession, url: String,
+      caller: String, where: Either[BandRange, Column],
+      sets: Option[Map[String, Column]]): Int = {
     val (_, root) = fsOf(spark, url)
     val parent = snap(spark, url, latest(spark, url))
-    val storeSchema = schemaOf(spark, root, parent)
-    require(sets.nonEmpty, "updateWhereCond: empty SET clause")
-    sets.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
-      s"updateWhereCond: SET names unknown column $c — updates " +
-        "never add columns (that is schema evolution)"))
-    if (parent.files.isEmpty) return parent.version
-    val hit = coalesce(cond, lit(false))
-    val affected = readEntriesTagged(spark, root, parent.files,
-      storeSchema, "__graft_upd_entry", parent.colmap)
-      .filter(hit).select(col("__graft_upd_entry")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // O(files) bounded
+    val schema = schemaOf(spark, root, parent)
+    val casted = sets.map(upcastSets(spark, caller, schema, _))
+    val range = where.fold(Some(_), bandOf(spark, schema, _))
+    val candidates = range.fold(parent.files)(r =>
+      pruneRanges(spark, url, parent, caller, Seq(r)))
+    val hit = coalesce(where.fold(_.residual(schema), identity),
+      lit(false))
+    val affected =
+      if (candidates.isEmpty) Nil
+      else readEntriesTagged(spark, root, candidates, schema,
+          "__graft_cow_entry", parent.colmap)
+        .filter(hit).select(col("__graft_cow_entry")).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted // O(files) bounded
     if (affected.isEmpty) return parent.version
-    val scanned = readEntriesEff(spark, root, affected, storeSchema,
-      parent.colmap)
-    // implicit SAFE upcasts only (SQL store-assignment semantics):
-    // probe each SET expression's type once, refuse lossy casts
-    val probe = scanned.select(storeSchema.fieldNames.toSeq.map(c =>
-      sets.get(c).map(_.as(c)).getOrElse(col(c))): _*).schema
-    val casted: Map[String, Column] = sets.map { case (c, e) =>
-      val actual = probe(c).dataType
-      val pinned = storeSchema(c).dataType
-      if (actual == pinned) c -> e
-      else {
-        require(org.apache.spark.sql.catalyst.expressions.Cast
-          .canUpCast(actual, pinned),
-          s"updateWhereCond: SET $c yields $actual but the pinned " +
-            s"column is $pinned — not a safe upcast; cast explicitly")
-        c -> e.cast(pinned)
+    rewriteEntries(spark, root, parent, schema,
+      if (casted.isEmpty) "delete" else "update", affected,
+      range.map(_.field)) { rows =>
+      casted match {
+        case None => rows.filter(!hit)
+        case Some(set) =>
+          // constraints re-check the changed rows only
+          validateBatch(spark, root, url, rows.filter(hit).select(
+            schema.fieldNames.toSeq.map(c =>
+              set.get(c).map(_.as(c)).getOrElse(col(c))): _*))
+          rows.select(schema.fieldNames.toSeq.map(c =>
+            set.get(c).map(e => when(hit, e).otherwise(col(c)).as(c))
+              .getOrElse(col(c))): _*)
       }
     }
-    val updated = scanned.select(storeSchema.fieldNames.toSeq.map { c =>
-      casted.get(c).map(e => when(hit, e).otherwise(col(c)).as(c))
-        .getOrElse(col(c))
-    }: _*)
-    validateBatch(spark, root, url,
-      scanned.filter(hit).select(storeSchema.fieldNames.toSeq.map(c =>
-        casted.get(c).map(_.as(c)).getOrElse(col(c))): _*))
-    val v = parent.version + 1
-    val rewritten = writeFiles(spark, root, updated, v,
-      math.max(1, affected.length), colmap = parent.colmap)
-    commit(spark, root, v, "update",
-      parent.files.filterNot(affected.toSet) ++ rewritten,
-      Some(storeSchema), parent.colmap, parent.dropped)
+  }
+
+  /** Rewrite `affected` entries' effective rows through `edit` as
+    * fresh files (range-clustered on `clusterBy` when set) and commit
+    * them in the entries' place — the tail of [[rewriteRows]] and
+    * [[purgeDv]]. */
+  private def rewriteEntries(spark: SparkSession, root: Path,
+      parent: Snap, schema: org.apache.spark.sql.types.StructType,
+      op: String, affected: Seq[String], clusterBy: Option[String])(
+      edit: DataFrame => DataFrame): Int = {
+    val rows = edit(readEntriesEff(spark, root, affected, schema,
+      parent.colmap))
+    commitNext(spark, root, parent, op,
+      parent.files.filterNot(affected.toSet) ++
+        writeFiles(spark, root, rows, parent.version + 1,
+          math.max(1, affected.length), clusterBy, parent.colmap),
+      schema)
   }
 
   /** MERGE-ON-READ range DELETE — `DELETE FROM store WHERE field
@@ -1129,8 +1120,8 @@ object Snapshots {
       val d = splitEntry(e)._1
       if (affectedData.contains(d)) s"$d$DvSep$dvName" else e
     }
-    commit(spark, root, v, op, replaced ++ extraFiles,
-      Some(storeSchema), parent.colmap, parent.dropped)
+    commitNext(spark, root, parent, op, replaced ++ extraFiles,
+      storeSchema)
   }
 
   /** MERGE-ON-READ range UPDATE — `UPDATE store SET c = expr WHERE
@@ -1141,8 +1132,8 @@ object Snapshots {
     * correction shape at 100 TB; wide updates should stay
     * [[updateWhere]] (copy-on-write). Same contracts as the COW
     * flavor: `set` maps EXISTING columns to expressions over the
-    * matched row's current values, pinned types enforced, CHECK
-    * constraints re-checked on the updated rows, NULL field rows
+    * matched row's current values under the [[upcastSets]] policy,
+    * CHECK constraints re-checked on the updated rows, NULL field rows
     * never match, no-match is a true no-op, old versions read their
     * own vectors, and the CDC feed emits exact update (+pre-image)
     * rows — the manifest diff prices the commit as drop+add. */
@@ -1152,10 +1143,7 @@ object Snapshots {
     val (fs, root) = fsOf(spark, url)
     val parent = snap(spark, url, latest(spark, url))
     val storeSchema = schemaOf(spark, root, parent)
-    require(set.nonEmpty, "updateWhereMor: empty SET clause")
-    set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
-      s"updateWhereMor: SET names unknown column $c — updates never " +
-        "add columns (that is schema evolution, use append/upsert)"))
+    val casted = upcastSets(spark, "updateWhereMor", storeSchema, set)
     val entries = pruneRanges(spark, url, parent, "updateWhereMor",
       Seq(r))
     if (entries.isEmpty) return parent.version
@@ -1169,12 +1157,7 @@ object Snapshots {
         .collect().map(_.getString(0)).toSet
       if (affectedData.isEmpty) return parent.version // true no-op
       val updated = matched.select(storeSchema.fieldNames.toSeq.map {
-        c => set.get(c).map(_.as(c)).getOrElse(col(c)) }: _*)
-      updated.schema.fields.zip(storeSchema.fields).foreach {
-        case (u, b) => require(u.dataType == b.dataType,
-          s"updateWhereMor: SET ${b.name} yields ${u.dataType} but " +
-            s"the pinned column is ${b.dataType} — cast explicitly")
-      }
+        c => casted.get(c).map(_.as(c)).getOrElse(col(c)) }: _*)
       validateBatch(spark, root, url, updated)
       // delete side: matched positions + prior deletions of the
       // affected files (the [[deleteWhereMor]] chain contract)
@@ -1206,77 +1189,8 @@ object Snapshots {
     val parent = snap(spark, url, latest(spark, url))
     val dvd = parent.files.filter(_.contains(DvSep))
     if (dvd.isEmpty) return parent.version
-    val schema = schemaOf(spark, root, parent)
-    val eff = readEntriesEff(spark, root, dvd, schema, parent.colmap)
-    val v = parent.version + 1
-    val rewritten = writeFiles(spark, root, eff, v,
-      math.max(1, dvd.length), clusterBy, parent.colmap)
-    commit(spark, root, v, "purgedv",
-      parent.files.filterNot(dvd.toSet) ++ rewritten, Some(schema),
-      parent.colmap, parent.dropped)
-  }
-
-  /** Copy-on-write range UPDATE — `UPDATE store SET c = expr WHERE
-    * field BETWEEN lo AND hi` as a NEW version: only files whose
-    * stats band can hold a matching row are rewritten (the
-    * pseudonymize/backfill-correction shape at 100 TB — cluster the
-    * store on the field and the cost is the overlapping band, never
-    * the corpus); untouched files are re-listed as-is, old versions
-    * stay readable, the CDC feed sees the updated keys. `set` maps
-    * EXISTING columns to replacement expressions evaluated on the
-    * matched row's current values (`"n" -> col("n") + 1`
-    * increments). Rows with a NULL field never match. Updated rows
-    * re-check the store's CHECK constraints, and each replacement
-    * must keep its column's pinned type — loud refusal, never a
-    * silent cast (the silent-empty doctrine). Returns the committed
-    * version — the CURRENT one when no row matches (true no-op,
-    * nothing committed). */
-  def updateWhere[K: BandKey](spark: SparkSession, url: String,
-      field: String, lo: K, hi: K, set: Map[String, Column]): Int = {
-    val r = BandKey[K].range(field, lo, hi)
-    val (_, root) = fsOf(spark, url)
-    val parent = snap(spark, url, latest(spark, url))
-    val storeSchema = schemaOf(spark, root, parent)
-    require(set.nonEmpty, "updateWhere: empty SET clause")
-    set.keys.foreach(c => require(storeSchema.fieldNames.contains(c),
-      s"updateWhere: SET names unknown column $c — updates never " +
-        "add columns (that is schema evolution, use append/upsert)"))
-    val files = pruneRanges(spark, url, parent, "updateWhere", Seq(r))
-    if (files.isEmpty) return parent.version
-    val names = files.toSet
-    val scanned = readEntriesEff(spark, root, files, storeSchema,
-        parent.colmap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val hit = coalesce(r.residual(storeSchema), lit(false))
-      // stats admission is conservative — a row-level probe keeps a
-      // no-match update a TRUE no-op instead of an identity rewrite
-      if (scanned.filter(hit).limit(1).isEmpty) return parent.version
-      val updated = scanned.select(storeSchema.fieldNames.map { c =>
-        set.get(c).map(e => when(hit, e).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }: _*)
-      updated.schema.fields.zip(storeSchema.fields).foreach {
-        case (u, b) => require(u.dataType == b.dataType,
-          s"updateWhere: SET ${b.name} yields ${u.dataType} but the " +
-            s"pinned column is ${b.dataType} — cast explicitly")
-      }
-      // constraints re-checked on the rows that actually changed
-      // (pred evaluated on PRE-update values, set applied after)
-      validateBatch(spark, root, url,
-        scanned.filter(hit).select(storeSchema.fieldNames.map(c =>
-          set.get(c).map(_.as(c)).getOrElse(col(c))): _*))
-      val v = parent.version + 1
-      // re-cluster on the range field: rewrites merge several input
-      // files, and a round-robin layout would hand each output file
-      // a full-width band (the [[deleteWhere]] rationale)
-      val rewritten = writeFiles(spark, root, updated, v,
-        math.max(1, files.length), clusterBy = Some(field),
-        colmap = parent.colmap)
-      commit(spark, root, v, "update",
-        parent.files.filterNot(names) ++ rewritten, Some(storeSchema),
-        parent.colmap, parent.dropped)
-    } finally scanned.unpersist()
+    rewriteEntries(spark, root, parent, schemaOf(spark, root, parent),
+      "purgedv", dvd, clusterBy)(identity)
   }
 
   /** Read exactly one version's file set (snapshot isolation) under
@@ -1703,24 +1617,29 @@ object Snapshots {
     schemaOf(spark, root, snap(spark, url, latest(spark, url)))
   }
 
-  /** SQL store-assignment semantics shared by the SET paths
-    * ([[updateWhereCond]] internally; [[GraftDml]]'s banded route
-    * explicitly, so routing never changes which statements are
-    * accepted): probe each SET expression's result type by
-    * ANALYZING it over an empty frame of the store schema — no data
-    * read — and insert implicit SAFE upcasts to the pinned column
-    * type; lossy casts refuse. */
-  private[sources] def upcastSets(spark: SparkSession,
+  /** An empty frame of `schema`: what the SET and WHERE probes
+    * analyze expressions over — no data read. */
+  private def emptyFrame(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** The one SET policy of every UPDATE flavor (SQL store-assignment
+    * semantics): `sets` must be non-empty and name existing columns,
+    * and each expression's result type — probed by analysis over an
+    * [[emptyFrame]] — must equal the pinned column type or SAFELY
+    * upcast to it (the cast is inserted); a lossy SET refuses.
+    * Refusals name the calling `op`. */
+  private def upcastSets(spark: SparkSession, op: String,
       storeSchema: org.apache.spark.sql.types.StructType,
       sets: Map[String, Column]): Map[String, Column] = {
+    require(sets.nonEmpty, s"$op: empty SET clause")
     sets.keys.foreach(c =>
       require(storeSchema.fieldNames.contains(c),
-        s"UPDATE: SET names unknown column $c"))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      storeSchema)
-    val probe = empty.select(storeSchema.fieldNames.toSeq.map(c =>
-      sets.get(c).map(_.as(c)).getOrElse(col(c))): _*).schema
+        s"$op: SET names unknown column $c — updates never add " +
+          "columns (that is schema evolution, use append/upsert)"))
+    val probe = emptyFrame(spark, storeSchema)
+      .select(storeSchema.fieldNames.toSeq.map(c =>
+        sets.get(c).map(_.as(c)).getOrElse(col(c))): _*).schema
     sets.map { case (c, e) =>
       val actual = probe(c).dataType
       val pinned = storeSchema(c).dataType
@@ -1728,19 +1647,30 @@ object Snapshots {
       else {
         require(org.apache.spark.sql.catalyst.expressions.Cast
           .canUpCast(actual, pinned),
-          s"UPDATE: SET $c yields $actual but the pinned column is " +
+          s"$op: SET $c yields $actual but the pinned column is " +
             s"$pinned — not a safe upcast; cast explicitly")
         c -> e.cast(pinned)
       }
     }
   }
 
-  /** Whether the `_stats` sidecar covers `field` — the routing gate
-    * for band-able SQL WHERE shapes ([[GraftDml]]): WITHOUT
-    * coverage the banded [[deleteWhere]]/[[updateWhere]] flavors
-    * must-read (and so rewrite) every file, strictly worse than the
-    * general-predicate flavors' exact containment attribution, so
-    * the SQL paths route banded only when this holds. */
+  /** The band range `cond` is equivalent to ([[BandRoute.ofExpr]] on
+    * the condition resolved over an [[emptyFrame]] of `schema`), or
+    * None when it is not a bound conjunction on one integral or
+    * string column. */
+  private[sources] def bandOf(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      cond: Column): Option[BandRange] =
+    emptyFrame(spark, schema).filter(cond).queryExecution.analyzed
+      match {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(e, _) =>
+          BandRoute.ofExpr(e)
+        case _ => None
+      }
+
+  /** Whether the `_stats` sidecar covers `field` — the gate of the
+    * SQL filtered `count(*)` pricing ([[GraftCatalog]]), which must
+    * stay a metadata walk at optimization time. */
   def statsCovers(spark: SparkSession, url: String,
       field: String): Boolean = {
     val (fs, root) = fsOf(spark, url)
@@ -2077,10 +2007,11 @@ object Snapshots {
     * currency of the stats-sidecar skipping layer. [[prunedFiles]],
     * [[readWhere]], [[countWhere]] and the banded DML flavors build
     * one from their arguments; [[prunedFilesAll]] / [[readWhereAll]]
-    * take a conjunction of them; the SQL routes ([[BandRoute]]) and
-    * the reader chain (`GraftRead.range`) pass theirs through. A
-    * range owns its band tests and its exact residual filter; its
-    * [[BandKey]] owns the key order and the column-type gate. */
+    * take a conjunction of them; the WHERE classifier
+    * ([[BandRoute]]) and the reader chain (`GraftRead.range`) pass
+    * theirs through. A range owns its band tests and its exact
+    * residual filter; its [[BandKey]] owns the key order and the
+    * column-type gate. */
   sealed trait BandRange {
     type K
     def field: String
@@ -2237,11 +2168,10 @@ object Snapshots {
     val parent = snap(spark, url, latest(spark, url))
     val df = readAsOf(spark, url, parent.version)
     require(df.columns.contains(field), s"no column $field to cluster on")
-    val v = parent.version + 1
-    commit(spark, root, v, "cluster",
-      writeFiles(spark, root, df, v, nFiles, clusterBy = Some(field),
-        colmap = parent.colmap),
-      Some(df.schema), parent.colmap, parent.dropped)
+    commitNext(spark, root, parent, "cluster",
+      writeFiles(spark, root, df, parent.version + 1, nFiles,
+        clusterBy = Some(field), colmap = parent.colmap),
+      df.schema)
   }
 
   /** Multi-dimensional maintenance rewrite: re-lay the live rows
@@ -2261,10 +2191,9 @@ object Snapshots {
     val z = graft.ops.Zorder.zvalue(bits, fields.map(col): _*)
     val arranged = df.repartitionByRange(math.max(1, nFiles), z)
       .sortWithinPartitions(z)
-    val v = parent.version + 1
-    commit(spark, root, v, "zcluster",
-      writeArranged(spark, root, arranged, v, parent.colmap),
-      Some(df.schema), parent.colmap, parent.dropped)
+    commitNext(spark, root, parent, "zcluster",
+      writeArranged(spark, root, arranged, parent.version + 1,
+        parent.colmap), df.schema)
   }
 
   /** Conjunctive multi-field pruning with ONE sidecar read: a file
@@ -2455,12 +2384,12 @@ object Snapshots {
         read.repartitionByRange(n, col(f)).sortWithinPartitions(col(f))
       case None => read.repartition(n)
     }
-    val v = parent.version + 1
     val smallNames = small.map(_._1).toSet
-    commit(spark, root, v, "compact",
+    commitNext(spark, root, parent, "compact",
       parent.files.filterNot(smallNames) ++
-        writeArranged(spark, root, packed, v, parent.colmap),
-      Some(schema), parent.colmap, parent.dropped)
+        writeArranged(spark, root, packed, parent.version + 1,
+          parent.colmap),
+      schema)
   }
 
   // ------------------------------------------------------------------
@@ -2504,12 +2433,7 @@ object Snapshots {
     require(to.nonEmpty && !to.contains("\t") && !to.contains("\n") &&
       !from.contains("\t") && !from.contains("\n"),
       "renameColumn: names may not contain tab/newline")
-    val refs = constraints(spark, url).filter { case (_, e) =>
-      ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-        .findFirstIn(e).isDefined }
-    require(refs.isEmpty,
-      s"renameColumn: constraint(s) ${refs.map(_._1).mkString(",")} " +
-        s"reference $from — dropConstraint first")
+    requireUnconstrained(spark, url, "renameColumn", from)
     val phys = parent.phys(from)
     val newColmap = (parent.colmap - from) ++
       (if (to == phys) Map.empty[String, String] else Map(to -> phys))
@@ -2522,6 +2446,18 @@ object Snapshots {
     commit(spark, root, parent.version + 1,
       s"rename:${opSafe(from)}->${opSafe(to)}",
       parent.files, Some(newSchema), newColmap, parent.dropped)
+  }
+
+  /** Refuse an `op` on `column` while a CHECK constraint's SQL names
+    * it (the stored expression would break or silently retarget). */
+  private def requireUnconstrained(spark: SparkSession, url: String,
+      op: String, column: String): Unit = {
+    val refs = constraints(spark, url).filter { case (_, e) =>
+      ("\\b" + java.util.regex.Pattern.quote(column) + "\\b").r
+        .findFirstIn(e).isDefined }
+    require(refs.isEmpty,
+      s"$op: constraint(s) ${refs.map(_._1).mkString(",")} " +
+        s"reference $column — dropConstraint first")
   }
 
   /** Manifest `op`-field sanitizer: ops are provenance strings inside
@@ -2555,18 +2491,15 @@ object Snapshots {
       "addColumn: names may not contain tab/newline")
     require(!schema.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"addColumn: column $name already exists")
-    val reserved = (parent.colmap.values ++ parent.dropped)
-      .map(_.toLowerCase).toSet
-    require(!reserved(name.toLowerCase),
+    require(reservedPhysical(parent, Seq(name)).isEmpty,
       s"addColumn: $name matches a renamed or dropped column's " +
         "physical slot — old files would serve its stale bytes; " +
         "choose a different name")
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields :+ org.apache.spark.sql.types.StructField(
         name, dt, nullable = true))
-    commit(spark, root, parent.version + 1,
-      s"addcol:${opSafe(name)}",
-      parent.files, Some(newSchema), parent.colmap, parent.dropped)
+    commitNext(spark, root, parent, s"addcol:${opSafe(name)}",
+      parent.files, newSchema)
   }
 
   /** Drop a LOGICAL column as a METADATA-ONLY commit (op
@@ -2593,12 +2526,7 @@ object Snapshots {
       "dropColumn: cannot drop the last column")
     require(!name.contains("\t") && !name.contains("\n"),
       "dropColumn: names may not contain tab/newline")
-    val refs = constraints(spark, url).filter { case (_, e) =>
-      ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
-        .findFirstIn(e).isDefined }
-    require(refs.isEmpty,
-      s"dropColumn: constraint(s) ${refs.map(_._1).mkString(",")} " +
-        s"reference $name — dropConstraint first")
+    requireUnconstrained(spark, url, "dropColumn", name)
     val phys = parent.phys(name)
     // sidecar hygiene: retire the dropped field's stats rows (tiny,
     // O(files) rewrite) so the field-set equality check keeps
@@ -3140,53 +3068,34 @@ object Snapshots {
     val stagedSet = staged.toSet
     val opStr = (if (drops.isEmpty) "txn-append" else "txn-upsert") +
       key.map(":" + _).getOrElse("")
-    var attempts = 0
-    var out = -1
-    while (out < 0) {
-      val vs = versions(spark, url)
-      vs.find(v =>
-        stagedSet.subsetOf(snap(spark, url, v).files.toSet)) match {
-        case Some(v) => out = v
+    commitOnHead(spark, url) { vs =>
+      vs.find(v => stagedSet.subsetOf(snap(spark, url, v).files.toSet))
         // per-ATTEMPT key re-check (not just the pre-staging scan in
         // commitTogether): two concurrent callers with the same
         // commitKey can both pass the initial check-then-act scan;
         // whoever loses the version race must find the winner's
         // keyed commit HERE and return it instead of double-
         // publishing (the loser's staged files stay invisible,
-        // vacuum-collectable orphans) — mirrors commitAppendStaged
-        case _ if key.isDefined &&
-            vs.exists(v => snap(spark, url, v).op == opStr) =>
-          out = vs.filter(v => snap(spark, url, v).op == opStr).min
-        case None =>
-          staged.foreach(f =>
-            require(fs.exists(new Path(root, f)),
-              s"staged file $f missing at $url (vacuumed before " +
-                "recovery?) — transaction cannot complete"))
-          val parent = snap(spark, url, vs.max)
-          val missingDrops = drops.filterNot(parent.files.toSet)
-          require(missingDrops.isEmpty,
-            s"txn-upsert at $url: affected file(s) " +
-              s"${missingDrops.take(3).mkString(",")} left the " +
-              s"manifest at v${parent.version} — a foreign commit " +
-              "interleaved with the transaction (mutation " +
-              "transactions are single-writer per store)")
-          // retry ONLY the lost-version-race signal from [[commit]]:
-          // a deterministic failure (rename refusal, IO error) must
-          // surface on attempt 1 with its own cause, not be retried
-          // 16 times and replaced by whatever attempt 17 throws
-          try out = commit(spark, root, parent.version + 1, opStr,
-            parent.files.filterNot(drops.toSet) ++ staged,
-            Some(schemaOf(spark, root, parent)),
-            parent.colmap, parent.dropped)
-          catch {
-            case e: RuntimeException
-                if e.getMessage != null && e.getMessage
-                  .startsWith("concurrent commit lost the race") &&
-                  attempts < 16 => attempts += 1
-          }
-      }
+        // vacuum-collectable orphans)
+        .orElse(if (key.isEmpty) None
+          else vs.filter(v => snap(spark, url, v).op == opStr)
+            .minOption)
+    } { parent =>
+      staged.foreach(f =>
+        require(fs.exists(new Path(root, f)),
+          s"staged file $f missing at $url (vacuumed before " +
+            "recovery?) — transaction cannot complete"))
+      val missingDrops = drops.filterNot(parent.files.toSet)
+      require(missingDrops.isEmpty,
+        s"txn-upsert at $url: affected file(s) " +
+          s"${missingDrops.take(3).mkString(",")} left the " +
+          s"manifest at v${parent.version} — a foreign commit " +
+          "interleaved with the transaction (mutation " +
+          "transactions are single-writer per store)")
+      commitNext(spark, root, parent, opStr,
+        parent.files.filterNot(drops.toSet) ++ staged,
+        schemaOf(spark, root, parent))
     }
-    out
   }
 
   private[sources] def writeTxnMarkers(spark: SparkSession,

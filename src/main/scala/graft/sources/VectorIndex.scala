@@ -370,10 +370,9 @@ object VectorIndex {
     val arranged = df.withColumn("__vcell", cellIdx)
       .repartitionByRange(math.max(1, nFiles), col("__vcell"))
       .drop("__vcell")
-    val v = parent.version + 1
-    val committed = Snapshots.commit(spark, root, v, "vcluster",
-      Snapshots.writeArranged(spark, root, arranged, v, parent.colmap),
-      Some(df.schema), parent.colmap, parent.dropped)
+    val committed = Snapshots.commitNext(spark, root, parent,
+      "vcluster", Snapshots.writeArranged(spark, root, arranged,
+        parent.version + 1, parent.colmap), df.schema)
     // cover the fresh entries immediately (O(new files)); old
     // entries' posting rows retire with their manifests via
     // prunePostings on vacuum

@@ -1,12 +1,12 @@
 package graft.sources
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{sources => f}
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
-/** Round-18 SQL DML pruning: band-able WHERE shapes route to the
-  * stats-priced banded flavors, SQL MERGE discovers the
+/** SQL DML pruning: band-able WHERE shapes prune the copy-on-write
+  * attribution scan by stats, SQL MERGE discovers the
   * conventional key-bloom sidecar, and the supporting hardening
   * (catalog path-traversal refusal, '$'-name fallthrough, per-
   * attempt commit-key dedup). */
@@ -26,81 +26,124 @@ class SqlDmlRouteSpec extends SparkSpec {
   private val longSchema = StructType(Seq(
     StructField("k", LongType), StructField("s", StringType)))
 
-  test("BandRoute.ofFilters: long shapes, combination, fallbacks") {
-    def go(fs: f.Filter*) = BandRoute.ofFilters(longSchema, fs)
-    assert(go(f.EqualTo("k", 7)) ==
+  /** [[BandRoute.ofExpr]] on `c` resolved over `longSchema`, as the
+    * DML conditions are ([[Snapshots.bandOf]]). */
+  private def go(c: Column) = Snapshots.bandOf(spark, longSchema, c)
+
+  test("BandRoute.ofExpr: long shapes, combination, fallbacks") {
+    val k = col("k")
+    assert(go(k === 7) ==
       Some(Snapshots.LongRange("k", 7, 7)))
-    assert(go(f.GreaterThanOrEqual("k", 5), f.LessThan("k", 9)) ==
+    assert(go(k >= 5 && k < 9) ==
       Some(Snapshots.LongRange("k", 5, 8)))
     // strict bounds tighten by ±1; IsNotNull absorbed
-    assert(go(f.GreaterThan("k", 5), f.IsNotNull("k")) ==
+    assert(go(k > 5 && k.isNotNull) ==
       Some(Snapshots.LongRange("k", 6, Long.MaxValue)))
     // one-sided upper
-    assert(go(f.LessThanOrEqual("k", 3)) ==
+    assert(go(k <= 3) ==
       Some(Snapshots.LongRange("k", Long.MinValue, 3)))
     // overflow-adjacent strict bound refuses
-    assert(go(f.GreaterThan("k", Long.MaxValue)).isEmpty)
+    assert(go(k > Long.MaxValue).isEmpty)
     // two different fields refuse
-    assert(go(f.EqualTo("k", 1), f.EqualTo("s", "x")).isEmpty)
+    assert(go(k === 1 && col("s") === "x").isEmpty)
     // a bare IS NOT NULL is not a range
-    assert(go(f.IsNotNull("k")).isEmpty)
+    assert(go(k.isNotNull).isEmpty)
     // untranslatable node refuses
-    assert(go(f.StringStartsWith("s", "a")).isEmpty)
+    assert(go(col("s").startsWith("a")).isEmpty)
     // disjunction refuses
-    assert(go(f.Or(f.EqualTo("k", 1), f.EqualTo("k", 2))).isEmpty)
+    assert(go(k === 1 || k === 2).isEmpty)
   }
 
-  test("BandRoute.ofFilters: string shapes") {
-    def go(fs: f.Filter*) = BandRoute.ofFilters(longSchema, fs)
-    assert(go(f.EqualTo("s", "m")) ==
+  test("BandRoute.ofExpr: string shapes") {
+    val s = col("s")
+    assert(go(s === "m") ==
       Some(Snapshots.StrRange("s", "m", "m")))
-    assert(go(f.GreaterThanOrEqual("s", "b"),
-        f.LessThanOrEqual("s", "d")) ==
+    assert(go(s >= "b" && s <= "d") ==
       Some(Snapshots.StrRange("s", "b", "d")))
     // strict lower bound = binary-order successor
-    assert(go(f.GreaterThan("s", "b"), f.LessThanOrEqual("s", "d")) ==
+    assert(go(s > "b" && s <= "d") ==
       Some(Snapshots.StrRange("s", "b\u0000", "d")))
     // no upper bound → not expressible as an inclusive band
-    assert(go(f.GreaterThanOrEqual("s", "b")).isEmpty)
+    assert(go(s >= "b").isEmpty)
     // strict upper bound has no predecessor
-    assert(go(f.LessThan("s", "d")).isEmpty)
+    assert(go(s < "d").isEmpty)
   }
 
   /** Build a 3-file store where band admission ≠ exact containment
     * for range [5,7]: file A bands 0..9 but holds no row in the
-    * range, file B holds matches, file C is disjoint. The banded
-    * path rewrites A AND B (A identity); the exact general path
-    * rewrites only B — which original files survive in the head
-    * manifest tells us WHICH path ran. */
-  private def threeFileStore(name: String): String = {
+    * range, file B holds matches, file C is disjoint. Exact
+    * attribution rewrites only B, so A and C survive every
+    * DELETE/UPDATE of the range; a stats sidecar prunes C from the
+    * attribution scan. C holds `cRows` rows (k from 20, v = k - 6). */
+  private def threeFileStore(name: String, cRows: Int = 2): String = {
     val url = s"$root/$name"
     Snapshots.create(spark, url,
       Seq((0L, 10L), (9L, 11L)).toDF("k", "v"), nFiles = 1)
     Snapshots.append(spark, url,
       Seq((5L, 12L), (6L, 13L)).toDF("k", "v"), nFiles = 1)
     Snapshots.append(spark, url,
-      Seq((20L, 14L), (21L, 15L)).toDF("k", "v"), nFiles = 1)
+      (20L until 20L + cRows).map(k => (k, k - 6)).toDF("k", "v"),
+      nFiles = 1)
     url
   }
 
+  /** C's rows in a [[threeFileStore]] built with `cRows` = 40: large
+    * enough that pruning C saves more records than the stats
+    * sidecar read costs. */
+  private val bigC = (20L until 60L).map(k => (k, k - 6))
+
+  /** Files A and C of a [[threeFileStore]]: v1's file and the one v3
+    * added. */
+  private def filesAC(url: String): Set[String] = {
+    def files(v: Int) = Snapshots.snap(spark, url, v).files.toSet
+    files(1) ++ (files(3) -- files(2))
+  }
+
+  /** The original files of a [[threeFileStore]] still listed by its
+    * head. */
+  private def survivors(url: String): Set[String] =
+    Snapshots.snap(spark, url, Snapshots.latest(spark, url)).files.toSet
+      .intersect(Snapshots.snap(spark, url, 3).files.toSet)
+
+  /** Input records read by the tasks of `body`. */
+  private def recordsRead(body: => Any): Long = {
+    val total = new java.util.concurrent.atomic.AtomicLong()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null) total.addAndGet(m.inputMetrics.recordsRead)
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      Thread.sleep(1000) // listener bus drains asynchronously
+    } finally spark.sparkContext.removeSparkListener(l)
+    total.get()
+  }
+
   test("SQL DELETE routes banded when stats cover the field") {
-    val url = threeFileStore("delband")
+    val url = threeFileStore("delband", bigC.size)
     Snapshots.indexStats(spark, url, Seq("k"))
-    val before = Snapshots.snap(spark, url,
-      Snapshots.latest(spark, url)).files.toSet
-    assert(before.size == 3)
-    spark.sql("DELETE FROM gdml.delband WHERE k BETWEEN 5 AND 7")
-    val head = Snapshots.snap(spark, url,
-      Snapshots.latest(spark, url))
-    assert(head.op == "delete")
-    val survivors = head.files.toSet.intersect(before)
-    // banded attribution admitted A (band 0..9) and B (matches): C
-    // alone survives — the general path would have left A too
-    assert(survivors.size == 1,
-      s"expected only file C to survive a BANDED delete, got " +
-        s"$survivors of $before")
-    assert(Snapshots.read(spark, url).select(col("k")).as[Long]
-      .collect().sorted.toSeq == Seq(0L, 9L, 20L, 21L))
+    val plain = threeFileStore("delbandplain", bigC.size)
+    val readStats = recordsRead(
+      spark.sql("DELETE FROM gdml.delband WHERE k BETWEEN 5 AND 7"))
+    val readPlain = recordsRead(
+      spark.sql("DELETE FROM gdml.delbandplain WHERE k BETWEEN 5 AND 7"))
+    Seq(url, plain).foreach { u =>
+      assert(Snapshots.snap(spark, u, Snapshots.latest(spark, u)).op ==
+        "delete")
+      // exact attribution rewrote ONLY file B, with or without stats:
+      // band-admitted A holds no match and survives
+      assert(survivors(u) == filesAC(u),
+        s"expected exactly A and C to survive, got ${survivors(u)}")
+      assert(Snapshots.read(spark, u).select(col("k")).as[Long]
+        .collect().sorted.toSeq == Seq(0L, 9L) ++ bigC.map(_._1))
+    }
+    // the stats band still prunes C from the attribution scan
+    assert(readStats < readPlain,
+      s"stats store read $readStats records, no-stats $readPlain")
   }
 
   test("SQL DELETE keeps the exact path when no stats sidecar") {
@@ -120,35 +163,82 @@ class SqlDmlRouteSpec extends SparkSpec {
 
   test("SQL UPDATE routes banded when stats cover the field, " +
       "exact otherwise, same results") {
-    val url = threeFileStore("updband")
+    val url = threeFileStore("updband", bigC.size)
     Snapshots.indexStats(spark, url, Seq("k"))
-    val before = Snapshots.snap(spark, url,
-      Snapshots.latest(spark, url)).files.toSet
-    spark.sql(
-      "UPDATE gdml.updband SET v = v + 100 WHERE k >= 5 AND k <= 7")
+    val readStats = recordsRead(spark.sql(
+      "UPDATE gdml.updband SET v = v + 100 WHERE k >= 5 AND k <= 7"))
     val head = Snapshots.snap(spark, url,
       Snapshots.latest(spark, url))
     assert(head.op == "update")
-    assert(head.files.toSet.intersect(before).size == 1,
-      "banded update must rewrite the band-admitted files A and B")
+    assert(survivors(url) == filesAC(url),
+      "the update must rewrite only the containing file B")
     assert(Snapshots.read(spark, url).select(col("k"), col("v"))
       .as[(Long, Long)].collect().sorted.toSeq ==
-      Seq((0L, 10L), (5L, 112L), (6L, 113L), (9L, 11L),
-        (20L, 14L), (21L, 15L)))
+      Seq((0L, 10L), (5L, 112L), (6L, 113L), (9L, 11L)) ++ bigC)
 
-    val url2 = threeFileStore("updcond")
+    val url2 = threeFileStore("updcond", bigC.size)
     val before2 = Snapshots.snap(spark, url2,
       Snapshots.latest(spark, url2)).files.toSet
-    spark.sql(
-      "UPDATE gdml.updcond SET v = v + 100 WHERE k >= 5 AND k <= 7")
+    val readPlain = recordsRead(spark.sql(
+      "UPDATE gdml.updcond SET v = v + 100 WHERE k >= 5 AND k <= 7"))
     val head2 = Snapshots.snap(spark, url2,
       Snapshots.latest(spark, url2))
     assert(head2.files.toSet.intersect(before2).size == 2,
       "exact update must rewrite only the containing file B")
     assert(Snapshots.read(spark, url2).select(col("k"), col("v"))
       .as[(Long, Long)].collect().sorted.toSeq ==
-      Seq((0L, 10L), (5L, 112L), (6L, 113L), (9L, 11L),
-        (20L, 14L), (21L, 15L)))
+      Seq((0L, 10L), (5L, 112L), (6L, 113L), (9L, 11L)) ++ bigC)
+    // the stats band still prunes C from the attribution scan
+    assert(readStats < readPlain,
+      s"stats store read $readStats records, no-stats $readPlain")
+  }
+
+  test("programmatic range DELETE/UPDATE rewrite only the entries " +
+      "holding a match") {
+    Seq("delete", "update").foreach { op =>
+      val url = threeFileStore(s"prog$op")
+      Snapshots.indexStats(spark, url, Seq("k"))
+      val v = op match {
+        case "delete" => Snapshots.deleteWhere(spark, url, "k", 5L, 7L)
+        case _ => Snapshots.updateWhere(spark, url, "k", 5L, 7L,
+          Map("v" -> (col("v") + 100)))
+      }
+      assert(v == 4 && Snapshots.snap(spark, url, v).op == op)
+      // A is band-admitted but holds no match: only B is rewritten
+      assert(survivors(url) == filesAC(url),
+        s"$op rewrote more than B: survivors ${survivors(url)}")
+      val want = op match {
+        case "delete" => Seq((0L, 10L), (9L, 11L), (20L, 14L),
+          (21L, 15L))
+        case _ => Seq((0L, 10L), (5L, 112L), (6L, 113L), (9L, 11L),
+          (20L, 14L), (21L, 15L))
+      }
+      assert(Snapshots.read(spark, url).select(col("k"), col("v"))
+        .as[(Long, Long)].collect().sorted.toSeq == want)
+      // a range with no matching row stays a true no-op
+      assert(Snapshots.deleteWhere(spark, url, "k", 1L, 4L) == v)
+    }
+  }
+
+  test("programmatic range UPDATE flavors take the safe-upcast SET " +
+      "policy: an int on a long column casts, a string refuses") {
+    val url = s"$root/progcast"
+    Snapshots.create(spark, url,
+      Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), nFiles = 1)
+    Snapshots.updateWhere(spark, url, "k", 2L, 2L, Map("v" -> lit(7)))
+    Snapshots.updateWhereMor(spark, url, "k", 3L, 3L, Map("v" -> lit(8)))
+    assert(Snapshots.read(spark, url).select(col("k"), col("v"))
+      .as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 10L), (2L, 7L), (3L, 8L)))
+    val head = Snapshots.latest(spark, url)
+    Seq[Map[String, Column] => Int](
+      Snapshots.updateWhere(spark, url, "k", 1L, 1L, _),
+      Snapshots.updateWhereMor(spark, url, "k", 1L, 1L, _)).foreach { f =>
+      val e = intercept[IllegalArgumentException](
+        f(Map("v" -> lit("seven"))))
+      assert(e.getMessage.contains("not a safe upcast"), e.getMessage)
+    }
+    assert(Snapshots.latest(spark, url) == head)
   }
 
   test("SQL UPDATE banded route keeps safe-upcast SET semantics") {
