@@ -245,10 +245,9 @@ object Sampling {
     * computed scale-out via [[Ranking.withGlobalIndex]] (range
     * shuffle + per-partition offsets), NOT a single-partition global
     * window. `posCol` is a 1-based LONG — an int would overflow past
-    * ~2.1B rows, i.e. exactly the scale this shape exists for. At
-    * scale, prefer [[graft.sources.GraftRead.shuffle]] (xxhash64
-    * sort, same contract, cheaper key) unless cross-engine
-    * reproducibility of the exact position matters. */
+    * ~2.1B rows, i.e. exactly the scale this shape exists for. Keyed
+    * on row CONTENT, it is portable across engines and layouts, unlike
+    * [[graft.sources.GraftRead.shuffle]]'s storage-position order. */
   def withShufflePosition(df: DataFrame, keyCol: String, seed: Long,
       posCol: String = "pos"): DataFrame = {
     val staged = df.withColumn("__sk", permutationKey(col(keyCol), seed))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.GraftFunctions
 import graft.ops.TransformSpec
@@ -23,8 +24,8 @@ import graft.schema.{CodecSpec, GraftSchema}
   * }}}
   *
   * Everything stays a Catalyst plan: pruning/pushdown are automatic,
-  * and the shuffle is a deterministic hash sort, reproducible on any
-  * cluster size (unlike `rand(seed)`, which is per-partition).
+  * and the shuffle sorts on storage position (file name, row index)
+  * before decode: one order on any cluster size, split plan or copy.
   *
   * Sharding divergence vs the reference (reader.py:573-597): the
   * reference shards at row-group granularity; we shard the stable-
@@ -110,7 +111,7 @@ final case class GraftRead private (
     copy(ranges = ranges :+ Snapshots.BandKey[K].range(field, lo, hi))
 
   /** Iteration control (E1). `k ≥ 1` unions k epoch copies, epoch j
-    * reshuffled with seed+j (ventilator re-shuffle parity,
+    * permuted at the scan with seed+j (ventilator re-shuffle parity,
     * reader.py:666-682). `epochs(0)` is the `num_epochs=None`
     * INFINITE-iteration contract (the reference reader iterates
     * forever, reader.py:95-98, and `reset()` restarts it,
@@ -139,7 +140,8 @@ final case class GraftRead private (
   def evolved: GraftRead = copy(allowEvolution = true)
 
   /** Post-decode user transform with schema-edit bookkeeping (T1,
-    * transform.py:27-89); runs after predicates, before shuffle. */
+    * transform.py:27-89); runs after predicates on the permuted stream:
+    * a row-wise func keeps its order, a repartition or join sets its own. */
   def transform(spec: TransformSpec): GraftRead = copy(transformSpec = Some(spec))
 
   /** C1/C2 parity (cache.py:21-39, local_disk_cache.py:23-83): keep
@@ -159,7 +161,7 @@ final case class GraftRead private (
     //    versions alongside live rows.
     require(asOfVersion.isEmpty || urls.length == 1,
       "asOf() is single-store: versions are per-store")
-    val allFiles = urls.flatMap { u =>
+    val listed = urls.map { u =>
       val versions = Snapshots.versions(spark, u)
       if (versions.nonEmpty) {
         val v = asOfVersion.getOrElse(versions.last)
@@ -188,13 +190,14 @@ final case class GraftRead private (
           s"$u@v$v carries merge-on-read deletion vectors — read " +
             "via Snapshots.read/readWhere or run Snapshots.purgeDv " +
             "before the reader chain")
-        entries.map(f => new org.apache.hadoop.fs.Path(root, f).toString)
+        (entries.map(new org.apache.hadoop.fs.Path(root, _).toString), Some(v))
       } else {
         require(asOfVersion.isEmpty,
           s"asOf() needs a Snapshots store (no _snap manifests at $u)")
-        Materialize.listParquetFiles(spark, u)
+        (Materialize.listParquetFiles(spark, u), None)
       }
     }
+    val allFiles = listed.flatMap(_._1)
     require(allFiles.nonEmpty, s"no parquet files at ${urls.mkString(", ")}")
     val sharded = shardSpec match {
       case Some((i, n)) =>
@@ -225,17 +228,15 @@ final case class GraftRead private (
           RowGroupIndex.selectedFiles(spark, urls.head, iu, sel) }
         val viaBloom = bloomSel.map { case (iu, f, vs) =>
           RowGroupIndex.bloomSelectedFiles(spark, urls.head, iu, f, vs) }
-        // every range prunes against ONE version resolution and one
-        // sidecar read: per-range resolutions would let a concurrent
-        // commit land between two, pruning each against a different
-        // manifest — their intersection then silently drops rows
+        // every range prunes against step 1's version in one sidecar
+        // read: a later head could drop files a concurrent commit
+        // replaced from the intersection, silently losing their rows
         val viaRange = if (ranges.isEmpty) None else {
-          require(Snapshots.versions(spark, urls.head).nonEmpty,
+          val v = listed.head._2
+          require(v.nonEmpty,
             ".range() needs a Snapshots store (the stats sidecar " +
               "lives in its root; see Snapshots.indexStats)")
-          Some(Snapshots.prunedFilesAll(spark, urls.head,
-            asOfVersion.getOrElse(Snapshots.latest(spark, urls.head)),
-            ranges))
+          Some(Snapshots.prunedFilesAll(spark, urls.head, v.get, ranges))
         }
         Some((viaSel.toSeq ++ viaBloom.toSeq ++ viaRange.toSeq)
           .map(_.map(normPath).toSet).reduce(_ intersect _))
@@ -278,17 +279,14 @@ final case class GraftRead private (
       else mergeSchemas(sidecars)
     }
 
-    val reader0 = spark.read
     val singleDir = urls.length == 1 && {
       val p = new org.apache.hadoop.fs.Path(urls.head)
       p.getFileSystem(spark.sessionState.newHadoopConf())
         .getFileStatus(p).isDirectory
     }
-    val reader1 = if (singleDir) reader0.option("basePath", urls.head)
-                  else reader0
-    val reader2 = if (allowEvolution) reader1.option("mergeSchema", "true")
-                  else reader1
-    val storage0 = reader2.parquet(readFiles: _*)
+    val opts = Map("basePath" -> urls.head).filter(_ => singleDir) ++
+      Map("mergeSchema" -> "true").filter(_ => allowEvolution)
+    val storage0 = spark.read.options(opts).parquet(readFiles: _*)
     val storage = if (emptySelection) storage0.limit(0) else storage0
 
     // 2. schema: stored or inferred (dataset_metadata.py:410-418).
@@ -299,33 +297,47 @@ final case class GraftRead private (
     //    applied to bytes that were never encoded with it
     val schema = sidecarSchema
       .getOrElse(GraftSchema.fromStructType("inferred", storage.schema))
-
-    // 3. schema view (P1: exact names or regex, unischema.py:199-240)
     val viewed = if (fieldSel.isEmpty) schema else schema.view(fieldSel)
-    val projected = storage.select(viewed.fieldNames.map(col): _*)
 
-    // 4. codec decode (utils.py:52-85 decode_row)
-    val decoded =
-      if (!decodeOutput) projected
-      else Materialize.decodeColumns(projected, viewed)
+    def epoch(scan: DataFrame): DataFrame = {
+      // 3. schema view (P1: exact names or regex, unischema.py:199-240)
+      val projected = scan.select(viewed.fieldNames.map(col): _*)
+      // 4. codec decode (utils.py:52-85 decode_row)
+      val decoded =
+        if (!decodeOutput) projected
+        else Materialize.decodeColumns(projected, viewed)
+      // 5. residual predicate (decoded values, like the worker-side
+      //    predicate; Catalyst pushes what it can into the scan).
+      //    range()'s residual rides here too: skipping is a superset
+      //    admission, the filter makes it exact (typed by the STORED
+      //    schema — the field may sit outside the fields() view)
+      val filtered = (preds ++ ranges.map(_.residual(storage.schema)))
+        .foldLeft(decoded)(_.filter(_))
+      // 6. post-decode transform (T1), on the permuted stream
+      transformSpec.map(_(filtered)).getOrElse(filtered)
+    }
 
-    // 5. residual predicate (decoded values, like the worker-side
-    //    predicate; Catalyst pushes what it can into the scan).
-    //    range()'s residual rides here too: skipping is a superset
-    //    admission, the filter makes it exact (typed by the STORED
-    //    schema — the field may sit outside the fields() view)
-    val filtered = (preds ++ ranges.map(_.residual(storage.schema)))
-      .foldLeft(decoded)(_.filter(_))
-
-    // 6. post-decode transform (T1)
-    val transformed = transformSpec.map(_(filtered)).getOrElse(filtered)
-
-    // 7. epochs × seeded shuffle (E1 + O1-O3). Epoch k reshuffles
-    //    with seed+k (ventilator re-shuffle parity, reader.py:666-682)
+    // 7. epochs × seeded shuffle (E1 + O1-O3): sort the SCAN on a
+    //    position key (the file NAME keeps a copied store's order), so
+    //    no decoded tensor crosses the exchange. Range partitions are
+    //    sized like AQE's target, same order at any count: a small read
+    //    sorts in one, unsampled. Epoch k uses seed+k (reader.py:666)
+    lazy val parts = (storage.select(viewed.fieldNames.map(col): _*)
+      .queryExecution.optimizedPlan.stats.sizeInBytes / spark.sessionState
+      .conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+      .min(spark.sessionState.conf.numShufflePartitions).toInt
+    def permuted(seed: Option[Long]): DataFrame = seed match {
+      case None => storage
+      case Some(s) =>
+        val meta = storage.metadataColumn("_metadata") // never a user field
+        val key = Seq(xxhash64(lit(s), meta("file_name"), meta("row_index")),
+          meta("file_path"), meta("row_index"))
+        storage.repartitionByRange(parts, key: _*).sortWithinPartitions(key: _*)
+    }
     val out =
-      if (epochCount <= 1) shuffled(transformed, shuffleSeed)
+      if (epochCount <= 1) epoch(permuted(shuffleSeed))
       else (0 until epochCount).map { k =>
-        shuffled(transformed, shuffleSeed.map(_ + k)).withColumn("__epoch", lit(k))
+        epoch(permuted(shuffleSeed.map(_ + k))).withColumn("__epoch", lit(k))
       }.reduce(_.unionByName(_))
 
     // 8. optional persistence (C1/C2)
@@ -359,17 +371,6 @@ final case class GraftRead private (
     }
     GraftSchema(all.head.name, merged)
   }
-
-  /** Deterministic whole-dataset permutation: sort by a seeded
-    * xxhash64 over every column. Unlike `orderBy(rand(seed))` this is
-    * reproducible regardless of partitioning or cluster size. */
-  private def shuffled(df: DataFrame, seed: Option[Long]): DataFrame =
-    seed match {
-      case None => df
-      case Some(s) =>
-        val key = xxhash64((lit(s) +: df.columns.map(col).toSeq): _*)
-        df.orderBy((key +: df.columns.map(col).toSeq): _*)
-    }
 }
 
 object GraftRead {

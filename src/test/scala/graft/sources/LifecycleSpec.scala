@@ -128,6 +128,99 @@ class LifecycleSpec extends SparkSpec {
       GraftRead.reader(spark, url).epochs(-1))
   }
 
+  private def shuffledIds(r: GraftRead, seed: Long = 7): Seq[Long] =
+    r.shuffle(seed).load().select("id").as[Long].collect().toSeq
+
+  test("shuffle order does not depend on split planning, shuffle " +
+      "partitions, AQE or the store's directory") {
+    val base = shuffledIds(GraftRead.reader(spark, url).fields("id"))
+    val defaultSplits = spark.read.parquet(url).rdd.getNumPartitions
+    Seq(
+      Seq("spark.sql.files.maxPartitionBytes" -> "600",
+        "spark.sql.files.openCostInBytes" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false"),
+      // several range partitions instead of one
+      Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024")
+    ).foreach { confs =>
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        if (confs.head._1 == "spark.sql.files.maxPartitionBytes")
+          assert(spark.read.parquet(url).rdd.getNumPartitions >
+            defaultSplits) // the scan really is split differently
+        if (confs.head._1.endsWith("advisoryPartitionSizeInBytes"))
+          assert(GraftRead.reader(spark, url).shuffle(7).load().rdd
+            .getNumPartitions > 1)
+        // all fields: the projection does not move the order either
+        assert(shuffledIds(GraftRead.reader(spark, url)) == base, confs)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    // a byte copy of the store elsewhere keeps the order: the key
+    // hashes the file name, not its path
+    val copy = scratch(s"lifecycle-copy/${java.util.UUID.randomUUID()}")
+    val conf = spark.sessionState.newHadoopConf()
+    val src = new org.apache.hadoop.fs.Path(url)
+    val fs = src.getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+      new org.apache.hadoop.fs.Path(copy), false, conf))
+    assert(shuffledIds(GraftRead.reader(spark, copy).fields("id")) == base)
+  }
+
+  test("shuffle composes with predicate, fields, shard and epochs") {
+    val all = shuffledIds(GraftRead.reader(spark, url).fields("id"))
+    // predicate on a decoded value: the unfiltered order, restricted
+    val big = GraftRead.reader(spark, url).fields("id", "emb")
+      .predicate(element_at(col("emb.data"), 1) >= 500.0)
+    assert(shuffledIds(big) == all.filter(_ >= 50))
+    // fields + shard: a permutation of exactly that shard's rows
+    val shardRows = GraftRead.reader(spark, url).shard(1, 4).load()
+      .select("id").as[Long].collect().toSeq.sorted
+    val sharded = GraftRead.reader(spark, url).fields("id", "label")
+      .shard(1, 4).shuffle(7).load()
+    assert(sharded.columns.toSeq == Seq("id", "label"))
+    val shardIds = sharded.select("id").as[Long].collect().toSeq
+    assert(shardIds.sorted == shardRows && shardIds != shardRows)
+    // epochs(2): each epoch a full permutation under seed+k
+    val tagged = GraftRead.reader(spark, url).fields("id").shuffle(3)
+      .epochs(2).load().select("__epoch", "id").as[(Int, Long)].collect()
+    val e0 = tagged.filter(_._1 == 0).map(_._2).toSeq
+    val e1 = tagged.filter(_._1 == 1).map(_._2).toSeq
+    assert(e0.sorted == (0L until 100L) && e1.sorted == (0L until 100L))
+    assert(e0 != e1)
+    assert(e0 == shuffledIds(GraftRead.reader(spark, url).fields("id"), 3))
+    assert(e1 == shuffledIds(GraftRead.reader(spark, url).fields("id"), 4))
+    // a user column named `_metadata` does not shadow the position key
+    val shadow = scratch(s"lifecycle-shadow/${java.util.UUID.randomUUID()}")
+    (0L until 20L).toDF("id").withColumn("_metadata", lit("user"))
+      .repartition(2).write.parquet(shadow)
+    val shadowed = GraftRead.reader(spark, shadow).shuffle(7).load()
+    assert(shadowed.columns.toSeq == Seq("id", "_metadata"))
+    assert(shadowed.select("id").as[Long].collect().sorted.toSeq ==
+      (0L until 20L))
+  }
+
+  test("shuffle over a Snapshots store: head rows once after an " +
+      "upsert; a range admitting nothing reads an empty frame") {
+    val snapUrl = scratch(s"lifecycle-snap/${java.util.UUID.randomUUID()}")
+    Snapshots.create(spark, snapUrl,
+      (0L until 60L).map(i => (i, i * 2)).toDF("id", "x"), nFiles = 3)
+    Snapshots.upsert(spark, snapUrl,
+      Seq((5L, -1L), (60L, 120L)).toDF("id", "x"), "id")
+    val rows = GraftRead.reader(spark, snapUrl).shuffle(7).load()
+      .select("id", "x").as[(Long, Long)].collect().toSeq
+    assert(rows.map(_._1).sorted == (0L to 60L))
+    assert(rows.toMap.apply(5L) == -1L)
+    Snapshots.indexStats(spark, snapUrl, Seq("x"))
+    val none = GraftRead.reader(spark, snapUrl).range("x", 1000L, 2000L)
+      .shuffle(7).load()
+    assert(none.schema == GraftRead.reader(spark, snapUrl).load().schema)
+    assert(none.collect().isEmpty)
+  }
+
   test("non-nullable field with null raises at materialize (S2 parity)") {
     val bad = Seq((1L, null.asInstanceOf[String])).toDF("id", "label")
       .withColumn("image", transform(sequence(lit(0), lit(11)), i => i.cast("short")))

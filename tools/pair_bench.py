@@ -1,0 +1,126 @@
+#!/usr/bin/env python3
+"""Alternating parent/change benchmark pairs over a range of seeds.
+
+Usage: python3 tools/pair_bench.py <parent_checkout> <change_checkout> \
+           --workload W --seeds A-B [--seconds 20]
+
+For each seed S in A..B it runs
+
+    python3 perfbench/run.py --workload W --seed S --seconds 20 --trace 0
+
+once in each checkout, alternating which side goes first (the parent
+on even positions, the change on odd ones), so host drift lands on
+both sides alike. It prints each run's op_s.p50 and setup_s with the
+load average and CPU steal share the run recorded, then per side the
+median and interquartile range (IQR), and the median over pairs of
+the change/parent ratio. Exits 1 if any run fails or reports
+"correct": false.
+
+Each checkout must be a fresh `git clone` built in place (the first
+run.py call builds it). Do not copy `target/` or `perfbench/.build`
+from one checkout into another: the cached classpath then points into
+the other tree, and one sbt build can delete the classes the other
+side runs (seen as `NoClassDefFoundError: graft/GraftSession$`).
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+METRICS = ["op_s.p50", "setup_s"]
+
+
+def run(checkout, workload, seed, seconds):
+    """One benchmark run; returns (result JSON or None, evidence dict)."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    evidence = {}
+    for line in lines:
+        if line.startswith("# evidence "):
+            evidence = json.loads(line[len("# evidence "):])
+    result = None
+    if p.returncode == 0 and lines:
+        try:
+            result = json.loads(lines[-1])
+        except json.JSONDecodeError:
+            pass
+    if result is None:
+        sys.stderr.write(p.stderr[-4000:])
+    return result, evidence
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="inclusive range A-B")
+    ap.add_argument("--seconds", type=float, default=20)
+    args = ap.parse_args()
+    lo, hi = (int(x) for x in args.seeds.split("-"))
+    sides = {"parent": os.path.abspath(args.parent),
+             "change": os.path.abspath(args.change)}
+
+    values = {s: {m: [] for m in METRICS} for s in sides}
+    ratios = {m: [] for m in METRICS}
+    bad = 0
+    print("side    seed  op_s.p50  setup_s  load1(before/after)  steal")
+    for i, seed in enumerate(range(lo, hi + 1)):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        got = {}
+        for side in order:
+            res, ev = run(sides[side], args.workload, seed, args.seconds)
+            if res is None or not res.get("correct"):
+                bad += 1
+                print(f"{side:<7} {seed:>4}  FAILED "
+                      f"{json.dumps(res) if res else '(no result)'}")
+                continue
+            m = {k: res["metrics"][k]["value"] for k in METRICS}
+            got[side] = m
+            for k in METRICS:
+                values[side][k].append(m[k])
+            print(f"{side:<7} {seed:>4}  {m['op_s.p50']:8.3f}  "
+                  f"{m['setup_s']:7.3f}  {ev.get('load1_before', -1):5.2f}"
+                  f"/{ev.get('load1_after', -1):<5.2f}"
+                  f"           {ev.get('steal_share', -1):.3f}", flush=True)
+        if len(got) == 2:
+            for k in METRICS:
+                ratios[k].append(got["change"][k] / got["parent"][k])
+
+    summary = {}
+    for k in METRICS:
+        for side in sides:
+            xs = values[side][k]
+            if xs:
+                q1, q3 = quartiles(xs)
+                summary[f"{side}.{k}"] = {
+                    "median": statistics.median(xs), "iqr": q3 - q1,
+                    "n": len(xs)}
+                print(f"{side:<7} {k:<9} median {statistics.median(xs):.3f}"
+                      f"  IQR {q3 - q1:.3f}  n={len(xs)}")
+        if ratios[k]:
+            r = statistics.median(ratios[k])
+            summary[f"ratio.{k}"] = {"median": r, "pairs": len(ratios[k]),
+                                     "change_better": sum(
+                                         x < 1 for x in ratios[k])}
+            print(f"change/parent {k}: median ratio {r:.3f} "
+                  f"({(r - 1) * 100:+.1f}%), change lower in "
+                  f"{sum(x < 1 for x in ratios[k])} of {len(ratios[k])} pairs")
+    print(json.dumps({"workload": args.workload, "seeds": args.seeds,
+                      "failed_runs": bad, "summary": summary}))
+    sys.exit(1 if bad else 0)
+
+
+if __name__ == "__main__":
+    main()
