@@ -148,40 +148,39 @@ object TensorCodec {
     val ndim = buf.get().toInt
     val dims = Array.fill(ndim)(buf.getInt())
     val spec = Dtype.ByCode(code)._2
-    val body0 = new Array[Byte](buf.remaining()); buf.get(body0)
-    val body = if ((flags & 1) != 0) inflate(body0) else body0
-    require(body.length % spec.width == 0,
-      s"payload ${body.length}B not a multiple of element width ${spec.width}")
-    val n = body.length / spec.width
+    // an uncompressed payload is read where it lies, never copied
+    val p =
+      if ((flags & 1) != 0) ByteBuffer.wrap(inflate(bytes, buf.position()))
+      else buf.slice()
+    p.order(ByteOrder.LITTLE_ENDIAN)
+    val bodyLen = p.remaining()
+    require(bodyLen % spec.width == 0,
+      s"payload ${bodyLen}B not a multiple of element width ${spec.width}")
+    val n = bodyLen / spec.width
     if (ndim > 0) {
       var prod = 1L
       dims.foreach(x => prod *= x)
       require(prod == n, s"payload has $n elements but dims say $prod")
     }
-    val p = ByteBuffer.wrap(body).order(ByteOrder.LITTLE_ENDIAN)
+    // native-width dtypes fill with one typed-buffer bulk get each
     val data: ArrayData = code match {
       case 1 =>
         val a = new Array[Byte](n); p.get(a)
         UnsafeArrayData.fromPrimitiveArray(a)
       case 2 =>
-        val a = new Array[Short](n)
-        var i = 0; while (i < n) { a(i) = p.getShort(); i += 1 }
+        val a = new Array[Short](n); p.asShortBuffer().get(a)
         UnsafeArrayData.fromPrimitiveArray(a)
       case 3 =>
-        val a = new Array[Int](n)
-        var i = 0; while (i < n) { a(i) = p.getInt(); i += 1 }
+        val a = new Array[Int](n); p.asIntBuffer().get(a)
         UnsafeArrayData.fromPrimitiveArray(a)
       case 4 =>
-        val a = new Array[Long](n)
-        var i = 0; while (i < n) { a(i) = p.getLong(); i += 1 }
+        val a = new Array[Long](n); p.asLongBuffer().get(a)
         UnsafeArrayData.fromPrimitiveArray(a)
       case 5 =>
-        val a = new Array[Float](n)
-        var i = 0; while (i < n) { a(i) = p.getFloat(); i += 1 }
+        val a = new Array[Float](n); p.asFloatBuffer().get(a)
         UnsafeArrayData.fromPrimitiveArray(a)
       case 6 =>
-        val a = new Array[Double](n)
-        var i = 0; while (i < n) { a(i) = p.getDouble(); i += 1 }
+        val a = new Array[Double](n); p.asDoubleBuffer().get(a)
         UnsafeArrayData.fromPrimitiveArray(a)
       case 7 =>
         val a = new Array[Short](n)
@@ -235,11 +234,12 @@ object TensorCodec {
     out.toByteArray
   }
 
-  private def inflate(b: Array[Byte]): Array[Byte] = {
+  /** Inflate `b` from offset `off` to its end. */
+  private def inflate(b: Array[Byte], off: Int): Array[Byte] = {
     val inf = inflaterTL.get()
     inf.reset()
-    inf.setInput(b)
-    val out = new java.io.ByteArrayOutputStream(b.length * 3 + 64)
+    inf.setInput(b, off, b.length - off)
+    val out = new java.io.ByteArrayOutputStream((b.length - off) * 3 + 64)
     val tmp = new Array[Byte](8192)
     while (!inf.finished()) {
       val k = inf.inflate(tmp)

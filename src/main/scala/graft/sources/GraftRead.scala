@@ -1,8 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.GraftFunctions
 import graft.ops.TransformSpec
@@ -26,6 +33,10 @@ import graft.schema.{CodecSpec, GraftSchema}
   * Everything stays a Catalyst plan: pruning/pushdown are automatic,
   * and the shuffle sorts on storage position (file name, row index)
   * before decode: one order on any cluster size, split plan or copy.
+  * Planning runs no Spark job: the storage schema is read on the
+  * driver from one footer, the file Spark's own parquet inference
+  * would read, and handed to the scan (`.evolved` reads still let
+  * Spark merge every footer).
   *
   * Sharding divergence vs the reference (reader.py:573-597): the
   * reference shards at row-group granularity; we shard the stable-
@@ -153,6 +164,14 @@ final case class GraftRead private (
       org.apache.spark.storage.StorageLevel.DISK_ONLY): GraftRead =
     copy(cacheLevel = Some(level))
 
+  /** Plan the read. No Spark job runs here; every action on the
+    * returned frame re-executes the plan.
+    *
+    * Draining: an unshuffled read drained by `toLocalIterator` runs one
+    * Spark job per scan split, one after another (the iterator fetches
+    * a partition per job). For a small read use `collect`, or
+    * `.shuffle`, which plans a read this small as one sorted
+    * partition. */
   def load(): DataFrame = {
     // 1. stable file listing (per store, URL order) + shard (SH1/O5).
     //    A Snapshots store resolves through a MANIFEST — latest by
@@ -279,17 +298,26 @@ final case class GraftRead private (
       else mergeSchemas(sidecars)
     }
 
+    val hadoopConf = spark.sessionState.newHadoopConf()
     val singleDir = urls.length == 1 && {
-      val p = new org.apache.hadoop.fs.Path(urls.head)
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(p).isDirectory
+      val p = new Path(urls.head)
+      p.getFileSystem(hadoopConf).getFileStatus(p).isDirectory
     }
     val opts = Map("basePath" -> urls.head).filter(_ => singleDir) ++
       Map("mergeSchema" -> "true").filter(_ => allowEvolution)
-    val storage0 = spark.read.options(opts).parquet(readFiles: _*)
+    // the storage schema comes from the one footer Spark's inference
+    // would read, so planning runs no Spark job; `.evolved` keeps
+    // Spark's merging inference, which reads every footer
+    val stored =
+      if (allowEvolution) None
+      else GraftRead.footerSchema(spark, hadoopConf, readFiles)
+    val storage0 = stored.foldLeft(spark.read.options(opts))(_.schema(_))
+      .parquet(readFiles: _*)
     val storage = if (emptySelection) storage0.limit(0) else storage0
 
-    // 2. schema: stored or inferred (dataset_metadata.py:410-418).
+    // 2. schema: stored or inferred (dataset_metadata.py:410-418);
+    //    "inferred" is the storage schema above: one footer's, or
+    //    Spark's merge of all footers under `.evolved`.
     //    Multi-store: ALL stores must have sidecars (each checked to
     //    agree, or merged by name under `.evolved`) or NONE
     //    (inferred) — a sidecar-less plain store mixed with a
@@ -301,11 +329,11 @@ final case class GraftRead private (
 
     def epoch(scan: DataFrame): DataFrame = {
       // 3. schema view (P1: exact names or regex, unischema.py:199-240)
-      val projected = scan.select(viewed.fieldNames.map(col): _*)
-      // 4. codec decode (utils.py:52-85 decode_row)
+      //    and 4. codec decode (utils.py:52-85 decode_row): one
+      //    projection of the viewed fields either way
       val decoded =
-        if (!decodeOutput) projected
-        else Materialize.decodeColumns(projected, viewed)
+        if (!decodeOutput) scan.select(viewed.fieldNames.map(col): _*)
+        else Materialize.decodeColumns(scan, viewed)
       // 5. residual predicate (decoded values, like the worker-side
       //    predicate; Catalyst pushes what it can into the scan).
       //    range()'s residual rides here too: skipping is a superset
@@ -376,6 +404,49 @@ final case class GraftRead private (
 object GraftRead {
   def reader(spark: SparkSession, url: String): GraftRead =
     reader(spark, Seq(url))
+
+  /** The data schema `spark.read.parquet(files: _*)` infers, read on
+    * the driver from the one footer that inference reads. With
+    * `mergeSchema` off, Spark's parquet inference
+    * (`ParquetUtils.inferSchema`) prefers a `_common_metadata` or
+    * `_metadata` summary file, else reads the first data file in
+    * qualified-path order, and converts its footer with
+    * `readSchemaFromFooter` and a converter built from the session
+    * confs; both are repeated here without the inference job. None
+    * (the caller lets Spark infer) when the answer could differ: a
+    * `_`/`.` file name (a summary file, or one Spark may list
+    * differently), a stored column that is also a `name=value`
+    * directory (partition typing would then follow the given schema),
+    * or any failure to read the footer, which inference then reports
+    * as it always did. */
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+      files: Seq[String]): Option[StructType] = try {
+    val qualified = files.map { f =>
+      val p = new Path(f)
+      p.getFileSystem(conf).makeQualified(p)
+    }.sortBy(_.toString)
+    val hidden = qualified.exists(p =>
+      p.getName.startsWith("_") || p.getName.startsWith("."))
+    qualified.headOption.filter(_ => !hidden).flatMap { path =>
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      val footer = new Footer(path, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      val sql = spark.sessionState.conf
+      // the converter ParquetFileFormat.mergeSchemasInParallel builds
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+      val schema = ParquetFileFormat.readSchemaFromFooter(footer, converter)
+      val dirKeys = qualified.flatMap { p =>
+        Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != null)
+          .map(_.getName).filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase)
+      }.toSet
+      Some(schema).filter(_.fieldNames.forall(n => !dirKeys(n.toLowerCase)))
+    }
+  } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Multi-store reader (`dataset_url_or_urls` parity): one logical
     * dataset over several store URLs with agreeing schemas. */

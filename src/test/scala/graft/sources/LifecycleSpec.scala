@@ -360,6 +360,91 @@ class LifecycleSpec extends SparkSpec {
     assert(df.count() == 10 && df.columns.toSeq == Seq("x"))
   }
 
+  /** Spark jobs started by `body` on this thread: its jobs run under a
+    * job group, and a marker job after it proves the listener has seen
+    * every earlier event (one listener's events arrive in order). */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("load() plans without a Spark job; the storage schema is Spark's " +
+      "inferred one") {
+    assert(jobsDuring(GraftRead.reader(spark, url).shuffle(7).load()) == 0)
+
+    val plain = scratch("footer-plain")
+    spark.range(10).toDF("x").withColumn("s", $"x".cast("string"))
+      .write.mode("overwrite").parquet(plain)
+    val hive = scratch("footer-hive")
+    Materialize.materialize(spark.range(30).toDF("id")
+        .withColumn("cat", concat(lit("c"), pmod($"id", lit(3)))),
+      hive, GraftSchema("p", Seq(FieldSpec("id", LongType),
+        FieldSpec("cat", StringType))), partitionCols = Seq("cat"))
+    val fixture = new java.io.File("fixtures/petastorm_legacy_0.7.6").getAbsolutePath
+    val snap = scratch(s"footer-snap/${java.util.UUID.randomUUID()}")
+    Snapshots.create(spark, snap, (0L until 20L).map(i => (i, i * 2)).toDF("id", "x"),
+      nFiles = 2)
+    Snapshots.upsert(spark, snap, Seq((3L, -1L)).toDF("id", "x"), "id")
+    val single = Materialize.listParquetFiles(spark, plain).head
+    // a stored column that is also the partition directory's key:
+    // inference keeps its data position, so the reader must infer too
+    val overlap = scratch("footer-overlap")
+    spark.range(4).select(lit(5).as("cat"), $"id")
+      .write.mode("overwrite").parquet(s"$overlap/cat=1")
+    val (uA, uB) = (scratch("footer-multi-a"), scratch("footer-multi-b"))
+    Materialize.materialize(source.filter($"id" < 50), uA, schema, partitions = Some(2))
+    Materialize.materialize(source.filter($"id" >= 50), uB, schema, partitions = Some(2))
+
+    def snapFiles(u: String): Seq[String] = {
+      val s = Snapshots.snap(spark, u, Snapshots.versions(spark, u).last)
+      s.files.sorted.map(f => new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(u), f).toString)
+    }
+    // (urls, the files the reader scans, whether basePath applies)
+    val cases = Seq(
+      (Seq(url), Materialize.listParquetFiles(spark, url), true),
+      (Seq(plain), Materialize.listParquetFiles(spark, plain), true),
+      (Seq(hive), Materialize.listParquetFiles(spark, hive), true),
+      (Seq(fixture), Materialize.listParquetFiles(spark, fixture), true),
+      (Seq(snap), snapFiles(snap), true),
+      (Seq(single), Seq(single), false),
+      (Seq(uA, uB), Materialize.listParquetFiles(spark, uA) ++
+        Materialize.listParquetFiles(spark, uB), false),
+      (Seq(overlap), Materialize.listParquetFiles(spark, overlap), true))
+    cases.foreach { case (urls, files, based) =>
+      val opts = if (based) Map("basePath" -> urls.head) else Map.empty[String, String]
+      val inferred = spark.read.options(opts).parquet(files: _*).schema
+      val reader = GraftRead.reader(spark, urls).rawStorage
+      var got: StructType = null
+      val jobs = jobsDuring { got = reader.load().schema }
+      // a petastorm store's Unischema orders the fields its own way;
+      // by name, each field is exactly the inferred one
+      assert(got.fieldNames.toSet == inferred.fieldNames.toSet &&
+        got == StructType(got.fieldNames.map(inferred(_))), s"$urls")
+      if (!urls.contains(fixture)) assert(got == inferred, s"$urls")
+      assert(jobs == (if (urls == Seq(overlap)) 1 else 0), s"$urls planned $jobs jobs")
+    }
+  }
+
   test("decimal / date / timestamp scalars round-trip through a store") {
     // parity: reference TestSchema stores Decimal via ScalarCodec and
     // datetime fields (tests/test_common.py:47, unischema.py:488-497)

@@ -16,6 +16,12 @@ median and interquartile range (IQR), and the median over pairs of
 the change/parent ratio. Exits 1 if any run fails or reports
 "correct": false.
 
+Next to setup_s it prints the run's `prepare` seconds, read from the
+`timeline_s` of the checkout's perfbench/out/<W>-seed<S>-trace0.json.
+`prepare` generates the workload's input and runs no graft read or
+decode code, so a setup_s that moves together with it is host drift,
+not a change in the library.
+
 Each checkout must be a fresh `git clone` built in place (the first
 run.py call builds it). Do not copy `target/` or `perfbench/.build`
 from one checkout into another: the cached classpath then points into
@@ -53,6 +59,21 @@ def run(checkout, workload, seed, seconds):
     return result, evidence
 
 
+def prepare_s(checkout, workload, seed):
+    """The run's `prepare` stage seconds, or None if not recorded."""
+    path = os.path.join(checkout, "perfbench", "out",
+                        f"{workload}-seed{seed}-trace0.json")
+    try:
+        with open(path) as fh:
+            res = json.load(fh)
+    except (OSError, json.JSONDecodeError):
+        return None
+    for w in res.get("workloads", []):
+        if w.get("workload") == workload:
+            return w.get("timeline_s", {}).get("prepare")
+    return None
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0]
@@ -74,8 +95,10 @@ def main():
 
     values = {s: {m: [] for m in METRICS} for s in sides}
     ratios = {m: [] for m in METRICS}
+    prepares = {s: [] for s in sides}
     bad = 0
-    print("side    seed  op_s.p50  setup_s  load1(before/after)  steal")
+    print("side    seed  op_s.p50  setup_s  prepare  "
+          "load1(before/after)  steal")
     for i, seed in enumerate(range(lo, hi + 1)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
@@ -90,8 +113,13 @@ def main():
             got[side] = m
             for k in METRICS:
                 values[side][k].append(m[k])
+            prep = prepare_s(sides[side], args.workload, seed)
+            if prep is not None:
+                prepares[side].append(prep)
+            prep = "    n/a" if prep is None else f"{prep:7.3f}"
             print(f"{side:<7} {seed:>4}  {m['op_s.p50']:8.3f}  "
-                  f"{m['setup_s']:7.3f}  {ev.get('load1_before', -1):5.2f}"
+                  f"{m['setup_s']:7.3f}  {prep}  "
+                  f"{ev.get('load1_before', -1):5.2f}"
                   f"/{ev.get('load1_after', -1):<5.2f}"
                   f"           {ev.get('steal_share', -1):.3f}", flush=True)
         if len(got) == 2:
@@ -117,6 +145,14 @@ def main():
             print(f"change/parent {k}: median ratio {r:.3f} "
                   f"({(r - 1) * 100:+.1f}%), change lower in "
                   f"{sum(x < 1 for x in ratios[k])} of {len(ratios[k])} pairs")
+    for side in sides:
+        if prepares[side]:
+            summary[f"{side}.prepare"] = {
+                "median": statistics.median(prepares[side]),
+                "n": len(prepares[side])}
+            print(f"{side:<7} prepare   median "
+                  f"{statistics.median(prepares[side]):.3f}"
+                  f"  n={len(prepares[side])}")
     print(json.dumps({"workload": args.workload, "seeds": args.seeds,
                       "failed_runs": bad, "summary": summary}))
     sys.exit(1 if bad else 0)
