@@ -564,23 +564,21 @@ object SparkEntry {
     }),
 
     // ---- Compaction lifecycle: fragment → compact → read ----
-    // The streaming-append maintenance pass: materialize a 16-file
-    // store, compact to ~1, and prove the decoded content is
-    // byte-identical by reading it back against the source-table
-    // oracle (compaction never decodes codec cells).
+    // The streaming-append maintenance pass: create a 16-file
+    // snapshot store, pack its small files into one with
+    // Snapshots.compactSmall (a manifest commit — old files stay
+    // live until then, so no reader sees a half-swapped store), and
+    // prove the content unchanged by reading it back against the
+    // source-table oracle.
     "q65_compact_read" -> ((s, dir) => {
-      val src = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val schema = GraftSchema("docs_c", Seq(
-        FieldSpec("doc_id", org.apache.spark.sql.types.LongType),
-        FieldSpec("lang", org.apache.spark.sql.types.StringType, nullable = true),
-        FieldSpec("n_chars", org.apache.spark.sql.types.LongType)))
-      val url = sys.props("java.io.tmpdir") + "/graft_q65_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      Materialize.materialize(src, url, schema, rowGroupSizeMb = 1,
-        partitions = Some(16))
-      val (nb, na) = Materialize.compact(s, url, targetFileMb = 256)
-      require(nb == 16 && na < nb, s"compact $nb -> $na")
+      val url = scratchDir(s, dir, "q65")
+      Snapshots.create(s, url, t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars")), nFiles = 16)
+      val v = Snapshots.compactSmall(s, url, smallBytes = 256L << 20,
+        targetBytes = 256L << 20)
+      val (nb, na) = (Snapshots.snap(s, url, 1).files.size,
+        Snapshots.snap(s, url, v).files.size)
+      require(nb == 16 && na == 1, s"compact $nb -> $na")
       GraftRead.reader(s, url).load()
         .filter(pmod(col("doc_id"), lit(3)) === 0)
         .orderBy(col("doc_id"))

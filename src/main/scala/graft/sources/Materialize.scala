@@ -166,71 +166,6 @@ object Materialize {
     writeMetadata(df.sparkSession, path, schema)
   }
 
-  /** Compact a store's files into ~`targetFileMb` outputs — the
-    * maintenance pass an append-only store needs: the streaming sink
-    * lands one file per partition per micro-batch, and at 100 TB a
-    * reader's task count (and the file listing itself) drowns in
-    * them. Rewrites the ENCODED rows as-is — codec cells are opaque
-    * binary, so compaction never decodes/re-encodes — and sizes the
-    * output file count from the store's current byte size.
-    *
-    * Staged, no data-copy window: new files land in a `_compact_tmp`
-    * subdir (underscore prefix = invisible to Spark readers and the
-    * sidecar census), then old files are deleted and staged files
-    * promoted by pure renames, then the sidecar is rebuilt. A
-    * concurrent LOCAL reader can catch the brief mixed listing —
-    * on an object store swap versioned prefixes instead; staging
-    * keeps the exposure to the rename pass only. Hive-partitioned
-    * stores are refused (compact within partitions would need a
-    * per-directory pass). Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, url: String, targetFileMb: Int = 256,
-      rowGroupSizeMb: Int = 32): (Int, Int) = {
-    require(targetFileMb > 0)
-    val root = new Path(url)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = listParquetFiles(spark, url)
-    require(files.nonEmpty, s"nothing to compact at $url")
-    val rel = relativizer(spark, url)
-    require(!files.exists(f => rel(f).contains("/")),
-      s"compact does not handle hive-partitioned stores: $url")
-    // one status call per file would be thousands of sequential RPCs
-    // on an object store — batch through listStatus of the root
-    val lenOf = fs.listStatus(root).iterator
-      .filter(_.isFile).map(st => st.getPath.toString -> st.getLen)
-      .toMap
-    val totalBytes = files.map(f => lenOf.getOrElse(f,
-      fs.getFileStatus(new Path(f)).getLen)).sum
-    val nOut = math.max(1,
-      math.ceil(totalBytes.toDouble / (targetFileMb.toLong << 20)).toInt)
-    val tmp = new Path(root, "_compact_tmp")
-    fs.delete(tmp, true)
-    // read EXACTLY the snapshot being deleted below — a directory
-    // read would also ingest files appended between the listing and
-    // this job (the streaming sink appends per micro-batch), copying
-    // their rows into the staged set while the delete loop leaves
-    // the originals in place: permanent duplicates, not the
-    // documented transient window
-    spark.read.parquet(files: _*).repartition(nOut).write
-      .option("parquet.block.size", rowGroupSizeMb.toLong * 1024 * 1024)
-      .mode("overwrite").parquet(tmp.toString)
-    val staged = listParquetFiles(spark, tmp.toString)
-    // promote BEFORE removing the old files: a crash between the two
-    // phases leaves transient DUPLICATE rows (which the documented
-    // listing-snapshot reader discipline tolerates and a re-run
-    // repairs), never lost rows — and every fs call is checked, so a
-    // silent delete failure can't leave duplicates unnoticed
-    staged.foreach { f =>
-      val name = new Path(f).getName
-      require(fs.rename(new Path(f), new Path(root, name)),
-        s"rename failed promoting $name")
-    }
-    files.foreach(f => require(fs.delete(new Path(f), false),
-      s"delete failed removing compacted source $f"))
-    fs.delete(tmp, true)
-    loadSchema(spark, url).foreach(writeMetadata(spark, url, _))
-    (files.length, staged.length)
-  }
-
   /** Petastorm-COMPATIBLE materialization: the same store layout the
     * reference's own `materialize_dataset` produces, so unmodified
     * petastorm (`make_reader`) opens it with no shim — the write-side
@@ -415,24 +350,6 @@ object Materialize {
   def writeMetadata(spark: SparkSession, url: String, schema: GraftSchema): Unit =
     writeSidecar(spark, url, schema, rowGroupCounts(spark, url))
 
-  /** Incremental sidecar refresh for append-only stores (the
-    * streaming sink's per-batch call): only footers of files NOT yet
-    * in the sidecar are opened, so batch k costs O(new files), not
-    * O(all files) — the full-rescan form made an append-only stream
-    * quadratic in cumulative footer reads. Counts of files that
-    * vanished (compaction) are pruned against the current listing —
-    * a listing we pay anyway to find the new files. */
-  def updateMetadata(spark: SparkSession, url: String, schema: GraftSchema): Unit = {
-    val known = loadRowGroupCounts(spark, url)
-    val files = listParquetFiles(spark, url)
-    val rel = relativizer(spark, url)
-    val byRel = files.map(f => rel(f) -> f).toMap
-    val fresh = byRel.view.filterKeys(!known.contains(_)).values.toSeq
-    val merged = known.view.filterKeys(byRel.contains).toMap ++
-      countsForFiles(spark, url, fresh)
-    writeSidecar(spark, url, schema, merged)
-  }
-
   private def writeSidecar(spark: SparkSession, url: String,
       schema: GraftSchema, counts: Map[String, Int]): Unit = {
     val countsJson = counts.toSeq.sortBy(_._1)
@@ -442,10 +359,10 @@ object Materialize {
       s"""{"version":1,"schema":${schema.toJson},"rowGroupCounts":$countsJson}"""
     val path = new Path(url, SidecarName)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    // stage + rename: the sink refreshes this every micro-batch, and
-    // truncate-in-place would expose an empty/partial sidecar to a
-    // crash or a concurrent reader (the RowGroupIndex.updateBloom
-    // swap discipline)
+    // stage + rename: writeMetadata regenerates this over a live
+    // store, and truncate-in-place would expose an empty/partial
+    // sidecar to a crash or a concurrent reader (the
+    // RowGroupIndex.updateBloom swap discipline)
     val tmp = new Path(url, SidecarName + "__tmp")
     fs.delete(tmp, false)
     val out = fs.create(tmp, false)
@@ -472,17 +389,6 @@ object Materialize {
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path)) None
     else Some(SidecarJson.slurp(fs, path))
-  }
-
-  /** The sidecar's per-file row-group census (empty when absent). */
-  def loadRowGroupCounts(spark: SparkSession, url: String): Map[String, Int] = {
-    val json = readSidecar(spark, url).getOrElse(return Map.empty)
-    val idx = json.indexOf(""""rowGroupCounts":""")
-    if (idx < 0) return Map.empty
-    val obj = json.substring(idx + 18)
-    """"((?:[^"\\]|\\.)*)"\s*:\s*(\d+)""".r.findAllMatchIn(obj).map { m =>
-      GraftSchema.unquoteBody(m.group(1)) -> m.group(2).toInt
-    }.toMap
   }
 
   /** Per-file row-group counts from parquet footers, gathered on the

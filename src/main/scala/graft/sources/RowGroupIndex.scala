@@ -127,10 +127,9 @@ object RowGroupIndex {
       bloomRowsFor(spark, files, fields, expectedPerFile, fpp))
   }
 
-  /** Incremental bloom refresh for append-only/merged stores — the
-    * [[Materialize.updateMetadata]] move applied to the bloom
-    * sidecar: only files ABSENT from the existing index are scanned
-    * and bloomed, and their rows APPEND as a new generation part
+  /** Incremental bloom refresh for append-only/merged stores: only
+    * files ABSENT from the existing index are scanned and bloomed,
+    * and their rows APPEND as a new generation part
     * ([[SidecarDelta]]) — O(new files) scanned AND written per call,
     * so batch k of a landing stream costs O(new files), not O(store).
     * Rows for files that vanished (compaction, vacuumed

@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference has no mutation layer at all — its
   * `materialize_dataset` (etl/dataset_metadata.py:66-103) is
-  * write-once, and [[Materialize.compact]] mutates in place with a
-  * transient-duplicate crash window that in-flight readers can
-  * observe. This store removes both limits the lakehouse way
-  * (Delta/Iceberg-style, re-derived from first principles):
+  * write-once, so appending to or compacting one of its stores in
+  * place exposes half-done work to in-flight readers. This store
+  * removes that limit the lakehouse way (Delta/Iceberg-style,
+  * re-derived from first principles):
   *
   *  - Data files are IMMUTABLE once committed. Every mutation writes
   *    new files and a new manifest; nothing is renamed over or
@@ -32,11 +32,12 @@ import org.apache.spark.sql.functions._
   *    then the expired manifests. A crash mid-vacuum leaves orphan
   *    files (re-vacuum collects them), never a broken live version.
   *
-  * [[upsert]] is the library's only keyed MERGE. [[Materialize.compact]]
-  * stays for the plain codec stores `GraftStream.sink` appends to:
-  * converting such a store to this format would hide the sink's later
-  * plain appends from [[GraftRead]], which resolves through `_snap`
-  * once it exists.
+  * [[upsert]] is the library's only keyed MERGE, [[appendOnce]] the
+  * only exactly-once append (the `GraftStream` sinks commit through
+  * it) and [[compactSmall]] the only compaction. A plain parquet
+  * store cannot be converted in place: once `_snap` exists,
+  * [[GraftRead]] resolves through it and no longer sees files a
+  * manifest does not list.
   *
   * Scale: a manifest holds file NAMES only — O(files), not O(rows) —
   * and version resolution is a single `_snap` listing. [[upsert]] is

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
 
 import graft.predicates.RowPredicate
 import graft.schema.GraftSchema
-import graft.sources.{GraftRead, Materialize}
+import graft.sources.{GraftRead, Materialize, Snapshots}
 
 /** Structured-Streaming surface over graft stores. The reference has
   * no streaming at all (SURVEY §2: its only "streams" are bounded
@@ -16,8 +16,8 @@ import graft.sources.{GraftRead, Materialize}
   * training-data pipeline needs when a store is continuously appended
   * (e.g. a crawler landing new document files): incremental reads of
   * newly-arrived files with the same schema/codec semantics as the
-  * batch reader, and an encoding sink that keeps the sidecar metadata
-  * current batch-over-batch.
+  * batch reader, and an encoding sink that commits each micro-batch
+  * exactly once as a snapshot version of a codec store.
   *
   * Everything composes built-in Structured Streaming operators
   * (file source, watermarks, windowed aggs, foreachBatch sink) — no
@@ -78,65 +78,112 @@ object GraftStream {
   def reader(spark: SparkSession, url: String): Reader =
     Reader(spark, url, Nil, Nil, None)
 
-  /** Encoding sink: append micro-batches into a graft store at `url`,
-    * refreshing the sidecar metadata after every batch so concurrent
-    * [[GraftRead]] readers always see a consistent schema + row-group
-    * census. Uses foreachBatch → the batch materialize path (same
-    * codecs, same nullability enforcement). The sidecar refresh is
-    * INCREMENTAL ([[Materialize.updateMetadata]]): only the new
-    * batch's footers are opened — a full rescan per batch would make
-    * an append-only stream quadratic in cumulative footer reads.
+  /** Encoding sink: append micro-batches into a graft codec store at
+    * `url` through the batch encode path ([[Materialize.encodeColumns]]:
+    * same codecs, same nullability enforcement) and the snapshot
+    * commit ([[graft.sources.Snapshots.appendOnce]]).
     *
-    * Exactly-once under foreachBatch's at-least-once retries, by the
-    * stage-promote-marker protocol: each epoch encodes into an
-    * underscore-invisible staging dir, its files are RENAMED to
-    * epoch-deterministic names (`e<epoch>-<k>.parquet`), and an
-    * `_e<epoch>.done` marker (atomic exclusive create, content-free)
-    * commits the epoch. A replayed epoch that finds its marker
-    * no-ops; one that crashed mid-promote sweeps its own partial
-    * `e<epoch>-*` files and re-runs — a naive mode("append") here
-    * would land the batch's rows twice on every retry. */
+    * The first epoch creates the store: an empty version 1 plus the
+    * graft schema sidecar, so [[GraftRead]] decodes the codec cells.
+    * Every epoch then commits one version keyed
+    * `<checkpoint id>_b<epoch>`, the checkpoint id a digest of the
+    * qualified `checkpoint` path. foreachBatch's at-least-once
+    * retries are therefore no-ops, a second checkpoint lineage
+    * writing into the same store (epoch ids restart at 0) commits its
+    * own epochs, and readers resolve a manifest, each of which is
+    * pre- or post-batch: a crashed epoch's staged files are never
+    * visible. A plain parquet directory (no `_snap` manifest) is
+    * refused, since a manifest would hide its rows from [[GraftRead]].
+    * The file-stream [[reader]] does not resolve manifests; read a
+    * sink store with [[GraftRead]]. Small epoch files pack with
+    * [[graft.sources.Snapshots.compactSmall]]. */
   def sink(df: DataFrame, url: String, schema: GraftSchema,
-      checkpoint: String, rowGroupSizeMb: Int = 32): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpoint: String): DataStreamWriter[Row] =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sinkBatch(batch, epoch, url, schema, rowGroupSizeMb)
+        sinkBatch(batch, epoch, url, schema, checkpoint)
       }
-  }
 
   /** One [[sink]] micro-batch — exposed so replay semantics are
-    * directly testable. Idempotent per epoch. */
+    * directly testable. Idempotent per (checkpoint, epoch). */
   def sinkBatch(batch: DataFrame, epoch: Long, url: String,
-      schema: GraftSchema, rowGroupSizeMb: Int = 32): Unit = {
+      schema: GraftSchema, checkpoint: String): Unit = {
     val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(url)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(root,
-      f"_e$epoch%08d.done")
-    if (fs.exists(marker)) return
-    // sweep a half-promoted replay's debris before re-staging
-    if (fs.exists(root))
-      fs.listStatus(root).filter(st => st.isFile &&
-          st.getPath.getName.startsWith(f"e$epoch%08d-"))
-        .foreach(st => fs.delete(st.getPath, false))
-    val stage = new org.apache.hadoop.fs.Path(root,
-      f"_stage_e$epoch%08d")
-    fs.delete(stage, true)
-    Materialize.encodeColumns(batch, schema).write
-      .option("parquet.block.size",
-        rowGroupSizeMb.toLong * 1024 * 1024)
-      .mode("overwrite").parquet(stage.toString)
-    Materialize.listParquetFiles(s, stage.toString).zipWithIndex
-      .foreach { case (f, k) =>
-        val name = f"e$epoch%08d-$k%05d.parquet"
-        require(fs.rename(new org.apache.hadoop.fs.Path(f),
-          new org.apache.hadoop.fs.Path(root, name)),
-          s"rename failed promoting $name")
-      }
-    fs.delete(stage, true)
-    fs.create(marker, false).close()
-    Materialize.updateMetadata(s, url, schema)
+    val encoded = Materialize.encodeColumns(batch, schema)
+    if (Snapshots.versions(s, url).isEmpty) {
+      val root = new org.apache.hadoop.fs.Path(url)
+      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+      require(!fs.exists(root) ||
+          Materialize.listParquetFiles(s, url).isEmpty,
+        s"$url holds parquet files but no _snap manifest: the sink " +
+          "commits through manifests, which would hide those rows " +
+          "from GraftRead — sink into a fresh path")
+      // sidecar first: a crash before create leaves no manifest, so
+      // the next epoch redoes both steps
+      fs.mkdirs(root)
+      Materialize.writeMetadata(s, url, schema)
+      Snapshots.create(s, url, encoded.limit(0), nFiles = 1)
+    }
+    commitEpoch(encoded, url, s"${sinkId(s, checkpoint)}_b$epoch")
+  }
+
+  /** A [[sink]] lineage's commit-key prefix: a digest of the qualified
+    * checkpoint path, stable across restarts of one checkpoint and
+    * distinct across checkpoints. */
+  private[streaming] def sinkId(s: SparkSession,
+      checkpoint: String): String = {
+    val p = new org.apache.hadoop.fs.Path(checkpoint)
+    val qualified = p.getFileSystem(s.sessionState.newHadoopConf())
+      .makeQualified(p).toString
+    "ck" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(qualified.getBytes("UTF-8")).take(8)
+      .map(b => f"$b%02x").mkString
+  }
+
+  /** The per-epoch body of [[sink]] and [[snapshotSink]]: one
+    * exactly-once [[graft.sources.Snapshots.appendOnce]] under `key`,
+    * then the requested sidecar maintenance. */
+  private def commitEpoch(batch: DataFrame, url: String, key: String,
+      nFiles: Int = 8, statsFields: Seq[String] = Nil,
+      bloomIndex: Option[(String, Seq[String])] = None,
+      vectorIndex: Option[(String, String, Int)] = None,
+      bloomFields: Seq[String] = Nil): Unit = {
+    val s = batch.sparkSession
+    Snapshots.appendOnce(s, url, batch, key, nFiles): Unit
+    // per-epoch stats maintenance: the incremental refresh scans
+    // ONLY this epoch's new files (covered files are skipped), so
+    // range-skipping reads stay fresh at O(batch) per epoch — and
+    // a retried epoch whose append no-opped rescans nothing
+    if (statsFields.nonEmpty)
+      Snapshots.indexStats(s, url, statsFields): Unit
+    // per-epoch bloom maintenance ((indexUrl, fields)):
+    // updateBloom indexes only files without a sidecar row — the
+    // same O(new files) shape. A sink WITHOUT this stays safe
+    // because upsert's coverage guard treats unindexed files as
+    // affected; WITH it, upsert keeps its O(changed files) prune
+    // through a live stream.
+    bloomIndex.foreach { case (idxUrl, fields) =>
+      graft.sources.RowGroupIndex.updateBloom(s, url, fields, idxUrl)
+    }
+    // bloomFields is the CONVENTIONAL-location shortcut
+    // (<store>/_bloom/keybloom via Snapshots.indexBloom): a stream
+    // maintaining it makes SQL MERGE's sidecar DISCOVERY work with
+    // zero further configuration — the live store prunes its
+    // copy-on-write rewrites out of the box
+    if (bloomFields.nonEmpty)
+      Snapshots.indexBloom(s, url, bloomFields)
+    // per-epoch vector-postings maintenance ((idCol, embCol, k)):
+    // VectorIndex.index scans only entries without posting rows —
+    // O(batch) per epoch like the other sidecars. Epoch 0 trains
+    // the pinned centroids from the rows present then (any pinned
+    // set keeps search EXACT over probed cells; selectivity is
+    // what training sees — watch VectorIndex.health on a drifting
+    // stream). A sink WITHOUT this stays safe: uncovered entries
+    // are conservatively read by every probe.
+    vectorIndex.foreach { case (idCol, embCol, k) =>
+      graft.sources.VectorIndex.index(s, url, idCol, embCol, k): Unit
+    }
   }
 
   /** Streaming append into a [[graft.sources.Snapshots]] store:
@@ -153,50 +200,12 @@ object GraftStream {
       statsFields: Seq[String] = Nil,
       bloomIndex: Option[(String, Seq[String])] = None,
       vectorIndex: Option[(String, String, Int)] = None,
-      bloomFields: Seq[String] = Nil)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      bloomFields: Seq[String] = Nil): DataStreamWriter[Row] = {
     require(streamId.matches("[A-Za-z0-9_.-]+"),
       s"streamId '$streamId' must be path-safe ([A-Za-z0-9_.-]+)")
     batches.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      graft.sources.Snapshots.appendOnce(batch.sparkSession, url,
-        batch, s"${streamId}_b$id", nFiles): Unit
-      // per-epoch stats maintenance: the incremental refresh scans
-      // ONLY this epoch's new files (covered files are skipped), so
-      // range-skipping reads stay fresh at O(batch) per epoch — and
-      // a retried epoch whose append no-opped rescans nothing
-      if (statsFields.nonEmpty)
-        graft.sources.Snapshots.indexStats(batch.sparkSession, url,
-          statsFields): Unit
-      // per-epoch bloom maintenance ((indexUrl, fields)):
-      // updateBloom indexes only files without a sidecar row — the
-      // same O(new files) shape. A sink WITHOUT this stays safe
-      // because upsert's coverage guard treats unindexed files as
-      // affected; WITH it, upsert keeps its O(changed files) prune
-      // through a live stream.
-      bloomIndex.foreach { case (idxUrl, fields) =>
-        graft.sources.RowGroupIndex.updateBloom(batch.sparkSession,
-          url, fields, idxUrl)
-      }
-      // bloomFields is the CONVENTIONAL-location shortcut
-      // (<store>/_bloom/keybloom via Snapshots.indexBloom): a stream
-      // maintaining it makes SQL MERGE's sidecar DISCOVERY work with
-      // zero further configuration — the live store prunes its
-      // copy-on-write rewrites out of the box
-      if (bloomFields.nonEmpty)
-        graft.sources.Snapshots.indexBloom(batch.sparkSession, url,
-          bloomFields)
-      // per-epoch vector-postings maintenance ((idCol, embCol, k)):
-      // VectorIndex.index scans only entries without posting rows —
-      // O(batch) per epoch like the other sidecars. Epoch 0 trains
-      // the pinned centroids from the rows present then (any pinned
-      // set keeps search EXACT over probed cells; selectivity is
-      // what training sees — watch VectorIndex.health on a drifting
-      // stream). A sink WITHOUT this stays safe: uncovered entries
-      // are conservatively read by every probe.
-      vectorIndex.foreach { case (idCol, embCol, k) =>
-        graft.sources.VectorIndex.index(batch.sparkSession, url,
-          idCol, embCol, k): Unit
-      }
+      commitEpoch(batch, url, s"${streamId}_b$id", nFiles, statsFields,
+        bloomIndex, vectorIndex, bloomFields)
     }
   }
 
@@ -611,8 +620,8 @@ object GraftStream {
     * [[lmGateIngest]] output) IN PLACE, partition by partition — the
     * maintenance pass those sinks document ("compact them offline"):
     * a long-lived stream lands one directory per batch and several
-    * files per directory, and [[graft.sources.Materialize.compact]]
-    * refuses hive-partitioned layouts. Compacting WITHIN partitions
+    * files per directory, and [[graft.sources.Snapshots.compactSmall]]
+    * packs only manifest stores. Compacting WITHIN partitions
     * preserves the partition-per-batch idempotency unit, so a later
     * replay of a compacted batch still overwrites exactly its own
     * partition.
@@ -642,7 +651,7 @@ object GraftStream {
     val parts = fs.listStatus(root).filter(s => s.isDirectory &&
       s.getPath.getName.startsWith("ingest_key="))
     require(parts.nonEmpty, s"store at $url has no ingest_key " +
-      "partitions — use Materialize.compact for flat stores")
+      "partitions — use Snapshots.compactSmall for snapshot stores")
     var rewritten = 0
     var before = 0
     var after = 0

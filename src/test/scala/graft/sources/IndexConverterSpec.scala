@@ -177,25 +177,4 @@ class IndexConverterSpec extends SparkSpec {
       SparkConverter.clearCache()
     }
   }
-
-  test("updateMetadata merges only new footers and matches a full rescan") {
-    import graft.schema.{FieldSpec, GraftSchema}
-    val url = scratch("sidecar-incr")
-    val schema = GraftSchema("incr", Seq(
-      FieldSpec("id", org.apache.spark.sql.types.LongType)))
-    spark.range(100).toDF("id").repartition(2)
-      .write.mode("overwrite").parquet(url)
-    Materialize.writeMetadata(spark, url, schema)
-    val before = Materialize.loadRowGroupCounts(spark, url)
-    assert(before.nonEmpty)
-    // append new files out-of-band (what a streaming batch does)
-    spark.range(100, 150).toDF("id").repartition(1)
-      .write.mode("append").parquet(url)
-    Materialize.updateMetadata(spark, url, schema)
-    val incr = Materialize.loadRowGroupCounts(spark, url)
-    val full = Materialize.rowGroupCounts(spark, url)
-    assert(incr == full)
-    assert(incr.size > before.size)
-    assert(before.forall { case (k, v) => incr(k) == v })
-  }
 }

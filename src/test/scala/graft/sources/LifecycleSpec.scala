@@ -320,37 +320,21 @@ class LifecycleSpec extends SparkSpec {
 
   test("compact merges small files byte-preservingly; sidecar follows") {
     val u = scratch("compact-ds-" + java.util.UUID.randomUUID().toString.take(8))
-    Materialize.materialize(source, u, schema, rowGroupSizeMb = 1,
-      partitions = Some(16)) // 16 tiny files
-    val before = GraftRead.reader(spark, u).load()
+    Snapshots.create(spark, u, Materialize.encodeColumns(source, schema),
+      nFiles = 16) // 16 tiny files
+    Materialize.writeMetadata(spark, u, schema)
+    def decoded() = GraftRead.reader(spark, u).load()
       .select($"id", $"label", $"image.data", $"emb.data")
       .as[(Long, String, Seq[Short], Seq[Double])].collect().sortBy(_._1).toSeq
-    val (nBefore, nAfter) = Materialize.compact(spark, u, targetFileMb = 256)
-    assert(nBefore == 16 && nAfter == 1)
-    assert(Materialize.listParquetFiles(spark, u).length == 1)
-    // decoded content identical after compaction (codec cells opaque)
-    val after = GraftRead.reader(spark, u).load()
-      .select($"id", $"label", $"image.data", $"emb.data")
-      .as[(Long, String, Seq[Short], Seq[Double])].collect().sortBy(_._1).toSeq
-    assert(after == before)
-    // sidecar census matches the new layout
-    val counts = Materialize.loadRowGroupCounts(spark, u)
-    assert(counts.size == 1 && counts.values.sum >= 1)
-    // no staging leftovers
-    assert(!new java.io.File(u, "_compact_tmp").exists())
-  }
-
-  test("compact refuses hive-partitioned stores") {
-    val u = scratch("compact-part-" + java.util.UUID.randomUUID().toString.take(8))
-    val sch = GraftSchema("p", Seq(
-      FieldSpec("id", LongType), FieldSpec("cat", StringType)))
-    Materialize.materialize(spark.range(30).toDF("id")
-        .withColumn("cat", concat(lit("c"), pmod($"id", lit(3)))),
-      u, sch, partitionCols = Seq("cat"))
-    val e = intercept[IllegalArgumentException] {
-      Materialize.compact(spark, u)
-    }
-    assert(e.getMessage.contains("hive-partitioned"))
+    val before = decoded()
+    val v = Snapshots.compactSmall(spark, u, smallBytes = 256L << 20,
+      targetBytes = 256L << 20)
+    assert(Snapshots.snap(spark, u, 1).files.size == 16)
+    assert(Snapshots.snap(spark, u, v).files.size == 1)
+    // decoded content identical after compaction (codec cells opaque),
+    // read through the same schema sidecar
+    val after = decoded()
+    assert(after.length == 100 && after == before)
   }
 
   test("plain parquet store reads via inferred schema (S4/make_batch_reader)") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.schema.{CodecSpec, FieldSpec, GraftSchema}
-import graft.sources.{GraftRead, Materialize}
+import graft.sources.{GraftRead, Materialize, Snapshots}
 
 class GraftStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -82,27 +82,74 @@ class GraftStreamSpec extends SparkSpec {
       "half-promoted crash sweeps its own debris") {
     val url = scratch("sink-replay-" +
       java.util.UUID.randomUUID().toString.take(8))
+    val ckpt = freshCkpt("replay")
     val schema = GraftSchema("replayed", Seq(
       FieldSpec("id", LongType)))
     val b0 = Seq(1L, 2L).toDF("id")
-    GraftStream.sinkBatch(b0, 0L, url, schema)
+    GraftStream.sinkBatch(b0, 0L, url, schema, ckpt)
     // at-least-once retry of the SAME epoch must not duplicate
-    GraftStream.sinkBatch(b0, 0L, url, schema)
-    // crash-mid-promote simulation for epoch 1: debris file, no
-    // marker → the replay must sweep it and land exactly its rows
+    GraftStream.sinkBatch(b0, 0L, url, schema, ckpt)
+    // crash simulation for epoch 1: an append that died after
+    // staging its data file but before its manifest commit leaves an
+    // s<version>-*.parquet file the manifest never lists
     val root = new org.apache.hadoop.fs.Path(url)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(9L).toDF("id").write.parquet(url + "/_debris_tmp")
     val part = Materialize.listParquetFiles(spark,
       url + "/_debris_tmp").head
+    val next = Snapshots.latest(spark, url) + 1
     fs.rename(new org.apache.hadoop.fs.Path(part),
-      new org.apache.hadoop.fs.Path(root, "e00000001-99999.parquet"))
+      new org.apache.hadoop.fs.Path(root,
+        f"s$next%08d-crashed0-00000.parquet"))
     fs.delete(new org.apache.hadoop.fs.Path(url + "/_debris_tmp"), true)
-    GraftStream.sinkBatch(Seq(3L).toDF("id"), 1L, url, schema)
+    GraftStream.sinkBatch(Seq(3L).toDF("id"), 1L, url, schema, ckpt)
     val ids = GraftRead.reader(spark, url).load()
       .select($"id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(1L, 2L, 3L),
       s"replay duplicated or leaked debris rows: $ids")
+    // one committed version per epoch, keyed by the checkpoint
+    val id = GraftStream.sinkId(spark, ckpt)
+    val appends = Snapshots.history(spark, url).select($"op").as[String]
+      .collect().filter(_.startsWith("append:")).toSeq
+    assert(appends == Seq(s"append:${id}_b0", s"append:${id}_b1"))
+  }
+
+  test("sink: two checkpoint lineages into one store both land every " +
+      "epoch") {
+    val url = scratch("sink-lineages-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    val schema = GraftSchema("lineages", Seq(FieldSpec("id", LongType)))
+    // epoch ids restart at 0 on a fresh checkpoint: the second
+    // lineage's epochs 0 and 1 must commit, not no-op
+    Seq(Seq(Seq(1L, 2L), Seq(3L)), Seq(Seq(10L), Seq(11L, 12L)))
+      .zipWithIndex.foreach { case (epochs, k) =>
+        val input = MemoryStream[Long](spark)
+        val q = GraftStream.sink(input.toDF().toDF("id"), url, schema,
+          checkpoint = freshCkpt(s"lineage$k"))
+          .trigger(Trigger.ProcessingTime(0)).start()
+        try epochs.foreach { rows =>
+          input.addData(rows: _*)
+          q.processAllAvailable()
+        } finally q.stop()
+      }
+    val ids = GraftRead.reader(spark, url).load()
+      .select($"id").as[Long].collect().sorted.toSeq
+    assert(ids == Seq(1L, 2L, 3L, 10L, 11L, 12L))
+  }
+
+  test("sink refuses a plain parquet directory") {
+    val url = scratch("sink-plain-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    val schema = GraftSchema("plain", Seq(FieldSpec("id", LongType)))
+    Materialize.materialize(Seq(1L, 2L).toDF("id"), url, schema)
+    val e = intercept[IllegalArgumentException] {
+      GraftStream.sinkBatch(Seq(3L).toDF("id"), 0L, url, schema,
+        freshCkpt("plain"))
+    }
+    assert(e.getMessage.contains("no _snap manifest"))
+    // nothing was committed, and the store still reads its own rows
+    assert(Snapshots.versions(spark, url).isEmpty)
+    assert(GraftRead.reader(spark, url).load().count() == 2)
   }
 
   test("watermarked tumbling-window counts over event time") {
