@@ -1768,8 +1768,9 @@ object SparkEntry {
     // scored against the STATIC src0-trained LM (batch lmScore plan
     // per batch — broadcast LM joins, no streaming-agg state), and
     // only docs clearing the ppm threshold land in the gated store
-    // (partition-per-batch, replay-idempotent). Result = read the
-    // store back; oracle = the batch scoring + threshold in SQL.
+    // (one keyed snapshot commit per batch, replay-idempotent).
+    // Result = read the store back; oracle = the batch scoring +
+    // threshold in SQL.
     "q113_stream_lm_gate" -> ((s0, dir) => {
       val s = scopedSession(s0, 4)
       val docs = t(s, dir, "documents")
@@ -1791,7 +1792,7 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Snapshots.read(s, s"$base/out")
         .select(col("doc_id"), col("text"), col("n_trans"),
           col("score_sum"), col("mean_ppm"))
         .orderBy(col("doc_id"))
@@ -3974,8 +3975,9 @@ object SparkEntry {
     // ---- Streaming JSONL landing with quarantine ----
     // q235's corruption rule flows through a REAL file stream
     // (3 files, maxFilesPerTrigger=1 → 3 micro-batches) into
-    // ingest-keyed good/quarantine stores; the read-back report
-    // matches the same batch oracle.
+    // good/quarantine snapshot stores, both published per batch by
+    // one keyed commit; the read-back report matches the same batch
+    // oracle.
     "q245_stream_jsonl" -> ((s0, dir) => {
       import org.apache.spark.sql.types.{LongType, StringType,
         StructField, StructType}
@@ -4003,12 +4005,12 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val ok = s.read.parquet(s"$base/good")
+      val ok = Snapshots.read(s, s"$base/good")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
         .select(lit("ok").as("status"), col("lang"), col("n"),
           col("sum_chars"))
-      val bad = s.read.parquet(s"$base/quarantine")
+      val bad = Snapshots.read(s, s"$base/quarantine")
         .agg(count(lit(1)).as("n"))
         .select(lit("corrupt").as("status"),
           lit(null).cast("string").as("lang"), col("n"),

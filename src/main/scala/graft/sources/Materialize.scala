@@ -16,15 +16,17 @@ import graft.schema.{CodecSpec, FieldSpec, GraftSchema}
   *      projection, unischema.py:359-406 / dict_to_spark_row);
   *   2. parquet write with `parquet.block.size` = rowGroupSizeMb
   *      (reference sets the same hadoop conf, :135-178);
-  *   3. store the schema (versioned JSON, not pickle) plus per-file
-  *      row-group counts in a `_graft_metadata.json` sidecar
-  *      (reference pickles into `_common_metadata`; a JSON sidecar is
-  *      the same single-read-per-dataset contract without requiring a
+  *   3. store the schema (versioned JSON, not pickle) in a
+  *      `_graft_metadata.json` sidecar (reference pickles into
+  *      `_common_metadata`; a JSON sidecar is the same
+  *      single-read-per-dataset contract without requiring a
   *      parquet-footer writer, and Spark/DuckDB ignore `_`-prefixed
-  *      files).
+  *      files). No reader needs a per-file row-group census from
+  *      it, so it carries none and writing it runs no Spark job.
   *
-  * Row-group counts are gathered from parquet footers in a
-  * distributed job (reference does the same via a Spark map,
+  * Only petastorm's `_common_metadata` ([[writePetastormMetadata]])
+  * carries per-file row-group counts, gathered from parquet footers
+  * in a distributed job (reference does the same via a Spark map,
   * :208-241) — at 100 TB the listing is thousands of files and the
   * driver never opens them itself.
   */
@@ -346,17 +348,11 @@ object Materialize {
   }
 
   /** S9 parity (etl/petastorm_generate_metadata.py): (re)write the
-    * sidecar for an existing parquet store (full footer rescan). */
-  def writeMetadata(spark: SparkSession, url: String, schema: GraftSchema): Unit =
-    writeSidecar(spark, url, schema, rowGroupCounts(spark, url))
-
-  private def writeSidecar(spark: SparkSession, url: String,
-      schema: GraftSchema, counts: Map[String, Int]): Unit = {
-    val countsJson = counts.toSeq.sortBy(_._1)
-      .map { case (f, n) => s"${GraftSchema.quote(f)}:$n" }
-      .mkString("{", ",", "}")
-    val json =
-      s"""{"version":1,"schema":${schema.toJson},"rowGroupCounts":$countsJson}"""
+    * schema sidecar for an existing parquet store — one small file
+    * write, no footer read and no Spark job. */
+  def writeMetadata(spark: SparkSession, url: String,
+      schema: GraftSchema): Unit = {
+    val json = s"""{"version":1,"schema":${schema.toJson}}"""
     val path = new Path(url, SidecarName)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     // stage + rename: writeMetadata regenerates this over a live
@@ -454,7 +450,8 @@ object Materialize {
     readSidecar(spark, url).map { json =>
       val idx = json.indexOf("\"schema\":")
       require(idx >= 0, s"malformed $SidecarName")
-      // schema object ends before ,"rowGroupCounts"
+      // the schema object ends the sidecar, or precedes the
+      // rowGroupCounts census older sidecars carry
       val end = json.indexOf(""","rowGroupCounts":""")
       val schemaJson = json.substring(idx + 9,
         if (end > 0) end else json.length - 1)

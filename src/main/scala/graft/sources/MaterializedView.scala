@@ -22,9 +22,11 @@ import org.apache.spark.sql.functions._
   *    `__b=…/__batch=…` partitions.
   *  - Replay-IDEMPOTENT by construction: re-running a batch
   *    overwrites exactly its own partitions with identical content
-  *    (the repo's streaming ingest discipline, `nearDupIngest`).
-  *    There is no read-modify-write of existing state, hence no
-  *    double-count crash window at all.
+  *    (what `GraftStream.viewMaintain` relies on; unlike the
+  *    streaming sinks, which commit through `Snapshots` manifests,
+  *    the view keeps partitions because [[readKeys]] prunes on
+  *    `__b`). There is no read-modify-write of existing state, hence
+  *    no double-count crash window at all.
   *  - [[read]] folds partials with one keys-exchange; COUNT/SUM/
   *    MIN/MAX are self-mergeable, AVG is derived. [[readKeys]] point
   *    lookups prune to the probed keys' buckets — O(state/buckets)

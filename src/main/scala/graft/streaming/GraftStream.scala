@@ -16,8 +16,15 @@ import graft.sources.{GraftRead, Materialize, Snapshots}
   * training-data pipeline needs when a store is continuously appended
   * (e.g. a crawler landing new document files): incremental reads of
   * newly-arrived files with the same schema/codec semantics as the
-  * batch reader, and an encoding sink that commits each micro-batch
-  * exactly once as a snapshot version of a codec store.
+  * batch reader (plain directories only: a manifest store is read
+  * with [[GraftRead]] or `spark.readStream.table`), and foreachBatch
+  * sinks that commit each micro-batch exactly once as a
+  * [[graft.sources.Snapshots]] version keyed by the epoch —
+  * `appendOnce` into one store, keyed `commitTogether` into several.
+  * The encoding [[sink]] and the ingest sinks ([[nearDupIngest]],
+  * [[lmGateIngest]], [[jsonlQuarantineIngest]]) create their stores
+  * on the first epoch; [[viewMaintain]] alone keeps its view's
+  * partition-overwrite layout, which the view's key reads prune on.
   *
   * Everything composes built-in Structured Streaming operators
   * (file source, watermarks, windowed aggs, foreachBatch sink) — no
@@ -31,7 +38,8 @@ object GraftStream {
     * appearing under `url` are processed incrementally. Stored
     * schema + codec decode + schema views + predicates behave exactly
     * like the batch reader (shard/shuffle/epochs are batch-only
-    * concepts and intentionally absent). */
+    * concepts and intentionally absent). [[load]] refuses a
+    * [[graft.sources.Snapshots]] store. */
   final case class Reader(
       spark: SparkSession,
       url: String,
@@ -51,6 +59,16 @@ object GraftStream {
     def glob(pattern: String): Reader = copy(globFilter = Some(pattern))
 
     def load(): DataFrame = {
+      // a manifest store's directory also holds files no version
+      // lists (a crashed append's staged files, vacuum-pending ones),
+      // which a file-stream source would read as rows
+      val root = new org.apache.hadoop.fs.Path(url)
+      require(!root.getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(new org.apache.hadoop.fs.Path(root, "_snap")),
+        s"$url is a Snapshots store (it holds _snap): the file-stream " +
+          "reader would read every file in it, committed or not — " +
+          "batch-read it with GraftRead, or stream its versions with " +
+          "spark.readStream.table")
       // schema precedence mirrors GraftRead: graft sidecar, else a
       // PETASTORM store's own pickled Unischema (npy auto-decode —
       // Materialize.loadPetastormSchema), else inferred
@@ -83,9 +101,9 @@ object GraftStream {
     * same codecs, same nullability enforcement) and the snapshot
     * commit ([[graft.sources.Snapshots.appendOnce]]).
     *
-    * The first epoch creates the store: an empty version 1 plus the
-    * graft schema sidecar, so [[GraftRead]] decodes the codec cells.
-    * Every epoch then commits one version keyed
+    * The first epoch creates the store ([[ensureStore]]): the graft
+    * schema sidecar, so [[GraftRead]] decodes the codec cells, and an
+    * empty version 1. Every epoch then commits one version keyed
     * `<checkpoint id>_b<epoch>`, the checkpoint id a digest of the
     * qualified `checkpoint` path. foreachBatch's at-least-once
     * retries are therefore no-ops, a second checkpoint lineage
@@ -94,8 +112,8 @@ object GraftStream {
     * pre- or post-batch: a crashed epoch's staged files are never
     * visible. A plain parquet directory (no `_snap` manifest) is
     * refused, since a manifest would hide its rows from [[GraftRead]].
-    * The file-stream [[reader]] does not resolve manifests; read a
-    * sink store with [[GraftRead]]. Small epoch files pack with
+    * The file-stream [[reader]] refuses manifest stores; read a sink
+    * store with [[GraftRead]]. Small epoch files pack with
     * [[graft.sources.Snapshots.compactSmall]]. */
   def sink(df: DataFrame, url: String, schema: GraftSchema,
       checkpoint: String): DataStreamWriter[Row] =
@@ -109,23 +127,10 @@ object GraftStream {
     * directly testable. Idempotent per (checkpoint, epoch). */
   def sinkBatch(batch: DataFrame, epoch: Long, url: String,
       schema: GraftSchema, checkpoint: String): Unit = {
-    val s = batch.sparkSession
     val encoded = Materialize.encodeColumns(batch, schema)
-    if (Snapshots.versions(s, url).isEmpty) {
-      val root = new org.apache.hadoop.fs.Path(url)
-      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-      require(!fs.exists(root) ||
-          Materialize.listParquetFiles(s, url).isEmpty,
-        s"$url holds parquet files but no _snap manifest: the sink " +
-          "commits through manifests, which would hide those rows " +
-          "from GraftRead — sink into a fresh path")
-      // sidecar first: a crash before create leaves no manifest, so
-      // the next epoch redoes both steps
-      fs.mkdirs(root)
-      Materialize.writeMetadata(s, url, schema)
-      Snapshots.create(s, url, encoded.limit(0), nFiles = 1)
-    }
-    commitEpoch(encoded, url, s"${sinkId(s, checkpoint)}_b$epoch")
+    ensureStore(url, encoded, Some(schema))
+    commitEpoch(encoded, url,
+      s"${sinkId(batch.sparkSession, checkpoint)}_b$epoch")
   }
 
   /** A [[sink]] lineage's commit-key prefix: a digest of the qualified
@@ -141,16 +146,70 @@ object GraftStream {
       .map(b => f"$b%02x").mkString
   }
 
-  /** The per-epoch body of [[sink]] and [[snapshotSink]]: one
-    * exactly-once [[graft.sources.Snapshots.appendOnce]] under `key`,
-    * then the requested sidecar maintenance. */
+  /** The first-epoch bootstrap of every sink that creates its own
+    * stores ([[sink]] and the ingest sinks): a no-op once `url` holds
+    * a manifest. Otherwise a directory holding parquet files is
+    * refused (a manifest would hide those rows from the manifest
+    * readers), the graft `sidecar` schema is written when given, and
+    * an empty version 1 pins `batch`'s schema. A crash before the
+    * create leaves no manifest, so the next epoch redoes every
+    * step. */
+  private def ensureStore(url: String, batch: DataFrame,
+      sidecar: Option[GraftSchema] = None): Unit = {
+    val s = batch.sparkSession
+    if (Snapshots.versions(s, url).isEmpty) {
+      val root = new org.apache.hadoop.fs.Path(url)
+      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+      require(!fs.exists(root) ||
+          Materialize.listParquetFiles(s, url).isEmpty,
+        s"$url holds parquet files but no _snap manifest: the sink " +
+          "commits through manifests, which would hide those rows " +
+          "from GraftRead and Snapshots.read — sink into a fresh path")
+      fs.mkdirs(root)
+      sidecar.foreach(Materialize.writeMetadata(s, url, _))
+      Snapshots.create(s, url, batch.limit(0), nFiles = 1)
+    }
+  }
+
+  /** Files each sink commit writes per store and epoch. */
+  private val EpochFiles = 8
+
+  private def requireStreamId(streamId: String): Unit =
+    require(streamId.matches("[A-Za-z0-9_.-]+"),
+      s"streamId '$streamId' must be path-safe ([A-Za-z0-9_.-]+)")
+
+  /** The single-store epoch commit of [[sink]], [[snapshotSink]] and
+    * [[lmGateIngest]]: one exactly-once
+    * [[graft.sources.Snapshots.appendOnce]] under `key`, then the
+    * requested sidecar maintenance. */
   private def commitEpoch(batch: DataFrame, url: String, key: String,
-      nFiles: Int = 8, statsFields: Seq[String] = Nil,
+      nFiles: Int = EpochFiles, statsFields: Seq[String] = Nil,
       bloomIndex: Option[(String, Seq[String])] = None,
       vectorIndex: Option[(String, String, Int)] = None,
       bloomFields: Seq[String] = Nil): Unit = {
-    val s = batch.sparkSession
-    Snapshots.appendOnce(s, url, batch, key, nFiles): Unit
+    Snapshots.appendOnce(batch.sparkSession, url, batch, key, nFiles): Unit
+    maintainSidecars(batch.sparkSession, url, statsFields, bloomIndex,
+      vectorIndex, bloomFields)
+  }
+
+  /** The multi-store epoch commit of the ingest sinks: every store is
+    * bootstrapped ([[ensureStore]]), then all of them publish through
+    * one keyed [[graft.sources.Snapshots.commitTogether]], so they
+    * advance together and a replayed `key` is a no-op. */
+  private def commitEpochTogether(key: String,
+      parts: Seq[(String, DataFrame)]): Unit = {
+    parts.foreach { case (url, df) => ensureStore(url, df) }
+    Snapshots.commitTogether(parts.head._2.sparkSession,
+      parts.map { case (url, df) => (url, df, EpochFiles) },
+      Some(key)): Unit
+  }
+
+  /** Per-epoch sidecar maintenance of one store after its commit. */
+  private def maintainSidecars(s: SparkSession, url: String,
+      statsFields: Seq[String] = Nil,
+      bloomIndex: Option[(String, Seq[String])] = None,
+      vectorIndex: Option[(String, String, Int)] = None,
+      bloomFields: Seq[String] = Nil): Unit = {
     // per-epoch stats maintenance: the incremental refresh scans
     // ONLY this epoch's new files (covered files are skipped), so
     // range-skipping reads stay fresh at O(batch) per epoch — and
@@ -196,13 +255,12 @@ object GraftStream {
     * The store must exist ([[graft.sources.Snapshots.create]]) —
     * version 1 anchors the lineage. */
   def snapshotSink(batches: DataFrame, url: String,
-      streamId: String, nFiles: Int = 8,
+      streamId: String, nFiles: Int = EpochFiles,
       statsFields: Seq[String] = Nil,
       bloomIndex: Option[(String, Seq[String])] = None,
       vectorIndex: Option[(String, String, Int)] = None,
       bloomFields: Seq[String] = Nil): DataStreamWriter[Row] = {
-    require(streamId.matches("[A-Za-z0-9_.-]+"),
-      s"streamId '$streamId' must be path-safe ([A-Za-z0-9_.-]+)")
+    requireStreamId(streamId)
     batches.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       commitEpoch(batch, url, s"${streamId}_b$id", nFiles, statsFields,
         bloomIndex, vectorIndex, bloomFields)
@@ -227,30 +285,21 @@ object GraftStream {
       statsFields: Map[String, Seq[String]] = Map.empty,
       bloomFields: Map[String, Seq[String]] = Map.empty)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_.-]+"),
-      s"streamId '$streamId' must be path-safe ([A-Za-z0-9_.-]+)")
+    requireStreamId(streamId)
     require(parts.nonEmpty, "snapshotSinkMulti: no target stores")
-    val urls = parts.map(_._1).toSet
+    val urls = parts.map(_._1)
     statsFields.keys.foreach(u => require(urls.contains(u),
       s"statsFields names $u, which is not a sink target"))
     bloomFields.keys.foreach(u => require(urls.contains(u),
       s"bloomFields names $u, which is not a sink target"))
     batches.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      graft.sources.Snapshots.commitTogether(batch.sparkSession,
+      Snapshots.commitTogether(batch.sparkSession,
         parts.map { case (url, f, nFiles) => (url, f(batch), nFiles) },
         Some(s"${streamId}_b$id")): Unit
-      // per-epoch stats maintenance per store — the [[snapshotSink]]
-      // shape: incremental, covered files skipped, retry-safe
-      statsFields.foreach { case (url, fields) =>
-        graft.sources.Snapshots.indexStats(batch.sparkSession, url,
-          fields): Unit
-      }
-      // conventional key-bloom sidecar per store (the snapshotSink
-      // bloomFields shape): O(new files) per epoch, and SQL MERGE's
-      // discovery finds it with zero configuration
-      bloomFields.foreach { case (url, fields) =>
-        graft.sources.Snapshots.indexBloom(batch.sparkSession, url,
-          fields)
+      urls.foreach { url =>
+        maintainSidecars(batch.sparkSession, url,
+          statsFields = statsFields.getOrElse(url, Nil),
+          bloomFields = bloomFields.getOrElse(url, Nil))
       }
     }
   }
@@ -269,8 +318,7 @@ object GraftStream {
     * path). */
   def viewMaintain(batches: DataFrame, url: String,
       streamId: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.matches("[A-Za-z0-9_.-]+"),
-      s"streamId '$streamId' must be path-safe ([A-Za-z0-9_.-]+)")
+    requireStreamId(streamId)
     batches.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       graft.sources.MaterializedView.applyDeltaKeyed(
         batch.sparkSession, url, batch, s"${streamId}_b$id")
@@ -318,95 +366,32 @@ object GraftStream {
     * layout at `bandsUrl`) — never re-hashing the corpus, work is
     * O(batch + matched buckets); (2) exact-verifies candidate pairs
     * by shingle Jaccard against the corpus docs store, reading only
-    * join-matched rows' text (store the docs bucketed/indexed by id
-    * — [[graft.sources.Materialize.materializeBucketed]] /
-    * [[graft.sources.RowGroupIndex]] — to also prune the verify
-    * SCAN at 100 TB); (3) appends the verified pairs, the batch's
-    * bands, and the batch's docs, so the next batch — or tomorrow's
-    * restart — sees this batch as corpus. Intra-batch duplicates are
-    * deliberately out of scope (run the batch-level
+    * join-matched rows' text; (3) appends the verified pairs, the
+    * batch's bands, and the batch's docs, so the next batch — or
+    * tomorrow's restart — sees this batch as corpus. Intra-batch
+    * duplicates are deliberately out of scope (run the batch-level
     * [[graft.ops.NearDedup.nearDuplicates]] on the batch if needed).
     *
-    * Replay safety: foreachBatch is at-least-once under retries, so
-    * every persisted table (bands, docs, pairs) is PARTITIONED BY an
-    * `ingest_key` (= `streamId` + batch id) and written with dynamic
-    * partition overwrite — a replayed batch REPLACES its own
-    * partition instead of appending a second copy — and the corpus
-    * views exclude the replaying batch's own partition, so a retry
-    * that crashed after the bands append can never pair the batch
-    * against itself. Net effect: the output stores are exactly-once
-    * at batch granularity. (Batch-sized partition directories are
-    * the idempotency unit; compact them offline if a long-lived
-    * stream accretes too many.)
+    * The three outputs are [[graft.sources.Snapshots]] stores (read
+    * them with [[graft.sources.Snapshots.read]]); the first
+    * non-empty epoch creates them. Each non-empty epoch publishes to
+    * all three through one [[graft.sources.Snapshots.commitTogether]]
+    * keyed `<streamId>_b<epoch>`, after matching against the
+    * committed corpus — read once any open commit journal has rolled
+    * forward — so a batch never pairs with itself. The first
+    * committed attempt wins: a replay of a committed epoch (same
+    * rows, changed rows, a changed threshold, or an empty re-read)
+    * is a no-op, and a replay after a crash mid-publish completes the
+    * crashed publish. Empty epochs commit nothing. Small epoch files
+    * pack with [[graft.sources.Snapshots.compactSmall]].
     *
     * `streamId` must be STABLE across restarts of one checkpoint
     * lineage (derive it from the checkpoint path) and UNIQUE across
     * lineages: Structured Streaming batch ids restart at 0 on a
     * fresh checkpoint, so without the stream qualifier a new run's
-    * batch 0 would silently overwrite — and hide from its corpus —
-    * an old run's batch-0 partition. Returns the writer — caller
-    * picks trigger + checkpoint and starts. */
-
-  /** Shared idempotent-ingest machinery for the foreachBatch sinks
-    * ([[nearDupIngest]] / [[lmGateIngest]] / [[jsonlQuarantineIngest]]):
-    * the path-safe id check, the epoch partition key, the
-    * pre-ingest_key layout guard (every WRITE onto an existing
-    * READABLE store must pass it — a dynamic overwrite on top of
-    * loose legacy files corrupts the layout silently), the
-    * own-partition dynamic overwrite, and replay partition hygiene.
-    * ONE implementation of the exactly-once-by-overwrite contract —
-    * the three sinks had drifted (one lost the write guard entirely)
-    * before this was hoisted. */
-  private final case class IngestPartition(s: SparkSession,
-      streamId: String, batchId: Long) {
-    require(streamId.matches("[A-Za-z0-9_.-]+"),
-      s"streamId '$streamId' must be path-safe ([A-Za-z0-9_.-]+) — it " +
-        "names partition directories")
-    val ingestKey = s"${streamId}_b$batchId"
-    def exists(url: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(url)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-    }
-    def requireIngestLayout(df: DataFrame, url: String): DataFrame = {
-      require(df.columns.contains("ingest_key"),
-        s"store at $url was written by the pre-ingest_key (append + " +
-          "batch_id) layout — rewrite it partitioned by ingest_key, " +
-          "or point the stream at fresh store paths")
-      df
-    }
-    /** Layout-guard an existing store before writing into it; a
-      * directory with no parquet footers (a crashed write's leftover,
-      * or an emptied partition) has nothing to corrupt. */
-    private def guardWrite(url: String): Unit =
-      if (exists(url)) {
-        try requireIngestLayout(s.read.parquet(url), url)
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => ()
-        }
-      }
-    def overwriteOwn(df: DataFrame, url: String): Unit = {
-      guardWrite(url)
-      df.withColumn("ingest_key", lit(ingestKey))
-        .write.partitionBy("ingest_key")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(url)
-    }
-    /** Drop this batch's partition (replay hygiene when the batch
-      * now produces nothing: skipping the write would leave a
-      * pre-crash attempt's stale rows in place). */
-    def dropOwn(url: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(url,
-        s"ingest_key=$ingestKey")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    /** Empty frames drop the partition, non-empty overwrite it — a
-      * zero-row dynamic overwrite would leave a footer-less dir. */
-    def landOrDrop(df: DataFrame, url: String): Unit =
-      if (df.isEmpty) dropOwn(url) else overwriteOwn(df, url)
-  }
-
+    * batch 0 would find an old run's batch-0 key and commit nothing.
+    * Returns the writer — caller picks trigger + checkpoint and
+    * starts. */
   def nearDupIngest(batches: DataFrame, idCol: String, textCol: String,
       bandsUrl: String, docsUrl: String, pairsUrl: String,
       streamId: String, minJaccardPpm: Long = 500000L, k: Int = 16,
@@ -420,7 +405,7 @@ object GraftStream {
 
   /** One [[nearDupIngest]] micro-batch — exposed so replay semantics
     * are directly testable (call twice with the same `streamId` +
-    * `batchId` to simulate a post-append retry). Idempotent per
+    * `batchId` to simulate a retry). Idempotent per
     * (streamId, batchId): see [[nearDupIngest]]. */
   def ingestBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, bandsUrl: String, docsUrl: String,
@@ -429,68 +414,33 @@ object GraftStream {
       bands: Int = 4, rows: Int = 4, shingleN: Int = 3,
       maxBucket: Int = 1000, unicode: Boolean = false): Unit = {
     import graft.ops.NearDedup
+    requireStreamId(streamId)
     val s = batch.sparkSession
-    // path-safe id check, layout guard, own-partition overwrite and
-    // replay hygiene all live in [[IngestPartition]]
-    val ip = IngestPartition(s, streamId, batchId)
-    val ingestKey = ip.ingestKey
     val slim = batch.select(col(idCol), col(textCol)).persist()
-    try {
-      // an empty micro-batch must write NOTHING: a zero-row dynamic
-      // overwrite creates a directory with no parquet footers, which
-      // would pass the exists() guard below on the NEXT batch and
-      // crash its corpus read on schema inference. It must still run
-      // replay hygiene first: if a replayed batch re-reads as EMPTY
-      // (non-replayable source, e.g. retention expiry), a pre-crash
-      // attempt's partitions for this ingest_key would otherwise
-      // survive and re-enter later batches' corpus views (r8 advice)
-      if (slim.isEmpty) {
-        Seq(bandsUrl, docsUrl, pairsUrl).foreach { url =>
-          ip.dropOwn(url)
-        }
-        return
-      }
-      // both stores must exist — a first-batch retry that crashed
-      // between the bands and docs appends has bands but no docs
-      if (ip.exists(bandsUrl) && ip.exists(docsUrl)) {
-        // corpus = every batch EXCEPT this one (partition-pruned):
-        // on replay the batch's own pre-crash bands are invisible,
-        // so it can never pair with itself
-        val corpusBands = ip.requireIngestLayout(s.read.parquet(bandsUrl),
-            bandsUrl)
-          .filter(col("ingest_key") =!= lit(ingestKey)).drop("ingest_key")
-        val pairs = NearDedup.incrementalPairs(slim, corpusBands,
-          idCol, textCol, k, bands, rows, shingleN, maxBucket, unicode)
-          .filter(col("id_new") =!= col("id_corpus"))
-        // verify against ONLY the matched corpus docs (AQE
-        // broadcasts the small matched-id side)
-        val matchedDocs = ip.requireIngestLayout(s.read.parquet(docsUrl),
-            docsUrl)
-          .filter(col("ingest_key") =!= lit(ingestKey)).drop("ingest_key")
-          .join(pairs.select(col("id_corpus").as(idCol)).distinct(),
-            Seq(idCol), "left_semi")
-        val verified = NearDedup.verifyPairsJaccardPpm(pairs, slim,
-            matchedDocs, idCol, textCol, shingleN, unicode)
-          .filter(col("jaccard_ppm") >= minJaccardPpm)
-          .persist()
-        // no pairs → no zero-row write (it would create the
-        // footer-less store the empty-batch guard exists for), but a
-        // REPLAY must still clear any pre-crash attempt's partition —
-        // e.g. the operator restarted with a stricter threshold. The
-        // pin keeps the emptiness probe from re-running the verify
-        // pipeline for the write.
-        try {
-          if (verified.isEmpty) ip.dropOwn(pairsUrl)
-          else ip.overwriteOwn(verified, pairsUrl)
-        } finally verified.unpersist()
-      }
-      // admit the batch into the corpus AFTER matching (a batch
-      // never pairs with itself)
-      ip.overwriteOwn(
-        NearDedup.bandTable(slim, idCol, textCol, k, bands, rows, shingleN,
-          unicode),
-        bandsUrl)
-      ip.overwriteOwn(slim, docsUrl)
+    try if (!slim.isEmpty) {
+      val newBands = NearDedup.bandTable(slim, idCol, textCol, k, bands,
+        rows, shingleN, unicode)
+      ensureStore(bandsUrl, newBands)
+      ensureStore(docsUrl, slim)
+      // the corpus is what the committed manifests list: a crashed
+      // publish rolls forward first, so bands and docs agree
+      Seq(bandsUrl, docsUrl).foreach(Snapshots.recoverTxns(s, _))
+      val pairs = NearDedup.incrementalPairs(slim,
+          Snapshots.read(s, bandsUrl), idCol, textCol, k, bands, rows,
+          shingleN, maxBucket, unicode)
+        .filter(col("id_new") =!= col("id_corpus"))
+      // verify against ONLY the matched corpus docs (AQE
+      // broadcasts the small matched-id side)
+      val matchedDocs = Snapshots.read(s, docsUrl)
+        .join(pairs.select(col("id_corpus").as(idCol)).distinct(),
+          Seq(idCol), "left_semi")
+      val verified = NearDedup.verifyPairsJaccardPpm(pairs, slim,
+          matchedDocs, idCol, textCol, shingleN, unicode)
+        .filter(col("jaccard_ppm") >= minJaccardPpm)
+      // the batch's bands and docs join the corpus in the same
+      // commit as its pairs: the next batch sees all three or none
+      commitEpochTogether(s"${streamId}_b$batchId", Seq(
+        bandsUrl -> newBands, docsUrl -> slim, pairsUrl -> verified))
     } finally slim.unpersist()
   }
 
@@ -506,10 +456,13 @@ object GraftStream {
     * buy nothing and cost complete-mode or per-doc state).
     *
     * Output rows: the batch's (idCol, textCol) plus n_trans /
-    * score_sum / mean_ppm, partitioned by `ingest_key` with dynamic
-    * partition overwrite — the [[nearDupIngest]] idempotency
-    * contract (replays REPLACE their own partition; empty replays
-    * drop it; `streamId` must be checkpoint-stable and path-safe).
+    * score_sum / mean_ppm, in a [[graft.sources.Snapshots]] store the
+    * first non-empty epoch creates. Each non-empty epoch commits one
+    * [[graft.sources.Snapshots.appendOnce]] keyed
+    * `<streamId>_b<epoch>` (possibly of zero admitted rows), so the
+    * first committed attempt wins and a replay — even one whose
+    * admissions changed — is a no-op (`streamId` must be
+    * checkpoint-stable and path-safe, as for [[nearDupIngest]]).
     * Duplicate-id batch rows each carry their id's whole-batch score
     * ([[graft.ops.TextAnalysis.lmScore]]'s distinct-id contract). */
   def lmGateIngest(batches: DataFrame, idCol: String, textCol: String,
@@ -526,27 +479,17 @@ object GraftStream {
       textCol: String, uni: DataFrame, bi: DataFrame, minMeanPpm: Long,
       outUrl: String, streamId: String, unicode: Boolean = false): Unit = {
     import graft.ops.TextAnalysis
-    val s = batch.sparkSession
-    val ip = IngestPartition(s, streamId, batchId)
+    requireStreamId(streamId)
     // the batch feeds three scans (transition explode, distinct ids,
     // the gate join) — pin it for the duration, as nearDupIngest does
     val slim = batch.select(col(idCol), col(textCol)).persist()
-    try {
-      // pin the scored frame too: the emptiness probe would otherwise
-      // run the whole LM pipeline (explode + three broadcast joins)
-      // once for the probe and again for the write — the same shape
-      // ingestBatch pins `verified` for
+    try if (!slim.isEmpty) {
       val admitted = slim
         .join(TextAnalysis.lmScore(slim, idCol, textCol, uni, bi, unicode)
             .filter(col("mean_ppm") >= minMeanPpm),
           Seq(idCol))
-        .persist()
-      // empty batches (or none admitted) write NOTHING — a zero-row
-      // dynamic overwrite leaves a footer-less directory — but still
-      // run replay hygiene: a replayed batch whose admissions changed
-      // (or re-read empty) must not leave a pre-crash attempt's rows
-      try ip.landOrDrop(admitted, outUrl)
-      finally admitted.unpersist()
+      ensureStore(outUrl, admitted)
+      commitEpoch(admitted, outUrl, s"${streamId}_b$batchId")
     } finally slim.unpersist()
   }
 
@@ -556,11 +499,12 @@ object GraftStream {
     * parses under the ENFORCED schema, admitted rows land in
     * `goodUrl` and the raw offending lines in `quarantineUrl` —
     * never dropped, never aborting the stream, inspectable for
-    * replay. Both stores are partitioned by `ingest_key` under the
-    * [[nearDupIngest]] idempotency contract: a replayed batch
-    * REPLACES its own partitions on both sides (a changed or empty
-    * replay drops its stale partitions), so restarts never double-
-    * or half-land a batch.
+    * replay. Both are [[graft.sources.Snapshots]] stores the first
+    * non-empty epoch creates; each non-empty epoch publishes to both
+    * through one keyed [[graft.sources.Snapshots.commitTogether]]
+    * (the [[nearDupIngest]] contract: first committed attempt wins,
+    * a replay is a no-op), so restarts never double- or half-land a
+    * batch.
     *
     * Parsing uses `from_json` in PERMISSIVE mode with the corrupt
     * column — per-batch, stateless, the exact batch-reader
@@ -582,14 +526,8 @@ object GraftStream {
     import graft.sources.JsonlIngest
     require(!schema.fieldNames.contains(JsonlIngest.CorruptCol),
       s"schema already contains ${JsonlIngest.CorruptCol}")
-    val s = batch.sparkSession
-    // landOrDrop via IngestPartition also gains the pre-ingest_key
-    // layout guard the other sinks enforce (this sink used to write
-    // unguarded — a legacy flat store would have been corrupted
-    // silently)
-    val ip = IngestPartition(s, streamId, batchId)
-    def landOrDrop(df: DataFrame, url: String): Unit =
-      ip.landOrDrop(df, url)
+    requireStreamId(streamId)
+    if (batch.isEmpty) return
     val withCorrupt = org.apache.spark.sql.types.StructType(
       schema.fields :+ org.apache.spark.sql.types.StructField(
         JsonlIngest.CorruptCol,
@@ -606,120 +544,12 @@ object GraftStream {
       // all-null admitted row
       val bad = col("__j").isNull ||
         col(s"__j.${JsonlIngest.CorruptCol}").isNotNull
-      landOrDrop(
-        parsed.filter(!bad)
+      commitEpochTogether(s"${streamId}_b$batchId", Seq(
+        goodUrl -> parsed.filter(!bad)
           .select(schema.fieldNames.map(f => col(s"__j.$f")): _*),
-        goodUrl)
-      landOrDrop(
-        parsed.filter(bad).select(col("value").as("raw_line")),
-        quarantineUrl)
+        quarantineUrl -> parsed.filter(bad)
+          .select(col("value").as("raw_line"))))
     } finally parsed.unpersist()
-  }
-
-  /** Compact an ingest-keyed store ([[nearDupIngest]] /
-    * [[lmGateIngest]] output) IN PLACE, partition by partition — the
-    * maintenance pass those sinks document ("compact them offline"):
-    * a long-lived stream lands one directory per batch and several
-    * files per directory, and [[graft.sources.Snapshots.compactSmall]]
-    * packs only manifest stores. Compacting WITHIN partitions
-    * preserves the partition-per-batch idempotency unit, so a later
-    * replay of a compacted batch still overwrites exactly its own
-    * partition.
-    *
-    * Per partition: if the file count exceeds what `targetFileMb`
-    * implies, rewrite into a `_compact_tmp` subdir (underscore =
-    * invisible to readers), then commit with a marker protocol:
-    * a `_COMMIT` file LISTING the old file names is created only
-    * once staging is complete — from that point the staged set is
-    * the truth — then old files are deleted and staged files
-    * promoted by renames. Crash-safe at every point: a rerun that
-    * finds `_compact_tmp` WITHOUT the marker rolls back (deletes
-    * the partial staging; old files were never touched), and WITH
-    * the marker rolls forward (deletes any listed old files still
-    * visible, promotes the remaining staged files) — no state loses
-    * rows or double-counts them. Concurrent readers can catch one
-    * partition's brief promote window — run it on retired streams
-    * or quiet stores. Returns (partitionsRewritten, filesBefore,
-    * filesAfter). */
-  def compactIngestStore(spark: SparkSession, url: String,
-      targetFileMb: Int = 256): (Int, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    require(targetFileMb > 0, s"targetFileMb must be positive (got $targetFileMb)")
-    val root = new Path(url)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(root), s"no store at $url")
-    val parts = fs.listStatus(root).filter(s => s.isDirectory &&
-      s.getPath.getName.startsWith("ingest_key="))
-    require(parts.nonEmpty, s"store at $url has no ingest_key " +
-      "partitions — use Snapshots.compactSmall for snapshot stores")
-    var rewritten = 0
-    var before = 0
-    var after = 0
-    parts.foreach { p =>
-      val tmp = new Path(p.getPath, "_compact_tmp")
-      val marker = new Path(tmp, "_COMMIT")
-      def promote(): Int = {
-        val staged = fs.listStatus(tmp).filter(f =>
-          f.isFile && f.getPath.getName.endsWith(".parquet"))
-        staged.foreach { f =>
-          require(fs.rename(f.getPath, new Path(p.getPath, f.getPath.getName)),
-            s"rename failed promoting ${f.getPath.getName}")
-        }
-        fs.delete(tmp, true)
-        staged.length
-      }
-      // recovery from a crashed previous run: marker present means
-      // the staged set was committed — roll FORWARD (delete any
-      // listed old files still visible, promote the rest); marker
-      // absent means staging never completed — roll BACK (old files
-      // were never touched)
-      if (fs.exists(tmp)) {
-        if (fs.exists(marker)) {
-          val in = fs.open(marker)
-          val listed = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().filter(_.nonEmpty).toList finally in.close()
-          listed.foreach { n =>
-            val f = new Path(p.getPath, n)
-            if (fs.exists(f)) fs.delete(f, false)
-          }
-          // the marker dies only WITH the tmp dir (inside promote):
-          // deleting it earlier would turn a crash here into a
-          // rollback of committed data after the olds are gone
-          promote()
-        } else fs.delete(tmp, true)
-      }
-      val files = fs.listStatus(p.getPath).filter(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))
-      before += files.length
-      val bytes = files.map(_.getLen).sum
-      val nOut = math.max(1,
-        math.ceil(bytes.toDouble / (targetFileMb.toLong << 20)).toInt)
-      if (files.length > nOut) {
-        // partition files carry no ingest_key column (it lives in the
-        // directory name), so a partition-scoped rewrite round-trips
-        // the rows as-is; coalesce, not repartition — merging small
-        // files needs no exchange
-        spark.read.parquet(p.getPath.toString).coalesce(nOut)
-          .write.mode("overwrite").parquet(tmp.toString)
-        // commit point: the marker records exactly which old files
-        // the staged set replaces. Staged under a temp name and
-        // RENAMED into place — create-then-write would make a
-        // half-written marker visible to a crash-recovery run, which
-        // would read a truncated old-file list and roll forward into
-        // duplicated rows
-        val markerTmp = new Path(tmp, "_COMMIT_tmp")
-        val out = fs.create(markerTmp, false)
-        try out.write(files.map(_.getPath.getName).mkString("\n")
-          .getBytes("UTF-8"))
-        finally out.close()
-        require(fs.rename(markerTmp, marker),
-          s"marker commit failed at $marker")
-        files.foreach(f => fs.delete(f.getPath, false))
-        after += promote()
-        rewritten += 1
-      } else after += files.length
-    }
-    (rewritten, before, after)
   }
 
   /** Stream-stream interval join: pair each left row with the right

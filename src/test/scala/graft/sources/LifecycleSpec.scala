@@ -371,6 +371,28 @@ class LifecycleSpec extends SparkSpec {
     } finally sc.removeSparkListener(l)
   }
 
+  test("writeMetadata runs no Spark job; loadSchema still reads a " +
+      "sidecar carrying the old rowGroupCounts census") {
+    val u = scratch("sidecar-nojob-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    spark.range(10).toDF("id").repartition(2).write.parquet(u)
+    val plain = GraftSchema("plain", Seq(FieldSpec("id", LongType)))
+    assert(jobsDuring(Materialize.writeMetadata(spark, u, plain)) == 0)
+    val sidecar = java.nio.file.Paths.get(u, Materialize.SidecarName)
+    assert(!new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8")
+      .contains("rowGroupCounts"))
+    assert(Materialize.loadSchema(spark, u).map(_.fields) ==
+      Some(plain.fields))
+    // a sidecar written before the census was dropped
+    java.nio.file.Files.write(sidecar,
+      (s"""{"version":1,"schema":${schema.toJson},""" +
+        """"rowGroupCounts":{"part-0.parquet":1,"part-1.parquet":2}}""")
+        .getBytes("UTF-8"))
+    new java.io.File(u, s".${Materialize.SidecarName}.crc").delete()
+    assert(Materialize.loadSchema(spark, u).map(_.fields) ==
+      Some(schema.fields))
+  }
+
   test("load() plans without a Spark job; the storage schema is Spark's " +
       "inferred one") {
     assert(jobsDuring(GraftRead.reader(spark, url).shuffle(7).load()) == 0)

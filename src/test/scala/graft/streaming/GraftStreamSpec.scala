@@ -152,6 +152,25 @@ class GraftStreamSpec extends SparkSpec {
     assert(GraftRead.reader(spark, url).load().count() == 2)
   }
 
+  test("file-stream reader refuses a sink store") {
+    val url = scratch("sink-stream-read-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    val ckpt = freshCkpt("stream-read")
+    val schema = GraftSchema("streamread", Seq(FieldSpec("id", LongType)))
+    GraftStream.sinkBatch(Seq(1L, 2L).toDF("id"), 0L, url, schema, ckpt)
+    GraftStream.sinkBatch(Seq(3L).toDF("id"), 1L, url, schema, ckpt)
+    Snapshots.compactSmall(spark, url, smallBytes = 1L << 20)
+    // listing the directory would stream the pre- and post-compaction
+    // files alike (1,1,2,2,3,3); the manifest readers see 1,2,3
+    val e = intercept[IllegalArgumentException] {
+      GraftStream.reader(spark, url).load()
+    }
+    assert(e.getMessage.contains("GraftRead") &&
+      e.getMessage.contains("readStream.table"))
+    assert(GraftRead.reader(spark, url).load().select($"id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("watermarked tumbling-window counts over event time") {
     val input = MemoryStream[(Timestamp, String)](spark)
     val counts = GraftStream.windowedCounts(

@@ -1,12 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.sources.Snapshots
 
-/** jsonlQuarantineBatch: routing, replay idempotency, and the
-  * changed/empty-replay partition hygiene. */
+/** jsonlQuarantineBatch: routing, one keyed commit per batch across
+  * both stores, and the replay contract (first committed attempt
+  * wins). */
 class JsonlIngestStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,49 +19,71 @@ class JsonlIngestStreamSpec extends SparkSpec {
     GraftStream.jsonlQuarantineBatch(lines.toDF("value"), batchId,
       schema, s"$base/good", s"$base/bad", "t")
 
+  /** A new directory per run: the stores are manifest stores, and a
+    * leftover from an earlier run would already hold the keys. */
+  private def fresh(name: String): String =
+    scratch(s"$name-${java.util.UUID.randomUUID().toString.take(8)}")
+
+  private def read(url: String): DataFrame = Snapshots.read(spark, url)
+
+  private def ops(url: String): Seq[String] =
+    Snapshots.history(spark, url).orderBy($"version").select($"op")
+      .as[String].collect().toSeq
+
   test("routes good and corrupt lines to their stores") {
-    val base = scratch("jsonl_stream_route")
+    val base = fresh("jsonl_stream_route")
     run(Seq("""{"id":1,"s":"a"}""", "broken {", """{"id":2,"s":"b"}"""),
       0L, base)
-    val good = spark.read.parquet(s"$base/good")
+    val good = read(s"$base/good")
     assert(good.select("id").as[Long].collect().toSet == Set(1L, 2L))
-    val bad = spark.read.parquet(s"$base/bad")
+    val bad = read(s"$base/bad")
     assert(bad.select("raw_line").as[String].collect().toSeq ==
       Seq("broken {"))
   }
 
   test("same-batch replay replaces, never duplicates") {
-    val base = scratch("jsonl_stream_replay")
+    val base = fresh("jsonl_stream_replay")
     run(Seq("""{"id":1,"s":"a"}""", "x"), 0L, base)
     run(Seq("""{"id":1,"s":"a"}""", "x"), 0L, base)
-    assert(spark.read.parquet(s"$base/good").count() == 1L)
-    assert(spark.read.parquet(s"$base/bad").count() == 1L)
+    assert(read(s"$base/good").count() == 1L)
+    assert(read(s"$base/bad").count() == 1L)
+    Seq("good", "bad").foreach { store =>
+      assert(ops(s"$base/$store") == Seq("create", "txn-append:t_b0"))
+    }
   }
 
-  test("changed replay drops the stale side's partition") {
-    val base = scratch("jsonl_stream_changed")
+  test("changed replay of a committed batch is a no-op on both stores") {
+    val base = fresh("jsonl_stream_changed")
     run(Seq("""{"id":1,"s":"a"}""", "x"), 0L, base)
-    // replay now parses clean — the quarantine partition must go
+    // the replay now parses clean, but the first committed attempt
+    // wins: the quarantined line stays, the new good row never lands
     run(Seq("""{"id":1,"s":"a"}""", """{"id":2,"s":"b"}"""), 0L, base)
-    assert(spark.read.parquet(s"$base/good").count() == 2L)
-    val badDir = new java.io.File(s"$base/bad/ingest_key=t_b0")
-    assert(!badDir.exists())
+    assert(read(s"$base/good").select("id").as[Long].collect().toSeq ==
+      Seq(1L))
+    assert(read(s"$base/bad").select("raw_line").as[String].collect()
+      .toSeq == Seq("x"))
+    Seq("good", "bad").foreach { store =>
+      assert(ops(s"$base/$store") == Seq("create", "txn-append:t_b0"))
+    }
   }
 
   test("batches accumulate by partition") {
-    val base = scratch("jsonl_stream_acc")
+    val base = fresh("jsonl_stream_acc")
     run(Seq("""{"id":1,"s":"a"}"""), 0L, base)
     run(Seq("""{"id":2,"s":"b"}"""), 1L, base)
-    val good = spark.read.parquet(s"$base/good")
-    assert(good.count() == 2L)
-    assert(good.select("ingest_key").distinct().count() == 2L)
+    assert(read(s"$base/good").count() == 2L)
+    // one keyed commit per batch, on the quarantine side too
+    Seq("good", "bad").foreach { store =>
+      assert(ops(s"$base/$store") ==
+        Seq("create", "txn-append:t_b0", "txn-append:t_b1"))
+    }
   }
 
   test("empty line and type mismatch both quarantine") {
-    val base = scratch("jsonl_stream_types")
+    val base = fresh("jsonl_stream_types")
     run(Seq("", """{"id":"NaN-ish","s":"a"}""", """{"id":3,"s":"c"}"""),
       0L, base)
-    assert(spark.read.parquet(s"$base/good").count() == 1L)
-    assert(spark.read.parquet(s"$base/bad").count() == 2L)
+    assert(read(s"$base/good").count() == 1L)
+    assert(read(s"$base/bad").count() == 2L)
   }
 }

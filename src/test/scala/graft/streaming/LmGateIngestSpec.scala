@@ -1,14 +1,17 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.ops.TextAnalysis
+import graft.sources.Snapshots
 
-/** lmGateIngest: static-LM gating per micro-batch, partition-per-
-  * batch layout, replay idempotence incl. the changed-admissions
-  * and empty-replay edges.
+/** lmGateIngest: static-LM gating per micro-batch, one keyed commit
+  * per batch, replay idempotence incl. the changed-admissions and
+  * empty-replay edges, and the refusal of a pre-manifest layout.
   */
 class LmGateIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -30,6 +33,10 @@ class LmGateIngestSpec extends SparkSpec {
     assert(dst.setLastModified(modTime))
   }
 
+  private def ops(url: String): Seq[String] =
+    Snapshots.history(spark, url).orderBy($"version").select($"op")
+      .as[String].collect().toSeq
+
   test("multi-batch gate: admitted docs land per-batch and equal " +
       "the batch scoring; below-threshold docs are dropped") {
     val root = scratch("lmg-" + java.util.UUID.randomUUID().toString.take(8))
@@ -47,16 +54,16 @@ class LmGateIngestSpec extends SparkSpec {
       .option("checkpointLocation", s"$root/ckpt")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
-    val out = spark.read.parquet(s"$root/out")
-      .select($"doc_id", $"text", $"mean_ppm", $"ingest_key")
-      .as[(Long, String, Long, String)].collect().toSet
-    assert(out == Set(
-      (10L, "a b a b", 833333L, "run1_b0"),
-      (20L, "a b", 1000000L, "run1_b1")))
+    val out = Snapshots.read(spark, s"$root/out")
+      .select($"doc_id", $"text", $"mean_ppm")
+      .as[(Long, String, Long)].collect().toSet
+    assert(out == Set((10L, "a b a b", 833333L), (20L, "a b", 1000000L)))
+    assert(ops(s"$root/out") ==
+      Seq("create", "append:run1_b0", "append:run1_b1"))
   }
 
-  test("replay idempotence: same batch twice = one copy; a replay " +
-      "with nothing admitted drops its own stale partition") {
+  test("replay idempotence: same batch twice = one copy; a changed " +
+      "replay of a committed batch is a no-op") {
     val root = scratch("lmg-" + java.util.UUID.randomUUID().toString.take(8))
     val (uni, bi) = lm
     val b0 = Seq((1L, "a b a b")).toDF("doc_id", "text")
@@ -64,82 +71,15 @@ class LmGateIngestSpec extends SparkSpec {
       500000L, s"$root/out", "run1")
     GraftStream.lmGateBatch(b0, 0L, "doc_id", "text", uni, bi,
       500000L, s"$root/out", "run1")
-    assert(spark.read.parquet(s"$root/out").count() == 1L)
-    // replay of batch 0 that now admits nothing: partition vanishes
+    assert(Snapshots.read(spark, s"$root/out").count() == 1L)
+    // replay of batch 0 that now admits nothing: the first committed
+    // attempt wins
     GraftStream.lmGateBatch(
       Seq((1L, "x y")).toDF("doc_id", "text"), 0L, "doc_id", "text",
       uni, bi, 500000L, s"$root/out", "run1")
-    val p = new java.io.File(s"$root/out/ingest_key=run1_b0")
-    assert(!p.exists(), "stale partition survived a changed replay")
-  }
-
-  test("compactIngestStore: per-partition file merge, data and " +
-      "layout intact, idempotent, replay still partition-scoped") {
-    val root = scratch("lmg-" + java.util.UUID.randomUUID().toString.take(8))
-    val url = s"$root/out"
-    // two batches in the gate's schema, each force-written as 4
-    // files per partition
-    val rows = (1L to 40L).map(i => (i, s"doc $i body", 1L, 0L, 0L))
-    val cols = Seq("doc_id", "text", "n_trans", "score_sum", "mean_ppm")
-    rows.take(20).toDF(cols: _*).repartition(4)
-      .withColumn("ingest_key", lit("run1_b0"))
-      .write.partitionBy("ingest_key").parquet(url)
-    rows.drop(20).toDF(cols: _*).repartition(4)
-      .withColumn("ingest_key", lit("run1_b1"))
-      .write.mode("append").partitionBy("ingest_key").parquet(url)
-    val beforeData = spark.read.parquet(url)
-      .select($"doc_id", $"text", $"ingest_key")
-      .as[(Long, String, String)].collect().toSet
-    val (rw, nb, na) = GraftStream.compactIngestStore(spark, url)
-    assert(rw == 2 && nb == 8 && na == 2, s"($rw, $nb, $na)")
-    val afterData = spark.read.parquet(url)
-      .select($"doc_id", $"text", $"ingest_key")
-      .as[(Long, String, String)].collect().toSet
-    assert(afterData == beforeData)
-    // second pass: nothing left to do
-    assert(GraftStream.compactIngestStore(spark, url) == ((0, 2, 2)))
-    // a replay after compaction still overwrites ONLY its partition
-    val (uni, bi) = lm
-    GraftStream.lmGateBatch(Seq((99L, "a b a b")).toDF("doc_id", "text"),
-      0L, "doc_id", "text", uni, bi, 500000L, url, "run1")
-    val post = spark.read.parquet(url)
-      .select($"doc_id", $"ingest_key").as[(Long, String)].collect().toSet
-    assert(post.filter(_._2 == "run1_b0").map(_._1) == Set(99L))
-    assert(post.filter(_._2 == "run1_b1").map(_._1) == (21L to 40L).toSet)
-  }
-
-  test("compactIngestStore crash recovery: committed staging rolls " +
-      "FORWARD (no rows lost), uncommitted staging rolls BACK") {
-    val root = scratch("lmg-" + java.util.UUID.randomUUID().toString.take(8))
-    val url = s"$root/out"
-    val cols = Seq("doc_id", "text", "n_trans", "score_sum", "mean_ppm")
-    (1L to 20L).map(i => (i, s"doc $i", 1L, 0L, 0L)).toDF(cols: _*)
-      .repartition(3).withColumn("ingest_key", lit("run1_b0"))
-      .write.partitionBy("ingest_key").parquet(url)
-    val part = new java.io.File(s"$url/ingest_key=run1_b0")
-    def parquets() = part.listFiles().filter(_.getName.endsWith(".parquet"))
-    // simulate a crash AFTER the commit marker and old-file deletes,
-    // BEFORE promotion: stage the coalesced rewrite, write _COMMIT
-    // listing the olds, delete the olds
-    val tmp = new java.io.File(part, "_compact_tmp")
-    spark.read.parquet(part.getAbsolutePath).coalesce(1)
-      .write.parquet(tmp.getAbsolutePath)
-    val oldNames = parquets().map(_.getName)
-    java.nio.file.Files.write(new java.io.File(tmp, "_COMMIT").toPath,
-      oldNames.mkString("\n").getBytes("UTF-8"))
-    oldNames.foreach(n => new java.io.File(part, n).delete())
-    // the store now looks EMPTY to readers — recovery must restore it
-    val (rw, nb, na) = GraftStream.compactIngestStore(spark, url)
-    assert(!tmp.exists())
-    assert((rw, nb, na) == ((0, 1, 1)), s"($rw, $nb, $na)")
-    assert(spark.read.parquet(url).select($"doc_id")
-      .as[Long].collect().toSet == (1L to 20L).toSet)
-    // uncommitted staging (no marker): roll back, old rows untouched
-    spark.read.parquet(part.getAbsolutePath).limit(3).coalesce(1)
-      .write.parquet(tmp.getAbsolutePath)
-    assert(GraftStream.compactIngestStore(spark, url) == ((0, 1, 1)))
-    assert(!tmp.exists())
-    assert(spark.read.parquet(url).count() == 20L)
+    assert(Snapshots.read(spark, s"$root/out").select($"doc_id")
+      .as[Long].collect().toSeq == Seq(1L))
+    assert(ops(s"$root/out") == Seq("create", "append:run1_b0"))
   }
 
   test("empty replay on a store that does not exist yet is a no-op") {
@@ -149,5 +89,31 @@ class LmGateIngestSpec extends SparkSpec {
       spark.emptyDataset[(Long, String)].toDF("doc_id", "text"),
       0L, "doc_id", "text", uni, bi, 500000L, s"$root/out", "run1")
     assert(!new java.io.File(s"$root/out").exists())
+  }
+
+  test("a target holding the old ingest_key= layout is refused and " +
+      "left byte-untouched") {
+    val root = scratch("lmg-" + java.util.UUID.randomUUID().toString.take(8))
+    val url = s"$root/out"
+    Seq((1L, "a b", 1L, 0L, 1000000L))
+      .toDF("doc_id", "text", "n_trans", "score_sum", "mean_ppm")
+      .withColumn("ingest_key", lit("run1_b0"))
+      .write.partitionBy("ingest_key").parquet(url)
+    def files(): Map[String, Seq[Byte]] = {
+      val rootPath = java.nio.file.Paths.get(url)
+      val walk = java.nio.file.Files.walk(rootPath)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => rootPath.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = files()
+    val (uni, bi) = lm
+    val e = intercept[IllegalArgumentException] {
+      GraftStream.lmGateBatch(Seq((2L, "a b a b")).toDF("doc_id", "text"),
+        1L, "doc_id", "text", uni, bi, 500000L, url, "run1")
+    }
+    assert(e.getMessage.contains("no _snap manifest"))
+    assert(files() == before)
   }
 }

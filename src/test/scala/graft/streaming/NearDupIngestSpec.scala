@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.sources.Snapshots
 
 /** nearDupIngest: cross-batch pairing against the persisted band
   * table, no intra-batch or self pairs, corpus accretion, restart
-  * continuity.
+  * continuity, and the keyed-commit replay contract (first committed
+  * attempt wins; a crashed publish rolls forward).
   */
 class NearDupIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -38,6 +40,47 @@ class NearDupIngestSpec extends SparkSpec {
     q.awaitTermination(120000)
   }
 
+  private def read(url: String): DataFrame = Snapshots.read(spark, url)
+
+  private def ops(url: String): Seq[String] =
+    Snapshots.history(spark, url).orderBy($"version").select($"op")
+      .as[String].collect().toSeq
+
+  /** Every row of the three stores plus their commit logs. */
+  private def state(root: String): Seq[Any] =
+    Seq("bands", "docs", "pairs").flatMap { store =>
+      Seq(read(s"$root/$store").collect().map(_.toString).sorted.toSeq,
+        ops(s"$root/$store"))
+    }
+
+  /** Hand-place the state a crash in the middle of the latest
+    * publish (`key`) leaves: the intent journal naming every store's
+    * staged files is open, the bands manifest committed, the docs and
+    * pairs manifests not. */
+  private def crashLatestPublish(root: String, key: String): Unit = {
+    val urls = Seq("bands", "docs", "pairs").map(st => s"$root/$st")
+    val staged = urls.map { u =>
+      val v = Snapshots.latest(spark, u)
+      u -> (Snapshots.snap(spark, u, v).files.toSet --
+        Snapshots.snap(spark, u, v - 1).files).toSeq.sorted
+    }
+    val journal = s"""{"txn":"crashed0","key":"$key","parts":[""" +
+      staged.map { case (u, fs) =>
+        s"""{"url":"$u","files":[""" +
+          fs.map("\"" + _ + "\"").mkString(",") + "]}"
+      }.mkString(",") + "]}"
+    urls.foreach { u =>
+      val txn = new java.io.File(s"$u/_txn"); txn.mkdirs()
+      java.nio.file.Files.write(new java.io.File(txn, "crashed0").toPath,
+        journal.getBytes("UTF-8"))
+    }
+    urls.tail.foreach { u =>
+      val v = Snapshots.latest(spark, u)
+      new java.io.File(f"$u/_snap/v$v%08d.json").delete()
+      new java.io.File(f"$u/_snap/.v$v%08d.json.crc").delete()
+    }
+  }
+
   test("batches pair only against earlier batches; corpus accretes") {
     val root = scratch("ndi-" + java.util.UUID.randomUUID().toString.take(8))
     val srcDir = new java.io.File(s"$root/src"); srcDir.mkdirs()
@@ -52,7 +95,7 @@ class NearDupIngestSpec extends SparkSpec {
           "tomatoes basil garlic olive oil and fresh bread rolls")))
     ingest(srcDir.getAbsolutePath, root)
 
-    val pairs = spark.read.parquet(s"$root/pairs")
+    val pairs = read(s"$root/pairs")
       .select("id_new", "id_corpus", "jaccard_ppm")
       .as[(Long, Long, Long)].collect().toSet
     // batch-2 doc 10 pairs with BOTH batch-1 docs (1 and 2); doc 11
@@ -60,9 +103,13 @@ class NearDupIngestSpec extends SparkSpec {
     assert(pairs.map(p => (p._1, p._2)) == Set((10L, 1L), (10L, 2L)))
     assert(pairs.forall(_._3 >= 500000L))
     // corpus now holds all four docs' bands and texts
-    assert(spark.read.parquet(s"$root/docs").count() == 4)
-    assert(spark.read.parquet(s"$root/bands")
-      .select("doc_id").distinct().count() == 4)
+    assert(read(s"$root/docs").count() == 4)
+    assert(read(s"$root/bands").select("doc_id").distinct().count() == 4)
+    // one keyed commit per epoch in every store
+    Seq("bands", "docs", "pairs").foreach { store =>
+      assert(ops(s"$root/$store") ==
+        Seq("create", "txn-append:run1_b0", "txn-append:run1_b1"))
+    }
   }
 
   test("a later run (restart) pairs against the persisted corpus") {
@@ -86,7 +133,7 @@ class NearDupIngestSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
 
-    val pairs = spark.read.parquet(s"$root/state/pairs")
+    val pairs = read(s"$root/state/pairs")
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
     assert(pairs == Set((20L, 1L)))
   }
@@ -102,7 +149,7 @@ class NearDupIngestSpec extends SparkSpec {
         s"$root/bands", s"$root/docs", s"$root/pairs", streamId = "r")
     ingest(b1, 0)
     ingest(b2, 1)
-    val firstPairs = spark.read.parquet(s"$root/pairs")
+    val firstPairs = read(s"$root/pairs")
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
     // batch-2 docs pair only with batch-1 corpus docs — never with
     // each other (10/11 are near-identical, so a self-corpus bug
@@ -110,30 +157,31 @@ class NearDupIngestSpec extends SparkSpec {
     assert(firstPairs.nonEmpty)
     assert(firstPairs.forall { case (n, c) =>
       Set(10L, 11L)(n) && Set(1L, 2L)(c) })
+    val committed = state(root)
     // the retry: batch 2 replays AFTER its bands/docs/pairs landed —
-    // it must not see itself as corpus, and must not duplicate rows
+    // its key is committed, so it is a no-op
     ingest(b2, 1)
-    val replayPairs = spark.read.parquet(s"$root/pairs")
+    val replayPairs = read(s"$root/pairs")
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSeq
     assert(replayPairs.toSet == firstPairs)
-    assert(replayPairs.size == firstPairs.size) // overwrote, not appended
-    assert(spark.read.parquet(s"$root/docs").count() == 4)
-    assert(spark.read.parquet(s"$root/bands")
+    assert(replayPairs.size == firstPairs.size)
+    assert(read(s"$root/docs").count() == 4)
+    assert(read(s"$root/bands")
       .groupBy("doc_id", "band_key").count()
       .filter($"count" > 1).isEmpty)
+    assert(state(root) == committed)
     // replay with a stricter threshold (operator restarted with new
-    // args): the batch now verifies ZERO pairs — its stale pre-crash
-    // partition must be CLEARED, not left in place by a skipped write
+    // args): the first committed attempt wins, so the committed
+    // pairs are unchanged
     GraftStream.ingestBatch(b2, 1, "doc_id", "text",
       s"$root/bands", s"$root/docs", s"$root/pairs", streamId = "r",
       minJaccardPpm = 1000000L)
-    assert(!new java.io.File(s"$root/pairs/ingest_key=r_b1").exists(),
-      "stale pairs partition survived an empty-result replay")
+    assert(state(root) == committed)
   }
 
-  test("empty-replay hygiene: a batch that re-reads as EMPTY clears " +
-      "its pre-crash partitions instead of leaving them as corpus " +
-      "(r8 advice)") {
+  test("an empty re-read of a committed batch leaves the stores " +
+      "unchanged, and the next batch pairs only against the committed " +
+      "corpus") {
     val root = scratch("ndi5-" + java.util.UUID.randomUUID().toString.take(8))
     val b1 = Seq((1L, base)).toDF("doc_id", "text")
     val b2 = Seq((10L, base + " indeed")).toDF("doc_id", "text")
@@ -141,21 +189,18 @@ class NearDupIngestSpec extends SparkSpec {
       GraftStream.ingestBatch(df, id, "doc_id", "text",
         s"$root/bands", s"$root/docs", s"$root/pairs", streamId = "r")
     ingest(b1, 0)
-    ingest(b2, 1) // pre-crash attempt: bands/docs/pairs for r_b1 land
-    assert(new java.io.File(s"$root/bands/ingest_key=r_b1").exists())
+    ingest(b2, 1)
+    val committed = state(root)
     // the replay re-reads batch 1 as EMPTY (retention expiry on a
-    // non-replayable source): every r_b1 partition must be dropped
+    // non-replayable source): an empty epoch commits nothing
     ingest(b1.filter($"doc_id" < 0L), 1)
-    Seq("bands", "docs", "pairs").foreach { store =>
-      assert(!new java.io.File(s"$root/$store/ingest_key=r_b1").exists(),
-        s"stale $store partition survived an empty replay")
-    }
-    // batch 1's corpus is intact; a later batch pairs against it only
-    ingest(b2, 2)
-    val pairs = spark.read.parquet(s"$root/pairs")
+    assert(state(root) == committed)
+    // the corpus is batches 0 and 1 as committed: a new doc pairs
+    // with both, and with nothing else
+    ingest(Seq((20L, base + " again")).toDF("doc_id", "text"), 2)
+    val pairs = read(s"$root/pairs")
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((10L, 1L)),
-      s"ghost corpus rows from the dropped batch resurfaced: $pairs")
+    assert(pairs == Set((10L, 1L), (20L, 1L), (20L, 10L)), s"$pairs")
   }
 
   test("partial-crash replay: bands landed, docs/pairs did not " +
@@ -169,25 +214,44 @@ class NearDupIngestSpec extends SparkSpec {
         s"$root/bands", s"$root/docs", s"$root/pairs", streamId = "r")
     ingest(b1, 0)
     ingest(b2, 1)
-    // simulate the crash point: batch 1's BANDS write committed but
-    // its docs/pairs writes did not
-    def rmr(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmr)
-      f.delete()
-    }
-    rmr(new java.io.File(s"$root/docs/ingest_key=r_b1"))
-    rmr(new java.io.File(s"$root/pairs/ingest_key=r_b1"))
-    // the retry: its own pre-crash bands are in the store but must be
-    // invisible to it
+    val faultFree = state(root)
+    crashLatestPublish(root, "r_b1")
+    assert(read(s"$root/docs").count() == 1)
+    assert(Snapshots.pendingTxns(spark, s"$root/bands") == Seq("crashed0"))
+    // the retry rolls the crashed publish forward and then finds its
+    // key committed: it never pairs the batch against its own bands
     ingest(b2, 1)
-    val pairs = spark.read.parquet(s"$root/pairs")
+    val pairs = read(s"$root/pairs")
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
     assert(pairs.nonEmpty)
     assert(pairs.forall { case (n, c) => Set(10L, 11L)(n) && c == 1L },
       s"self-pairs leaked through a partial-crash replay: $pairs")
-    assert(spark.read.parquet(s"$root/docs").count() == 3)
-    assert(spark.read.parquet(s"$root/bands")
+    assert(read(s"$root/docs").count() == 3)
+    assert(read(s"$root/bands")
       .groupBy("doc_id", "band_key").count()
       .filter($"count" > 1).isEmpty)
+    assert(state(root) == faultFree)
+    Seq("bands", "docs", "pairs").foreach { st =>
+      assert(Snapshots.pendingTxns(spark, s"$root/$st").isEmpty)
+    }
+  }
+
+  test("a batch after a crashed publish pairs against the " +
+      "rolled-forward corpus") {
+    val root = scratch("ndi6-" + java.util.UUID.randomUUID().toString.take(8))
+    def ingest(df: DataFrame, id: Long): Unit =
+      GraftStream.ingestBatch(df, id, "doc_id", "text",
+        s"$root/bands", s"$root/docs", s"$root/pairs", streamId = "r")
+    ingest(Seq((1L, base)).toDF("doc_id", "text"), 0)
+    ingest(Seq((10L, base + " indeed")).toDF("doc_id", "text"), 1)
+    crashLatestPublish(root, "r_b1")
+    // batch 1's bands are visible but its docs are not until the
+    // journal rolls forward: a corpus read before that would drop
+    // the (20, 10) candidate at verification
+    ingest(Seq((20L, base + " indeed again")).toDF("doc_id", "text"), 2)
+    val pairs = read(s"$root/pairs")
+      .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((10L, 1L), (20L, 1L), (20L, 10L)), s"$pairs")
+    assert(read(s"$root/docs").count() == 3)
   }
 }
