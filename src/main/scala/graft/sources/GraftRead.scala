@@ -1,15 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 
 import graft.functions.GraftFunctions
 import graft.ops.TransformSpec
@@ -306,13 +300,10 @@ final case class GraftRead private (
     val opts = Map("basePath" -> urls.head).filter(_ => singleDir) ++
       Map("mergeSchema" -> "true").filter(_ => allowEvolution)
     // the storage schema comes from the one footer Spark's inference
-    // would read, so planning runs no Spark job; `.evolved` keeps
-    // Spark's merging inference, which reads every footer
-    val stored =
-      if (allowEvolution) None
-      else GraftRead.footerSchema(spark, hadoopConf, readFiles)
-    val storage0 = stored.foldLeft(spark.read.options(opts))(_.schema(_))
-      .parquet(readFiles: _*)
+    // would read (ParquetRead), so planning runs no Spark job;
+    // `.evolved` keeps Spark's merging inference, which reads every
+    // footer
+    val storage0 = ParquetRead(spark, readFiles, opts)
     val storage = if (emptySelection) storage0.limit(0) else storage0
 
     // 2. schema: stored or inferred (dataset_metadata.py:410-418);
@@ -404,49 +395,6 @@ final case class GraftRead private (
 object GraftRead {
   def reader(spark: SparkSession, url: String): GraftRead =
     reader(spark, Seq(url))
-
-  /** The data schema `spark.read.parquet(files: _*)` infers, read on
-    * the driver from the one footer that inference reads. With
-    * `mergeSchema` off, Spark's parquet inference
-    * (`ParquetUtils.inferSchema`) prefers a `_common_metadata` or
-    * `_metadata` summary file, else reads the first data file in
-    * qualified-path order, and converts its footer with
-    * `readSchemaFromFooter` and a converter built from the session
-    * confs; both are repeated here without the inference job. None
-    * (the caller lets Spark infer) when the answer could differ: a
-    * `_`/`.` file name (a summary file, or one Spark may list
-    * differently), a stored column that is also a `name=value`
-    * directory (partition typing would then follow the given schema),
-    * or any failure to read the footer, which inference then reports
-    * as it always did. */
-  private def footerSchema(spark: SparkSession, conf: Configuration,
-      files: Seq[String]): Option[StructType] = try {
-    val qualified = files.map { f =>
-      val p = new Path(f)
-      p.getFileSystem(conf).makeQualified(p)
-    }.sortBy(_.toString)
-    val hidden = qualified.exists(p =>
-      p.getName.startsWith("_") || p.getName.startsWith("."))
-    qualified.headOption.filter(_ => !hidden).flatMap { path =>
-      val st = path.getFileSystem(conf).getFileStatus(path)
-      val footer = new Footer(path, ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
-      val sql = spark.sessionState.conf
-      // the converter ParquetFileFormat.mergeSchemasInParallel builds
-      val converter = new ParquetToSparkSchemaConverter(
-        assumeBinaryIsString = sql.isParquetBinaryAsString,
-        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
-        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
-        nanosAsLong = sql.legacyParquetNanosAsLong,
-        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
-      val schema = ParquetFileFormat.readSchemaFromFooter(footer, converter)
-      val dirKeys = qualified.flatMap { p =>
-        Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != null)
-          .map(_.getName).filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase)
-      }.toSet
-      Some(schema).filter(_.fieldNames.forall(n => !dirKeys(n.toLowerCase)))
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Multi-store reader (`dataset_url_or_urls` parity): one logical
     * dataset over several store URLs with agreeing schemas. */

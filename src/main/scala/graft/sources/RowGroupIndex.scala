@@ -30,8 +30,8 @@ object RowGroupIndex {
     * For `notNull` indexers, value is the constant "__notnull__". */
   def build(spark: SparkSession, datasetUrl: String,
       indexers: Seq[Indexer], indexUrl: String): Unit = {
-    val df = spark.read.parquet(
-      Materialize.listParquetFiles(spark, datasetUrl): _*)
+    val df = ParquetRead(spark,
+      Materialize.listParquetFiles(spark, datasetUrl))
       .withColumn("__file", input_file_name())
     val parts = indexers.map { ix =>
       val projected =
@@ -91,7 +91,7 @@ object RowGroupIndex {
     * scan actually shrank. */
   def selectedFiles(spark: SparkSession, datasetUrl: String,
       indexUrl: String, selector: Selector): Seq[String] = {
-    val index = spark.read.parquet(indexUrl)
+    val index = ParquetRead(spark, indexUrl)
     // normalize: input_file_name() URIs vs Hadoop Path strings differ
     // in scheme rendering (file:/// vs file:/)
     def norm(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
@@ -166,7 +166,7 @@ object RowGroupIndex {
         return true
       case None => return false
     }
-    val known = spark.read.parquet(indexUrl).select("field", "file")
+    val known = ParquetRead(spark, indexUrl).select("field", "file")
       .collect().map(r => (r.getString(0), norm(r.getString(1)))).toSet
     val knownFields = known.map(_._1)
     val fields = fieldsFor(knownFields) match {
@@ -212,7 +212,7 @@ object RowGroupIndex {
     import org.apache.spark.util.sketch.BloomFilter
     def norm(s: String): String =
       new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val df = spark.read.parquet(files: _*)
+    val df = ParquetRead(spark, files)
       .withColumn("__file", input_file_name())
     val parts = fields.map { f =>
       df.select(col("__file"), col(f).cast("string").as("__v"))
@@ -286,7 +286,7 @@ object RowGroupIndex {
       : (Seq[String], Set[String]) = {
     import org.apache.spark.util.sketch.BloomFilter
     val probes = values.map(_.toString).toArray
-    val idx = spark.read.parquet(indexUrl)
+    val idx = ParquetRead(spark, indexUrl)
       .filter(col("field") === field)
     import spark.implicits._
     val rows = idx.mapPartitions { it =>
@@ -312,7 +312,7 @@ object RowGroupIndex {
     * indexed and cannot be bloom-pruned. */
   def bloomCoveredFiles(spark: SparkSession, indexUrl: String,
       field: String): Set[String] =
-    spark.read.parquet(indexUrl)
+    ParquetRead(spark, indexUrl)
       .filter(col("field") === field)
       .select(col("file")).distinct().collect()
       .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName)
@@ -330,8 +330,8 @@ object RowGroupIndex {
       bloomSelectedFiles(spark, datasetUrl, indexUrl, field, values)
     if (selected.isEmpty) {
       val all = Materialize.listParquetFiles(spark, datasetUrl)
-      spark.read.option("basePath", datasetUrl).parquet(all: _*).limit(0)
-    } else spark.read.option("basePath", datasetUrl).parquet(selected: _*)
+      ParquetRead(spark, all, Map("basePath" -> datasetUrl)).limit(0)
+    } else ParquetRead(spark, selected, Map("basePath" -> datasetUrl))
   }
 
   /** Read the dataset scanning ONLY files the selector admits.
@@ -347,8 +347,8 @@ object RowGroupIndex {
     val selected = selectedFiles(spark, datasetUrl, indexUrl, selector)
     if (selected.isEmpty) {
       val all = Materialize.listParquetFiles(spark, datasetUrl)
-      spark.read.option("basePath", datasetUrl).parquet(all: _*).limit(0)
-    } else spark.read.option("basePath", datasetUrl).parquet(selected: _*)
+      ParquetRead(spark, all, Map("basePath" -> datasetUrl)).limit(0)
+    } else ParquetRead(spark, selected, Map("basePath" -> datasetUrl))
   }
 
   /** The index reads list the store's root, and a [[Snapshots]] root

@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * or empty file is covered too) and APPENDS their rows as a new
   * generation part — O(new files) per refresh. Sound because rows are
   * write-once per key and every reader merges by plain union
-  * (`spark.read.parquet(dir)` sees all parts).
+  * ([[ParquetRead]]`(spark, dir)` sees all parts, under the schema of
+  * the first part's footer, the one Spark's inference reads — so a
+  * sidecar's parts share one row shape).
   *
   * Fold: once a directory holds more than [[MaxParts]] data parts,
   * [[append]] rewrites the generations as one part — amortized
@@ -73,7 +75,7 @@ private[sources] object SidecarDelta {
     rows.coalesce(1).write.mode("append").parquet(dir.toString)
     if (dataParts(fs, dir) > MaxParts)
       replace(fs, dir,
-        transform(spark.read.parquet(dir.toString)).coalesce(1))
+        transform(ParquetRead(spark, dir.toString)).coalesce(1))
   }
 
   /** Replace the sidecar's whole content with `rows` by stage-and-
@@ -103,7 +105,7 @@ private[sources] object SidecarDelta {
     if (!fs.exists(dir)) return 0L
     import spark.implicits._
     val keys = live
-    val existing = spark.read.parquet(dir.toString)
+    val existing = ParquetRead(spark, dir.toString)
     val dropped = existing.join(broadcast(keys.toSeq.toDF("__live")),
       col(key) === col("__live"), "left_anti").count()
     if (dropped > 0L)

@@ -350,8 +350,8 @@ object Snapshots {
       require(s.files.nonEmpty, s"v${s.version} has no schema source")
       // composite entries infer from their DATA file (the DV sidecar
       // carries positions, not columns)
-      spark.read.parquet(s.files.map(f =>
-        new Path(root, splitEntry(f)._1).toString): _*).schema
+      ParquetRead(spark, s.files.map(f =>
+        new Path(root, splitEntry(f)._1).toString)).schema
     }
 
   /** Additive schema evolution: base columns keep position and type,
@@ -508,7 +508,7 @@ object Snapshots {
       .groupBy(_._1).toSeq.sortBy(_._1).map { case (dv, group) =>
         val raw = scanWithPos(spark, root, group.map(_._2), schema,
           colmap)
-        val dvDf = spark.read.parquet(new Path(root, dv).toString)
+        val dvDf = ParquetRead(spark, new Path(root, dv).toString)
         dv -> raw.join(dvDf,
           raw(DvFileCol) === dvDf("__dv_file") &&
             raw(DvPosCol) === dvDf("__dv_pos"), "left_anti")
@@ -1104,7 +1104,7 @@ object Snapshots {
         dv -> d }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (dv, group) =>
-        spark.read.parquet(new Path(root, dv).toString)
+        ParquetRead(spark, new Path(root, dv).toString)
           .filter(col("__dv_file").isin(group.map(_._2): _*)) }
 
   /** Shared MoR commit tail: write ONE merged vector, re-point every
@@ -1217,9 +1217,9 @@ object Snapshots {
       // plain un-renamed versions keep their direct batch scan
       return readEntriesEff(spark, root, s.files,
         schemaOf(spark, root, s), s.colmap)
-    val reader = s.schema
-      .map(spark.read.schema).getOrElse(spark.read)
-    reader.parquet(s.files.map(f => new Path(root, f).toString): _*)
+    val paths = s.files.map(f => new Path(root, f).toString)
+    s.schema.fold(ParquetRead(spark, paths))(
+      spark.read.schema(_).parquet(paths: _*))
   }
 
   /** Read the latest committed version. */
@@ -1371,9 +1371,9 @@ object Snapshots {
     // r19 shape referenced `added` 2-3x and `dropped` 3-4x — tuple
     // anti-join + key-distinct probes + the includeOld pre-image arm
     // each re-read the changed files). Both sides union under a side
-    // marker; ONE hash exchange on the key then serves both window
-    // partitionings (the tuple partitioning refines the key's), and
-    // every row classifies independently:
+    // marker; ONE hash exchange on the key and ONE sort on (key, the
+    // other columns) then serve both windows (the tuple partitioning
+    // refines the key's), and every row classifies independently:
     //  - rows co-resident in a rewritten file land in added files
     //    with UNCHANGED values; a dropped row with the identical
     //    whole tuple exists, so tuple-window counts cancel them
@@ -1389,18 +1389,18 @@ object Snapshots {
       .unionByName(dropped.withColumn("__side", lit(0)))
     import org.apache.spark.sql.expressions.Window
     val wKey = Window.partitionBy(col(keyCol))
-    val wTuple = Window.partitionBy(schema.fieldNames.map(col): _*)
+    val wTuple = Window.partitionBy((keyCol +: valueCols).map(col): _*)
     val addSide = when(col("__side") === 1, lit(1))
     val dropSide = when(col("__side") === 0, lit(1))
-    // key-window first: its hash(key) exchange also satisfies the
-    // tuple window's clustering (key ⊆ tuple), so the plan carries
-    // ONE Exchange and two sorts, never two exchanges
-    val keyed = un
-      .withColumn("__ak", count(addSide).over(wKey))
-      .withColumn("__dk", count(dropSide).over(wKey))
-    val counted = keyed
+    // hash on the key, then the tuple window, led by the key: its
+    // clustering is met by hash(key) (key ⊆ tuple) and its sort on
+    // (key, the other columns) already orders the key window's
+    // partitions, so the plan carries ONE Exchange and ONE Sort
+    val counted = un.repartition(col(keyCol))
       .withColumn("__at", count(addSide).over(wTuple))
       .withColumn("__dt", count(dropSide).over(wTuple))
+      .withColumn("__ak", count(addSide).over(wKey))
+      .withColumn("__dk", count(dropSide).over(wKey))
     val oldArm =
       if (includeOld)
         when(col("__at") === 0, lit("update_old"))
@@ -1483,7 +1483,7 @@ object Snapshots {
     val (fs, root) = fsOf(spark, url)
     val p = SidecarDelta.bloomPath(root)
     if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString)
+    else Some(ParquetRead(spark, p.toString)
       .select("field").distinct().collect().map(_.getString(0)).toSet)
   }
 
@@ -1680,7 +1680,7 @@ object Snapshots {
     val head = snap(spark, url, latest(spark, url))
     if (!schemaOf(spark, root, head).fieldNames.contains(field))
       return false
-    spark.read.parquet(sp.toString)
+    ParquetRead(spark, sp.toString)
       .filter(col("field") === head.phys(field)).take(1).nonEmpty
   }
 
@@ -1785,7 +1785,7 @@ object Snapshots {
     val schema = schemaOf(spark, root, head)
     val sp = SidecarDelta.statsPath(root)
     val existing: Option[DataFrame] =
-      if (fs.exists(sp)) Some(spark.read.parquet(sp.toString)) else None
+      if (fs.exists(sp)) Some(ParquetRead(spark, sp.toString)) else None
     // ONE (field, file) collect answers both the indexed field set
     // and the covered files
     val indexed = existing.toSeq.flatMap(_.select("field", "file")
@@ -2076,7 +2076,7 @@ object Snapshots {
       : Option[Seq[(String, String, Band, Row)]] = {
     val sp = SidecarDelta.statsPath(root)
     if (!fs.exists(sp)) return None
-    val df = spark.read.parquet(sp.toString)
+    val df = ParquetRead(spark, sp.toString)
     val cols = Seq("field", "file", "min_v", "max_v", "min_s",
       "max_s") ++ extra
     Some(df.filter(col("field").isin(fields: _*))
@@ -2534,7 +2534,7 @@ object Snapshots {
     // working for the remaining fields
     val sp = SidecarDelta.statsPath(root)
     if (fs.exists(sp)) {
-      val existing = spark.read.parquet(sp.toString)
+      val existing = ParquetRead(spark, sp.toString)
       if (!existing.filter(col("field") === phys).isEmpty)
         SidecarDelta.replace(fs, sp,
           existing.filter(col("field") =!= phys).coalesce(1))
@@ -3212,7 +3212,7 @@ object Snapshots {
       case ByteType | ShortType | IntegerType | LongType => ()
       case _ => return None
     }
-    val rows = spark.read.parquet(sp.toString)
+    val rows = ParquetRead(spark, sp.toString)
       .filter(col("field") === s.phys(field))
       .select(col("file"), col("min_v"), col("max_v"))
       .collect()
@@ -3250,7 +3250,7 @@ object Snapshots {
       .collect { case (d, Some(dv)) => (dv, d) }
       .groupBy(_._1).toSeq.sortBy(_._1)
     val deleted = dvGroups.map { case (dv, grp) =>
-      spark.read.parquet(new Path(root, dv).toString)
+      ParquetRead(spark, new Path(root, dv).toString)
         .filter(col("__dv_file").isin(grp.map(_._2): _*)).count()
     }.sum
     total - deleted

@@ -59,7 +59,7 @@ object VectorIndex {
       s"vector index needs columns $idCol and $embCol")
     val cp = centroidsPath(root)
     if (!fs.exists(cp)) trainCentroids(fs, root, eff, idCol, embCol, k)
-    val centroids = spark.read.parquet(cp.toString)
+    val centroids = ParquetRead(spark, cp.toString)
       .select(col("centroid_id"), col("__cemb"))
     val have = centroids.count()
     require(have == k,
@@ -68,7 +68,7 @@ object VectorIndex {
     val pp = postingsPath(root)
     val covered =
       if (!fs.exists(pp)) Set.empty[String]
-      else spark.read.parquet(pp.toString).select("entry").distinct()
+      else ParquetRead(spark, pp.toString).select("entry").distinct()
         .collect().map(_.getString(0)).toSet
     val freshE = s.files.filterNot(covered)
     if (freshE.isEmpty) return 0
@@ -106,7 +106,7 @@ object VectorIndex {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(cp),
       s"no vector index under $root — run VectorIndex.index first")
-    spark.read.parquet(cp.toString)
+    ParquetRead(spark, cp.toString)
       .select(col("centroid_id"), col("__cemb").cast("array<double>"))
       .collect()
       .map(r => (r.get(0), r.getSeq[Double](1).toArray))
@@ -156,7 +156,7 @@ object VectorIndex {
     val pp = postingsPath(root)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(pp)) return None
-    Some(spark.read.parquet(pp.toString)
+    Some(ParquetRead(spark, pp.toString)
       .select(col("entry"), col("bucket"), col("n")).collect())
   }
 
@@ -296,7 +296,7 @@ object VectorIndex {
       s"no vector index under $root — run VectorIndex.index first")
     // the pinned centroid frame straight from the sidecar (k-small;
     // collected once inside ivfAssign, broadcast for the probe rank)
-    val centDf = spark.read.parquet(cp.toString)
+    val centDf = ParquetRead(spark, cp.toString)
       .select(col("centroid_id"), col("__cemb").cast("array<double>"))
     val q = queries
       .filter(col(qidCol).isNotNull && col(qEmbCol).isNotNull)

@@ -130,5 +130,18 @@ class ChangesSingleScanSpec extends SparkSpec {
     assert(exchanges == 1,
       s"expected ONE hash exchange (key partitioning reused by the " +
         s"tuple window), got $exchanges")
+    // the plan AQE starts from: the tuple window's sort on (key, the
+    // other columns) also orders the key window's partitions
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val initial = feed.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val shape = (initial.collect { case e: ShuffleExchangeExec => e }.size,
+      initial.collect { case s: SortExec => s }.size)
+    assert(shape == (1, 1),
+      s"expected one Exchange and one Sort, got $shape in\n$initial")
   }
 }

@@ -344,33 +344,6 @@ class LifecycleSpec extends SparkSpec {
     assert(df.count() == 10 && df.columns.toSeq == Seq("x"))
   }
 
-  /** Spark jobs started by `body` on this thread: its jobs run under a
-    * job group, and a marker job after it proves the listener has seen
-    * every earlier event (one listener's events arrive in order). */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(marker), "listener never saw the marker job")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(l)
-  }
-
   test("writeMetadata runs no Spark job; loadSchema still reads a " +
       "sidecar carrying the old rowGroupCounts census") {
     val u = scratch("sidecar-nojob-" +

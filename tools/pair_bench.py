@@ -22,6 +22,12 @@ Next to setup_s it prints the run's `prepare` seconds, read from the
 decode code, so a setup_s that moves together with it is host drift,
 not a change in the library.
 
+From the same file it takes the workload's named step metrics and
+prints their median per side, so a change to op_s.p50 shows which
+step moved: upsert_s.p50, changes_s.p50, append_s.p50 and
+snapshot_read_s.p50 for orders_cdc_cycle; read_samples_per_s and
+materialize_rows_per_s for hello_world_train.
+
 Each checkout must be a fresh `git clone` built in place (the first
 run.py call builds it). Do not copy `target/` or `perfbench/.build`
 from one checkout into another: the cached classpath then points into
@@ -36,6 +42,11 @@ import subprocess
 import sys
 
 METRICS = ["op_s.p50", "setup_s"]
+STEPS = {
+    "orders_cdc_cycle": ["upsert_s.p50", "changes_s.p50", "append_s.p50",
+                         "snapshot_read_s.p50"],
+    "hello_world_train": ["read_samples_per_s", "materialize_rows_per_s"],
+}
 
 
 def run(checkout, workload, seed, seconds):
@@ -59,19 +70,23 @@ def run(checkout, workload, seed, seconds):
     return result, evidence
 
 
-def prepare_s(checkout, workload, seed):
-    """The run's `prepare` stage seconds, or None if not recorded."""
+def recorded(checkout, workload, seed):
+    """The run's `prepare` stage seconds (or None) and its named step
+    metrics, from the result file run.py writes."""
     path = os.path.join(checkout, "perfbench", "out",
                         f"{workload}-seed{seed}-trace0.json")
     try:
         with open(path) as fh:
             res = json.load(fh)
     except (OSError, json.JSONDecodeError):
-        return None
+        return None, {}
     for w in res.get("workloads", []):
         if w.get("workload") == workload:
-            return w.get("timeline_s", {}).get("prepare")
-    return None
+            named = w.get("named", {})
+            steps = {k: named[k]["value"] for k in STEPS.get(workload, [])
+                     if named.get(k, {}).get("value") is not None}
+            return w.get("timeline_s", {}).get("prepare"), steps
+    return None, {}
 
 
 def quartiles(xs):
@@ -96,6 +111,7 @@ def main():
     values = {s: {m: [] for m in METRICS} for s in sides}
     ratios = {m: [] for m in METRICS}
     prepares = {s: [] for s in sides}
+    steps = {s: {k: [] for k in STEPS.get(args.workload, [])} for s in sides}
     bad = 0
     print("side    seed  op_s.p50  setup_s  prepare  "
           "load1(before/after)  steal")
@@ -113,9 +129,11 @@ def main():
             got[side] = m
             for k in METRICS:
                 values[side][k].append(m[k])
-            prep = prepare_s(sides[side], args.workload, seed)
+            prep, got_steps = recorded(sides[side], args.workload, seed)
             if prep is not None:
                 prepares[side].append(prep)
+            for k, v in got_steps.items():
+                steps[side][k].append(v)
             prep = "    n/a" if prep is None else f"{prep:7.3f}"
             print(f"{side:<7} {seed:>4}  {m['op_s.p50']:8.3f}  "
                   f"{m['setup_s']:7.3f}  {prep}  "
@@ -153,6 +171,13 @@ def main():
             print(f"{side:<7} prepare   median "
                   f"{statistics.median(prepares[side]):.3f}"
                   f"  n={len(prepares[side])}")
+    for side in sides:
+        for k, xs in steps[side].items():
+            if xs:
+                summary[f"{side}.{k}"] = {"median": statistics.median(xs),
+                                          "n": len(xs)}
+                print(f"{side:<7} {k:<22} median "
+                      f"{statistics.median(xs):.4g}  n={len(xs)}")
     print(json.dumps({"workload": args.workload, "seeds": args.seeds,
                       "failed_runs": bad, "summary": summary}))
     sys.exit(1 if bad else 0)
