@@ -1,26 +1,26 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.WriteBridge
 import org.apache.spark.sql.types.StructType
 
 /** NATIVE DataSourceV2 writes for [[GraftCatalog]] tables — the
-  * write-side twin of the inlined effective scan, retiring the V1
-  * `InsertableRelation` bridge: executors write parquet data files
-  * DIRECTLY into the store root under staged names (Spark's own
-  * `ParquetOutputWriter` via [[WriteBridge]] — the exact
-  * row-to-parquet path `df.write.parquet` uses), and the driver
-  * commits the manifest once every task has reported its file. No
-  * staging directory, no driver-side renames: uncommitted names are
-  * invisible to readers (reads are manifest-driven) and a crashed
-  * write leaves only the grace-windowed debris [[Snapshots.vacuum]]
-  * already sweeps — the commit protocol object stores need at 100 TB,
-  * where a per-file rename pass is itself a scaling bottleneck.
+  * write-side twin of the inlined effective scan: executors write
+  * parquet data files DIRECTLY into the store root under their final
+  * names through [[WriteBridge]] (the one writer of a store's files;
+  * every [[Snapshots]] commit stages through it too, by
+  * [[GraftWriteV2.stage]]), and the driver commits the manifest once
+  * every task has reported its file. No staging directory, no
+  * driver-side renames: uncommitted names are invisible to readers
+  * and a crashed write leaves only the grace-windowed debris
+  * [[Snapshots.vacuum]] already sweeps — the commit protocol object
+  * stores need at 100 TB, where a per-file rename pass is itself a
+  * scaling bottleneck.
   *
   * Semantics match the manifest layer exactly:
   *  - `INSERT INTO` commits one `append` version through the SAME
@@ -76,14 +76,45 @@ private[sources] class GraftWriteBuilderV2(url: String,
   }
 }
 
-/** One task's committed data file (absent when the task saw no
-  * rows — empty partitions stage nothing). */
-private[sources] case class GraftFileCommit(name: Option[String],
-    rows: Long) extends WriterCommitMessage
+/** One task's committed data file (absent when the task opened none
+  * — empty partitions stage nothing). */
+private[sources] case class GraftFileCommit(name: Option[String])
+    extends WriterCommitMessage
 
 /** Driver-side commit machinery shared by the batch and streaming
-  * writes. */
+  * writes, and the staging write every [[Snapshots]] commit uses. */
 private[sources] object GraftWriteV2 {
+  /** Write `df` into the store root as one Spark job, one file per
+    * partition named `<stem>-p<partition>-t<task>.parquet`; return the
+    * names in partition order. The files are those `df.write.parquet`
+    * stages (Spark 4.1's `FileFormatWriter` rule): partition 0 always,
+    * one empty task for a frame with no partitions (so an empty frame
+    * stages one file carrying its schema), no other empty partition.
+    * A failed task drops its partial file ([[GraftDataWriter.abort]]). */
+  def stage(spark: SparkSession, root: Path, df: DataFrame,
+      stem: String): Seq[String] = {
+    val dir = root.toString
+    WriteBridge.withRows(df) { (schema, rdd) =>
+      val writers = WriteBridge.parquetTaskWriters(spark, schema)
+      spark.sparkContext.runJob(
+        if (rdd.partitions.nonEmpty) rdd
+        else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1),
+        (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+          val w = new GraftDataWriter(dir, stem, ctx.partitionId(),
+            ctx.taskAttemptId(), writers)
+          try {
+            if (ctx.partitionId() == 0) w.openFile()
+            rows.foreach(w.write)
+            w.commit().name
+          } catch { case e: Throwable => w.abort(); throw e }
+        }).toSeq.flatten
+    }
+  }
+
+  /** The name stem `s{version}-{tag}` of a write's staged files. */
+  def stemOf(version: Int): String =
+    f"s$version%08d-${java.util.UUID.randomUUID().toString.take(8)}"
+
   def deleteStaged(spark: SparkSession, url: String,
       names: Seq[String]): Unit = {
     val (fs, root) = Snapshots.fsOf(spark, url)
@@ -94,29 +125,28 @@ private[sources] object GraftWriteV2 {
   }
 
   def stagedOf(messages: Array[WriterCommitMessage]): Seq[String] =
-    messages.toSeq.collect { case GraftFileCommit(Some(n), _) => n }
+    messages.toSeq.collect { case GraftFileCommit(Some(n)) => n }
       .sorted
 
-  /** Validate CHECK constraints against the staged bytes under their
-    * LOGICAL view — one scan of the new files only, skipped entirely
-    * when no constraint is declared. */
-  def validateStaged(spark: SparkSession, url: String,
-      staged: Seq[String], logicalSchema: StructType,
-      physical: StructType, colmap: Map[String, String]): Unit = {
-    if (staged.isEmpty) return
-    val (_, root) = Snapshots.fsOf(spark, url)
-    val batch = spark.read.schema(physical)
-      .parquet(staged.map(n => new Path(root, n).toString): _*)
-      .select(logicalSchema.fieldNames.toSeq.map(l =>
-        col(colmap.getOrElse(l, l)).as(l)): _*)
-    Snapshots.validateBatch(spark, root, url, batch)
-  }
-
-  /** POST-commit: keep the store's conventional sidecars live —
-    * O(new files); a failure must not fail a write whose data is
+  /** Commit a SQL write's staged files: validate CHECK constraints
+    * against their LOGICAL view (no scan without a constraint), then
+    * `commit`, deleting them on a refusal or a failed commit. After
+    * the commit the store's conventional sidecars refresh — O(new
+    * files); a failure there must not fail a write whose data is
     * already durably committed (stale sidecars are safe by the
     * coverage guards; the next refresh catches up). */
-  def refreshQuietly(spark: SparkSession, url: String): Unit =
+  def publish(spark: SparkSession, url: String, staged: Seq[String],
+      logicalSchema: StructType, colmap: Map[String, String])(
+      commit: (Path, Seq[String]) => Unit): Unit = {
+    val (_, root) = Snapshots.fsOf(spark, url)
+    try {
+      if (staged.nonEmpty)
+        Snapshots.validateBatch(spark, root, url, Snapshots
+          .readEntriesEff(spark, root, staged, logicalSchema, colmap))
+      commit(root, staged)
+    } catch {
+      case e: Throwable => deleteStaged(spark, url, staged); throw e
+    }
     try Snapshots.refreshSidecars(spark, url): Unit
     catch {
       case scala.util.control.NonFatal(e) =>
@@ -125,6 +155,7 @@ private[sources] object GraftWriteV2 {
             s"(stale sidecars are safe; next refresh catches up): " +
             s"${e.getMessage}")
     }
+  }
 }
 
 private[sources] class GraftBatchWrite(url: String,
@@ -141,24 +172,22 @@ private[sources] class GraftBatchWrite(url: String,
     else Snapshots.snap(spark, url, Snapshots.latest(spark, url)).colmap
   private val physical: StructType =
     Snapshots.physSchema(logicalSchema, parentColmap)
-  private val tag = java.util.UUID.randomUUID().toString.take(8)
   // cosmetic version prefix for staged names (the manifest, not the
   // name, is what binds a file to a version — race retries may land
   // the commit at a later slot)
-  private val nameV = Snapshots.latest(spark, url) + 1
-  private val rootStr = new Path(url).toString
+  private val stem = GraftWriteV2.stemOf(Snapshots.latest(spark, url) + 1)
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    GraftDataWriterFactory(rootStr, nameV, tag,
-      WriteBridge.parquetTaskWriters(spark, physical))
+      info: PhysicalWriteInfo): DataWriterFactory = {
+    val writers = WriteBridge.parquetTaskWriters(spark, physical)
+    val (r, st) = (new Path(url).toString, stem)
+    (partitionId: Int, taskId: Long) =>
+      new GraftDataWriter(r, st, partitionId, taskId, writers)
+  }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = GraftWriteV2.stagedOf(messages)
-    val (_, root) = Snapshots.fsOf(spark, url)
-    try {
-      GraftWriteV2.validateStaged(spark, url, staged, logicalSchema,
-        physical, parentColmap)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    GraftWriteV2.publish(spark, url, GraftWriteV2.stagedOf(messages),
+        logicalSchema, parentColmap) { (root, staged) =>
       if (overwriteAll) {
         // same non-retrying contract as Snapshots.overwrite: the
         // replacement set does not depend on the head, but racing
@@ -170,12 +199,7 @@ private[sources] class GraftBatchWrite(url: String,
         Snapshots.commitAppendStaged(spark, root, url, "append",
           staged, logicalSchema, parentColmap): Unit
       }
-    } catch {
-      case e: Throwable =>
-        GraftWriteV2.deleteStaged(spark, url, staged); throw e
     }
-    GraftWriteV2.refreshQuietly(spark, url)
-  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftWriteV2.deleteStaged(spark, url,
@@ -204,41 +228,30 @@ private[sources] class GraftStreamingWrite(url: String,
     Snapshots.snap(spark, url, Snapshots.latest(spark, url)).colmap
   private val physical: StructType =
     Snapshots.physSchema(logicalSchema, parentColmap)
-  private val tag = java.util.UUID.randomUUID().toString.take(8)
-  private val nameV = Snapshots.latest(spark, url) + 1
-  private val rootStr = new Path(url).toString
+  private val stem = GraftWriteV2.stemOf(Snapshots.latest(spark, url) + 1)
   require(queryId != null && queryId.matches("[A-Za-z0-9_.-]+"),
     s"streaming write needs a path-safe query id, got '$queryId'")
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val writers = WriteBridge.parquetTaskWriters(spark, physical)
-    val (r, v, t) = (rootStr, nameV, tag)
-    new StreamingDataWriterFactory {
-      override def createWriter(partitionId: Int, taskId: Long,
-          epochId: Long): DataWriter[InternalRow] =
-        new GraftDataWriter(r, v, s"$t-e$epochId", partitionId,
-          taskId, writers)
-    }
+    val (r, st) = (new Path(url).toString, stem)
+    (partitionId: Int, taskId: Long, epochId: Long) =>
+      new GraftDataWriter(r, s"$st-e$epochId", partitionId, taskId,
+        writers)
   }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val staged = GraftWriteV2.stagedOf(messages)
-    if (staged.isEmpty) return
-    val (_, root) = Snapshots.fsOf(spark, url)
-    try {
-      GraftWriteV2.validateStaged(spark, url, staged, logicalSchema,
-        physical, parentColmap)
-      Snapshots.commitAppendStaged(spark, root, url,
-        s"append:sw-$queryId-e$epochId", staged, logicalSchema,
-        parentColmap,
-        dedupOp = Some(s"append:sw-$queryId-e$epochId")): Unit
-    } catch {
-      case e: Throwable =>
-        GraftWriteV2.deleteStaged(spark, url, staged); throw e
-    }
-    GraftWriteV2.refreshQuietly(spark, url)
+    if (staged.nonEmpty)
+      GraftWriteV2.publish(spark, url, staged, logicalSchema,
+          parentColmap) { (root, staged) =>
+        Snapshots.commitAppendStaged(spark, root, url,
+          s"append:sw-$queryId-e$epochId", staged, logicalSchema,
+          parentColmap,
+          dedupOp = Some(s"append:sw-$queryId-e$epochId")): Unit
+      }
   }
 
   override def abort(epochId: Long,
@@ -248,40 +261,33 @@ private[sources] class GraftStreamingWrite(url: String,
 }
 
 /** Ships to executors: opens one parquet writer per non-empty task,
-  * writing `s{v}-{tag}-p{partition}-t{task}.parquet` directly in the
+  * writing `{stem}-p{partition}-t{task}.parquet` directly in the
   * store root (task id in the name keeps retry attempts distinct;
   * the commit coordinator ensures exactly one attempt's message is
   * committed — the loser's file is vacuum debris). */
-private[sources] case class GraftDataWriterFactory(rootStr: String,
-    nameV: Int, tag: String, writers: WriteBridge.TaskWriters)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(rootStr, nameV, tag, partitionId, taskId,
-      writers)
-}
-
-private[sources] class GraftDataWriter(rootStr: String, nameV: Int,
-    tag: String, partitionId: Int, taskId: Long,
-    writers: WriteBridge.TaskWriters)
+private[sources] class GraftDataWriter(rootStr: String, stem: String,
+    partitionId: Int, taskId: Long, writers: WriteBridge.TaskWriters)
     extends DataWriter[InternalRow] {
-  private val name =
-    f"s$nameV%08d-$tag-p$partitionId%05d-t$taskId.parquet"
+  private val name = f"$stem-p$partitionId%05d-t$taskId.parquet"
   private var open: WriteBridge.RowFileWriter = _
-  private var rows = 0L
+  private var opened = false
 
   // lazy open: an empty partition stages NO file (a tiny INSERT
-  // lands one file, not one per shuffle partition)
-  override def write(row: InternalRow): Unit = {
-    if (open == null)
-      open = writers.open(s"$rootStr/$name", partitionId, taskId)
-    open.write(row)
-    rows += 1
+  // lands one file, not one per shuffle partition); stage opens its
+  // partition 0 up front
+  def openFile(): Unit = if (!opened) {
+    open = writers.open(s"$rootStr/$name", partitionId, taskId)
+    opened = true
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (open != null) { open.close(); open = null }
-    GraftFileCommit(if (rows > 0) Some(name) else None, rows)
+  override def write(row: InternalRow): Unit = {
+    openFile()
+    open.write(row)
+  }
+
+  override def commit(): GraftFileCommit = {
+    close()
+    GraftFileCommit(if (opened) Some(name) else None)
   }
 
   override def abort(): Unit = {

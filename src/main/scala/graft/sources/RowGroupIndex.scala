@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +31,7 @@ object RowGroupIndex {
     * For `notNull` indexers, value is the constant "__notnull__". */
   def build(spark: SparkSession, datasetUrl: String,
       indexers: Seq[Indexer], indexUrl: String): Unit = {
-    val df = ParquetRead(spark,
-      Materialize.listParquetFiles(spark, datasetUrl))
+    val df = ParquetRead(spark, dataFiles(spark, datasetUrl))
       .withColumn("__file", input_file_name())
     val parts = indexers.map { ix =>
       val projected =
@@ -51,7 +51,7 @@ object RowGroupIndex {
         .groupBy("field", "value")
         .agg(collect_set(col("__file")).as("files"))
     }
-    val dir = new org.apache.hadoop.fs.Path(indexUrl)
+    val dir = new Path(indexUrl)
     SidecarDelta.replace(
       dir.getFileSystem(spark.sessionState.newHadoopConf()), dir,
       parts.reduce(_.unionByName(_)))
@@ -92,12 +92,24 @@ object RowGroupIndex {
   def selectedFiles(spark: SparkSession, datasetUrl: String,
       indexUrl: String, selector: Selector): Seq[String] = {
     val index = ParquetRead(spark, indexUrl)
-    // normalize: input_file_name() URIs vs Hadoop Path strings differ
-    // in scheme rendering (file:/// vs file:/)
-    def norm(s: String): String = new org.apache.hadoop.fs.Path(s).toUri.getPath
     val keep = selector.files(index).map(norm)
-    Materialize.listParquetFiles(spark, datasetUrl)
-      .filter(f => keep.contains(norm(f)))
+    dataFiles(spark, datasetUrl).filter(f => keep.contains(norm(f)))
+  }
+
+  /** The data files an index covers: a plain store's listing, or a
+    * [[Snapshots]] store's retained manifests' data files (its root
+    * also holds debris and the half-written files of running writes). */
+  private def dataFiles(spark: SparkSession,
+      datasetUrl: String): Seq[String] = {
+    val vs = Snapshots.versions(spark, datasetUrl)
+    if (vs.isEmpty) Materialize.listParquetFiles(spark, datasetUrl)
+    else {
+      // qualified, like the listing: sidecar rows key qualified paths
+      val (fs, root) = Snapshots.fsOf(spark, datasetUrl)
+      Snapshots.liveEntries(spark, datasetUrl, vs)
+        .map(e => Snapshots.splitEntry(e)._1).distinct.sorted
+        .map(n => new Path(fs.makeQualified(root), n).toString)
+    }
   }
 
   /** Bloom file index — the data-skipping index for HIGH-CARDINALITY
@@ -120,8 +132,8 @@ object RowGroupIndex {
       fields: Seq[String], indexUrl: String,
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Unit = {
     require(fields.nonEmpty, "buildBloom needs fields")
-    val files = Materialize.listParquetFiles(spark, datasetUrl)
-    val dir = new org.apache.hadoop.fs.Path(indexUrl)
+    val files = dataFiles(spark, datasetUrl)
+    val dir = new Path(indexUrl)
     SidecarDelta.replace(
       dir.getFileSystem(spark.sessionState.newHadoopConf()), dir,
       bloomRowsFor(spark, files, fields, expectedPerFile, fpp))
@@ -156,10 +168,8 @@ object RowGroupIndex {
       datasetUrl: String, indexUrl: String,
       fieldsFor: Set[String] => Option[Seq[String]],
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Boolean = {
-    val idxPath = new org.apache.hadoop.fs.Path(indexUrl)
+    val idxPath = new Path(indexUrl)
     val fs = idxPath.getFileSystem(spark.sessionState.newHadoopConf())
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
     if (!fs.exists(idxPath)) fieldsFor(Set.empty) match {
       case Some(f) =>
         buildBloom(spark, datasetUrl, f, indexUrl, expectedPerFile, fpp)
@@ -176,7 +186,7 @@ object RowGroupIndex {
     require(fields.toSet == knownFields || knownFields.isEmpty,
       s"field set ${fields.sorted} != indexed ${knownFields.toSeq.sorted}" +
         " — rebuild with buildBloom")
-    val current = Materialize.listParquetFiles(spark, datasetUrl)
+    val current = dataFiles(spark, datasetUrl)
     val fresh = current.filter(f =>
       fields.exists(fl => !known.contains((fl, norm(f)))))
     if (fresh.nonEmpty) {
@@ -210,8 +220,6 @@ object RowGroupIndex {
       fields: Seq[String], expectedPerFile: Long,
       fpp: Double): DataFrame = {
     import org.apache.spark.util.sketch.BloomFilter
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
     val df = ParquetRead(spark, files)
       .withColumn("__file", input_file_name())
     val parts = fields.map { f =>
@@ -226,7 +234,7 @@ object RowGroupIndex {
         .empty[(String, String), BloomFilter]
       it.foreach { r =>
         val key = (r.getString(2),
-          new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
+          new Path(r.getString(0)).toUri.getPath)
         val bf = blooms.getOrElseUpdate(key,
           BloomFilter.create(expectedPerFile, fpp))
         bf.putString(r.getString(1))
@@ -267,23 +275,24 @@ object RowGroupIndex {
 
   /** Files a bloom index admits for `field IN values` — every file
     * whose filter might contain ANY of the values (union semantics,
-    * mirroring [[ValueIn]]). Probing runs where the sidecar rows
-    * live; only admitted file names reach the driver. */
+    * mirroring [[ValueIn]]), mapped from [[bloomProbe]]'s names to
+    * the dataset's paths. */
   def bloomSelectedFiles(spark: SparkSession, datasetUrl: String,
-      indexUrl: String, field: String, values: Seq[Any]): Seq[String] =
-    bloomProbe(spark, datasetUrl, indexUrl, field, values)._1
+      indexUrl: String, field: String, values: Seq[Any]): Seq[String] = {
+    val keep = bloomProbe(spark, indexUrl, field, values)._1
+    dataFiles(spark, datasetUrl).filter(f => keep(new Path(f).getName))
+  }
 
-  /** One sidecar scan answering BOTH upsert questions: (dataset
-    * files a bloom might-contain ANY probe value, flat names of
-    * every file the sidecar covers). The coverage half feeds the
+  /** One sidecar scan answering BOTH upsert questions: (flat names of
+    * the files a bloom might-contain ANY probe value in, flat names
+    * of every file the sidecar covers). The coverage half feeds the
     * staleness guard ([[Snapshots.upsert]]) without re-reading the
     * sidecar — on a 100k-file store the index scan + driver collect
     * happens once per merge, not twice. Probing runs where the
     * sidecar rows live; only (name, admitted) pairs reach the
-    * driver. */
-  def bloomProbe(spark: SparkSession, datasetUrl: String,
-      indexUrl: String, field: String, values: Seq[Any])
-      : (Seq[String], Set[String]) = {
+    * driver, and nothing lists the store. */
+  def bloomProbe(spark: SparkSession, indexUrl: String, field: String,
+      values: Seq[Any]): (Set[String], Set[String]) = {
     import org.apache.spark.util.sketch.BloomFilter
     val probes = values.map(_.toString).toArray
     val idx = ParquetRead(spark, indexUrl)
@@ -293,17 +302,16 @@ object RowGroupIndex {
       it.map { r =>
         val bf = BloomFilter.readFrom(
           new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        (r.getAs[String]("file"), probes.exists(bf.mightContainString))
+        (new Path(r.getAs[String]("file")).getName,
+          probes.exists(bf.mightContainString))
       }
     }.collect()
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val keep = rows.collect { case (f, true) => norm(f) }.toSet
-    val covered = rows
-      .map(r => new org.apache.hadoop.fs.Path(r._1).getName).toSet
-    (Materialize.listParquetFiles(spark, datasetUrl)
-      .filter(f => keep.contains(norm(f))), covered)
+    (rows.collect { case (f, true) => f }.toSet, rows.map(_._1).toSet)
   }
+
+  /** Path key that compares `input_file_name()` URIs and Hadoop Path
+    * strings, whose scheme renderings differ (file:/// vs file:/). */
+  private def norm(s: String): String = new Path(s).toUri.getPath
 
   /** File names (flat, no directory) the bloom sidecar covers for
     * `field` — every file with an index row, including the empty-
@@ -315,7 +323,7 @@ object RowGroupIndex {
     ParquetRead(spark, indexUrl)
       .filter(col("field") === field)
       .select(col("file")).distinct().collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName)
+      .map(r => new Path(r.getString(0)).getName)
       .toSet
 
   /** Read scanning only bloom-admitted files (superset at fpp —
@@ -326,12 +334,8 @@ object RowGroupIndex {
       indexUrl: String, field: String, values: Seq[Any]): DataFrame = {
     refuseSnapshotStore(spark, datasetUrl, "readBloomSelected",
       "bloomIndex")
-    val selected =
-      bloomSelectedFiles(spark, datasetUrl, indexUrl, field, values)
-    if (selected.isEmpty) {
-      val all = Materialize.listParquetFiles(spark, datasetUrl)
-      ParquetRead(spark, all, Map("basePath" -> datasetUrl)).limit(0)
-    } else ParquetRead(spark, selected, Map("basePath" -> datasetUrl))
+    readFiles(spark, datasetUrl,
+      bloomSelectedFiles(spark, datasetUrl, indexUrl, field, values))
   }
 
   /** Read the dataset scanning ONLY files the selector admits.
@@ -344,12 +348,17 @@ object RowGroupIndex {
   def readSelected(spark: SparkSession, datasetUrl: String,
       indexUrl: String, selector: Selector): DataFrame = {
     refuseSnapshotStore(spark, datasetUrl, "readSelected", "index")
-    val selected = selectedFiles(spark, datasetUrl, indexUrl, selector)
-    if (selected.isEmpty) {
-      val all = Materialize.listParquetFiles(spark, datasetUrl)
-      ParquetRead(spark, all, Map("basePath" -> datasetUrl)).limit(0)
-    } else ParquetRead(spark, selected, Map("basePath" -> datasetUrl))
+    readFiles(spark, datasetUrl,
+      selectedFiles(spark, datasetUrl, indexUrl, selector))
   }
+
+  /** `selected` files of a plain store; none selected reads 0 rows. */
+  private def readFiles(spark: SparkSession, datasetUrl: String,
+      selected: Seq[String]): DataFrame =
+    if (selected.isEmpty)
+      ParquetRead(spark, Materialize.listParquetFiles(spark, datasetUrl),
+        Map("basePath" -> datasetUrl)).limit(0)
+    else ParquetRead(spark, selected, Map("basePath" -> datasetUrl))
 
   /** The index reads list the store's root, and a [[Snapshots]] root
     * holds every version's files until [[Snapshots.vacuum]] — an

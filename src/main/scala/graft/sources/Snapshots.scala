@@ -298,11 +298,11 @@ object Snapshots {
     out.get
   }
 
-  /** Write `df`'s rows as immutable data files named
-    * `s{version}-{uuid}-{k}.parquet` and return the names.
-    * `clusterBy` range-partitions instead of round-robin, giving each
-    * file a narrow value band — what makes [[indexStats]] pruning
-    * actually skip files. */
+  /** Write `df`'s rows as `nFiles` immutable data files
+    * ([[writeArranged]]) and return the names. `clusterBy`
+    * range-partitions instead of round-robin, giving each file a
+    * narrow value band — what makes [[indexStats]] pruning actually
+    * skip files. */
   private def writeFiles(spark: SparkSession, root: Path, df: DataFrame,
       version: Int, nFiles: Int,
       clusterBy: Option[String] = None,
@@ -315,10 +315,11 @@ object Snapshots {
 
   /** [[writeFiles]] for a frame whose partitioning IS the layout
     * (z-order, bin-packing): writes it as-is, one file per
-    * partition. `colmap` renames LOGICAL columns to their PHYSICAL
-    * names right before the write (a projection — partitioning
-    * survives), so every data file of a renamed store keeps one
-    * stable physical schema forever. */
+    * partition, straight into the root ([[GraftWriteV2.stage]]).
+    * `colmap` renames LOGICAL columns to their PHYSICAL names right
+    * before the write (a projection — partitioning survives), so
+    * every data file of a renamed store keeps one stable physical
+    * schema forever. */
   private[sources] def writeArranged(spark: SparkSession, root: Path,
       arranged0: DataFrame, version: Int,
       colmap: Map[String, String] = Map.empty): Seq[String] = {
@@ -326,20 +327,7 @@ object Snapshots {
       if (colmap.isEmpty) arranged0
       else arranged0.select(arranged0.columns.toSeq.map(c =>
         col(c).as(colmap.getOrElse(c, c))): _*)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_snap_stage_$tag")
-    fs.delete(tmp, true)
-    arranged.write.mode("overwrite").parquet(tmp.toString)
-    val staged = Materialize.listParquetFiles(spark, tmp.toString)
-    val named = staged.zipWithIndex.map { case (f, k) =>
-      val name = f"s$version%08d-$tag-$k%05d.parquet"
-      require(fs.rename(new Path(f), new Path(root, name)),
-        s"rename failed promoting $name")
-      name
-    }
-    fs.delete(tmp, true)
-    named
+    GraftWriteV2.stage(spark, root, arranged, GraftWriteV2.stemOf(version))
   }
 
   /** The schema a version's rows read under: the manifest's pinned
@@ -587,26 +575,15 @@ object Snapshots {
   }
 
   /** Write one deletion-vector parquet (`__dv_file` string,
-    * `__dv_pos` long) and return its root-relative name. One file
-    * per MoR commit: a DV holds the SPARSE delete's positions (16
-    * bytes/row before compression) — a delete wide enough to make
+    * `__dv_pos` long) and return its name, prefixed `dv{version}-`.
+    * One file per MoR commit: a DV holds the SPARSE delete's positions
+    * (16 bytes/row before compression) — a delete wide enough to make
     * this file heavy should have been a copy-on-write
     * [[deleteWhere]], which also resets the read-side join cost. */
-  private def writeDv(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      del: DataFrame, version: Int): String = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(root, s"_snap_stage_dv_$tag")
-    fs.delete(tmp, true)
-    del.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-    val staged = Materialize.listParquetFiles(spark, tmp.toString)
-    require(staged.length == 1, s"dv stage produced ${staged.length}")
-    val name = f"dv$version%08d-$tag.parquet"
-    require(fs.rename(new Path(staged.head), new Path(root, name)),
-      s"rename failed promoting $name")
-    fs.delete(tmp, true)
-    name
-  }
+  private def writeDv(spark: SparkSession, root: Path, del: DataFrame,
+      version: Int): String =
+    GraftWriteV2.stage(spark, root, del.repartition(1),
+      "dv" + GraftWriteV2.stemOf(version).tail).head
 
   /** Create version 1 (refuses an existing store). */
   def create(spark: SparkSession, url: String, df: DataFrame,
@@ -688,7 +665,7 @@ object Snapshots {
     * debris [[vacuum]] sweeps. */
   def appendAudited(spark: SparkSession, url: String, df: DataFrame,
       nFiles: Int = 8)(audit: DataFrame => Unit): Int = {
-    val (fs, root) = fsOf(spark, url)
+    val (_, root) = fsOf(spark, url)
     val parent = snap(spark, url, latest(spark, url))
     validateBatch(spark, root, url, df)
     val v = parent.version + 1
@@ -702,7 +679,7 @@ object Snapshots {
       parent.colmap))
     catch {
       case scala.util.control.NonFatal(e) =>
-        staged.foreach(f => fs.delete(new Path(root, f), false))
+        GraftWriteV2.deleteStaged(spark, url, staged)
         throw new IllegalArgumentException(
           s"append audit refused the batch: ${e.getMessage}", e)
     }
@@ -877,9 +854,8 @@ object Snapshots {
       require(!keys.contains(null), s"null $keyCol in the update batch")
       val affected: Seq[String] = bloomIndexUrl match {
         case Some(idx) =>
-          val (sel, covered) =
-            RowGroupIndex.bloomProbe(spark, url, idx, keyCol, keys)
-          val selNames = sel.map(f => new Path(f).getName).toSet
+          val (selNames, covered) =
+            RowGroupIndex.bloomProbe(spark, idx, keyCol, keys)
           // Staleness guard: the sidecar only prunes files it has
           // actually indexed. A live file with NO index row (committed
           // after the last updateBloom — e.g. snapshotSink refreshes
@@ -1064,7 +1040,7 @@ object Snapshots {
   def deleteWhereMor[K: BandKey](spark: SparkSession, url: String,
       field: String, lo: K, hi: K): Int = {
     val r = BandKey[K].range(field, lo, hi)
-    val (fs, root) = fsOf(spark, url)
+    val (_, root) = fsOf(spark, url)
     val parent = snap(spark, url, latest(spark, url))
     val entries = pruneRanges(spark, url, parent, "deleteWhereMor",
       Seq(r))
@@ -1087,7 +1063,7 @@ object Snapshots {
       // disjoint by construction: hits come from effective rows
       val allDel = (hits +: carriedPositions(spark, root, entries,
         affectedData)).reduce(_ unionByName _)
-      commitMor(spark, fs, root, parent, "mordelete", affectedData,
+      commitMor(spark, root, parent, "mordelete", affectedData,
         allDel, Nil, storeSchema)
     } finally hits.unpersist()
   }
@@ -1110,13 +1086,12 @@ object Snapshots {
   /** Shared MoR commit tail: write ONE merged vector, re-point every
     * affected entry at it, append `extraFiles` (morupdate's fresh
     * images), commit under the parent's colmap/dropped. */
-  private def commitMor(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, parent: Snap,
+  private def commitMor(spark: SparkSession, root: Path, parent: Snap,
       op: String, affectedData: Set[String], allDel: DataFrame,
       extraFiles: Seq[String],
       storeSchema: org.apache.spark.sql.types.StructType): Int = {
     val v = parent.version + 1
-    val dvName = writeDv(spark, fs, root, allDel, v)
+    val dvName = writeDv(spark, root, allDel, v)
     val replaced = parent.files.map { e =>
       val d = splitEntry(e)._1
       if (affectedData.contains(d)) s"$d$DvSep$dvName" else e
@@ -1141,7 +1116,7 @@ object Snapshots {
   def updateWhereMor[K: BandKey](spark: SparkSession, url: String,
       field: String, lo: K, hi: K, set: Map[String, Column]): Int = {
     val r = BandKey[K].range(field, lo, hi)
-    val (fs, root) = fsOf(spark, url)
+    val (_, root) = fsOf(spark, url)
     val parent = snap(spark, url, latest(spark, url))
     val storeSchema = schemaOf(spark, root, parent)
     val casted = upcastSets(spark, "updateWhereMor", storeSchema, set)
@@ -1171,7 +1146,7 @@ object Snapshots {
       val fresh = writeFiles(spark, root, updated,
         parent.version + 1, 1, clusterBy = Some(field),
         colmap = parent.colmap)
-      commitMor(spark, fs, root, parent, "morupdate", affectedData,
+      commitMor(spark, root, parent, "morupdate", affectedData,
         allDel, fresh, storeSchema)
     } finally matched.unpersist()
   }
@@ -3176,16 +3151,6 @@ object Snapshots {
     markers.size
   }
 
-  /** EFFECTIVE row count of a version from parquet FOOTERS alone —
-    * `COUNT(*)` without touching a data page: every data file's
-    * record count comes from its footer (one small metadata read,
-    * distributed over executors — a 100k-file store answers in
-    * seconds), and merge-on-read entries subtract their deletion
-    * vectors' paired positions (the DV parquets are sparse-small by
-    * contract). Exact by construction: footers are written with the
-    * files and files are immutable. The complement to the
-    * stats-sidecar pricing ([[countWhere]] for RANGE counts): this
-    * needs no sidecar and no clustering, just the manifest. */
   /** Exact global (min, max) of an integral stats-indexed field at
     * `version`, priced from the `_stats` sidecar alone — O(files)
     * metadata rows, no data file opened. Returns None unless EVERY
@@ -3225,6 +3190,16 @@ object Snapshots {
     Some((mins.minOption, maxs.maxOption))
   }
 
+  /** EFFECTIVE row count of a version from parquet FOOTERS alone —
+    * `COUNT(*)` without touching a data page: every data file's
+    * record count comes from its footer (one small metadata read,
+    * distributed over executors — a 100k-file store answers in
+    * seconds), and merge-on-read entries subtract their deletion
+    * vectors' paired positions (the DV parquets are sparse-small by
+    * contract). Exact by construction: footers are written with the
+    * files and files are immutable. The complement to the
+    * stats-sidecar pricing ([[countWhere]] for RANGE counts): this
+    * needs no sidecar and no clustering, just the manifest. */
   def rowCountMeta(spark: SparkSession, url: String,
       version: Int = -1): Long = {
     val (_, root) = fsOf(spark, url)
@@ -3273,17 +3248,15 @@ object Snapshots {
     // reference sets expand composite MoR entries to their PHYSICAL
     // names: a deletion-vector parquet is alive exactly as long as
     // some surviving manifest's entry names it
-    val live = vs.filter(keeps)
-      .flatMap(v => snap(spark, url, v).files.flatMap(entryPhysical))
-      .toSet
+    def physical(vs: Seq[Int]): Set[String] =
+      liveEntries(spark, url, vs).flatMap(entryPhysical).toSet
+    val live = physical(vs.filter(keeps))
     // files an expiring manifest references die with it; files NO
     // manifest references are either failed-commit debris or an
-    // IN-FLIGHT commit's staged renames (writeFiles lands data files
-    // before the manifest) — only the grace window tells them apart,
-    // so orphans must outlive it before collection
-    val retired = vs.filterNot(keeps)
-      .flatMap(v => snap(spark, url, v).files.flatMap(entryPhysical))
-      .toSet -- live
+    // IN-FLIGHT commit's staged files (writers land data files in the
+    // root before the manifest) — only the grace window tells them
+    // apart, so orphans must outlive it before collection
+    val retired = physical(vs.filterNot(keeps)) -- live
     val cutoff = System.currentTimeMillis() - graceMs
     val onDisk = fs.listStatus(root).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -3299,9 +3272,7 @@ object Snapshots {
     // documented single-writer, but this narrows the window from
     // the whole vacuum to one listing round-trip — a file any
     // now-visible surviving manifest references is never deleted.
-    val liveNow = versions(spark, url).filter(keeps)
-      .flatMap(v => snap(spark, url, v).files.flatMap(entryPhysical))
-      .toSet
+    val liveNow = physical(versions(spark, url).filter(keeps))
     val safe = doomed.filterNot(st => liveNow.contains(st.getPath.getName))
     safe.foreach(st => require(fs.delete(st.getPath, false),
       s"delete failed vacuuming ${st.getPath}"))
@@ -3309,12 +3280,12 @@ object Snapshots {
     deadVs.foreach(v => require(fs.delete(manifestPath(root, v), false),
       s"delete failed retiring manifest v$v"))
     // crash-debris sweep beyond root-level data files: a JVM dying
-    // inside writeArranged leaves a `_snap_stage_*` staging DIR, and
-    // one dying inside commit leaves a `_snap/_tmp-v*` manifest —
-    // neither matched the .parquet file filter above, so without
-    // this they leak forever (the documented vacuum contract says
-    // failed-commit debris is collectable). Grace-gated like
-    // everything else.
+    // inside commit leaves a `_snap/_tmp-v*` manifest, and stores
+    // written by earlier releases, which staged through a directory,
+    // can still hold a `_snap_stage_*` staging DIR — neither matches
+    // the .parquet file filter above, so without this they leak
+    // forever (the documented vacuum contract says failed-commit
+    // debris is collectable). Grace-gated like everything else.
     fs.listStatus(root).toSeq
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith("_snap_stage_") &&

@@ -3,15 +3,17 @@ package org.apache.spark.sql.graftbridge
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** Executor-side parquet file writing for graft's NATIVE V2
-  * BatchWrite (the write-side twin of [[StreamBridge]]): Spark 4
+/** Executor-side parquet file writing, the one writer of every graft
+  * store data file (the write-side twin of [[StreamBridge]]): Spark 4
   * keeps the file-sink machinery (`FileFormat.prepareWrite`,
   * `OutputWriter`) `private[sql]`, so this shim — living in the sql
   * namespace like [[ColumnBridge]] — prepares the parquet
@@ -19,8 +21,8 @@ import org.apache.spark.util.SerializableConfiguration
   * on executors. Rows are written by Spark's OWN
   * `ParquetOutputWriter` (the exact row-to-parquet path every
   * `df.write.parquet` uses: same encoders, same compression, same
-  * footer statistics), so files written through this bridge are
-  * bit-compatible with the V1 staging path they replace. */
+  * footer statistics), so each file is the one `df.write.parquet`
+  * would write, under its final name with no commit rename. */
 object WriteBridge {
 
   /** One open per-task parquet file writer (graft-visible handle —
@@ -76,5 +78,15 @@ object WriteBridge {
       .prepareWrite(spark, job, Map.empty, schema)
     new TaskWriters(factory,
       new SerializableConfiguration(job.getConfiguration), schema)
+  }
+
+  /** Driver: run `job` over `df`'s rows — their schema and
+    * `RDD[InternalRow]` — as one SQL execution, like any Dataset
+    * action (the session's SQL conf reaches the tasks). */
+  def withRows[T](df: DataFrame)(
+      job: (StructType, RDD[InternalRow]) => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("graft stage"))(
+      job(qe.executedPlan.schema, qe.toRdd))
   }
 }

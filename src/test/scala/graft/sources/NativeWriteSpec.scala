@@ -27,8 +27,8 @@ class NativeWriteSpec extends SparkSpec {
   }
 
   /** Staged names carry the executor-direct signature
-    * `s{v}-{tag}-p{part}-t{task}.parquet` — the V1 path's renamed
-    * names were `s{v}-{tag}-{k}.parquet` (no p/t segments). */
+    * `s{v}-{tag}-p{part}-t{task}.parquet` of the one store writer
+    * (SQL writes and programmatic commits alike). */
   private def v2Named(f: String): Boolean =
     f.matches("s\\d{8}-[0-9a-f]{8}-p\\d{5}-t\\d+\\.parquet")
 

@@ -118,4 +118,30 @@ class SidecarRefreshSpec extends SparkSpec {
     assert(Snapshots.latest(spark, url) == v)
     assert(bloomRows(idx) == bloomBefore)
   }
+
+  test("bloom builds and refreshes index the manifests' files, not " +
+      "uncommitted debris in the root") {
+    val url = scratch(
+      s"sidecar_refresh/${java.util.UUID.randomUUID().toString.take(8)}")
+    val fs = new Path(url).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    Snapshots.create(spark, url,
+      (0L until 20L).map(i => (i, i * 10L)).toDF("id", "v"), nFiles = 2)
+    // what a crashed or still-running write leaves: a name no
+    // manifest lists, with no parquet footer
+    val debris = "s99999999-deadbeef-p00000-t0.parquet"
+    fs.create(new Path(url, debris), false).close()
+    val idx = Snapshots.bloomSidecarUrl(spark, url)
+    Snapshots.indexBloom(spark, url, Seq("id"))
+    Snapshots.append(spark, url,
+      Seq((100L, 1000L)).toDF("id", "v"), nFiles = 1)
+    assert(Snapshots.refreshSidecars(spark, url) == ((false, true)))
+    val live = Snapshots.snap(spark, url, Snapshots.latest(spark, url))
+      .files.toSet
+    val indexed = bloomRows(idx).map(r => new Path(r._2).getName)
+    assert(!indexed.contains(debris))
+    assert(indexed == live)
+    // the refresh scanned the appended file only: one row per file
+    assert(spark.read.parquet(idx).count() == live.size.toLong)
+  }
 }
