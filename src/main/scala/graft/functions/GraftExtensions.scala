@@ -231,5 +231,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // codegen restored; see [[graft.sources.GraftEffInlineRule]])
     ext.injectOptimizerRule(session =>
       graft.sources.GraftEffInlineRule(session))
+    // a small shuffled GraftRead epoch: decode in the scan's tasks,
+    // order on the driver (see EpochBridge)
+    ext.injectPlannerStrategy(_ =>
+      org.apache.spark.sql.graftbridge.EpochBridge.Planner)
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.EpochBridge
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.GraftFunctions
@@ -25,8 +26,12 @@ import graft.schema.{CodecSpec, GraftSchema}
   * }}}
   *
   * Everything stays a Catalyst plan: pruning/pushdown are automatic,
-  * and the shuffle sorts on storage position (file name, row index)
-  * before decode: one order on any cluster size, split plan or copy.
+  * and the shuffle orders rows by a storage-position key (file name,
+  * row index): one order on any cluster size, split plan or copy. A
+  * read that fits one range partition decodes in the scan's own tasks
+  * and, drained by `collect` or `toLocalIterator`, is ordered on the
+  * driver in the same job ([[org.apache.spark.sql.graftbridge.EpochBridge]]);
+  * a larger one sorts the key at the scan, before decode.
   * Planning runs no Spark job: the storage schema is read on the
   * driver from one footer, the file Spark's own parquet inference
   * would read, and handed to the scan (`.evolved` reads still let
@@ -161,11 +166,13 @@ final case class GraftRead private (
   /** Plan the read. No Spark job runs here; every action on the
     * returned frame re-executes the plan.
     *
-    * Draining: an unshuffled read drained by `toLocalIterator` runs one
-    * Spark job per scan split, one after another (the iterator fetches
-    * a partition per job). For a small read use `collect`, or
-    * `.shuffle`, which plans a read this small as one sorted
-    * partition. */
+    * Draining: a shuffled read that fits one range partition (one
+    * epoch, viewed columns under AQE's advisory partition size) drains
+    * through `collect` or `toLocalIterator` in one Spark job: the
+    * scan's tasks decode in parallel and the driver orders the rows.
+    * An unshuffled read drained by `toLocalIterator` runs one Spark job
+    * per scan split, one after another (the iterator fetches a
+    * partition per job); for a small one use `collect`. */
   def load(): DataFrame = {
     // 1. stable file listing (per store, URL order) + shard (SH1/O5).
     //    A Snapshots store resolves through a MANIFEST — latest by
@@ -174,12 +181,14 @@ final case class GraftRead private (
     //    versions alongside live rows.
     require(asOfVersion.isEmpty || urls.length == 1,
       "asOf() is single-store: versions are per-store")
+    // one Hadoop conf for every file-system call planning makes
+    val hadoopConf = spark.sessionState.newHadoopConf()
     val listed = urls.map { u =>
-      val versions = Snapshots.versions(spark, u)
+      val versions = Snapshots.versions(hadoopConf, u)
       if (versions.nonEmpty) {
         val v = asOfVersion.getOrElse(versions.last)
         val root = new org.apache.hadoop.fs.Path(u)
-        val snapV = Snapshots.snap(spark, u, v)
+        val snapV = Snapshots.snap(hadoopConf, u, v)
         // the reader chain scans raw files; a renamed store's
         // physical names would surface — refuse loudly rather than
         // serve wrong column names (Snapshots.read translates)
@@ -207,7 +216,7 @@ final case class GraftRead private (
       } else {
         require(asOfVersion.isEmpty,
           s"asOf() needs a Snapshots store (no _snap manifests at $u)")
-        (Materialize.listParquetFiles(spark, u), None)
+        (Materialize.listParquetFiles(hadoopConf, u), None)
       }
     }
     val allFiles = listed.flatMap(_._1)
@@ -228,7 +237,7 @@ final case class GraftRead private (
     //     manifest to relative paths, while index()/bloomIndex()
     //     admit from the absolute listing.
     lazy val qualFs = new org.apache.hadoop.fs.Path(urls.head)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileSystem(hadoopConf)
     def normPath(s: String): String =
       qualFs.makeQualified(new org.apache.hadoop.fs.Path(s)).toUri.getPath
     val admitted: Option[Set[String]] =
@@ -270,7 +279,7 @@ final case class GraftRead private (
     // read: a type-conflicting evolution must fail with the sidecar
     // diagnostic, not Spark's raw mergeSchema error
     val graftSidecars = urls.flatMap(u =>
-      Materialize.loadSchema(spark, u).map(u -> _))
+      Materialize.loadSchema(hadoopConf, u).map(u -> _))
     // no graft sidecar → a PETASTORM store's own pickled Unischema
     // serves as the schema (parsed on the JVM, nothing executed —
     // see UnischemaPickle.parse): make_reader-written datasets open
@@ -278,7 +287,7 @@ final case class GraftRead private (
     val sidecars =
       if (graftSidecars.nonEmpty) graftSidecars
       else urls.flatMap(u =>
-        Materialize.loadPetastormSchema(spark, u).map(u -> _))
+        Materialize.loadPetastormSchema(hadoopConf, u).map(u -> _))
     require(sidecars.isEmpty || sidecars.length == urls.length,
       s"mixed stores: ${sidecars.length} of ${urls.length} have a " +
         "schema sidecar — all must, or none (plain parquet)")
@@ -292,7 +301,6 @@ final case class GraftRead private (
       else mergeSchemas(sidecars)
     }
 
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val singleDir = urls.length == 1 && {
       val p = new Path(urls.head)
       p.getFileSystem(hadoopConf).getFileStatus(p).isDirectory
@@ -303,7 +311,7 @@ final case class GraftRead private (
     // would read (ParquetRead), so planning runs no Spark job;
     // `.evolved` keeps Spark's merging inference, which reads every
     // footer
-    val storage0 = ParquetRead(spark, readFiles, opts)
+    val storage0 = ParquetRead(spark, readFiles, opts, hadoopConf)
     val storage = if (emptySelection) storage0.limit(0) else storage0
 
     // 2. schema: stored or inferred (dataset_metadata.py:410-418);
@@ -318,45 +326,65 @@ final case class GraftRead private (
       .getOrElse(GraftSchema.fromStructType("inferred", storage.schema))
     val viewed = if (fieldSel.isEmpty) schema else schema.view(fieldSel)
 
-    def epoch(scan: DataFrame): DataFrame = {
-      // 3. schema view (P1: exact names or regex, unischema.py:199-240)
-      //    and 4. codec decode (utils.py:52-85 decode_row): one
-      //    projection of the viewed fields either way
-      val decoded =
-        if (!decodeOutput) scan.select(viewed.fieldNames.map(col): _*)
-        else Materialize.decodeColumns(scan, viewed)
+    // 3. schema view (P1: exact names or regex, unischema.py:199-240)
+    //    and 4. codec decode (utils.py:52-85 decode_row): one projection
+    //    of the viewed fields either way, plus any `carried` columns
+    def decoded(scan: DataFrame, carried: Seq[Column]): DataFrame = {
+      val fields =
+        if (!decodeOutput) viewed.fieldNames.toSeq.map(col)
+        else Materialize.decodedColumns(viewed)
       // 5. residual predicate (decoded values, like the worker-side
       //    predicate; Catalyst pushes what it can into the scan).
       //    range()'s residual rides here too: skipping is a superset
       //    admission, the filter makes it exact (typed by the STORED
       //    schema — the field may sit outside the fields() view)
-      val filtered = (preds ++ ranges.map(_.residual(storage.schema)))
-        .foldLeft(decoded)(_.filter(_))
-      // 6. post-decode transform (T1), on the permuted stream
-      transformSpec.map(_(filtered)).getOrElse(filtered)
+      (preds ++ ranges.map(_.residual(storage.schema)))
+        .foldLeft(scan.select(fields ++ carried: _*))(_.filter(_))
     }
 
-    // 7. epochs × seeded shuffle (E1 + O1-O3): sort the SCAN on a
-    //    position key (the file NAME keeps a copied store's order), so
-    //    no decoded tensor crosses the exchange. Range partitions are
-    //    sized like AQE's target, same order at any count: a small read
-    //    sorts in one, unsampled. Epoch k uses seed+k (reader.py:666)
+    // 7. epochs × seeded shuffle (E1 + O1-O3): order by a storage
+    //    position key, (xxhash64(seed, file name, row index), file
+    //    path, row index): the file NAME keeps a copied store's order,
+    //    and the key is a total order on any split plan. A read that
+    //    fits one range partition (sized like AQE's target) carries the
+    //    key through the decode projection, so decode runs in the
+    //    scan's own tasks, and is ordered by coalesce(1) plus a local
+    //    sort under a projection that drops the key; GraftExtensions
+    //    plans that shape as one job that sorts on the driver
+    //    (EpochBridge). A larger read, and every epoch of epochs(k ≥ 2),
+    //    range-partitions and sorts the SCAN instead, so no decoded
+    //    tensor crosses the exchange. Epoch k uses seed+k (reader.py:666)
     lazy val parts = (storage.select(viewed.fieldNames.map(col): _*)
       .queryExecution.optimizedPlan.stats.sizeInBytes / spark.sessionState
       .conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
       .min(spark.sessionState.conf.numShufflePartitions).toInt
-    def permuted(seed: Option[Long]): DataFrame = seed match {
-      case None => storage
+    def positionKey(seed: Long): Seq[Column] = {
+      val meta = storage.metadataColumn("_metadata") // never a user field
+      Seq(xxhash64(lit(seed), meta("file_name"), meta("row_index")),
+        meta("file_path"), meta("row_index"))
+    }
+    def ordered(seed: Option[Long]): DataFrame = seed match {
+      case None => decoded(storage, Nil)
+      case Some(s) if epochCount <= 1 && parts == 1 =>
+        val key = positionKey(s).zip(GraftRead.KeyNames).map { case (c, n) =>
+          EpochBridge.keyColumn(c, n) }
+        decoded(storage, key).coalesce(1)
+          .sortWithinPartitions(GraftRead.KeyNames.map(col): _*)
+          .select(viewed.fieldNames.map(col): _*)
       case Some(s) =>
-        val meta = storage.metadataColumn("_metadata") // never a user field
-        val key = Seq(xxhash64(lit(s), meta("file_name"), meta("row_index")),
-          meta("file_path"), meta("row_index"))
-        storage.repartitionByRange(parts, key: _*).sortWithinPartitions(key: _*)
+        val key = positionKey(s)
+        decoded(storage.repartitionByRange(parts, key: _*)
+          .sortWithinPartitions(key: _*), Nil)
+    }
+    // 6. post-decode transform (T1), on the permuted stream
+    def epoch(seed: Option[Long]): DataFrame = {
+      val rows = ordered(seed)
+      transformSpec.map(_(rows)).getOrElse(rows)
     }
     val out =
-      if (epochCount <= 1) epoch(permuted(shuffleSeed))
+      if (epochCount <= 1) epoch(shuffleSeed)
       else (0 until epochCount).map { k =>
-        epoch(permuted(shuffleSeed.map(_ + k))).withColumn("__epoch", lit(k))
+        epoch(shuffleSeed.map(_ + k)).withColumn("__epoch", lit(k))
       }.reduce(_.unionByName(_))
 
     // 8. optional persistence (C1/C2)
@@ -393,6 +421,11 @@ final case class GraftRead private (
 }
 
 object GraftRead {
+  /** Names of the position-key columns a one-partition shuffled epoch
+    * carries from the scan to its sort (never in `load()`'s output). */
+  private val KeyNames = Seq("__graft_pos_hash", "__graft_pos_file",
+    "__graft_pos_row")
+
   def reader(spark: SparkSession, url: String): GraftRead =
     reader(spark, Seq(url))
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -87,7 +88,11 @@ object Materialize {
   /** Read-side codec projection (utils.py:52-85 decode_row): inverse
     * of [[encodeColumns]]. Works on batch and streaming frames. */
   def decodeColumns(df: DataFrame, schema: GraftSchema): DataFrame =
-    df.select(schema.fields.map { f =>
+    df.select(decodedColumns(schema): _*)
+
+  /** [[decodeColumns]]'s projection, one column per schema field. */
+  private[sources] def decodedColumns(schema: GraftSchema): Seq[Column] =
+    schema.fields.map { f =>
       val c = col(f.name)
       (f.codec match {
         case Some(CodecSpec("ndarray" | "compressed_ndarray", _)) =>
@@ -118,7 +123,7 @@ object Materialize {
         case None if !f.isTensor => c.cast(f.dataType)
         case _ => c
       }).as(f.name)
-    }: _*)
+    }
 
   /** Materialize `df` (columns in schema's *logical* types) at `url`.
     * @param partitions optional repartition count before write — the
@@ -250,9 +255,13 @@ object Materialize {
     * mirror of the reference's `get_schema`
     * (etl/dataset_metadata.py:356-386). */
   def loadPetastormSchema(spark: SparkSession,
+      url: String): Option[GraftSchema] =
+    loadPetastormSchema(spark.sessionState.newHadoopConf(), url)
+
+  private[sources] def loadPetastormSchema(conf: Configuration,
       url: String): Option[GraftSchema] = {
     val p = new Path(new Path(url), "_common_metadata")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
       // Read the pickle from the RAW thrift footer bytes: parquet-mr
@@ -380,9 +389,9 @@ object Materialize {
   }
 
   /** The sidecar's raw JSON, one filesystem read (None when absent). */
-  private def readSidecar(spark: SparkSession, url: String): Option[String] = {
+  private def readSidecar(conf: Configuration, url: String): Option[String] = {
     val path = new Path(url, SidecarName)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = path.getFileSystem(conf)
     if (!fs.exists(path)) None
     else Some(SidecarJson.slurp(fs, path))
   }
@@ -429,9 +438,13 @@ object Materialize {
 
   /** Stable-sorted (O5 parity: dataset_metadata.py:274-279) parquet
     * file listing for a dataset directory. */
-  def listParquetFiles(spark: SparkSession, url: String): Seq[String] = {
+  def listParquetFiles(spark: SparkSession, url: String): Seq[String] =
+    listParquetFiles(spark.sessionState.newHadoopConf(), url)
+
+  private[sources] def listParquetFiles(conf: Configuration,
+      url: String): Seq[String] = {
     val root = new Path(url)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = root.getFileSystem(conf)
     def walk(p: Path): Seq[String] = {
       fs.listStatus(p).toSeq.flatMap { st =>
         val name = st.getPath.getName
@@ -447,7 +460,11 @@ object Materialize {
   /** Load the stored GraftSchema, or None for plain parquet stores
     * (caller then infers — dataset_metadata.py:410-418 fallback). */
   def loadSchema(spark: SparkSession, url: String): Option[GraftSchema] =
-    readSidecar(spark, url).map { json =>
+    loadSchema(spark.sessionState.newHadoopConf(), url)
+
+  private[sources] def loadSchema(conf: Configuration,
+      url: String): Option[GraftSchema] =
+    readSidecar(conf, url).map { json =>
       val idx = json.indexOf("\"schema\":")
       require(idx >= 0, s"malformed $SidecarName")
       // the schema object ends the sidecar, or precedes the

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
@@ -22,9 +23,14 @@ private[graft] object ParquetRead {
     * a Spark job whenever [[footerSchema]] can give inference's
     * answer. */
   def apply(spark: SparkSession, paths: Seq[String],
-      options: Map[String, String] = Map.empty): DataFrame = {
+      options: Map[String, String] = Map.empty): DataFrame =
+    apply(spark, paths, options, spark.sessionState.newHadoopConf())
+
+  /** [[apply]] with the caller's Hadoop conf, made only if needed. */
+  private[sources] def apply(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String], conf: => Configuration): DataFrame = {
     val reader = spark.read.options(options)
-    footerSchema(spark, paths, options).fold(reader)(reader.schema)
+    footerSchema(spark, paths, options, conf).fold(reader)(reader.schema)
       .parquet(paths: _*)
   }
 
@@ -53,7 +59,8 @@ private[graft] object ParquetRead {
     * or any failure to read the footer, which inference then reports
     * as it always did. */
   private[graft] def footerSchema(spark: SparkSession, paths: Seq[String],
-      options: Map[String, String]): Option[StructType] = try {
+      options: Map[String, String],
+      hadoopConf: => Configuration): Option[StructType] = try {
     val sql = spark.sessionState.conf
     val merge = options.collectFirst {
       case (k, v) if k.equalsIgnoreCase("mergeSchema") => v.toBoolean
@@ -62,7 +69,7 @@ private[graft] object ParquetRead {
       options.keys.forall(k => k.equalsIgnoreCase("basePath") ||
         k.equalsIgnoreCase("mergeSchema")) &&
       paths.forall(_.forall(c => !"{}[]*?\\".contains(c)))
-    lazy val conf = spark.sessionState.newHadoopConf()
+    lazy val conf = hadoopConf
     // each path's leaves; None for a directory that is not flat
     def leavesOf(f: String): Option[Seq[Path]] = {
       val p = new Path(f)

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,17 +74,23 @@ object Snapshots {
       colmap.getOrElse(logical, logical)
   }
 
-  private[sources] def fsOf(spark: SparkSession, url: String) = {
+  private[sources] def fsOf(spark: SparkSession, url: String): (FileSystem, Path) =
+    fsOf(spark.sessionState.newHadoopConf(), url)
+
+  private[sources] def fsOf(conf: Configuration, url: String): (FileSystem, Path) = {
     val p = new Path(url)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    (p.getFileSystem(conf), p)
   }
 
   private def manifestPath(root: Path, v: Int) =
     new Path(new Path(root, SnapDir), f"v$v%08d.json")
 
   /** All committed versions, ascending (empty for a non-store). */
-  def versions(spark: SparkSession, url: String): Seq[Int] = {
-    val (fs, root) = fsOf(spark, url)
+  def versions(spark: SparkSession, url: String): Seq[Int] =
+    versions(spark.sessionState.newHadoopConf(), url)
+
+  private[sources] def versions(conf: Configuration, url: String): Seq[Int] = {
+    val (fs, root) = fsOf(conf, url)
     val dir = new Path(root, SnapDir)
     if (!fs.exists(dir)) return Seq.empty
     fs.listStatus(dir).toSeq.map(_.getPath.getName)
@@ -118,14 +125,18 @@ object Snapshots {
     })
 
   /** Resolve one manifest (the whole read path goes through here). */
-  def snap(spark: SparkSession, url: String, version: Int): Snap = {
-    val (fs, root) = fsOf(spark, url)
+  def snap(spark: SparkSession, url: String, version: Int): Snap =
+    snap(spark.sessionState.newHadoopConf(), url, version)
+
+  private[sources] def snap(conf: Configuration, url: String,
+      version: Int): Snap = {
+    val (fs, root) = fsOf(conf, url)
     val p = manifestPath(root, version)
     val st =
       try Some(fs.getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
     require(st.isDefined, s"no snapshot v$version at $url " +
-      s"(versions: ${versions(spark, url).mkString(",")})")
+      s"(versions: ${versions(conf, url).mkString(",")})")
     val key = (p.toString, st.get.getModificationTime, st.get.getLen)
     val hit = snapCache.get(key)
     if (hit != null) hit

@@ -38,7 +38,8 @@ class ParquetReadSpec extends SparkSpec {
   /** No footer answer: the helper infers, with the same schema or
     * the same error as `spark.read.parquet`. */
   private def fallsBack(path: String): Unit = {
-    assert(ParquetRead.footerSchema(spark, Seq(path), Map.empty).isEmpty, path)
+    assert(ParquetRead.footerSchema(spark, Seq(path), Map.empty,
+      spark.sessionState.newHadoopConf()).isEmpty, path)
     val inferred = scala.util.Try(spark.read.parquet(path).schema)
     val got = scala.util.Try(ParquetRead(spark, path).schema)
     assert(got.map(Right(_)).recover { case e => Left(e.getMessage) } ==

@@ -26,7 +26,9 @@ From the same file it takes the workload's named step metrics and
 prints their median per side, so a change to op_s.p50 shows which
 step moved: upsert_s.p50, changes_s.p50, append_s.p50 and
 snapshot_read_s.p50 for orders_cdc_cycle; read_samples_per_s and
-materialize_rows_per_s for hello_world_train.
+materialize_rows_per_s for hello_world_train. For each of them it also
+counts the pairs the change won, in the metric's own direction: the
+step latencies are lower-is-better, the two rates higher-is-better.
 
 Each checkout must be a fresh `git clone` built in place (the first
 run.py call builds it). Do not copy `target/` or `perfbench/.build`
@@ -47,6 +49,15 @@ STEPS = {
                          "snapshot_read_s.p50"],
     "hello_world_train": ["read_samples_per_s", "materialize_rows_per_s"],
 }
+HIGHER_IS_BETTER = {"read_samples_per_s", "materialize_rows_per_s"}
+
+
+def change_won(metric, change, parent):
+    """True when the change's value beats the parent's (a tie is no
+    win), in the metric's direction."""
+    if metric in HIGHER_IS_BETTER:
+        return change > parent
+    return change < parent
 
 
 def run(checkout, workload, seed, seconds):
@@ -112,12 +123,14 @@ def main():
     ratios = {m: [] for m in METRICS}
     prepares = {s: [] for s in sides}
     steps = {s: {k: [] for k in STEPS.get(args.workload, [])} for s in sides}
+    step_wins = {k: [] for k in STEPS.get(args.workload, [])}
     bad = 0
     print("side    seed  op_s.p50  setup_s  prepare  "
           "load1(before/after)  steal")
     for i, seed in enumerate(range(lo, hi + 1)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
+        got_steps_of = {}
         for side in order:
             res, ev = run(sides[side], args.workload, seed, args.seconds)
             if res is None or not res.get("correct"):
@@ -134,6 +147,7 @@ def main():
                 prepares[side].append(prep)
             for k, v in got_steps.items():
                 steps[side][k].append(v)
+            got_steps_of[side] = got_steps
             prep = "    n/a" if prep is None else f"{prep:7.3f}"
             print(f"{side:<7} {seed:>4}  {m['op_s.p50']:8.3f}  "
                   f"{m['setup_s']:7.3f}  {prep}  "
@@ -143,6 +157,11 @@ def main():
         if len(got) == 2:
             for k in METRICS:
                 ratios[k].append(got["change"][k] / got["parent"][k])
+            for k in step_wins:
+                if all(k in got_steps_of.get(s, {}) for s in sides):
+                    step_wins[k].append(change_won(
+                        k, got_steps_of["change"][k],
+                        got_steps_of["parent"][k]))
 
     summary = {}
     for k in METRICS:
@@ -178,6 +197,13 @@ def main():
                                           "n": len(xs)}
                 print(f"{side:<7} {k:<22} median "
                       f"{statistics.median(xs):.4g}  n={len(xs)}")
+    for k, wins in step_wins.items():
+        if wins:
+            better = "higher" if k in HIGHER_IS_BETTER else "lower"
+            summary[f"wins.{k}"] = {"change_better": sum(wins),
+                                    "pairs": len(wins), "better": better}
+            print(f"change/parent {k}: change better ({better}) in "
+                  f"{sum(wins)} of {len(wins)} pairs")
     print(json.dumps({"workload": args.workload, "seeds": args.seeds,
                       "failed_runs": bad, "summary": summary}))
     sys.exit(1 if bad else 0)
