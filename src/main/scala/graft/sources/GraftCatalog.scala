@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
@@ -434,18 +435,14 @@ private[sources] trait GraftSqlWrites
   }
 }
 
-/** V2 table over one resolved snapshot version: delegates the scan
-  * to Spark's parquet V2 path (pushdown/pruning/codegen for free);
-  * writes (latest resolution only) go through the manifest layer
-  * ([[GraftSqlWrites]]). */
-private[sources] class GraftSqlTable(val label: String,
-    val storeUrl: String,
-    underlying: ParquetTable,
-    pinned: StructType,
-    props: Map[String, String],
-    val writable: Boolean) extends Table
+/** What the catalog's two store tables share: the name, the pinned
+  * schema, capabilities, properties and the table stream. */
+private[sources] trait GraftStoreTable extends Table
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with GraftSqlWrites {
+  protected def pinned: StructType
+  protected def props: Map[String, String]
+
   override def name(): String = label
   override def schema(): StructType = pinned
   // MICRO_BATCH_READ only on the LATEST resolution: a stream over a
@@ -459,23 +456,6 @@ private[sources] class GraftSqlTable(val label: String,
         TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
         TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
     else util.EnumSet.of(TableCapability.BATCH_READ)
-  /** Batch scans delegate verbatim to the parquet V2 builder
-    * (pushdown/pruning/stats untouched); the SAME built scan also
-    * answers `toMicroBatchStream`, so
-    * `spark.readStream.table("graft.store")` streams the manifest
-    * log natively ([[GraftMicroBatchStream]]: offsets = versions,
-    * batches = appended files). */
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = {
-    val startV = Option(options.get("startingVersion"))
-      .map(_.toInt).getOrElse(0)
-    val maxV = Option(options.get("maxVersionsPerTrigger"))
-      .map(_.toInt)
-    org.apache.spark.sql.graftbridge.StreamBridge.wrapBuilder(
-      underlying.newScanBuilder(options),
-      pruned => new GraftMicroBatchStream(SparkSession.active,
-        storeUrl, label, pinned, pruned, startV, maxV))
-  }
   /** Surfaced by `DESCRIBE TABLE EXTENDED` / `SHOW TBLPROPERTIES`:
     * the resolved version, its op, its file count, the store url. */
   override def properties(): util.Map[String, String] = {
@@ -483,6 +463,35 @@ private[sources] class GraftSqlTable(val label: String,
     props.foreach { case (k, v) => m.put(k, v) }
     m
   }
+
+  /** `spark.readStream.table(...)` over the `required` columns: the
+    * manifest log streamed natively ([[GraftMicroBatchStream]]). */
+  protected def stream(options: CaseInsensitiveStringMap)(
+      required: StructType): MicroBatchStream = {
+    val spark = SparkSession.active
+    new GraftMicroBatchStream(spark, storeUrl, label, pinned, required,
+      VersionStreamOptions.read(spark, storeUrl, label,
+        k => Option(options.get(k))))
+  }
+}
+
+/** V2 table over one resolved snapshot version: delegates the scan
+  * to Spark's parquet V2 path (pushdown/pruning/codegen for free);
+  * writes (latest resolution only) go through the manifest layer
+  * ([[GraftSqlWrites]]). */
+private[sources] class GraftSqlTable(val label: String,
+    val storeUrl: String,
+    underlying: ParquetTable,
+    protected val pinned: StructType,
+    protected val props: Map[String, String],
+    val writable: Boolean) extends GraftStoreTable {
+  /** Batch scans delegate verbatim to the parquet V2 builder
+    * (pushdown/pruning/stats untouched); the SAME built scan also
+    * answers `toMicroBatchStream`. */
+  override def newScanBuilder(
+      options: CaseInsensitiveStringMap): ScanBuilder =
+    org.apache.spark.sql.graftbridge.StreamBridge.wrapBuilder(
+      underlying.newScanBuilder(options), stream(options))
 }
 
 /** Read-only V2 table whose scan is the engine's EFFECTIVE read of
@@ -496,43 +505,19 @@ private[sources] class GraftSqlTable(val label: String,
   * translated filters apply inside as extra pruning while Spark
   * keeps its own Filter above (inexact-pushdown contract). */
 private[sources] class GraftEffSqlTable(val label: String,
-    val storeUrl: String, val effVersion: Int, pinned: StructType,
-    props: Map[String, String],
-    val writable: Boolean) extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead
-    with GraftSqlWrites {
-  override def name(): String = label
-  override def schema(): StructType = pinned
-  // MICRO_BATCH_READ on the latest resolution: the stream's INITIAL
-  // batch is DV/colmap-aware (current effective rows), later batches
-  // demand the append-only lineage like any snapshot stream
-  override def capabilities(): util.Set[TableCapability] =
-    if (writable)
-      util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.MICRO_BATCH_READ,
-        TableCapability.BATCH_WRITE,
-        TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
-        TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
-    else util.EnumSet.of(TableCapability.BATCH_READ)
+    val storeUrl: String, val effVersion: Int,
+    protected val pinned: StructType,
+    protected val props: Map[String, String],
+    val writable: Boolean) extends GraftStoreTable {
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftEffScanBuilder(storeUrl, effVersion, pinned,
-      Some(label),
-      Option(options.get("startingVersion")).map(_.toInt)
-        .getOrElse(0),
-      Option(options.get("maxVersionsPerTrigger")).map(_.toInt))
-  override def properties(): util.Map[String, String] = {
-    val m = new util.HashMap[String, String]()
-    props.foreach { case (k, v) => m.put(k, v) }
-    m
-  }
+      stream(options))
 }
 
 private[sources] class GraftEffScanBuilder(url: String, version: Int,
     full: StructType,
-    streamLabel: Option[String] = None,
-    streamStartV: Int = 0,
-    streamMaxV: Option[Int] = None) extends ScanBuilder
+    mkStream: StructType => MicroBatchStream) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
   private var required: StructType = full
@@ -570,12 +555,8 @@ private[sources] class GraftEffScanBuilder(url: String, version: Int,
         new GraftEffRelation(context, url, version, req, flt, lim)
           .asInstanceOf[T]
       override def toMicroBatchStream(
-          checkpointLocation: String)
-          : org.apache.spark.sql.connector.read.streaming
-            .MicroBatchStream =
-        new GraftMicroBatchStream(SparkSession.active, url,
-          streamLabel.getOrElse(url), full, req, streamStartV,
-          streamMaxV)
+          checkpointLocation: String): MicroBatchStream =
+        mkStream(req)
     }
   }
 }

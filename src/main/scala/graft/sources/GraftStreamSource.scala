@@ -4,141 +4,70 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.graftbridge.StreamBridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Offset = a committed snapshot VERSION — the manifest log IS the
-  * stream's write-ahead log, so offsets are exact, replayable and
-  * human-readable in the checkpoint (`{"version":7}`). */
-private[sources] case class GraftVersionOffset(v: Int) extends Offset {
-  override def json(): String = s"""{"version":$v}"""
-}
-
-private[sources] object GraftVersionOffset {
-  private val Re = """\{"version":(\d+)\}""".r
-  def parse(json: String): GraftVersionOffset = json match {
-    case Re(n) => GraftVersionOffset(n.toInt)
-    case other => throw new IllegalArgumentException(
-      s"not a graft stream offset: $other")
-  }
-}
-
-/** NATIVE streaming source over a snapshot store — what makes
-  * `spark.readStream.table("graft.store")` work: each micro-batch
-  * covers the versions committed since the last one, its rows are
-  * the files those versions APPENDED, and executors decode them with
-  * Spark's own parquet reader ([[StreamBridge.readFunc]]).
+/** `spark.readStream.table("graft.store")`: a [[VersionLogStream]]
+  * whose batches are store FILES, decoded on executors by Spark's own
+  * parquet reader ([[StreamBridge.readFunc]]), one [[InputPartition]]
+  * per file.
   *
-  * Offsets are manifest versions (exact, replayable; a restart
-  * resumes from the checkpointed version — no listing heuristics,
-  * no modification-time races like a directory file stream).
-  * `initialOffset` = version 0, so the first batch carries the
-  * store's full current contents (the Delta convention). The INITIAL
-  * batch is DV- and colmap-aware: a store already carrying
-  * merge-on-read deletion vectors or renamed columns streams its
-  * current EFFECTIVE rows (composite entries drop their vector's
-  * positions inside the per-file reader; files are decoded under
-  * their physical names and presented logically) — history before
-  * the stream's start never constrains it.
+  * Batch contents: the batch from version 0 (the default
+  * `startingVersion`) is the store's current contents at its end
+  * version, whatever history produced them. It is DV- and
+  * colmap-aware: composite entries drop their vector's positions in
+  * the per-file reader, and files decode under their physical names
+  * and present logical ones. Every later batch is the files its
+  * versions appended.
   *
-  * APPEND-ONLY lineage contract past the start offset, checked per
-  * batch: every version in a later batch's range must be a create/
-  * append/txn-append commit. A mutation (upsert, delete, compact,
-  * cluster, overwrite, rename) inside the range REFUSES loudly —
-  * silently re-emitting rewritten files would duplicate rows
-  * downstream, and silently skipping them would drop data; the CDC
-  * stream (`format("graft-changes")`, [[graft.streaming
-  * .GraftChangesProvider]]) is the tool for mutating stores.
-  *
-  * Scale shape: planning reads manifests only (O(versions in range)
-  * driver-side JSON + one file-status round per new file); each new
-  * file is one [[InputPartition]], so read parallelism equals append
-  * parallelism; nothing is ever relisted. A composite entry's reader
-  * loads ONLY its own file's deletion positions (sparse by the MoR
-  * contract — wide deletes are copy-on-write rewrites).
-  *
-  * Options (`spark.readStream.option(...)`):
-  *  - `startingVersion` — skip the bootstrap snapshot and stream
-  *    only versions AFTER this committed version (for consumers
-  *    that seed from a batch read of it);
-  *  - `maxVersionsPerTrigger` — admission control
-  *    ([[SupportsTriggerAvailableNow]]): cap each micro-batch at N
-  *    versions, so a stream resuming after a long gap drains it as
-  *    bounded batches instead of one giant recovery batch (the
-  *    admission offset derives from the engine-supplied START each
-  *    cycle, so restarts can never regress the checkpoint). */
-private[sources] class GraftMicroBatchStream(spark: SparkSession,
-    url: String, label: String, dataSchema: StructType,
+  * Lineage: append-only past the start. Every version number in a
+  * later batch's range must still be committed and be a create,
+  * append or txn-append commit; anything else refuses, naming
+  * `format("graft-changes")` ([[graft.streaming
+  * .GraftChangesProvider]]), which diffs mutating and vacuumed
+  * ranges. Re-emitting rewritten files would duplicate rows, and
+  * skipping them would drop data. A vacuumed version fails the check
+  * because its manifest, the only record of what it did, is gone. */
+private[sources] class GraftMicroBatchStream(
+    protected val spark: SparkSession,
+    protected val url: String, label: String, dataSchema: StructType,
     requiredSchema: StructType,
-    startingVersion: Int = 0,
-    maxVersionsPerTrigger: Option[Int] = None)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    protected val options: VersionStreamOptions)
+    extends MicroBatchStream with VersionLogStream {
 
   private val AllowedOp = "^(create|append|txn-append)".r
   // the column mapping is pinned at stream start, like the schema:
   // a rename later in the stream is a mutation the op check refuses
   private val colmap: Map[String, String] =
     Snapshots.snap(spark, url, Snapshots.latest(spark, url)).colmap
-  if (startingVersion > 0)
-    require(Snapshots.versions(spark, url).contains(startingVersion),
-      s"startingVersion=$startingVersion is not a committed version " +
-        s"of $label")
-  maxVersionsPerTrigger.foreach(m => require(m > 0,
-    s"maxVersionsPerTrigger must be positive, got $m"))
-  // Trigger.AvailableNow pins its end at prepare time: the drain
-  // stops at the data that existed when the trigger fired, however
-  // many bounded batches that takes
-  private var availableNowCap: Option[Int] = None
 
-  override def initialOffset(): Offset =
-    GraftVersionOffset(startingVersion)
-
-  override def latestOffset(): Offset =
-    GraftVersionOffset(Snapshots.latest(spark, url))
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[GraftVersionOffset].v
-    val head = Snapshots.latest(spark, url)
-    val capped = maxVersionsPerTrigger
-      .map(m => math.min(head, s + m)).getOrElse(head)
-    GraftVersionOffset(
-      availableNowCap.map(math.min(capped, _)).getOrElse(capped))
-  }
-
-  override def reportLatestOffset(): Offset =
-    GraftVersionOffset(Snapshots.latest(spark, url))
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Snapshots.latest(spark, url))
-
-  override def deserializeOffset(json: String): Offset =
-    GraftVersionOffset.parse(json)
+  override def latestOffset(): Offset = reportLatestOffset()
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftVersionOffset].v
-    val e = end.asInstanceOf[GraftVersionOffset].v
+    val s = VersionOffset.of(start)
+    val e = VersionOffset.of(end)
     if (e <= s) return Array.empty
     val endSnap = Snapshots.snap(spark, url, e)
     val entries: Seq[String] =
       if (s == 0) {
-        // initial snapshot: the CURRENT contents — whatever history
-        // produced them (mutations before the start offset are no
-        // concern of the stream's exactness; composite entries and
-        // renames are handled by the readers)
         require(endSnap.colmap == colmap,
           s"streaming read of $label: the column mapping changed " +
             "between stream creation and its first batch — restart " +
             "the stream")
         endSnap.files.sorted
       } else {
-        val vs = Snapshots.versions(spark, url)
-          .filter(v => v > s && v <= e)
-        vs.foreach { v =>
+        val all = Snapshots.versions(spark, url).toSet
+        val gone = (s to e).filterNot(all)
+        require(gone.isEmpty,
+          s"streaming read of $label: vacuum retired " +
+            s"v${gone.mkString(", v")} of the batch range v$s..v$e, " +
+            "so its append-only lineage cannot be checked; use " +
+            "format(\"graft-changes\") (CDC), which diffs across " +
+            "surviving versions")
+        ((s + 1) to e).foreach { v =>
           val sn = Snapshots.snap(spark, url, v)
           require(AllowedOp.findFirstIn(sn.op).isDefined,
             s"streaming read of $label: v$v is '${sn.op}' — the " +
@@ -193,8 +122,6 @@ private[sources] class GraftMicroBatchStream(spark: SparkSession,
         spark.sessionState.newHadoopConf()))
   }
 
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 private[sources] object GraftStreamSource {

@@ -1,7 +1,8 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import graft.SparkSpec
 
 /** Native `spark.readStream.table("graft.store")`: offsets are
@@ -197,5 +198,108 @@ class StreamTableSpec extends SparkSpec {
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     assert(e.getMessage != null)
+  }
+
+  private def ckDir(): String = scratch(
+    s"strmtbl_ck5/${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** Drains `df` under AvailableNow: each non-empty batch's rows. */
+  private def drainBatches(df: DataFrame): Seq[Seq[Row]] = {
+    val got = scala.collection.mutable.ListBuffer.empty[Seq[Row]]
+    df.writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val rows = b.collect().toSeq
+        if (rows.nonEmpty) got.synchronized { got += rows }
+        ()
+      }
+      .option("checkpointLocation", ckDir())
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    got.toSeq
+  }
+
+  private def idv(rows: Seq[Row]): Seq[(Long, Long)] =
+    rows.map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"))).sorted
+
+  private def changesOf(url: String): DataStreamReader =
+    spark.readStream.format("graft-changes")
+      .option("url", url).option("keyCol", "id")
+
+  /** `create` (ids 1-10) plus 6 one-row appends (ids 11-16) is
+    * v1..v7; vacuum leaves v5, v6 and v7. */
+  private def vacuumedStore(name: String): String = {
+    val url = s"$root/$name"
+    Snapshots.create(spark, url,
+      (1L to 10L).map(i => (i, i)).toDF("id", "v"), nFiles = 1)
+    (11L to 16L).foreach(i => Snapshots.append(spark, url,
+      Seq((i, i)).toDF("id", "v"), nFiles = 1))
+    Snapshots.vacuum(spark, url, keepFrom = 5, graceMs = 0)
+    assert(Snapshots.versions(spark, url) == Seq(5, 6, 7))
+    url
+  }
+
+  test("maxVersionsPerTrigger counts committed versions: a capped " +
+      "drain of a vacuumed store cuts one batch per survivor") {
+    val url = vacuumedStore("vcap")
+    val got = drainBatches(spark.readStream
+      .option("maxVersionsPerTrigger", "1").table("gst.vcap"))
+    assert(got.size == 3,
+      s"v5, v6 and v7 at cap 1 must drain as 3 batches, got ${got.size}")
+    assert(idv(got.flatten) == idv(Snapshots.read(spark, url)
+      .select(col("id"), col("v")).collect().toSeq))
+  }
+
+  test("a batch range that crosses a vacuumed version refuses, " +
+      "naming graft-changes, which emits the range's exact diff") {
+    val url = s"$root/vgap"
+    Snapshots.create(spark, url,
+      (1L to 10L).map(i => (i, i)).toDF("id", "v"), nFiles = 1) // v1
+    Snapshots.append(spark, url, Seq((11L, 11L)).toDF("id", "v"),
+      nFiles = 1)                                               // v2
+    Snapshots.setTag(spark, url, "t2", 2)
+    Snapshots.upsert(spark, url, Seq((3L, 300L)).toDF("id", "v"),
+      "id")                                                     // v3
+    Snapshots.append(spark, url, Seq((12L, 12L)).toDF("id", "v"),
+      nFiles = 1)                                               // v4
+    Snapshots.append(spark, url, Seq((13L, 13L)).toDF("id", "v"),
+      nFiles = 1)                                               // v5
+    Snapshots.vacuum(spark, url, keepFrom = 5, graceMs = 0)
+    assert(Snapshots.versions(spark, url) == Seq(2, 5))
+    // the consumer holds ids 1-11 from its v2 bootstrap; v2..v5's
+    // upsert is out of sight of the op check
+    val e = intercept[Exception] {
+      drainBatches(spark.readStream.option("startingVersion", "2")
+        .table("gst.vgap"))
+    }
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(chain(e).exists(m =>
+      m.contains("vacuum") && m.contains("graft-changes")),
+      s"expected the vacuumed-range refusal, got ${chain(e).take(3)}")
+
+    val feed = drainBatches(changesOf(url)
+      .option("startingVersion", "2").load()).flatten
+      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"),
+        r.getAs[String]("_change"), r.getAs[Long]("_commit_version")))
+      .sorted
+    assert(feed == Seq((3L, 300L, "update", 5L),
+      (12L, 12L, "insert", 5L), (13L, 13L, "insert", 5L)))
+    assert(feed.map(r => (r._1, r._2, r._3)) ==
+      Snapshots.changes(spark, url, "id", 2, 5)
+        .select(col("id"), col("v"), col("_change"))
+        .as[(Long, Long, String)].collect().toSeq.sorted)
+  }
+
+  test("the table stream and graft-changes cut the same batches " +
+      "under maxVersionsPerTrigger and AvailableNow") {
+    val url = vacuumedStore("vboth")
+    val table = drainBatches(spark.readStream
+      .option("maxVersionsPerTrigger", "1").table("gst.vboth"))
+    val changes = drainBatches(changesOf(url)
+      .option("maxVersionsPerTrigger", "1").load())
+    assert(changes.map(_.map(_.getAs[Long]("_commit_version"))
+      .distinct) == Seq(Seq(5L), Seq(6L), Seq(7L)))
+    assert(table.map(idv) == changes.map(idv))
   }
 }
